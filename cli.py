@@ -10,7 +10,7 @@ Commands:
                [--buckets N] [--chunk N] [--resume] [--job-id ID]
                [--progress]
   query        --index <dir> --terms "w1 w2" [--mode or|and|prefix|fuzzy|dismax|bool]
-               [--k 10] [--algo wand|wand_daat|taat] [--tie-breaker 0.3]
+               [--k 10] [--algo wand|taat] [--tie-breaker 0.3]
                [--must "w"] [--should "w1 w2"] [--must-not "w"] [--msm N]
   export-json  --input <documents.parquet> --output <dir>  (T7 bulk NDJSON)
   ingest-segment --input <pages.parquet> --dir <streamdir> [--shards N]
@@ -76,7 +76,7 @@ def main() -> None:
     q.add_argument("--mode", default="or", choices=[
         "or", "and", "prefix", "fuzzy", "wildcard", "regexp", "dismax", "bool"])
     q.add_argument("--k", type=int, default=10)
-    q.add_argument("--algo", default="wand", choices=["wand", "wand_daat", "taat"])
+    q.add_argument("--algo", default="wand", choices=["wand", "taat"])
     q.add_argument("--tie-breaker", type=float, default=0.3,
                    help="dis_max tie breaker (mode=dismax)")
     q.add_argument("--must", default="", help="required terms (mode=bool)")

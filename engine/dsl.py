@@ -40,6 +40,17 @@ from pyspark.sql import functions as F
 from engine.docvalues import ExistsFilter, RangeFilter, TermFilter, TermsFilter
 
 
+def _terms_field(spec: dict) -> tuple:
+    """(field, values) of a `terms` clause body, which names exactly one
+    field beside an optional clause-level `boost`."""
+    fields = [f for f in spec if f != "boost"]
+    if len(fields) != 1:
+        raise ValueError(
+            f"terms query needs exactly one field besides boost, got {fields}"
+        )
+    return fields[0], spec[fields[0]]
+
+
 def _clause_filters(clauses: list) -> tuple:
     out = []
     for c in clauses:
@@ -53,9 +64,7 @@ def _clause_filters(clauses: list) -> tuple:
         elif "terms" in c:
             # ES `terms` filter: field IN a fixed value set (a clause
             # `boost` sibling key is legal ES and scoreless here)
-            ((f, vals),) = tuple(
-                (f2, v2) for f2, v2 in c["terms"].items() if f2 != "boost"
-            )
+            f, vals = _terms_field(c["terms"])
             out.append(TermsFilter(f, tuple(vals)))
         elif "range" in c:
             ((f, spec),) = c["range"].items()
@@ -660,9 +669,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             reader, _clause_filters([query]) + filters,
             boost=_spec_boost(next(iter(query["term"].values()))), k=k
         )
-    if "terms" in query and next(
-        iter(f for f in query["terms"] if f != "boost")
-    ) not in reader.text_fields:
+    if "terms" in query and _terms_field(query["terms"])[0] not in reader.text_fields:
         # terms on a DOCVALUE field in query context (ES TermInSetQuery):
         # constant score 1.0 x the clause-level boost; terms on an
         # indexed text field falls through to the scoring path below
@@ -1878,7 +1885,7 @@ def _filterish_clauses(query: dict, reader):
             # (the rewritten page would score 1.0, not the boost)
             return [query]
     if set(query) == {"terms"}:
-        fld = next(iter(f for f in query["terms"] if f != "boost"))
+        fld, _ = _terms_field(query["terms"])
         if (
             fld not in reader.text_fields
             and float(query["terms"].get("boost", 1.0)) == 1.0
@@ -2019,7 +2026,11 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
             size = int(body.get("size", 10))
             frm = int(body.get("from", 0))
             kb = float(body["knn"].get("boost", 1.0))
-            lex = _hits_df(reader, q, 1 << 31, ()).select(
+            # unbounded leg: the lexical set cannot exceed the index, and
+            # a constant-score leg's DataFrame.limit takes a Java int
+            lex = _hits_df(
+                reader, q, min(reader.n_docs, (1 << 31) - 1), ()
+            ).select(
                 F.col("url").cast("string").alias("_id"),
                 F.col("score").cast("double").alias("lscore"),
             )

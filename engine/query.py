@@ -8,17 +8,20 @@ groupBy(shard).applyInPandas: per doc-shard top-k with block-max WAND (or
 vectorized TAAT), bounded heap -> broadcast-join the tiny per-shard heaps
 back to docmap for urls -> global orderBy(score desc, doc_id asc).limit(k).
 
-Three physical algorithms, all rank-identical to the oracle:
+Two physical algorithms, both rank-identical to the oracle:
 - algo="wand": vectorized block-max pruning — doc space is cut at posting-
   block boundaries into disjoint intervals, processed in descending
   upper-bound order; intervals whose block-max sum can't beat theta are
   skipped without decoding, survivors are scored with numpy accumulation.
   The 10^12-doc scale path: work is bounded by the blocks whose upper
   bound beats theta, with zero per-posting Python.
-- algo="wand_daat": classic doc-at-a-time Block-Max WAND (Ding & Suel,
-  public) with lazy cursors — the literature-faithful cross-check.
 - algo="taat": term-at-a-time vectorized numpy accumulation — decodes the
   query terms' postings fully; the brute-force cross-check at any scale.
+
+The single-query top-k entry points share one scatter-gather executor,
+_scatter_topk: the same per-shard kernel runs either in-process on the
+driver (small queries) or in Spark workers, and only k-row heaps leave a
+shard. Its docstring lists the paths that deliberately do not use it.
 
 Scoring spec is frozen (SURVEY.md 5.4): exact dl, idf = ln(1+(N-df+0.5)/
 (df+0.5)), score = sum idf * tf/(tf+k1*(1-b+b*dl/avgdl)), ties doc_id asc.
@@ -28,13 +31,14 @@ every kernel — Lucene's live-docs-bitmap semantics. Global stats (n_docs,
 df, avgdl) keep counting deleted docs until compaction, so masking only
 REMOVES docs from results; surviving scores are unchanged. Block-max
 metadata still upper-bounds the masked postings (deleting docs can only
-lower a block's true max), so WAND/BMW pruning stays safe. The reader
+lower a block's true max), so block-max pruning stays safe. The reader
 loads tombstones once (point-in-time view, same contract as the
 generation guard); construct a new reader to observe new deletes.
 """
 
 from __future__ import annotations
 
+import functools
 import heapq
 import json
 import os
@@ -721,174 +725,6 @@ def _live_mask(d: np.ndarray, dels: np.ndarray | None) -> np.ndarray | None:
     return dels[idx] != d
 
 
-class _Cursor:
-    """Lazy block-decoding cursor over one term's posting list.
-
-    dels (the shard's sorted tombstone array) is applied per decoded
-    block; a fully-deleted block is skipped transparently. Block skip
-    metadata (last_doc, max_impact) still bounds the masked list, so the
-    WAND pruning that consults it stays exact."""
-
-    __slots__ = ("docs_bin", "tfs_bin", "dls_bin", "blocks", "idf",
-                 "blk", "pos", "d", "t", "l", "ub", "dels")
-
-    def __init__(self, row, idf: float, dels: np.ndarray | None = None):
-        self.docs_bin = row.docs_bin
-        self.tfs_bin = row.tfs_bin
-        self.dls_bin = row.dls_bin
-        self.blocks = _norm_blocks(row.blocks)
-        self.idf = idf
-        self.ub = idf * max(blk[6] for blk in self.blocks)  # list-level UB
-        self.dels = dels
-        self.blk = -1
-        self.d = self.t = self.l = None
-        self.pos = 0
-        self._load(0)
-
-    def _load(self, i: int) -> None:
-        while i < len(self.blocks):
-            self.d, self.t, self.l = P.decode_block(
-                self.docs_bin, self.tfs_bin, self.dls_bin, self.blocks, i
-            )
-            keep = _live_mask(self.d, self.dels)
-            if keep is not None:
-                self.d, self.t, self.l = self.d[keep], self.t[keep], self.l[keep]
-            if self.d.size:
-                self.blk = i
-                self.pos = 0
-                return
-            i += 1  # every live posting in this block was deleted
-        self.blk = len(self.blocks)
-        self.pos = 0
-
-    def exhausted(self) -> bool:
-        return self.blk >= len(self.blocks)
-
-    def cur_doc(self) -> int:
-        return int(self.d[self.pos])
-
-    def advance_to(self, target: int) -> None:
-        """Position at the first doc >= target (block skip + searchsorted)."""
-        if self.exhausted():
-            return
-        if target <= self.cur_doc():
-            return
-        # skip whole blocks by last_doc metadata — no decode
-        i = self.blk
-        while i < len(self.blocks) and self.blocks[i][1] < target:
-            i += 1
-        if i >= len(self.blocks):
-            self.blk = len(self.blocks)
-            return
-        if i != self.blk:
-            self._load(i)
-            if self.exhausted():
-                return
-        self.pos = int(np.searchsorted(self.d, target, side="left"))
-        if self.pos >= self.d.size:
-            # the block's tail at/after target was entirely tombstoned —
-            # the next live posting lives in a later block
-            self._load(self.blk + 1)
-
-    def block_ub_at(self, target: int) -> tuple[float, int]:
-        """(idf * max_impact, last_doc) of the block that would contain the
-        first posting >= target — metadata only, no decode. (0, +inf) when
-        the list has nothing at or after target."""
-        i = self.blk
-        while i < len(self.blocks) and self.blocks[i][1] < target:
-            i += 1
-        if i >= len(self.blocks):
-            return 0.0, np.iinfo(np.int64).max
-        return self.idf * self.blocks[i][6], self.blocks[i][1]
-
-    def next_doc(self) -> None:
-        self.pos += 1
-        if self.pos >= len(self.d):
-            self._load(self.blk + 1)  # skips fully-tombstoned blocks / exhausts
-
-    def score_cur(self, k1: float, b: float, avgdl: float) -> float:
-        tf = float(self.t[self.pos])
-        dl = float(self.l[self.pos])
-        return self.idf * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
-
-
-def _wand_shard_topk(
-    rows, idfs: dict[str, float], k: int, k1: float, b: float, avgdl: float,
-    dels: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """Block-Max WAND over one shard. Returns [(local_id, score)] top-k.
-
-    Heap keys are (score, -local_id) so the weakest entry is the lowest
-    score with the HIGHEST doc id — exact tiebreak doc_id asc. Pruning is
-    strict (skip only when upper bound < theta) so score==theta candidates
-    still get evaluated and can win ties.
-    """
-    cursors = [c for c in (_Cursor(r, idfs[r.term], dels) for r in rows
-                           if idfs.get(r.term)) if not c.exhausted()]
-    heap: list[tuple[float, int]] = []  # (score, -local)
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) >= k else float("-inf")
-
-    while True:
-        cursors = [c for c in cursors if not c.exhausted()]
-        if not cursors:
-            break
-        cursors.sort(key=lambda c: c.cur_doc())
-        # pivot: first prefix whose summed list UBs reach theta
-        th = theta()
-        acc, pivot = 0.0, -1
-        for i, c in enumerate(cursors):
-            acc += c.ub
-            if acc >= th:
-                pivot = i
-                break
-        if pivot < 0:
-            break  # even all lists together can't reach theta
-        pivot_doc = cursors[pivot].cur_doc()
-        # lists beyond the pivot sitting on the SAME doc contribute to it —
-        # fold them into the prefix so the aligned bound counts them
-        while pivot + 1 < len(cursors) and cursors[pivot + 1].cur_doc() == pivot_doc:
-            pivot += 1
-        # block-max refinement ALIGNED at the pivot doc (Ding & Suel):
-        # for each prefix list, the max impact of the block that would
-        # contain pivot_doc — metadata only, no decode.
-        aligned = [c.block_ub_at(pivot_doc) for c in cursors[: pivot + 1]]
-        block_acc = sum(ub for ub, _ in aligned)
-        if block_acc < th:
-            # no doc in [pivot_doc, d') can beat theta, where d' is bounded
-            # by the soonest aligned-block boundary AND by the next list's
-            # current doc (lists beyond the pivot weren't counted).
-            boundary = min(last for _, last in aligned) + 1
-            if pivot + 1 < len(cursors):
-                boundary = min(boundary, cursors[pivot + 1].cur_doc())
-            boundary = max(boundary, pivot_doc + 1)
-            for c in cursors[: pivot + 1]:
-                if c.cur_doc() < boundary:
-                    c.advance_to(boundary)
-            continue
-        if cursors[0].cur_doc() == pivot_doc:
-            # all lists before the pivot sit on pivot_doc -> fully score it
-            s = 0.0
-            for c in cursors:
-                if not c.exhausted() and c.cur_doc() == pivot_doc:
-                    s += c.score_cur(k1, b, avgdl)
-            cand = (s, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, cand)
-            elif cand > heap[0]:
-                heapq.heapreplace(heap, cand)
-            for c in cursors:
-                if not c.exhausted() and c.cur_doc() == pivot_doc:
-                    c.next_doc()
-        else:
-            # advance the leading lists up to the pivot doc
-            for c in cursors[:pivot]:
-                if c.cur_doc() < pivot_doc:
-                    c.advance_to(pivot_doc)
-    return [(-nl, s) for s, nl in heap]
-
-
 def _bmw_shard_topk(
     rows, idfs: dict[str, float], k: int, k1: float, b: float, avgdl: float,
     dels: np.ndarray | None = None,
@@ -902,7 +738,7 @@ def _bmw_shard_topk(
     ramp, MaxScore-style); an interval with ub < theta is skipped without
     decoding, and a surviving interval is scored with the same vectorized
     unique/bincount accumulation as TAAT — zero per-posting Python, unlike
-    the classic cursor loop (kept as algo="wand_daat" for cross-checking).
+    a classic doc-at-a-time cursor loop.
     Exact: intervals partition doc space, so every doc is fully scored in
     exactly one interval; skipping is strict (ub < theta), preserving
     score==theta candidates for the doc-id tiebreak."""
@@ -1446,23 +1282,10 @@ def bm25_topk(
 
     bm25_topk_rows returns the same winners as plain tuples without the
     result-DataFrame round-trip — the serving-path API."""
-    kind, payload = _bm25_topk_impl(
+    return _to_frame(reader.spark, _bm25_topk_impl(
         reader, query, k, mode, algo, field_opts, lookup, execution, filters,
         stats_override, boost, script,
-    )
-    if kind == "df":
-        return payload
-    spark = reader.spark
-    if not payload:
-        return spark.range(0).select(
-            F.lit(None).cast("string").alias("url"),
-            F.lit(None).cast("long").alias("doc_id"),
-            F.lit(None).cast("double").alias("score"),
-        )
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    ))
 
 
 def bm25_topk_rows(
@@ -1503,32 +1326,27 @@ def _bm25_topk_impl(
     boost=None,
     script=None,
 ):
-    """Shared top-k engine. Returns ("rows", [(url, doc_id, score), ...])
-    when the result is materialized driver-side (local kernels and/or local
-    docmap lookup), or ("df", DataFrame) when the url join runs as a Spark
-    plan (remote docmap / lookup="spark")."""
-    spark = reader.spark
+    """Shared top-k engine: analysis, dictionary rewrites, algorithm
+    choice, then _scatter_topk. Returns its ("rows", [(url, doc_id,
+    score), ...]) or ("df", DataFrame) result."""
+    if algo not in ("wand", "taat"):
+        raise ValueError(f"unknown algo {algo!r}: expected 'wand' or 'taat'")
     if mode in ("wildcard", "regexp") and isinstance(query, str):
         # patterns are NOT analyzed (ES wildcard/regexp operate on raw
         # dictionary terms; the analyzer would strip the metacharacters)
         terms = [query]
     else:
         terms = analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
-    if mode == "prefix":
-        assert len(terms) == 1
-        terms = reader.expand_prefix(terms[0])
-        mode = "or"
-    elif mode == "fuzzy":
-        assert len(terms) == 1
-        terms = reader.expand_fuzzy(terms[0])  # ES AUTO edits, 50 expansions
-        mode = "or"
-    elif mode == "wildcard":
-        assert len(terms) == 1
-        terms = reader.expand_wildcard(terms[0])
-        mode = "or"
-    elif mode == "regexp":
-        assert len(terms) == 1
-        terms = reader.expand_regexp(terms[0])
+    expand = {
+        "prefix": reader.expand_prefix,
+        "fuzzy": reader.expand_fuzzy,  # ES AUTO edits, 50 expansions
+        "wildcard": reader.expand_wildcard,
+        "regexp": reader.expand_regexp,
+    }.get(mode)
+    if expand is not None:
+        if len(terms) != 1:
+            raise ValueError(f"mode={mode!r} takes exactly one term, got {terms!r}")
+        terms = expand(terms[0])
         mode = "or"
     stats = reader.term_stats(terms)
     live_terms = [t for t in terms if t in stats]
@@ -1539,99 +1357,145 @@ def _bm25_topk_impl(
 
     if not terms or (mode == "and" and not all_terms_live):
         return "rows", []
-    if mode == "and" and algo in ("wand", "wand_daat"):
-        algo = "taat"  # conjunctive path is the vectorized intersection
-    if field_opts != "default" and algo in ("wand", "wand_daat"):
+    if algo == "wand" and (
+        # the conjunctive path is the vectorized intersection
+        mode == "and"
         # stored block-max impacts bound DEFAULT scoring only; variant
-        # scoring can exceed them (e.g. nonorms on long docs) -> exact TAAT
-        algo = "taat"
-    if algo in ("wand", "wand_daat") and len(terms) > 8:
+        # scoring can exceed them (e.g. nonorms on long docs)
+        or field_opts != "default"
         # many-term queries (prefix expansions): block pruning degenerates
-        # (interval/cursor overhead); vectorized TAAT is exact and faster
+        # (interval overhead); vectorized TAAT is exact and faster
+        or len(terms) > 8
+        # filter context would need filtered upper bounds; function_score
+        # boosts and script_score replacements exceed or ignore the stored
+        # bounds; federated stats (stats_override) break the local-avgdl-
+        # baked impacts — TAAT with its post-accumulation hooks is exact
+        or filters
+        or boost is not None
+        or script is not None
+        or stats_override is not None
+    ):
         algo = "taat"
-    shard_filter = None
-    if filters:
-        from engine.docvalues import build_shard_filter
-
-        # filter context: block-max theta pruning would need filtered
-        # upper bounds it doesn't have — exact vectorized TAAT + a
-        # post-accumulation docvalue mask is the correct kernel
-        shard_filter = build_shard_filter(reader, filters)
-        algo = "taat"
+    shard_filter = _shard_filter(reader, filters)
     shard_boost = None
     if boost is not None:
         from engine.docvalues import build_shard_boost
 
-        # function_score: boosted totals exceed the stored block-max
-        # bounds, so pruning is unsound -> exact TAAT
         shard_boost = build_shard_boost(reader, boost[0], boost[1])
-        algo = "taat"
     shard_script = None
     if script is not None:
         from engine.scripts import build_shard_script
 
-        # script_score: the script REPLACES the score, so stored bounds
-        # say nothing about final totals -> exact TAAT
         shard_script = build_shard_script(reader, script)
-        algo = "taat"
 
     if stats_override is None:
         idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in terms}
         avgdl = reader.avgdl
     else:
         # federated scoring (multi_index_topk): corpus-global idf/avgdl
-        # replace this index's local stats. Stored block-max impacts are
-        # local-avgdl-baked, so their bounds are unsound under override —
-        # exact TAAT only.
+        # replace this index's local stats
         g_idfs, g_avgdl = stats_override
         idfs = {t: float(g_idfs[t]) for t in terms}
         avgdl = float(g_avgdl)
-        if algo in ("wand", "wand_daat"):
-            algo = "taat"
     k1, b = reader.k1, reader.b
     n_terms = len(terms)
-    tomb = reader.tombstones()  # {} on an index with no deletes
 
-    def run_kernel(rows, dels=None, shard=None) -> list[tuple[int, float]]:
-        # ONE dispatch shared by the local and Spark paths — their rank
-        # identity (tested) depends on running the exact same kernel code
+    def run_kernel(rows, dels, shard) -> list[tuple[int, float]]:
         if mode == "and" and len({r.term for r in rows}) < n_terms:
             return []
         if algo == "wand" and mode == "or":
             return _bmw_shard_topk(rows, idfs, k, k1, b, avgdl, dels)
-        if algo == "wand_daat" and mode == "or":
-            return _wand_shard_topk(rows, idfs, k, k1, b, avgdl, dels)
-        lf = None
-        if shard_filter is not None:
-            lf = lambda u, s=shard: shard_filter(s, u)  # noqa: E731
-        lb = None
-        if shard_boost is not None:
-            lb = lambda u, s=shard: shard_boost(s, u)  # noqa: E731
-        lr = None
-        if shard_script is not None:
-            lr = lambda u, sc, s=shard: shard_script(s, u, sc)  # noqa: E731
         return _taat_shard_topk(
-            rows, idfs, k, k1, b, avgdl, mode, field_opts, dels, lf, lb, lr
+            rows, idfs, k, k1, b, avgdl, mode, field_opts, dels,
+            _at_shard(shard_filter, shard), _at_shard(shard_boost, shard),
+            _at_shard(shard_script, shard),
         )
 
-    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        top = run_kernel(
-            list(pdf.itertuples()), tomb.get(int(pdf_key[0])), int(pdf_key[0])
-        )
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                "score": np.array([t[1] for t in top], dtype=np.float64),
-            }
-        )
+    return _scatter_topk(
+        reader, terms, run_kernel, sum(stats[t] for t in terms), k, lookup,
+        execution,
+    )
 
-    heap_rows: list[tuple[int, int, float]] | None = None
-    total_postings = sum(stats[t] for t in terms)
-    if execution == "local" or (
+
+_PATHS = ("auto", "local", "spark")  # the execution / lookup values
+_HEAP_SCHEMA = "shard int, local_id long, score double"
+
+
+def _runs_local(
+    reader: IndexReader, execution: str, lookup: str, total_postings: int
+) -> bool:
+    """Validate the execution/lookup arguments and pick the path: True =
+    driver-local kernels (execution="local", or "auto" when the query's
+    total posting count fits LOCAL_MAX_POSTINGS), False = Spark."""
+    if execution not in _PATHS:
+        raise ValueError(f"unknown execution {execution!r}: expected one of {_PATHS}")
+    if lookup not in _PATHS:
+        raise ValueError(f"unknown lookup {lookup!r}: expected one of {_PATHS}")
+    return execution == "local" or (
         execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_local(terms)
+    )
+
+
+def _heap_frame(shard: int, top: list[tuple[int, float]]) -> pd.DataFrame:
+    """One shard's kernel output [(local_id, score)] as a _HEAP_SCHEMA
+    pandas frame — what a per-shard applyInPandas function returns."""
+    return pd.DataFrame(
+        {
+            "shard": np.full(len(top), shard, dtype=np.int32),
+            "local_id": np.array([t[0] for t in top], dtype=np.int64),
+            "score": np.array([t[1] for t in top], dtype=np.float64),
+        }
+    )
+
+
+def _scatter_topk(
+    reader: IndexReader,
+    terms: list[str],
+    run_kernel,
+    total_postings: int,
+    k: int,
+    lookup: str,
+    execution: str,
+    needs_pos: bool = False,
+):
+    """The scatter-gather executor every single-read top-k query runs on.
+
+    run_kernel(rows, dels, shard) -> [(local_id, score)]: one shard's
+    top-k over its posting rows for `terms` (with the position stream
+    when needs_pos) and its sorted tombstone array (None = no deletes).
+    The kernel runs in-process on the driver over a pruned pyarrow read
+    when _runs_local says so (total_postings is the count the caller
+    already has from its term_stats read), else as ONE Spark
+    groupBy("shard").applyInPandas where only k-row heaps leave the
+    executors. Both paths run the same kernel over the same bytes, so
+    they are rank-identical (tested). The heaps then go through
+    _finalize_topk (global top-k + pruned docmap url lookup), whose
+    ("rows" | "df", payload) this returns; _to_frame turns it into the
+    result DataFrame, while bm25_topk_rows keeps the rows.
+
+    Users: _bm25_topk_impl (bm25_topk, bm25_topk_rows, and through them
+    match_bool_prefix_topk, multi_index_topk, rescore_topk's base query),
+    bm25_dismax_topk, bm25_synonym_topk, bm25_bool_topk, terms_set_topk,
+    bm25_boosting_topk, _positional_topk (match_phrase_topk,
+    match_phrase_prefix_topk, the span queries) and the querystring
+    kernels (simple_query_string_topk, query_string_topk).
+
+    Deliberately not: bm25_topk_batch (many queries in one pass; its
+    shards x queries x k heap union is too big to collect, so it reduces
+    in Spark with a window); rescore_topk's phrase pass (it scores an
+    allowlisted window and returns a score per window doc, not a heap);
+    the aggs.py partial-aggregation scatters (they return distributed
+    partial frames, not k-row heaps); and bm25_multifield_topk, whose
+    fetch is one postings read per field view plus, for combined_fields,
+    a docmap cogroup — it shares _runs_local, _heap_frame and
+    _finalize_topk instead."""
+    local = _runs_local(reader, execution, lookup, total_postings)
+    tomb = reader.tombstones()  # {} on an index with no deletes
+    if local:
+        by_shard = (
+            reader.postings_pos_local(terms) if needs_pos
+            else reader.postings_local(terms)
+        )
         if by_shard is not None:
             # NOTE: thread-pooling the per-shard kernels was measured 4-5x
             # SLOWER here (interleaved A/B, head-term query: 113 ms
@@ -1641,26 +1505,32 @@ def _bm25_topk_impl(
             # (execution="spark" / above LOCAL_MAX_POSTINGS), which
             # parallelizes across real worker processes.
             heap_rows = [
-                (shard, local, score)
+                (shard, local_id, score)
                 for shard, rows in by_shard.items()
-                for local, score in run_kernel(rows, tomb.get(shard), shard)
+                for local_id, score in run_kernel(rows, tomb.get(shard), shard)
             ]
+            return _finalize_topk(reader, heap_rows, k, lookup)
 
-    if heap_rows is None:
-        per_shard = (
-            reader.postings(terms)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
+    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(pdf_key[0])
+        return _heap_frame(
+            shard, run_kernel(list(pdf.itertuples()), tomb.get(shard), shard)
         )
-        # The per-shard heaps are tiny (<= k x n_shards rows) by
-        # construction: collect them and pick the global top-k driver-side
-        # (doc_id = shard offset + local_id, no docmap needed for
-        # ranking); urls then come from a PRUNED docmap read instead of
-        # broadcast-joining the heap against every docmap row (the
-        # 10^12-doc scan this replaces).
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
+
+    per_shard = (
+        reader.postings(terms)
+        .groupBy("shard")
+        .applyInPandas(shard_topk, _HEAP_SCHEMA)
+    )
+    # The per-shard heaps are tiny (<= k x n_shards rows) by
+    # construction: collect them and pick the global top-k driver-side
+    # (doc_id = shard offset + local_id, no docmap needed for ranking);
+    # urls then come from a PRUNED docmap read instead of
+    # broadcast-joining the heap against every docmap row (the
+    # 10^12-doc scan this replaces).
+    heap_rows = [
+        (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
+    ]
     return _finalize_topk(reader, heap_rows, k, lookup)
 
 
@@ -1699,6 +1569,87 @@ def _finalize_topk(
     )
 
 
+def _empty_topk(spark) -> DataFrame:
+    return spark.range(0).select(
+        F.lit(None).cast("string").alias("url"),
+        F.lit(None).cast("long").alias("doc_id"),
+        F.lit(None).cast("double").alias("score"),
+    )
+
+
+def _rows_frame(spark, rows) -> DataFrame:
+    """[(url, doc_id, score)] -> the top-k result DataFrame (the typed
+    empty frame when there are no rows)."""
+    if not rows:
+        return _empty_topk(spark)
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["url", "doc_id", "score"]),
+        "url string, doc_id long, score double",
+    )
+
+
+def _to_frame(spark, result) -> DataFrame:
+    """_finalize_topk's (kind, payload) -> the top-k result DataFrame."""
+    kind, payload = result
+    return payload if kind == "df" else _rows_frame(spark, payload)
+
+
+def _shard_filter(reader: IndexReader, filters):
+    """ES filter-context clauses -> the per-shard docvalue mask
+    (shard, sorted local ids) -> keep, or None without filters."""
+    if not filters:
+        return None
+    from engine.docvalues import build_shard_filter
+
+    return build_shard_filter(reader, filters)
+
+
+def _at_shard(fn, shard: int):
+    """Bind a per-shard docvalue callable fn(shard, ...) — a shard
+    filter, boost or script — to one shard, the form the kernels'
+    local_* hooks take. None stays None."""
+    return None if fn is None else functools.partial(fn, shard)
+
+
+def _positional_topk(
+    reader: IndexReader,
+    terms: list[str],
+    kernel,
+    total_postings: int,
+    k: int,
+    execution: str,
+    lookup: str,
+    filters=(),
+) -> DataFrame:
+    """Executor front for the positional kernels (match_phrase and the
+    span queries): kernel(rows, dels, kk) -> the shard's top-kk,
+    ordered (score desc, doc asc), over positional posting rows.
+
+    filters (ES filter context): a positional match set is conjunctive,
+    hence small enough to materialize per shard — the kernel runs
+    unbounded (kk = 2^31) and the docvalue mask + truncation to k apply
+    to its ordered output. Exact: identical to masking before top-k
+    selection."""
+    shard_filter = _shard_filter(reader, filters)
+
+    def run_kernel(rows: list, dels, shard: int) -> list[tuple[int, float]]:
+        if shard_filter is None:
+            return kernel(rows, dels, k)
+        top = kernel(rows, dels, 1 << 31)
+        if not top:
+            return top
+        loc = np.array([t[0] for t in top], dtype=np.int64)
+        order = np.argsort(loc, kind="stable")  # gather needs sorted ids
+        keep = np.empty(loc.size, dtype=bool)
+        keep[order] = shard_filter(shard, loc[order])
+        return [t for t, m in zip(top, keep) if m][:k]
+
+    return _to_frame(reader.spark, _scatter_topk(
+        reader, terms, run_kernel, total_postings, k, lookup, execution,
+        needs_pos=True,
+    ))
+
+
 def bm25_dismax_topk(
     reader: IndexReader,
     query: str | list[str],
@@ -1719,66 +1670,23 @@ def bm25_dismax_topk(
     formula, so no extra IO or shuffle vs a single-field query. Same
     local/Spark adaptive execution and pruned docmap lookup as bm25_topk;
     ties doc_id asc."""
-    spark = reader.spark
     terms = analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
     stats = reader.term_stats(terms)
     terms = [t for t in terms if t in stats]
-    empty = spark.range(0).select(
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
-    )
     if not terms:
-        return empty
+        return _empty_topk(reader.spark)
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in terms}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
 
-    tomb = reader.tombstones()
-
-    def run_kernel(rows, dels=None) -> list[tuple[int, float]]:
+    def run_kernel(rows, dels, shard) -> list[tuple[int, float]]:
         return _dismax_shard_topk(
             rows, idfs, k, k1, b, avgdl, tuple(fields), tie_breaker, dels
         )
 
-    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        top = run_kernel(list(pdf.itertuples()), tomb.get(int(pdf_key[0])))
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                "score": np.array([t[1] for t in top], dtype=np.float64),
-            }
-        )
-
-    heap_rows: list[tuple[int, int, float]] | None = None
-    if execution == "local" or (
-        execution == "auto" and sum(stats[t] for t in terms) <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_local(terms)
-        if by_shard is not None:
-            heap_rows = [
-                (shard, local, score)
-                for shard, rows in by_shard.items()
-                for local, score in run_kernel(rows, tomb.get(shard))
-            ]
-    if heap_rows is None:
-        per_shard = (
-            reader.postings(terms)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
-        )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return empty
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _to_frame(reader.spark, _scatter_topk(
+        reader, terms, run_kernel, sum(stats[t] for t in terms), k, lookup,
+        execution,
+    ))
 
 
 def parse_field_boosts(fields: list) -> list[tuple[str, float]]:
@@ -2170,13 +2078,8 @@ def bm25_multifield_topk(
     readers = {name: reader.for_field(name) for name, _ in fb}
     stats = {name: readers[name].term_stats(terms) for name, _ in fb}
     live = [t for t in terms if any(t in stats[name] for name, _ in fb)]
-    empty = spark.range(0).select(
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
-    )
     if not live or (n_required and len(live) < n_required):
-        return empty
+        return _empty_topk(spark)
     n_docs = reader.n_docs
     idfs_by_field = {
         name: {t: float(P.bm25_idf(df, n_docs)) for t, df in stats[name].items()}
@@ -2194,32 +2097,23 @@ def bm25_multifield_topk(
     tomb = reader.tombstones()
     combined = mtype == "combined_fields"
     field_names = [name for name, _ in fb]
-    shard_filter = None
-    if filters:
-        from engine.docvalues import build_shard_filter
-
-        # filter context composes exactly like bm25_topk's: a
-        # candidates-only docvalue mask per shard, applied after blend
-        # accumulation (scores of survivors are unchanged, per ES)
-        shard_filter = build_shard_filter(reader, filters)
+    # filter context composes exactly like bm25_topk's: a candidates-only
+    # docvalue mask per shard, applied after blend accumulation (scores
+    # of survivors are unchanged, per ES)
+    shard_filter = _shard_filter(reader, filters)
 
     def run_kernel(
-        rows_by_field, dels=None, dl_lookup=None, shard=None
+        rows_by_field, dels, dl_lookup, shard
     ) -> list[tuple[int, float]]:
-        lf = None
-        if shard_filter is not None:
-            lf = lambda u, s=shard: shard_filter(s, u)  # noqa: E731
         return _mf_shard_topk(
             rows_by_field, idfs_by_field, blended_idfs, avgdl_by_field,
-            boosts, mtype, tie_breaker, k, k1, b, dels, dl_lookup, lf,
-            n_required,
+            boosts, mtype, tie_breaker, k, k1, b, dels, dl_lookup,
+            _at_shard(shard_filter, shard), n_required,
         )
 
     heap_rows: list[tuple[int, int, float]] | None = None
     total_postings = sum(sum(stats[name].values()) for name, _ in fb)
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
+    if _runs_local(reader, execution, lookup, total_postings):
         per_field_shards = {
             name: readers[name].postings_local(live) for name, _ in fb
         }
@@ -2261,15 +2155,6 @@ def bm25_multifield_topk(
                 rows_by_field.setdefault(r.field, []).append(r)
             return rows_by_field
 
-        def _emit(shard: int, top: list) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "shard": np.full(len(top), shard, dtype=np.int32),
-                    "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                    "score": np.array([t[1] for t in top], dtype=np.float64),
-                }
-            )
-
         if combined:
             # norms stay shard-local: cogroup the postings with the
             # docmap's (local_id, dl__<f>) columns per shard — no
@@ -2287,7 +2172,7 @@ def bm25_multifield_topk(
                 key: tuple, pdf: pd.DataFrame, dm: pd.DataFrame
             ) -> pd.DataFrame:
                 if pdf.empty or dm.empty:
-                    return _emit(int(key[0]), [])
+                    return _heap_frame(int(key[0]), [])
                 order = np.argsort(dm["local_id"].to_numpy(), kind="stable")
                 lids = dm["local_id"].to_numpy()[order]
                 dls_of = {
@@ -2297,14 +2182,12 @@ def bm25_multifield_topk(
                     _rows_by_field(pdf), tomb.get(int(key[0])), (lids, dls_of),
                     int(key[0]),
                 )
-                return _emit(int(key[0]), top)
+                return _heap_frame(int(key[0]), top)
 
             per_shard = (
                 union.groupBy("shard")
                 .cogroup(dmap.groupBy("shard"))
-                .applyInPandas(
-                    shard_topk_cg, "shard int, local_id long, score double"
-                )
+                .applyInPandas(shard_topk_cg, _HEAP_SCHEMA)
             )
         else:
 
@@ -2313,23 +2196,15 @@ def bm25_multifield_topk(
                     _rows_by_field(pdf), tomb.get(int(pdf_key[0])),
                     None, int(pdf_key[0]),
                 )
-                return _emit(int(pdf_key[0]), top)
+                return _heap_frame(int(pdf_key[0]), top)
 
             per_shard = union.groupBy("shard").applyInPandas(
-                shard_topk, "shard int, local_id long, score double"
+                shard_topk, _HEAP_SCHEMA
             )
         heap_rows = [
             (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
         ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return empty
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _to_frame(spark, _finalize_topk(reader, heap_rows, k, lookup))
 
 
 def bm25_synonym_topk(
@@ -2361,21 +2236,15 @@ def bm25_synonym_topk(
     applies idf(max df) * impact(tf_sum, dl) — no joins, no extra shuffle
     vs a plain match of the same number of terms. Same adaptive
     local/Spark execution + pruned docmap lookup as bm25_topk."""
-    spark = reader.spark
     groups = [list(dict.fromkeys(g)) for g in groups if g]
     all_terms = sorted({t for g in groups for t in g})
     stats = reader.term_stats(all_terms)
-    empty = spark.range(0).select(
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
-    )
     live_groups = [[t for t in g if t in stats] for g in groups]
     if mode == "and" and any(not g for g in live_groups):
-        return empty
+        return _empty_topk(reader.spark)
     live_groups = [g for g in live_groups if g]
     if not live_groups:
-        return empty
+        return _empty_topk(reader.spark)
     # blended group idf: df = max over live members (Lucene SynonymQuery)
     gidfs = [
         float(P.bm25_idf(max(stats[t] for t in g), reader.n_docs))
@@ -2385,14 +2254,9 @@ def bm25_synonym_topk(
     terms = sorted(term_grp)
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
     n_groups = len(live_groups)
-    tomb = reader.tombstones()
-    shard_filter = None
-    if filters:
-        from engine.docvalues import build_shard_filter
+    shard_filter = _shard_filter(reader, filters)
 
-        shard_filter = build_shard_filter(reader, filters)
-
-    def run_kernel(rows, dels=None, shard=None) -> list[tuple[int, float]]:
+    def run_kernel(rows, dels, shard) -> list[tuple[int, float]]:
         by_grp: dict[int, list[tuple]] = {}
         for r in rows:
             d, t, l = P.decode_term_postings(
@@ -2435,48 +2299,10 @@ def bm25_synonym_topk(
         order = _topk_order(uniq, scores, kk)
         return list(zip(uniq[order].tolist(), scores[order].tolist()))
 
-    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        top = run_kernel(
-            list(pdf.itertuples()), tomb.get(int(pdf_key[0])), int(pdf_key[0])
-        )
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                "score": np.array([t[1] for t in top], dtype=np.float64),
-            }
-        )
-
-    heap_rows: list[tuple[int, int, float]] | None = None
-    if execution == "local" or (
-        execution == "auto"
-        and sum(stats[t] for t in terms) <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_local(terms)
-        if by_shard is not None:
-            heap_rows = [
-                (shard, local, score)
-                for shard, rows in by_shard.items()
-                for local, score in run_kernel(rows, tomb.get(shard), shard)
-            ]
-    if heap_rows is None:
-        per_shard = (
-            reader.postings(terms)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
-        )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return empty
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _to_frame(reader.spark, _scatter_topk(
+        reader, terms, run_kernel, sum(stats[t] for t in terms), k, lookup,
+        execution,
+    ))
 
 
 def bm25_bool_topk(
@@ -2524,86 +2350,32 @@ def bm25_bool_topk(
     msm = minimum_should_match
     if msm is None:
         msm = 0 if must_terms else 1
-    spark = reader.spark
-    empty = spark.range(0).select(
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
-    )
     stats = reader.term_stats(must_terms + should_terms + not_terms)
     if any(t not in stats for t in must_terms):
-        return empty
+        return _empty_topk(reader.spark)
     should_terms = [t for t in should_terms if t in stats]
     not_terms = [t for t in not_terms if t in stats]
     scoring = must_terms + should_terms
     if not scoring or msm > len(should_terms):
-        return empty
+        return _empty_topk(reader.spark)
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in scoring}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
     must_set, not_set = frozenset(must_terms), frozenset(not_terms)
-    n_must = len(must_terms)
+    # filter context: same candidates-only docvalue mask as bm25_topk,
+    # applied inside the kernel after clause accumulation
+    shard_filter = _shard_filter(reader, filters)
 
-    tomb = reader.tombstones()
-    shard_filter = None
-    if filters:
-        from engine.docvalues import build_shard_filter
-
-        # filter context: same candidates-only docvalue mask as bm25_topk,
-        # applied inside the kernel after clause accumulation
-        shard_filter = build_shard_filter(reader, filters)
-
-    def run_kernel(rows, dels=None, shard=None) -> list[tuple[int, float]]:
-        lf = None
-        if shard_filter is not None:
-            lf = lambda u, s=shard: shard_filter(s, u)  # noqa: E731
+    def run_kernel(rows, dels, shard) -> list[tuple[int, float]]:
         return _bool_shard_topk(
             rows, idfs, k, k1, b, avgdl, must_set, not_set, msm, field_opts,
-            dels, lf,
-        )
-
-    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        top = run_kernel(
-            list(pdf.itertuples()), tomb.get(int(pdf_key[0])), int(pdf_key[0])
-        )
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                "score": np.array([t[1] for t in top], dtype=np.float64),
-            }
+            dels, _at_shard(shard_filter, shard),
         )
 
     all_terms = scoring + not_terms
-    heap_rows: list[tuple[int, int, float]] | None = None
-    if execution == "local" or (
-        execution == "auto"
-        and sum(stats[t] for t in all_terms) <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_local(all_terms)
-        if by_shard is not None:
-            heap_rows = [
-                (shard, local, score)
-                for shard, rows in by_shard.items()
-                for local, score in run_kernel(rows, tomb.get(shard), shard)
-            ]
-    if heap_rows is None:
-        per_shard = (
-            reader.postings(all_terms)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
-        )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return empty
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _to_frame(reader.spark, _scatter_topk(
+        reader, all_terms, run_kernel, sum(stats[t] for t in all_terms), k,
+        lookup, execution,
+    ))
 
 
 def _terms_set_shard_topk(
@@ -2695,20 +2467,13 @@ def terms_set_topk(
             "docvalue_cols=[...])"
         )
     qterms = list(dict.fromkeys(terms))
-    spark = reader.spark
-    empty = spark.range(0).select(
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
-    )
     stats = reader.term_stats(qterms)
     present = [t for t in qterms if t in stats]
     if not present:
-        return empty
+        return _empty_topk(reader.spark)
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in present}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
     index_dir, field = reader.dir, minimum_should_match_field
-    tomb = reader.tombstones()
 
     def required_fn(shard: int, uniq: np.ndarray) -> np.ndarray:
         tbl = gather_docvalues(index_dir, int(shard), [field], uniq)
@@ -2719,61 +2484,18 @@ def terms_set_topk(
             .astype(np.float64)
         )
 
-    shard_filter = None
-    if filters:
-        from engine.docvalues import build_shard_filter
+    shard_filter = _shard_filter(reader, filters)
 
-        shard_filter = build_shard_filter(reader, filters)
-
-    def run_kernel(shard: int, rows) -> list[tuple[int, float]]:
-        lf = None
-        if shard_filter is not None:
-            lf = lambda u, s=shard: shard_filter(s, u)  # noqa: E731
+    def run_kernel(rows, dels, shard) -> list[tuple[int, float]]:
         return _terms_set_shard_topk(
-            rows, idfs, k, k1, b, avgdl, required_fn, shard, tomb.get(shard),
-            lf,
+            rows, idfs, k, k1, b, avgdl, required_fn, shard, dels,
+            _at_shard(shard_filter, shard),
         )
 
-    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        top = run_kernel(int(pdf_key[0]), list(pdf.itertuples()))
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                "score": np.array([t[1] for t in top], dtype=np.float64),
-            }
-        )
-
-    heap_rows: list[tuple[int, int, float]] | None = None
-    if execution == "local" or (
-        execution == "auto"
-        and sum(stats[t] for t in present) <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_local(present)
-        if by_shard is not None:
-            heap_rows = [
-                (shard, local, score)
-                for shard, rows in by_shard.items()
-                for local, score in run_kernel(shard, rows)
-            ]
-    if heap_rows is None:
-        per_shard = (
-            reader.postings(present)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
-        )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return empty
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _to_frame(reader.spark, _scatter_topk(
+        reader, present, run_kernel, sum(stats[t] for t in present), k,
+        lookup, execution,
+    ))
 
 
 def match_bool_prefix_topk(
@@ -2796,18 +2518,12 @@ def match_bool_prefix_topk(
     terms ranking alone (ES: the prefix clause simply matches nothing
     under OR semantics)."""
     toks = analyze_query_py(text)
-    spark = reader.spark
-    empty = spark.range(0).select(
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
-    )
     if not toks:
-        return empty
+        return _empty_topk(reader.spark)
     lead, last = toks[:-1], toks[-1]
     terms = list(dict.fromkeys(lead + reader.expand_prefix(last, max_expansions)))
     if not terms:
-        return empty
+        return _empty_topk(reader.spark)
     return bm25_topk(
         reader, terms, k=k, mode="or", execution=execution, lookup=lookup,
         filters=filters,
@@ -2895,73 +2611,27 @@ def bm25_boosting_topk(
 
     pos_terms = _analyze(positive)
     neg_terms = [t for t in _analyze(negative) if t not in set(pos_terms)]
-    spark = reader.spark
     stats = reader.term_stats(pos_terms + neg_terms)
     pos_terms = [t for t in pos_terms if t in stats]
     neg_terms = [t for t in neg_terms if t in stats]
     if not pos_terms:
-        return _empty_topk(spark)
+        return _empty_topk(reader.spark)
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in pos_terms}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
     neg_set = frozenset(neg_terms)
-    tomb = reader.tombstones()
-    shard_filter = None
-    if filters:
-        from engine.docvalues import build_shard_filter
+    shard_filter = _shard_filter(reader, filters)
 
-        shard_filter = build_shard_filter(reader, filters)
-
-    def run_kernel(rows, dels=None, shard=None) -> list[tuple[int, float]]:
-        lf = None
-        if shard_filter is not None:
-            lf = lambda u, s=shard: shard_filter(s, u)  # noqa: E731
+    def run_kernel(rows, dels, shard) -> list[tuple[int, float]]:
         return _boosting_shard_topk(
-            rows, idfs, neg_set, negative_boost, k, k1, b, avgdl, dels, lf
-        )
-
-    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        top = run_kernel(
-            list(pdf.itertuples()), tomb.get(int(pdf_key[0])), int(pdf_key[0])
-        )
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                "score": np.array([t[1] for t in top], dtype=np.float64),
-            }
+            rows, idfs, neg_set, negative_boost, k, k1, b, avgdl, dels,
+            _at_shard(shard_filter, shard),
         )
 
     all_terms = pos_terms + neg_terms
-    heap_rows: list[tuple[int, int, float]] | None = None
-    if execution == "local" or (
-        execution == "auto"
-        and sum(stats[t] for t in all_terms) <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_local(all_terms)
-        if by_shard is not None:
-            heap_rows = [
-                (shard, local, score)
-                for shard, rows in by_shard.items()
-                for local, score in run_kernel(rows, tomb.get(shard), shard)
-            ]
-    if heap_rows is None:
-        per_shard = (
-            reader.postings(all_terms)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
-        )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return _empty_topk(spark)
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _to_frame(reader.spark, _scatter_topk(
+        reader, all_terms, run_kernel, sum(stats[t] for t in all_terms), k,
+        lookup, execution,
+    ))
 
 
 def bm25_topk_batch(
@@ -2983,11 +2653,9 @@ def bm25_topk_batch(
     all_terms = sorted({t for ts in queries.values() for t in ts})
     stats = reader.term_stats(all_terms)
     live_terms = [t for t in all_terms if t in stats]
-    empty = spark.range(0).select(
+    empty = _empty_topk(spark).select(
         F.lit(None).cast("long").alias("query_id"),
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
+        "url", "doc_id", "score",
         F.lit(None).cast("int").alias("rank"),
     )
     if not live_terms:
@@ -4187,98 +3855,26 @@ def _phrase_slots_topk(
     idf_sum: float,
     k: int,
     slop: int,
+    total_postings: int,
     execution: str,
     lookup: str,
     filters=(),
 ) -> DataFrame:
-    """Shared phrase executor: run the exact (slop=0) or sloppy kernel per
-    shard over the slots' distinct terms, local pyarrow or ONE Spark
-    scatter-gather, finalize via the pruned docmap lookup.
-
-    filters (ES filter context): the phrase match set is conjunctive (a
-    doc must contain every slot), so it is small enough to materialize in
-    full per shard — the kernel runs unbounded (k = 2^31) and the
-    docvalue mask + truncation to k happen on its ordered output. Exact:
-    identical to masking before top-k selection."""
-    spark = reader.spark
-    distinct = list(dict.fromkeys(t for s in slots for t in s))
+    """Shared phrase front: the exact (slop=0) or sloppy kernel per shard
+    over the slots' distinct terms, run by _positional_topk (which also
+    applies the filter context)."""
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
-    tomb = reader.tombstones()
-    shard_filter = None
-    if filters:
-        from engine.docvalues import build_shard_filter
 
-        shard_filter = build_shard_filter(reader, filters)
-
-    def run_kernel(rows: list, dels, shard=None) -> list[tuple[int, float]]:
-        kk = k if shard_filter is None else (1 << 31)
+    def kernel(rows: list, dels, kk: int) -> list[tuple[int, float]]:
         if slop:
-            top = _phrase_slop_shard_topk(
+            return _phrase_slop_shard_topk(
                 rows, slots, slop, idf_sum, kk, k1, b, avgdl, dels
             )
-        else:
-            top = _phrase_shard_topk(rows, slots, idf_sum, kk, k1, b, avgdl, dels)
-        if shard_filter is None or not top:
-            return top
-        loc = np.array([t[0] for t in top], dtype=np.int64)
-        order = np.argsort(loc, kind="stable")  # gather needs sorted ids
-        keep = np.empty(loc.size, dtype=bool)
-        keep[order] = shard_filter(shard, loc[order])
-        # top is already (score desc, doc asc): masked truncation is exact
-        return [t for t, m in zip(top, keep) if m][:k]
+        return _phrase_shard_topk(rows, slots, idf_sum, kk, k1, b, avgdl, dels)
 
-    heap_rows: list[tuple[int, int, float]] | None = None
-    stats = reader.term_stats(distinct)
-    total_postings = sum(stats.get(t, 0) for t in distinct)
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_pos_local(distinct)
-        if by_shard is not None:
-            heap_rows = [
-                (shard, local, score)
-                for shard, rows in by_shard.items()
-                for local, score in run_kernel(rows, tomb.get(shard), shard)
-            ]
-    if heap_rows is None:
-
-        def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            top = run_kernel(
-                list(pdf.itertuples()), tomb.get(int(pdf_key[0])),
-                int(pdf_key[0]),
-            )
-            return pd.DataFrame(
-                {
-                    "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                    "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                    "score": np.array([t[1] for t in top], dtype=np.float64),
-                }
-            )
-
-        per_shard = (
-            reader.postings(distinct)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
-        )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return _empty_topk(spark)
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
-
-
-def _empty_topk(spark) -> DataFrame:
-    return spark.range(0).select(
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
+    return _positional_topk(
+        reader, list(dict.fromkeys(t for s in slots for t in s)), kernel,
+        total_postings, k, execution, lookup, filters,
     )
 
 
@@ -4338,8 +3934,8 @@ def match_phrase_topk(
         sum(P.bm25_idf(stats[t], reader.n_docs) for t in terms)  # dups counted
     )
     return _phrase_slots_topk(
-        reader, [[t] for t in terms], idf_sum, k, slop, execution, lookup,
-        filters,
+        reader, [[t] for t in terms], idf_sum, k, slop,
+        sum(stats[t] for t in distinct), execution, lookup, filters,
     )
 
 
@@ -4545,7 +4141,10 @@ def match_phrase_prefix_topk(
     expansions = reader.expand_prefix(pre, max_expansions=max_expansions)
     if not expansions:
         return _empty_topk(reader.spark)
-    stats = reader.term_stats(list(dict.fromkeys(head)))
+    # one dictionary read: head idfs, plus the expansions' dfs for the
+    # executor's local/Spark gate
+    fetch = list(dict.fromkeys(head + expansions))
+    stats = reader.term_stats(fetch)
     if any(t not in stats for t in head):
         return _empty_topk(reader.spark)
     # exact union df of the prefix slot: shards partition the doc space,
@@ -4592,7 +4191,8 @@ def match_phrase_prefix_topk(
     )
     slots = [[t] for t in head] + [list(expansions)]
     return _phrase_slots_topk(
-        reader, slots, idf_sum, k, slop, execution, lookup, filters
+        reader, slots, idf_sum, k, slop, sum(stats.get(t, 0) for t in fetch),
+        execution, lookup, filters,
     )
 
 
@@ -4696,9 +4296,7 @@ def rescore_topk(
                 shard = int(pdf_key[0])
                 allow = allow_b.get(shard)
                 if allow is None:
-                    return pd.DataFrame({"shard": [], "local_id": [], "score": []}).astype(
-                        {"shard": np.int32, "local_id": np.int64, "score": np.float64}
-                    )
+                    return _heap_frame(shard, [])
                 arr = np.asarray(allow, dtype=np.int64)
                 rows = list(pdf.itertuples())
                 top = _phrase_slop_shard_topk(
@@ -4708,18 +4306,12 @@ def rescore_topk(
                     rows, slots, idf_sum, arr.size, k1, b, avgdl,
                     tomb.get(shard), arr,
                 )
-                return pd.DataFrame(
-                    {
-                        "shard": np.full(len(top), shard, dtype=np.int32),
-                        "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                        "score": np.array([t[1] for t in top], dtype=np.float64),
-                    }
-                )
+                return _heap_frame(shard, top)
 
             got = (
                 reader.postings(distinct)
                 .groupBy("shard")
-                .applyInPandas(shard_scores, "shard int, local_id long, score double")
+                .applyInPandas(shard_scores, _HEAP_SCHEMA)
                 .collect()
             )
             phrase_scores = {
@@ -4731,10 +4323,7 @@ def rescore_topk(
         ph = phrase_scores.get((int(shard), int(local)), 0.0)
         out.append((url, int(doc_id), query_weight * base_sc + rescore_weight * ph))
     out.sort(key=lambda r: (-r[2], r[1]))
-    return reader.spark.createDataFrame(
-        pd.DataFrame(out[:k], columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _rows_frame(reader.spark, out[:k])
 
 
 def index_stats(reader: "IndexReader") -> dict:
@@ -4814,14 +4403,8 @@ def multi_index_topk(
         for t, d in r.term_stats(terms).items():
             df_g[t] = df_g.get(t, 0) + int(d)
     live = [t for t in terms if df_g.get(t)]
-    spark = readers[0].spark
-    empty = spark.range(0).select(
-        F.lit(None).cast("string").alias("url"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("double").alias("score"),
-    )
     if not live or (mode == "and" and len(live) < len(terms)):
-        return empty
+        return _empty_topk(readers[0].spark)
     n_g = sum(int(r.n_docs) for r in readers)
     sum_dl = sum(int(r.manifest["sum_dl"]) for r in readers)
     avgdl_g = sum_dl / n_g

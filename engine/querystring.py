@@ -53,12 +53,16 @@ import pandas as pd
 from engine import postings as P
 from engine.query import (
     IndexReader,
+    _at_shard,
     _empty_topk,
-    _finalize_topk,
     _live_mask,
     _norm_blocks,
     _phrase_freqs,
     _require_positions,
+    _rows_frame,
+    _scatter_topk,
+    _shard_filter,
+    _to_frame,
     _topk_order,
 )
 from engine.textnorm import standard_tokenize_py
@@ -322,93 +326,18 @@ def simple_query_string_topk(
             else [t for slot in s[1] for t in slot]
         )
     ))
-    shard_filter = _shard_filter_or_none(reader, filters)
+    shard_filter = _shard_filter(reader, filters)
 
-    def run_kernel(rows: list, dels, shard=None) -> list[tuple[int, float]]:
-        lf = None
-        if shard_filter is not None:
-            lf = lambda u, s=shard: shard_filter(s, u)  # noqa: E731
+    def run_kernel(rows: list, dels, shard: int) -> list[tuple[int, float]]:
         return _sqs_shard_topk(
-            rows, pos_specs, neg_specs, and_mode, k, dels, lf
+            rows, pos_specs, neg_specs, and_mode, k, dels,
+            _at_shard(shard_filter, shard),
         )
 
-    total_postings = sum(stats.get(t, 0) for t in distinct)
-    return _scatter_topk(
-        reader, distinct, needs_pos, run_kernel, total_postings, k,
-        lookup, execution,
-    )
-
-
-def _shard_filter_or_none(reader, filters):
-    if not filters:
-        return None
-    from engine.docvalues import build_shard_filter
-
-    return build_shard_filter(reader, filters)
-
-
-def _scatter_topk(
-    reader: IndexReader,
-    distinct: list[str],
-    needs_pos: bool,
-    run_kernel,
-    total_postings: int,
-    k: int,
-    lookup: str,
-    execution: str,
-):
-    """Shared execution scaffold for the query-language kernels: local
-    pyarrow path when the postings footprint allows (same adaptive gate
-    as bm25_topk), else ONE Spark scatter-gather where only per-shard
-    top-k rows leave the executors; winner docmap lookup pruned."""
-    tomb = reader.tombstones()
-    heap_rows: list[tuple[int, int, float]] | None = None
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = (
-            reader.postings_pos_local(distinct)
-            if needs_pos
-            else reader.postings_local(distinct)
-        )
-        if by_shard is not None:
-            heap_rows = [
-                (shard, local, score)
-                for shard, rows in by_shard.items()
-                for local, score in run_kernel(rows, tomb.get(shard), shard)
-            ]
-    if heap_rows is None:
-
-        def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            top = run_kernel(
-                list(pdf.itertuples()), tomb.get(int(pdf_key[0])),
-                int(pdf_key[0]),
-            )
-            return pd.DataFrame(
-                {
-                    "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                    "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                    "score": np.array([t[1] for t in top], dtype=np.float64),
-                }
-            )
-
-        per_shard = (
-            reader.postings(distinct)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
-        )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return _empty_topk(reader.spark)
-    return reader.spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _to_frame(reader.spark, _scatter_topk(
+        reader, distinct, run_kernel, sum(stats.get(t, 0) for t in distinct),
+        k, lookup, execution, needs_pos,
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -857,19 +786,15 @@ def query_string_topk(
     if not distinct:
         return _empty_topk(reader.spark)
 
-    shard_filter = _shard_filter_or_none(reader, filters)
+    shard_filter = _shard_filter(reader, filters)
 
-    def run_kernel(rows: list, dels, shard=None) -> list[tuple[int, float]]:
-        lf = None
-        if shard_filter is not None:
-            lf = lambda u, s=shard: shard_filter(s, u)  # noqa: E731
-        return _qs_shard_topk(rows, spec, k, dels, lf)
+    def run_kernel(rows: list, dels, shard: int) -> list[tuple[int, float]]:
+        return _qs_shard_topk(rows, spec, k, dels, _at_shard(shard_filter, shard))
 
-    total_postings = sum(stats.get(t, 0) for t in distinct)
-    return _scatter_topk(
-        reader, distinct, needs_pos, run_kernel, total_postings, k,
-        lookup, execution,
-    )
+    return _to_frame(reader.spark, _scatter_topk(
+        reader, distinct, run_kernel, sum(stats.get(t, 0) for t in distinct),
+        k, lookup, execution, needs_pos,
+    ))
 
 
 def sqs_multifield_topk(
@@ -985,12 +910,7 @@ def sqs_multifield_topk(
         ((u, d, s) for u, (d, s, _c) in total.items()),
         key=lambda x: (-x[2], x[1]),
     )[:k]
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _rows_frame(spark, rows)
 
 
 def qs_multifield_topk(
@@ -1169,9 +1089,4 @@ def qs_multifield_topk(
         ((u, d, s) for u, (d, s) in res.items()),
         key=lambda x: (-x[2], x[1]),
     )[:k]
-    import pandas as pd
-
-    return reader.spark.createDataFrame(
-        pd.DataFrame(rows, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
+    return _rows_frame(reader.spark, rows)

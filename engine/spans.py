@@ -55,24 +55,24 @@ Identities (property-tested in tests/test_spans.py):
   weight 1, identical pseudo-term idf).
 - ``span_first(t, end >= max_dl)`` == single-term BM25 over ``t``.
 
-Execution mirrors match_phrase_topk: driver-local pyarrow read +
-in-process kernel when the terms' postings fit LOCAL_MAX_POSTINGS, else
-ONE Spark scatter-gather (per-shard kernels via applyInPandas, <= k rows
-back per shard); winner urls via the pruned docmap lookup.
+Execution is match_phrase_topk's: engine.query._positional_topk on the
+shared scatter-gather executor — driver-local pyarrow read + in-process
+kernel when the terms' postings fit LOCAL_MAX_POSTINGS, else ONE Spark
+scatter-gather (<= k rows back per shard); winner urls via the pruned
+docmap lookup.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from engine import postings as P
 from engine.query import (
     IndexReader,
     _empty_topk,
-    _finalize_topk,
     _phrase_candidates,
     _phrase_score_rows,
+    _positional_topk,
     _require_positions,
     _slot_occurrences,
 )
@@ -238,89 +238,6 @@ def _span_first_shard_topk(
     )
 
 
-def _positional_topk(
-    reader: IndexReader,
-    distinct: list[str],
-    run_kernel,
-    k: int,
-    execution: str,
-    lookup: str,
-    filters=(),
-):
-    """Shared span executor (the match_phrase execution shape): local
-    pyarrow positional read + in-process kernel when the postings fit,
-    else one Spark scatter-gather with per-shard kernels.
-
-    filters (ES filter context): callers pass an UNBOUNDED run_kernel
-    (kernel k = 2^31) when filters are set; the docvalue mask +
-    truncation to k apply here on the kernel's ordered full output —
-    exact, same composition as the phrase executor."""
-    spark = reader.spark
-    tomb = reader.tombstones()
-    stats = reader.term_stats(distinct)
-    shard_filter = None
-    if filters:
-        from engine.docvalues import build_shard_filter
-
-        shard_filter = build_shard_filter(reader, filters)
-
-    def kernel(rows: list, dels, shard: int) -> list[tuple[int, float]]:
-        top = run_kernel(rows, dels)
-        if shard_filter is None or not top:
-            return top
-        loc = np.array([t[0] for t in top], dtype=np.int64)
-        order = np.argsort(loc, kind="stable")  # gather needs sorted ids
-        keep = np.empty(loc.size, dtype=bool)
-        keep[order] = shard_filter(shard, loc[order])
-        # top is (score desc, doc asc)-ordered: masked truncation is exact
-        return [t for t, m in zip(top, keep) if m][:k]
-
-    heap_rows: list[tuple[int, int, float]] | None = None
-    total_postings = sum(stats.get(t, 0) for t in distinct)
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_pos_local(distinct)
-        if by_shard is not None:
-            heap_rows = [
-                (shard, local, score)
-                for shard, rows in by_shard.items()
-                for local, score in kernel(rows, tomb.get(shard), shard)
-            ]
-    if heap_rows is None:
-
-        def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            top = kernel(
-                list(pdf.itertuples()), tomb.get(int(pdf_key[0])),
-                int(pdf_key[0]),
-            )
-            return pd.DataFrame(
-                {
-                    "shard": np.full(len(top), pdf_key[0], dtype=np.int32),
-                    "local_id": np.array([t[0] for t in top], dtype=np.int64),
-                    "score": np.array([t[1] for t in top], dtype=np.float64),
-                }
-            )
-
-        per_shard = (
-            reader.postings(distinct)
-            .groupBy("shard")
-            .applyInPandas(shard_topk, "shard int, local_id long, score double")
-        )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    kind, payload = _finalize_topk(reader, heap_rows, k, lookup)
-    if kind == "df":
-        return payload
-    if not payload:
-        return _empty_topk(spark)
-    return spark.createDataFrame(
-        pd.DataFrame(payload, columns=["url", "doc_id", "score"]),
-        "url string, doc_id long, score double",
-    )
-
-
 def span_near_topk(
     reader: IndexReader,
     clauses,
@@ -362,16 +279,15 @@ def span_near_topk(
     distinct = list(dict.fromkeys([t for sl in slots for t in sl] + exclude))
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
 
-    kern_k = (1 << 31) if filters else k  # unbounded under filter context
-
-    def run_kernel(rows: list, dels) -> list[tuple[int, float]]:
+    def kernel(rows: list, dels, kk: int) -> list[tuple[int, float]]:
         return _span_near_shard_topk(
-            rows, slots, slop, in_order, idf_sum, kern_k, k1, b, avgdl, dels,
+            rows, slots, slop, in_order, idf_sum, kk, k1, b, avgdl, dels,
             exclude=exclude, pre=pre, post=post,
         )
 
     return _positional_topk(
-        reader, distinct, run_kernel, k, execution, lookup, filters
+        reader, distinct, kernel, sum(stats[t] for t in distinct), k,
+        execution, lookup, filters,
     )
 
 
@@ -463,13 +379,9 @@ def span_first_topk(
     idf = float(P.bm25_idf(stats[t], reader.n_docs))
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
 
-    kern_k = (1 << 31) if filters else k
-
-    def run_kernel(rows: list, dels) -> list[tuple[int, float]]:
-        return _span_first_shard_topk(
-            rows, t, end, idf, kern_k, k1, b, avgdl, dels
-        )
+    def kernel(rows: list, dels, kk: int) -> list[tuple[int, float]]:
+        return _span_first_shard_topk(rows, t, end, idf, kk, k1, b, avgdl, dels)
 
     return _positional_topk(
-        reader, [t], run_kernel, k, execution, lookup, filters
+        reader, [t], kernel, stats[t], k, execution, lookup, filters
     )

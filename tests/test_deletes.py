@@ -9,7 +9,7 @@ Frozen semantics under test:
 - masking only REMOVES docs: post-delete top-k == pre-delete top-(all)
   minus deleted, truncated to k, with IDENTICAL scores (stats still count
   deleted docs until compaction — Lucene's behavior);
-- every kernel (bmw / cursor wand / taat), both executions (local serving
+- every kernel (bmw / taat), both executions (local serving
   path / Spark scatter-gather), and the batch + dismax + bool paths all
   mask identically;
 - compaction is equivalent to a from-scratch build over the live docs:
@@ -85,7 +85,7 @@ def _rows(reader, terms, k, **kw):
     return [(r["url"], r["score"]) for r in df.collect()]
 
 
-@pytest.mark.parametrize("algo", ["wand", "wand_daat", "taat"])
+@pytest.mark.parametrize("algo", ["wand", "taat"])
 @pytest.mark.parametrize("execution", ["local", "spark"])
 def test_masking_equals_pre_delete_minus_victims(
     spark, index, deleted_index, victims, algo, execution

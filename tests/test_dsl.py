@@ -1083,3 +1083,64 @@ def test_analyze_endpoint():
 
     with _pt.raises(ValueError, match="unknown analyzer"):
         analyze("x", "nope")
+
+
+def test_knn_hybrid_constant_score_legs(spark, dsl_index):
+    """knn + a constant-score lexical leg (docvalue term, ids): the
+    unbounded leg is capped at the index size, so the leg's
+    DataFrame.limit gets a Java int instead of overflowing at 2^31.
+    Fused score = leg score 1.0 + knn cosine, union of both sets."""
+    import numpy as np
+
+    from engine.dsl import search
+    from engine.simsearch import cosine_topk
+
+    r = IndexReader(spark, dsl_index)
+    lang_of = {
+        x["url"]: x["lang"]
+        for x in spark.read.parquet(f"{dsl_index}/docmap").select("url", "lang").collect()
+    }
+    rng = np.random.default_rng(5)
+    urls = sorted(lang_of)[:40]
+    emb = spark.createDataFrame(
+        [(u, [float(x) for x in rng.normal(size=8)]) for u in urls],
+        "vec_id string, embedding array<float>",
+    )
+    q = [float(x) for x in rng.normal(size=8)]
+    probes = spark.createDataFrame([(-1, q)], "probe_id long, embedding array<float>")
+    vec = {x["neighbor_id"]: x["cos"] for x in cosine_topk(emb, probes, k=4).collect()}
+    lang, ids = lang_of[urls[0]], urls[5:12]
+    for leg, lex in (
+        ({"term": {"lang": lang}}, {u for u, lg in lang_of.items() if lg == lang}),
+        ({"ids": {"values": ids}}, set(ids)),
+    ):
+        resp = search(
+            r, {"knn": {"query_vector": q, "k": 4}, "query": leg, "size": 1000},
+            embeddings=emb,
+        )
+        want = sorted(
+            ((u, round((u in lex) + vec.get(u, 0.0), 6)) for u in lex | set(vec)),
+            key=lambda t: (-t[1], t[0]),
+        )
+        assert [(h["_id"], h["_score"]) for h in resp["hits"]["hits"]] == want
+        assert resp["hits"]["total"]["value"] == len(want)
+
+
+def test_terms_clause_shape_fails_closed(spark, dsl_index):
+    """A `terms` clause names exactly one field beside an optional boost;
+    a boost-only clause or one with two fields raises a descriptive
+    ValueError (not StopIteration / a tuple-unpacking error) in query
+    context, in filter context and in an aggs context."""
+    from engine.dsl import search
+
+    r = IndexReader(spark, dsl_index)
+    for bad in ({"boost": 2}, {"lang": ["de"], "source": ["x"]}):
+        for body in (
+            {"query": {"terms": bad}},
+            {"query": {"bool": {"must": [{"match": {"text": "hash"}}],
+                                "filter": [{"terms": bad}]}}},
+            {"query": {"terms": bad}, "size": 0,
+             "aggs": {"l": {"terms": {"field": "lang"}}}},
+        ):
+            with pytest.raises(ValueError, match="exactly one field"):
+                search(r, body)

@@ -434,3 +434,88 @@ def test_terms_filter(spark, fc_index):
     with pytest.raises(ValueError, match="docvalue"):
         search(reader, {"query": {"bool": {
             "must": [q], "filter": [{"terms": {"nope": ["x"]}}]}}})
+
+
+@pytest.fixture(scope="module")
+def fc_deleted(spark, fc_index):
+    """fc_index copy with every 5th doc tombstoned."""
+    from engine.deletes import delete_docs
+
+    src, rows = fc_index
+    out = tempfile.mkdtemp(prefix="sparkft_test_fc_del_")
+    shutil.rmtree(out)
+    shutil.copytree(src, out)
+    gone = {u for u, *_ in rows[::5]}
+    assert delete_docs(spark, out, sorted(gone)) == len(gone)
+    yield out, gone
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def _executor_cases():
+    """(name, fn(reader, execution, filters)) for every entry point that
+    runs on the scatter-gather executor; filters go wherever the entry
+    point takes them."""
+    from engine.query import (
+        bm25_bool_topk, bm25_boosting_topk, bm25_dismax_topk,
+        bm25_synonym_topk, bm25_topk, match_bool_prefix_topk,
+        match_phrase_prefix_topk, match_phrase_topk, terms_set_topk,
+    )
+    from engine.querystring import query_string_topk, simple_query_string_topk
+    from engine.spans import span_first_topk, span_near_topk
+
+    k = 12
+    return [
+        ("bm25_bmw", lambda r, ex, f: bm25_topk(r, "hash join sort", k=k, execution=ex)),
+        ("bm25_taat", lambda r, ex, f: bm25_topk(
+            r, "hash join sort", k=k, execution=ex, filters=f)),
+        ("bm25_prefix", lambda r, ex, f: bm25_topk(
+            r, "ta", k=k, mode="prefix", execution=ex, filters=f)),
+        ("dismax", lambda r, ex, f: bm25_dismax_topk(r, "hash join", k=k, execution=ex)),
+        ("synonym", lambda r, ex, f: bm25_synonym_topk(
+            r, [["hash", "index"], ["table"]], k=k, execution=ex, filters=f)),
+        ("bool", lambda r, ex, f: bm25_bool_topk(
+            r, must=["hash"], should=["join", "sort"], must_not=["scan"],
+            k=k, execution=ex, filters=f)),
+        ("terms_set", lambda r, ex, f: terms_set_topk(
+            r, ["hash", "join", "sort"], "req", k=k, execution=ex, filters=f)),
+        ("boosting", lambda r, ex, f: bm25_boosting_topk(
+            r, "hash table", "scan", 0.4, k=k, execution=ex, filters=f)),
+        ("match_bool_prefix", lambda r, ex, f: match_bool_prefix_topk(
+            r, "join ta", k=k, execution=ex, filters=f)),
+        ("phrase", lambda r, ex, f: match_phrase_topk(
+            r, "hash table", k=k, execution=ex, filters=f)),
+        ("phrase_slop", lambda r, ex, f: match_phrase_topk(
+            r, "hash join", k=k, slop=3, execution=ex, filters=f)),
+        ("phrase_prefix", lambda r, ex, f: match_phrase_prefix_topk(
+            r, "hash ta", k=k, execution=ex, filters=f)),
+        ("sqs", lambda r, ex, f: simple_query_string_topk(
+            r, '"hash table" join -scan me*', k=k, execution=ex, filters=f)),
+        ("query_string", lambda r, ex, f: query_string_topk(
+            r, '(hash AND table) OR "sort merge" -scan', k=k, execution=ex,
+            filters=f)),
+        ("span_near", lambda r, ex, f: span_near_topk(
+            r, ["hash", "table"], k=k, slop=1, execution=ex, filters=f)),
+        ("span_first", lambda r, ex, f: span_first_topk(
+            r, "hash", 5, k=k, execution=ex, filters=f)),
+    ]
+
+
+@pytest.mark.parametrize(
+    "name", [n for n, _ in _executor_cases()]
+)
+def test_executor_local_spark_identical(spark, fc_deleted, name):
+    """Every executor entry point returns the same (url, doc_id, score)
+    list from the driver-local path and the Spark scatter-gather path,
+    on an index with tombstones and under a docvalue filter."""
+    out, gone = fc_deleted
+    reader = IndexReader(spark, out)
+    fn = dict(_executor_cases())[name]
+    filters = [RangeFilter("nc", 60, 240)]
+
+    def run(ex):
+        return [(r["url"], r["doc_id"], r["score"]) for r in fn(reader, ex, filters).collect()]
+
+    loc = run("local")
+    assert loc, f"{name}: empty result — weak test"
+    assert not {u for u, _, _ in loc} & gone
+    assert run("spark") == loc

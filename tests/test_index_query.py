@@ -99,7 +99,7 @@ def test_docmap_deterministic(spark, index, corpus, tmp_path_factory):
     shutil.rmtree(out2)
 
 
-@pytest.mark.parametrize("algo", ["wand", "wand_daat", "taat"])
+@pytest.mark.parametrize("algo", ["wand", "taat"])
 def test_rank_identity_frozen_queries(spark, index, corpus, algo):
     out, _ = index
     reader = IndexReader(spark, out)
@@ -291,6 +291,31 @@ def test_and_with_absent_term_is_empty(spark, index):
     assert bm25_topk_batch(reader, {0: terms}, k=10, mode="and").collect() == []
     # OR mode still ranks on the remaining live term
     assert len(bm25_topk(reader, terms, k=10, mode="or").collect()) > 0
+
+
+def test_bad_arguments_fail_closed(spark, index):
+    """Unknown algo / execution / lookup values and multi-term dictionary
+    rewrites raise ValueError instead of silently running another path
+    (and not as asserts, which vanish under python -O)."""
+    from engine.query import bm25_bool_topk, bm25_dismax_topk, bm25_topk_rows
+
+    out, _ = index
+    reader = IndexReader(spark, out)
+    terms = synth.frozen_queries()[0]["terms"]
+    calls = [
+        (lambda: bm25_topk(reader, terms, algo="wand_daat"), "algo"),
+        (lambda: bm25_topk_rows(reader, terms, algo="bmw"), "algo"),
+        (lambda: bm25_topk(reader, terms, execution="cluster"), "execution"),
+        (lambda: bm25_topk(reader, terms, lookup="remote"), "lookup"),
+        (lambda: bm25_dismax_topk(reader, terms, execution="cluster"), "execution"),
+        (lambda: bm25_bool_topk(reader, should=terms, lookup="remote"), "lookup"),
+    ] + [
+        (lambda m=m: bm25_topk(reader, ["the", "and"], mode=m), "one term")
+        for m in ("prefix", "fuzzy", "wildcard", "regexp")
+    ]
+    for call, match in calls:
+        with pytest.raises(ValueError, match=match):
+            call()
 
 
 def test_expand_prefix_capped(spark, index):

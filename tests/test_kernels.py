@@ -1,8 +1,7 @@
-"""Property-based equivalence of the three query kernels over random
-posting sets: the vectorized block-max kernel (the scale path) must return
+"""Property-based equivalence of the query kernels over random posting
+sets: the vectorized block-max kernel (the scale path) must return
 exactly what brute-force TAAT returns — same docs, bit-identical scores
-(both accumulate per-doc contributions in term order via np.bincount) —
-and the classic cursor WAND must agree on ranks/scores to fp tolerance."""
+(both accumulate per-doc contributions in term order via np.bincount)."""
 
 from __future__ import annotations
 
@@ -14,7 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from engine import postings as P
-from engine.query import _bmw_shard_topk, _taat_shard_topk, _wand_shard_topk
+from engine.query import _bmw_shard_topk, _taat_shard_topk
 
 Row = namedtuple("Row", ["term", "docs_bin", "tfs_bin", "dls_bin", "blocks"])
 
@@ -52,29 +51,6 @@ def test_bmw_identical_to_taat(lists, k):
     bmw = _bmw_shard_topk(rows, idfs, k, k1, b, avgdl)
     taat = _taat_shard_topk(rows, idfs, k, k1, b, avgdl, "or")
     assert sorted(bmw) == sorted(taat)  # exact: same accumulation order
-
-
-@given(
-    lists=st.lists(
-        st.lists(st.integers(min_value=0, max_value=2000), min_size=1, max_size=300),
-        min_size=1,
-        max_size=3,
-    ),
-    k=st.integers(min_value=1, max_value=10),
-)
-@settings(max_examples=25, deadline=None)
-def test_cursor_wand_agrees(lists, k):
-    avgdl, k1, b = 100.0, P.K1, P.B
-    specs = [(f"t{i}", ids) for i, ids in enumerate(lists)]
-    rows = _mk_rows(specs, avgdl)
-    if not rows:
-        return
-    idfs = {r.term: 1.0 + 0.37 * i for i, r in enumerate(rows)}
-    daat = sorted(_wand_shard_topk(rows, idfs, k, k1, b, avgdl))
-    taat = sorted(_taat_shard_topk(rows, idfs, k, k1, b, avgdl, "or"))
-    assert [d for d, _ in daat] == [d for d, _ in taat]
-    for (_, s1), (_, s2) in zip(daat, taat):
-        assert s1 == pytest.approx(s2, rel=1e-12)
 
 
 @given(
