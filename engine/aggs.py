@@ -64,7 +64,6 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, functions as F
 
 from engine import postings as P
@@ -77,7 +76,9 @@ from engine.docvalues import (  # noqa: F401  (filter clauses re-exported)
     filter_mask,
     gather_docvalues,
 )
-from engine.query import IndexReader, _live_mask, _norm_blocks
+from engine.query import (
+    FieldPostings, IndexReader, _live_mask, _norm_blocks, _scatter, _taat_scores,
+)
 from engine.oracle import analyze_query_py
 
 
@@ -443,6 +444,77 @@ def _matched_local_ids(
         m = np.unique(np.concatenate(arrs))
     keep = _live_mask(m, dels)
     return m if keep is None else m[keep]
+
+
+def _context_source(reader: IndexReader, query, mode: str, matcher,
+                    needs_pos: bool, src):
+    """(postings source, matched(rows, dels) -> sorted local ids) of a
+    query context, or None when its matched set is empty everywhere by
+    construction. With src (engine.query MultiFieldPostings) the matcher
+    is required and `query` is not read; otherwise `query`'s live terms
+    are read (positions when needs_pos) and matched by `matcher`, or by
+    mode's or/and term semantics."""
+    if src is not None:
+        if matcher is None:
+            raise ValueError("src= needs a matcher")
+        return src, matcher
+    terms = analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
+    stats = reader.term_stats(terms)
+    live = [t for t in terms if t in stats]
+    # matcher contexts are conjunctive over their term list (phrase), like
+    # mode="and": any dead term empties the matched set everywhere
+    if not live or ((matcher is not None or mode == "and") and len(live) < len(terms)):
+        return None
+    if matcher is None:
+        n_terms = len(live)
+
+        def matcher(rows: list, dels) -> np.ndarray:
+            return _matched_local_ids(rows, mode, n_terms, dels)
+
+    return FieldPostings(reader, live, sum(stats[t] for t in live), needs_pos), matcher
+
+
+def _frames_pandas(out) -> pd.DataFrame | None:
+    """_scatter output of per-shard pandas frames (None = no rows) -> one
+    pandas frame, or None when no shard emitted a row. The Spark path is
+    collected: callers pass it only for bounded per-shard frames."""
+    if isinstance(out, list):
+        frames = [f for _, f in out if f is not None and len(f)]
+        return pd.concat(frames, ignore_index=True) if frames else None
+    pdf = out.toPandas()
+    return pdf if len(pdf) else None
+
+
+def _frames_df(spark, out, schema: str) -> DataFrame:
+    """_scatter output of per-shard pandas frames -> one Spark DataFrame
+    of `schema` (the Spark path's DataFrame as it is)."""
+    if not isinstance(out, list):
+        return out
+    pdf = _frames_pandas(out)
+    if pdf is None:
+        return spark.createDataFrame([], schema)
+    return spark.createDataFrame(pdf[[c.split()[0] for c in schema.split(", ")]], schema)
+
+
+def _scored_context(reader: IndexReader, query, mode: str, needs_pos: bool = False):
+    """(postings source, scores(rows, dels) -> (sorted local ids, BM25
+    scores)) of a term query context — exact TAAT accumulation over one
+    shard with mode's or/and semantics — or None when nothing can match."""
+    terms = analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
+    stats = reader.term_stats(terms)
+    live = [t for t in terms if t in stats]
+    if not live or (mode == "and" and len(live) < len(terms)):
+        return None
+    idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in live}
+    k1, b, avgdl = reader.k1, reader.b, reader.avgdl
+
+    def scores(rows: list, dels) -> tuple[np.ndarray, np.ndarray]:
+        if mode == "and" and len({r.term for r in rows}) < len(live):
+            return np.empty(0, dtype=np.int64), np.empty(0)
+        return _taat_scores(rows, idfs, k1, b, avgdl, mode, dels)
+
+    src = FieldPostings(reader, live, sum(stats[t] for t in live), needs_pos)
+    return src, scores
 
 
 # docvalue gather + filter predicates live in engine/docvalues.py (shared
@@ -1409,75 +1481,18 @@ def search_aggs(
             tbl = tbl.filter(pa.array(filter_mask(tbl, filters)))
         return tbl
 
-    if src is None:
-        terms = analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
-        stats = reader.term_stats(terms)
-        live = [t for t in terms if t in stats]
-        if not live or (
-            matcher is None and mode == "and" and len(live) < len(terms)
-        ) or (matcher is not None and len(live) < len(terms)):
-            # matcher contexts are conjunctive over their term list (phrase):
-            # any dead term empties the matched set everywhere
-            empty = spark.createDataFrame([], _partial_schema(agg, vt))
-            return _combine(spark, empty, agg, vt)
-        terms, n_terms = live, len(live)
-        total_postings = sum(stats[t] for t in terms)
-    else:
-        assert matcher is not None, "src= needs a matcher"
-        terms, n_terms = [], 0
-        total_postings = src.total_postings
-    tomb = reader.tombstones()
-    index_dir, fields_b, mode_b = reader.dir, fields, mode
-
-    def matched(rows: list, dels) -> np.ndarray:
-        if matcher is not None:
-            return matcher(rows, dels)
-        return _matched_local_ids(rows, mode_b, n_terms, dels)
-
-    def shard_partials(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf_key[0])
-        m = matched(list(pdf.itertuples()), tomb.get(shard))
-        if m.size == 0:
-            return _partial_frame(
-                ds.dataset(
-                    os.path.join(index_dir, "docmap", f"shard={shard}")
-                ).schema.empty_table().select(fields_b),
-                agg, vt,
-            )
-        return _partial_frame(masked_gather(shard, m), agg, vt)
-
     pschema = _partial_schema(agg, vt)
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = (
-            src.local() if src is not None
-            else reader.postings_pos_local(terms)
-            if needs_pos
-            else reader.postings_local(terms)
-        )
-        if by_shard is not None:
-            frames = []
-            for shard, rows in by_shard.items():
-                m = matched(rows, tomb.get(shard))
-                if m.size:
-                    frames.append(_partial_frame(masked_gather(shard, m), agg, vt))
-            if frames:
-                cols = [c.split()[0] for c in pschema.split(", ")]
-                pdf = pd.concat(frames, ignore_index=True)
-                partials = spark.createDataFrame(pdf[cols], pschema)
-            else:
-                partials = spark.createDataFrame([], pschema)
-            return _combine(spark, partials, agg, vt)
-        if execution == "local":
-            raise ValueError("execution='local' needs a local postings directory")
+    ctx = _context_source(reader, query, mode, matcher, needs_pos, src)
+    if ctx is None:
+        return _combine(spark, spark.createDataFrame([], pschema), agg, vt)
+    src, matched = ctx
 
-    partials = (
-        (src.df() if src is not None else reader.postings(terms))
-        .groupBy("shard")
-        .applyInPandas(shard_partials, pschema)
-    )
-    return _combine(spark, partials, agg, vt)
+    def shard_partials(rows: list, dels, shard: int) -> pd.DataFrame | None:
+        m = matched(rows, dels)
+        return _partial_frame(masked_gather(shard, m), agg, vt) if m.size else None
+
+    out = _scatter(src, shard_partials, pschema, execution)
+    return _combine(spark, _frames_df(spark, out, pschema), agg, vt)
 
 
 def search_sort(
@@ -1582,28 +1597,13 @@ def search_sort(
             .select("url", F.col("v").alias("sort_val"))
         )
 
-    if src is None:
-        terms = analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
-        stats = reader.term_stats(terms)
-        live = [t for t in terms if t in stats]
-        if not live or (
-            matcher is None and mode == "and" and len(live) < len(terms)
-        ) or (matcher is not None and len(live) < len(terms)):
-            return spark.createDataFrame([], f"url string, sort_val {vt}")
-        terms, n_terms = live, len(live)
-        total_postings = sum(stats[t] for t in terms)
-    else:
-        assert matcher is not None, "src= needs a matcher"
-        terms, n_terms = [], 0
-        total_postings = src.total_postings
-    tomb = reader.tombstones()
-    index_dir, mode_b = reader.dir, mode
+    out_schema = f"url string, sort_val {vt}"
+    ctx = _context_source(reader, query, mode, matcher, needs_pos, src)
+    if ctx is None:
+        return spark.createDataFrame([], out_schema)
+    src, matched = ctx
+    index_dir = reader.dir
     fields = list(dict.fromkeys(gather_flds + ["url"] + filter_fields(filters)))
-
-    def matched(rows: list, dels) -> np.ndarray:
-        if matcher is not None:
-            return matcher(rows, dels)
-        return _matched_local_ids(rows, mode_b, n_terms, dels)
 
     def gather_page_input(shard: int, m: np.ndarray) -> pd.DataFrame:
         tbl = _gather_docvalues(index_dir, shard, fields, m)
@@ -1622,46 +1622,22 @@ def search_sort(
             v = tbl.column(sort_field).to_numpy(zero_copy_only=False)
         return pd.DataFrame({"url": tbl.column("url").to_pylist(), "v": v})
 
-    def shard_page(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf_key[0])
-        m = matched(list(pdf.itertuples()), tomb.get(shard))
-        if m.size == 0:
-            return pd.DataFrame({"url": pd.Series([], dtype=object), "v": []})
-        return page(gather_page_input(shard, m))
+    def shard_page(rows: list, dels, shard: int) -> pd.DataFrame | None:
+        # each shard keeps its own page: the (v, url) order is total, so
+        # the global page is the page of the shard pages' union
+        m = matched(rows, dels)
+        return page(gather_page_input(shard, m)) if m.size else None
 
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = (
-            src.local() if src is not None
-            else reader.postings_pos_local(terms)
-            if needs_pos
-            else reader.postings_local(terms)
+    out = _scatter(src, shard_page, pschema, execution)
+    if not isinstance(out, list):
+        return (
+            out.orderBy(*order).limit(k)
+            .select("url", F.col("v").alias("sort_val"))
         )
-        if by_shard is not None:
-            frames = []
-            for shard, rows in by_shard.items():
-                m = matched(rows, tomb.get(shard))
-                if m.size == 0:
-                    continue
-                frames.append(gather_page_input(shard, m))
-            if not frames:
-                return spark.createDataFrame([], f"url string, sort_val {vt}")
-            merged = page(pd.concat(frames, ignore_index=True))
-            return spark.createDataFrame(
-                merged.rename(columns={"v": "sort_val"}), f"url string, sort_val {vt}"
-            )
-        if execution == "local":
-            raise ValueError("execution='local' needs a local postings directory")
-
-    partials = (
-        (src.df() if src is not None else reader.postings(terms))
-        .groupBy("shard").applyInPandas(shard_page, pschema)
-    )
-    return (
-        partials.orderBy(*order).limit(k)
-        .select("url", F.col("v").alias("sort_val"))
-    )
+    merged = _frames_pandas(out)
+    if merged is None:
+        return spark.createDataFrame([], out_schema)
+    return spark.createDataFrame(page(merged).rename(columns={"v": "sort_val"}), out_schema)
 
 
 def collapse_topk(
@@ -1707,66 +1683,28 @@ def collapse_topk(
     vt = _vtype(reader, field)
     out_schema = f"url string, doc_id long, score double, collapse_val {vt}"
 
-    terms = (
-        analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
-    )
-    stats = reader.term_stats(terms)
-    live = [t for t in terms if t in stats]
-    if not live or (mode == "and" and len(live) < len(terms)):
+    ctx = _scored_context(reader, query, mode)
+    if ctx is None:
         return spark.createDataFrame([], out_schema)
-    n_terms = len(live)
-    n_docs, k1, b, avgdl = reader.n_docs, reader.k1, reader.b, reader.avgdl
-    idfs = {t: float(P.bm25_idf(stats[t], n_docs)) for t in live}
-    tomb = reader.tombstones()
-    index_dir, mode_b = reader.dir, mode
+    src, score = ctx
+    index_dir = reader.dir
     gat_fields = list(dict.fromkeys([field] + filter_fields(filters)))
 
-    def shard_best(shard: int, rows: list) -> pd.DataFrame:
-        """One candidate row (local_id, score, v) per field value."""
-        empty = pd.DataFrame(
-            {"local_id": pd.Series([], dtype=np.int64),
-             "score": pd.Series([], dtype=np.float64),
-             "v": pd.Series([], dtype=object)}
-        )
-        dels = tomb.get(shard)
-        locs_parts, contrib_parts, term_docs = [], [], []
-        for r in rows:
-            idf = idfs.get(r.term)
-            if idf is None:
-                continue
-            d, t, l = P.decode_term_postings(
-                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-            )
-            keep = _live_mask(d, dels)
-            if keep is not None:
-                d, t, l = d[keep], t[keep], l[keep]
-            locs_parts.append(d)
-            contrib_parts.append(idf * P.bm25_impact(t, l, avgdl, k1, b))
-            term_docs.append(d)
-        if not locs_parts or (mode_b == "and" and len(locs_parts) < n_terms):
-            return empty
-        locs = np.concatenate(locs_parts)
-        uniq, inv = np.unique(locs, return_inverse=True)
-        scores = np.bincount(
-            inv, weights=np.concatenate(contrib_parts), minlength=uniq.size
-        )
-        if mode_b == "and" and len(term_docs) > 1:
-            hits = np.zeros(uniq.size, dtype=np.int64)
-            for d in term_docs:
-                hits[np.searchsorted(uniq, d)] += 1
-            m = hits == n_terms
-            uniq, scores = uniq[m], scores[m]
+    def shard_best(rows: list, dels, shard: int) -> pd.DataFrame | None:
+        """One candidate row (shard, local_id, score, v) per field value."""
+        uniq, scores = score(rows, dels)
         if uniq.size == 0:
-            return empty
+            return None
         tbl = gather_docvalues(index_dir, shard, gat_fields, uniq)
         if filters:
             fm = np.asarray(filter_mask(tbl, filters))
             tbl = tbl.filter(pa.array(fm))
             uniq, scores = uniq[fm], scores[fm]
             if uniq.size == 0:
-                return empty
+                return None
         pdf = pd.DataFrame(
             {
+                "shard": np.full(uniq.size, shard, dtype=np.int32),
                 "local_id": uniq,
                 "score": np.round(scores, 6),
                 "v": tbl.column(field).to_pylist(),
@@ -1779,43 +1717,11 @@ def collapse_topk(
         )
         return pdf[~pdf["v"].duplicated()]
 
-    pschema = f"shard int, local_id long, score double, v {vt}"
-    cand: pd.DataFrame | None = None
-    total_postings = sum(stats[t] for t in live)
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = reader.postings_local(live)
-        if by_shard is not None:
-            frames = []
-            for shard, rows in by_shard.items():
-                f_ = shard_best(shard, rows)
-                if len(f_):
-                    f_ = f_.copy()
-                    f_.insert(0, "shard", np.int32(shard))
-                    frames.append(f_)
-            cand = (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=["shard", "local_id", "score", "v"])
-            )
-        elif execution == "local":
-            raise ValueError("execution='local' needs a local postings directory")
+    cand = _frames_pandas(_scatter(
+        src, shard_best, f"shard int, local_id long, score double, v {vt}",
+        execution,
+    ))
     if cand is None:
-
-        def shard_partials(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            f_ = shard_best(int(pdf_key[0]), list(pdf.itertuples()))
-            f_ = f_.copy()
-            f_.insert(0, "shard", np.int32(pdf_key[0]))
-            return f_
-
-        cand = (
-            reader.postings(live)
-            .groupBy("shard")
-            .applyInPandas(shard_partials, pschema)
-            .toPandas()
-        )
-    if not len(cand):
         return spark.createDataFrame([], out_schema)
     # global best per value (cross-shard), then top-k groups
     offsets = reader.shard_offsets()
@@ -1912,77 +1818,32 @@ def sampler_terms(
             f"sampler field(s) {missing} not in index docvalues {dv_cols}"
         )
     out_schema = "key string, doc_count long"
-    terms = (
-        analyze_query_py(query) if isinstance(query, str)
-        else list(dict.fromkeys(query))
-    )
-    stats = reader.term_stats(terms)
-    live = [t for t in terms if t in stats]
-    if not live or (mode == "and" and len(live) < len(terms)):
+    ctx = _scored_context(reader, query, mode, needs_pos)
+    if ctx is None:
         return spark.createDataFrame([], out_schema)
-    n_terms = len(live)
-    n_docs, k1, b, avgdl = reader.n_docs, reader.k1, reader.b, reader.avgdl
-    idfs = {t: float(P.bm25_idf(stats[t], n_docs)) for t in live}
-    tomb = reader.tombstones()
-    index_dir, mode_b = reader.dir, mode
+    src, score = ctx
+    index_dir = reader.dir
     gat_fields = list(dict.fromkeys(["url"] + need + filter_fields(filters)))
     div_b, cap_b, size_b = diversify_field, int(max_per_value), int(sample_size)
 
-    def shard_sample(shard: int, rows: list) -> pd.DataFrame:
-        cols = {"url": pd.Series([], dtype=object),
-                "score": pd.Series([], dtype=np.float64),
-                "v": pd.Series([], dtype=object),
-                "g": pd.Series([], dtype=object)}
-        empty = pd.DataFrame(cols)
-        dels = tomb.get(shard)
+    def shard_sample(rows: list, dels, shard: int) -> pd.DataFrame | None:
         if scored_matcher is not None:
             top = scored_matcher(rows, dels)
-            if not top:
-                return empty
             uniq = np.array([t[0] for t in top], dtype=np.int64)
             scores = np.array([t[1] for t in top], dtype=np.float64)
             order = np.argsort(uniq, kind="stable")  # gather wants sorted
             uniq, scores = uniq[order], scores[order]
-            return _finish_shard(shard, uniq, scores, empty)
-        locs_parts, contrib_parts, term_docs = [], [], []
-        for r in rows:
-            idf = idfs.get(r.term)
-            if idf is None:
-                continue
-            d, t, l = P.decode_term_postings(
-                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-            )
-            keep = _live_mask(d, dels)
-            if keep is not None:
-                d, t, l = d[keep], t[keep], l[keep]
-            locs_parts.append(d)
-            contrib_parts.append(idf * P.bm25_impact(t, l, avgdl, k1, b))
-            term_docs.append(d)
-        if not locs_parts or (mode_b == "and" and len(locs_parts) < n_terms):
-            return empty
-        locs = np.concatenate(locs_parts)
-        uniq, inv = np.unique(locs, return_inverse=True)
-        scores = np.bincount(
-            inv, weights=np.concatenate(contrib_parts), minlength=uniq.size
-        )
-        if mode_b == "and" and len(term_docs) > 1:
-            hits = np.zeros(uniq.size, dtype=np.int64)
-            for d in term_docs:
-                hits[np.searchsorted(uniq, d)] += 1
-            m = hits == n_terms
-            uniq, scores = uniq[m], scores[m]
+        else:
+            uniq, scores = score(rows, dels)
         if uniq.size == 0:
-            return empty
-        return _finish_shard(shard, uniq, scores, empty)
-
-    def _finish_shard(shard: int, uniq, scores, empty) -> pd.DataFrame:
+            return None
         tbl = gather_docvalues(index_dir, shard, gat_fields, uniq)
         if filters:
             fm = np.asarray(filter_mask(tbl, filters))
             tbl = tbl.filter(pa.array(fm))
             scores = scores[fm]
             if not len(tbl):
-                return empty
+                return None
         s = lambda x: None if x is None else str(x)  # noqa: E731  TermsAgg key rule
         pdf = pd.DataFrame(
             {
@@ -2004,38 +1865,11 @@ def sampler_terms(
         # real sample member below a local size boundary
         return pdf[pdf.groupby("g", dropna=False).cumcount() < cap_b]
 
-    pschema = "url string, score double, v string, g string"
-    cand: pd.DataFrame | None = None
-    total_postings = sum(stats[t] for t in live)
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = (
-            reader.postings_pos_local(live) if needs_pos
-            else reader.postings_local(live)
-        )
-        if by_shard is not None:
-            frames = [shard_sample(s, rows) for s, rows in by_shard.items()]
-            frames = [f_ for f_ in frames if len(f_)]
-            cand = (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=["url", "score", "v", "g"])
-            )
-        elif execution == "local":
-            raise ValueError("execution='local' needs a local postings directory")
+    cand = _frames_pandas(_scatter(
+        src, shard_sample, "url string, score double, v string, g string",
+        execution,
+    ))
     if cand is None:
-
-        def shard_partials(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            return shard_sample(int(pdf_key[0]), list(pdf.itertuples()))
-
-        cand = (
-            reader.postings(live)
-            .groupBy("shard")
-            .applyInPandas(shard_partials, pschema)
-            .toPandas()
-        )
-    if not len(cand):
         return spark.createDataFrame([], out_schema)
     cand = cand.sort_values(
         ["score", "url"], ascending=[False, True], kind="mergesort"
@@ -2077,73 +1911,23 @@ def matched_urls(
         raise ValueError(
             f"filter field(s) {missing} not in index docvalues {dv_cols}"
         )
-    if src is None:
-        terms = (
-            analyze_query_py(query) if isinstance(query, str)
-            else list(dict.fromkeys(query))
-        )
-        stats = reader.term_stats(terms)
-        live = [t for t in terms if t in stats]
-        if not live or (
-            matcher is None and mode == "and" and len(live) < len(terms)
-        ) or (matcher is not None and len(live) < len(terms)):
-            return spark.createDataFrame([], "url string")
-        terms, n_terms = live, len(live)
-        total_postings = sum(stats[t] for t in terms)
-    else:
-        assert matcher is not None, "src= needs a matcher"
-        terms, n_terms = [], 0
-        total_postings = src.total_postings
-    tomb = reader.tombstones()
-    index_dir, mode_b = reader.dir, mode
+    ctx = _context_source(reader, query, mode, matcher, needs_pos, src)
+    if ctx is None:
+        return spark.createDataFrame([], "url string")
+    src, matched = ctx
+    index_dir = reader.dir
     fields = list(dict.fromkeys(["url"] + filter_fields(filters)))
 
-    def matched(rows: list, dels) -> np.ndarray:
-        if matcher is not None:
-            return matcher(rows, dels)
-        return _matched_local_ids(rows, mode_b, n_terms, dels)
-
-    def gather(shard: int, m: np.ndarray) -> pd.DataFrame:
+    def shard_urls(rows: list, dels, shard: int) -> pd.DataFrame | None:
+        m = matched(rows, dels)
+        if m.size == 0:
+            return None
         tbl = _gather_docvalues(index_dir, shard, fields, m)
         if filters:
             tbl = tbl.filter(pa.array(filter_mask(tbl, filters)))
         return pd.DataFrame({"url": tbl.column("url").to_pylist()})
 
-    def shard_urls(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf_key[0])
-        m = matched(list(pdf.itertuples()), tomb.get(shard))
-        if m.size == 0:
-            return pd.DataFrame({"url": pd.Series([], dtype=object)})
-        return gather(shard, m)
-
-    if execution == "local" or (
-        execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
-    ):
-        by_shard = (
-            src.local() if src is not None
-            else reader.postings_pos_local(terms)
-            if needs_pos
-            else reader.postings_local(terms)
-        )
-        if by_shard is not None:
-            frames = []
-            for shard, rows in by_shard.items():
-                m = matched(rows, tomb.get(shard))
-                if m.size:
-                    frames.append(gather(shard, m))
-            if not frames:
-                return spark.createDataFrame([], "url string")
-            return spark.createDataFrame(
-                pd.concat(frames, ignore_index=True), "url string"
-            )
-        if execution == "local":
-            raise ValueError("execution='local' needs a local postings directory")
-
-    return (
-        (src.df() if src is not None else reader.postings(terms))
-        .groupBy("shard")
-        .applyInPandas(shard_urls, "url string")
-    )
+    return _frames_df(spark, _scatter(src, shard_urls, "url string", execution), "url string")
 
 
 def search_count(

@@ -1678,12 +1678,28 @@ def _query_terms_or_none(
                 "aggs/sort/count context (the >=k-of-n matched set is "
                 "not a term-list union)"
             )
+        if must_c and should_c and msm is not None:
+            raise ValueError(
+                "bool must + should with an explicit minimum_should_match "
+                "is not composable as an aggs/sort/count context (the "
+                "should requirement is not a term-list matched set)"
+            )
         if not must_c and should_c:
             # ES: a bool with ONLY should clauses matches the UNION of
             # the clauses' matched sets (minimum_should_match defaults
             # to 1 with no must) — an OR term list. A should beside a
             # must stays score-only (must alone decides membership).
             parsed = [_match_terms(c, allowed=allowed) for c in should_c]
+            if any(
+                len(ts) > 1 and (op == "and" or (c_msm or 1) > 1)
+                for ts, op, c_msm, _f in parsed
+            ):
+                raise ValueError(
+                    "a bool should clause with operator=and or "
+                    "minimum_should_match > 1 is not composable as an "
+                    "aggs/sort/count context (its matched set is not a "
+                    "term-list union)"
+                )
             fo.update(x[3] for x in parsed)
             if len(fo) > 1:
                 raise ValueError(
@@ -1698,9 +1714,30 @@ def _query_terms_or_none(
             raise ValueError(
                 f"term clauses must all name ONE field (got {sorted(fo)})"
             )
+        if len(parsed) == 1:
+            return _clause_context(*parsed[0][:3])
+        if any(op == "or" and len(ts) > 1 for ts, op, _m, _f in parsed):
+            raise ValueError(
+                "several bool must clauses with a multi-term operator=or "
+                "clause are not composable as an aggs/sort/count context "
+                "(an intersection of unions is not a term-list matched set)"
+            )
         return [t for x in parsed for t in x[0]], "and"
-    terms, op, _msm, f = _match_terms(query, allowed=allowed)
+    terms, op, msm, f = _match_terms(query, allowed=allowed)
     fo.add(f)
+    return _clause_context(terms, op, msm)
+
+
+def _clause_context(terms: list[str], op: str, msm: int | None):
+    """(terms, mode) of ONE match clause as a matched-set context: its
+    operator decides or/and; minimum_should_match > 1 (an at-least-N
+    set, not a term-list union) fails closed."""
+    if op == "or" and (msm or 1) > 1 and len(terms) > 1:
+        raise ValueError(
+            "match minimum_should_match > 1 is not composable as an "
+            "aggs/sort/count context (the >=k-of-n matched set is not a "
+            "term-list union)"
+        )
     return terms, op
 
 

@@ -102,18 +102,6 @@ POSTING_SCHEMA_POS = T.StructType(
 )
 
 
-def _hash_schema(schema: "T.StructType") -> "T.StructType":
-    """The posting schema with `term` as int64 — the mapInArrow output type
-    for term_encode='hash' (the encoder is type-agnostic over the group
-    key; the dictionary join restores the string before the write)."""
-    return T.StructType(
-        [
-            T.StructField("term", T.LongType()) if f.name == "term" else f
-            for f in schema.fields
-        ]
-    )
-
-
 # ---------------------------------------------------------------------------
 # driver-side small tables: ALWAYS pandas-backed (Arrow -> LocalRelation).
 # A list-backed createDataFrame becomes a Python RDD whose every action
@@ -444,19 +432,8 @@ def build_index(
     index_options: str = "freqs",
     text_fields: list[str] | None = None,
     store_source: bool | list[str] = False,
-    term_encode: str = "string",
 ) -> dict:
     """Build the full index under out_dir. Returns the manifest dict.
-
-    term_encode: "string" (frozen default — the raw exploded token rows
-    shuffle with the term string as the sort key) or "hash" (round-5
-    shuffle-width experiment: occurrence rows shuffle an 8-byte
-    xxhash64(term) instead of the string — the wide column of the build's
-    one big shuffle — and a vocab-sized (hash, term) dictionary join
-    restores strings on the df-sized ENCODED group rows before the write,
-    so the on-disk postings are identical modulo row-group order; a
-    pre-encode collision check fails closed, since a 64-bit collision
-    would silently merge two terms' postings). Measured A/B in BENCH.md.
 
     index_options: "freqs" (default — the frozen layout, byte-identical to
     prior rounds) or "positions": adds the pos_bin/pos_offs token-position
@@ -519,7 +496,7 @@ def build_index(
         return _build_index_locked(
             spark, pages, out_dir, n_shards, n_buckets, k1, b, job_id,
             resume, bucket_chunk, persist_tokens, docvalue_cols,
-            index_options, text_fields, store_source, term_encode,
+            index_options, text_fields, store_source,
         )
     finally:
         _release_build_lock(fd, lock)
@@ -541,10 +518,8 @@ def _build_index_locked(
     index_options: str = "freqs",
     text_fields: list[str] | None = None,
     store_source: bool | list[str] = False,
-    term_encode: str = "string",
 ) -> dict:
     assert index_options in ("freqs", "positions"), index_options
-    assert term_encode in ("string", "hash"), term_encode
     with_pos = index_options == "positions"
     dv_cols = list(docvalue_cols or [])
     fields = list(text_fields or ["text"])
@@ -725,31 +700,6 @@ def _build_index_locked(
             docs.select("shard", "local_id", F.col(dl_col).alias("dl"), *tok_col)
             .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
         )
-        term_dict = None
-        if term_encode == "hash":
-            # shuffle-width experiment: the occurrence rows carry an 8-byte
-            # xxhash64 instead of the term string (the wide column of the
-            # build's ONE big shuffle; bucket = pmod(hash) is unchanged by
-            # construction). A vocab-sized dictionary restores strings on
-            # the df-sized ENCODED rows after the kernel — on-disk postings
-            # identical modulo row-group order. A 64-bit collision would
-            # silently merge two terms' postings, so the dictionary build
-            # fails closed on any duplicate hash.
-            term_dict = (
-                docs.select(F.explode(tcol).alias("term"))
-                .distinct()
-                .withColumn("term_h", F.xxhash64("term"))
-            ).persist()
-            agg = term_dict.agg(
-                F.count("*").alias("n"),
-                F.countDistinct("term_h").alias("nh"),
-            ).collect()[0]
-            if agg["n"] != agg["nh"]:
-                raise ValueError(
-                    "xxhash64 term collision detected — rebuild with "
-                    "term_encode='string'"
-                )
-            tf = tf.withColumn("term", F.xxhash64("term"))
         if chunked and f"tf_table{fckpt}" not in done:
             tf.write.mode("overwrite").partitionBy("bucket").parquet(
                 path("tf_table" + fsub)
@@ -782,25 +732,8 @@ def _build_index_locked(
                 src.observe(obs, F.count(F.lit(1)).alias("postings"))
                 .repartition(n_parts, "bucket", "shard")
                 .sortWithinPartitions(*sort_keys)
-                .mapInArrow(
-                    encoder,
-                    posting_schema if term_encode == "string" else _hash_schema(posting_schema),
-                )
+                .mapInArrow(encoder, posting_schema)
             )
-            if term_encode == "hash":
-                # restore term strings on the df-sized group rows: a
-                # sort-merge join against the vocab dictionary (orders of
-                # magnitude fewer rows/bytes than the occurrence shuffle
-                # above), then re-sort by term so row-group min/max stats
-                # keep pruning term-isin reads like the string path
-                final_cols = [f.name for f in posting_schema.fields]
-                encoded = (
-                    encoded.withColumnRenamed("term", "term_h")
-                    .join(term_dict, "term_h")
-                    .select(*final_cols)
-                    .repartition(n_parts, "bucket", "shard")
-                    .sortWithinPartitions("shard", "term")
-                )
             (
                 encoded.write.mode("append")
                 .partitionBy("bucket")
@@ -822,9 +755,6 @@ def _build_index_locked(
                 [f"{ck_prefix}{bkt}" for bkt in chunk], seq,
             )
             seq += 1
-
-        if term_dict is not None:
-            term_dict.unpersist()
 
         # ---- stage: global term stats + lineage (from the written postings) --
         if f"term_stats{fckpt}" not in done:
@@ -873,7 +803,6 @@ def _build_index_locked(
         "job_id": job_id,
         "docvalue_cols": dv_cols,
         "index_options": index_options,
-        "term_encode": term_encode,
     }
     if multi:
         manifest["text_fields"] = fields

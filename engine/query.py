@@ -18,10 +18,11 @@ Two physical algorithms, both rank-identical to the oracle:
 - algo="taat": term-at-a-time vectorized numpy accumulation — decodes the
   query terms' postings fully; the brute-force cross-check at any scale.
 
-The single-query top-k entry points share one scatter-gather executor,
-_scatter_topk: the same per-shard kernel runs either in-process on the
-driver (small queries) or in Spark workers, and only k-row heaps leave a
-shard. Its docstring lists the paths that deliberately do not use it.
+Every query path that maps a function over the query terms' postings
+runs on one per-shard scatter, _scatter: the same function runs either
+in-process on the driver (small queries) or in Spark workers, and only
+small frames (k-row heaps, partial aggregates) leave a shard. Its
+docstring lists its users and the paths that deliberately do not use it.
 
 Scoring spec is frozen (SURVEY.md 5.4): exact dl, idf = ln(1+(N-df+0.5)/
 (df+0.5)), score = sum idf * tf/(tf+k1*(1-b+b*dl/avgdl)), ties doc_id asc.
@@ -449,11 +450,10 @@ class IndexReader:
         tbl = self._pa_dataset(self._post_sub).to_table(
             filter=ds.field("bucket").isin(self._bucket_of(terms))
             & ds.field("term").isin(terms),
-            columns=["shard", "term", "docs_bin", "tfs_bin", "dls_bin", "blocks"],
+            columns=list(_POST_COLS),
         )
         by_shard: dict[int, list] = {}
-        cols = [tbl.column(c).to_pylist() for c in
-                ("shard", "term", "docs_bin", "tfs_bin", "dls_bin", "blocks")]
+        cols = [tbl.column(c).to_pylist() for c in _POST_COLS]
         for shard, term, d_bin, t_bin, l_bin, blocks in zip(*cols):
             by_shard.setdefault(int(shard), []).append(
                 _PostRow(term, d_bin, t_bin, l_bin, blocks)
@@ -678,6 +678,7 @@ class IndexReader:
 _BLOCK_KEYS = ("first_doc", "last_doc", "n", "doc_off", "tf_off", "dl_off", "max_impact")
 
 _PostRow = namedtuple("_PostRow", ["term", "docs_bin", "tfs_bin", "dls_bin", "blocks"])
+_POST_COLS = ("shard",) + _PostRow._fields  # a non-positional postings read
 _PosRow = namedtuple(
     "_PosRow", ["term", "docs_bin", "tfs_bin", "dls_bin", "blocks", "pos_bin", "pos_offs"]
 )
@@ -826,50 +827,59 @@ def _bmw_shard_topk(
     return [(-nl, s) for s, nl in heap]
 
 
-def _taat_shard_topk(
-    rows, idfs: dict[str, float], k: int, k1: float, b: float, avgdl: float, mode: str,
-    field_opts: str = "default", dels: np.ndarray | None = None,
-    local_filter=None, local_boost=None, local_rescore=None,
-) -> list[tuple[int, float]]:
-    """Vectorized term-at-a-time accumulation over one shard.
+def _taat_scores(
+    rows, idfs: dict[str, float], k1: float, b: float, avgdl: float, mode: str,
+    dels: np.ndarray | None = None, field_opts: str = "default",
+) -> tuple[np.ndarray, np.ndarray]:
+    """Term-at-a-time BM25 accumulation over one shard's posting rows:
+    decode each scored term, drop tombstoned docs, sum the per-doc
+    contributions. Returns (sorted unique local ids, scores); mode="and"
+    keeps only the docs every decoded term hits (callers check that the
+    shard holds every query term).
 
     field_opts implements the reference's per-field index options
     (search_scheme.json, SURVEY 2.6 M1/M2) as scoring variants:
     - "nonorms" (norms: false): length normalization off -> b = 0
     - "doconly" (index_options: docs): postings carry membership only ->
-      tf scored as 1
-    local_filter: optional (sorted local_ids) -> keep-mask callback (ES
-    filter context, engine/docvalues.py) applied to the candidate docs
-    AFTER score accumulation and BEFORE top-k selection — scores of
-    surviving docs are unchanged (idf/avgdl stay corpus-global, like ES).
-    """
+      tf scored as 1"""
     locals_parts, contrib_parts = [], []
-    n_terms = 0
     b_eff = 0.0 if field_opts == "nonorms" else b
     for r in rows:
         idf = idfs.get(r.term)
         if not idf:
             continue
-        n_terms += 1
         d, t, l = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks))
         keep = _live_mask(d, dels)
         if keep is not None:
             d, t, l = d[keep], t[keep], l[keep]
         if field_opts == "doconly":
             t = np.ones_like(t)
-        contrib = idf * P.bm25_impact(t, l, avgdl, k1, b_eff)
         locals_parts.append(d)
-        contrib_parts.append(contrib)
+        contrib_parts.append(idf * P.bm25_impact(t, l, avgdl, k1, b_eff))
     if not locals_parts:
-        return []
-    locs = np.concatenate(locals_parts)
-    contribs = np.concatenate(contrib_parts)
-    uniq, inv = np.unique(locs, return_inverse=True)
-    scores = np.bincount(inv, weights=contribs, minlength=uniq.size)
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    uniq, inv = np.unique(np.concatenate(locals_parts), return_inverse=True)
+    scores = np.bincount(inv, weights=np.concatenate(contrib_parts), minlength=uniq.size)
     if mode == "and":
-        hits = np.bincount(inv, minlength=uniq.size)
-        keep = hits == n_terms
+        keep = np.bincount(inv, minlength=uniq.size) == len(locals_parts)
         uniq, scores = uniq[keep], scores[keep]
+    return uniq, scores
+
+
+def _taat_shard_topk(
+    rows, idfs: dict[str, float], k: int, k1: float, b: float, avgdl: float, mode: str,
+    field_opts: str = "default", dels: np.ndarray | None = None,
+    local_filter=None, local_boost=None, local_rescore=None,
+) -> list[tuple[int, float]]:
+    """Vectorized term-at-a-time top-k over one shard: _taat_scores, then
+    the optional per-doc hooks, then the top-k cut.
+
+    local_filter: optional (sorted local_ids) -> keep-mask callback (ES
+    filter context, engine/docvalues.py) applied to the candidate docs
+    AFTER score accumulation and BEFORE top-k selection — scores of
+    surviving docs are unchanged (idf/avgdl stay corpus-global, like ES).
+    """
+    uniq, scores = _taat_scores(rows, idfs, k1, b, avgdl, mode, dels, field_opts)
     if local_filter is not None and uniq.size:
         keep = local_filter(uniq)
         uniq, scores = uniq[keep], scores[keep]
@@ -1421,16 +1431,17 @@ _PATHS = ("auto", "local", "spark")  # the execution / lookup values
 _HEAP_SCHEMA = "shard int, local_id long, score double"
 
 
-def _runs_local(
-    reader: IndexReader, execution: str, lookup: str, total_postings: int
-) -> bool:
-    """Validate the execution/lookup arguments and pick the path: True =
-    driver-local kernels (execution="local", or "auto" when the query's
-    total posting count fits LOCAL_MAX_POSTINGS), False = Spark."""
-    if execution not in _PATHS:
-        raise ValueError(f"unknown execution {execution!r}: expected one of {_PATHS}")
+def _check_lookup(lookup: str) -> None:
     if lookup not in _PATHS:
         raise ValueError(f"unknown lookup {lookup!r}: expected one of {_PATHS}")
+
+
+def _runs_local(reader: IndexReader, execution: str, total_postings: int) -> bool:
+    """Validate `execution` and pick the path: True = driver-local kernels
+    (execution="local", or "auto" when the query's total posting count
+    fits LOCAL_MAX_POSTINGS), False = Spark."""
+    if execution not in _PATHS:
+        raise ValueError(f"unknown execution {execution!r}: expected one of {_PATHS}")
     return execution == "local" or (
         execution == "auto" and total_postings <= reader.LOCAL_MAX_POSTINGS
     )
@@ -1448,6 +1459,100 @@ def _heap_frame(shard: int, top: list[tuple[int, float]]) -> pd.DataFrame:
     )
 
 
+class FieldPostings:
+    """Postings source over ONE field view: the rows of `terms` (with the
+    position stream when needs_pos). total_postings is the caller's
+    dictionary count for those terms, which drives _scatter's gate.
+    MultiFieldPostings is the multi-field twin with the same members."""
+
+    def __init__(self, reader: IndexReader, terms: list[str],
+                 total_postings: int, needs_pos: bool = False):
+        self.reader = reader
+        self.terms = terms
+        self.total_postings = total_postings
+        self.needs_pos = needs_pos
+
+    def local(self):
+        """{shard: [row, ...]}, or None when the postings aren't a local
+        directory."""
+        r = self.reader
+        if self.needs_pos:
+            return r.postings_pos_local(self.terms)
+        return r.postings_local(self.terms)
+
+    def df(self) -> DataFrame:
+        """The Spark read of the same rows (non-positional reads prune
+        the position columns, like the local read)."""
+        d = self.reader.postings(self.terms)
+        return d if self.needs_pos else d.select(*_POST_COLS)
+
+
+def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
+    """The per-shard postings map every query path runs on.
+
+    shard_fn(rows, dels, shard) runs once per shard over src's posting
+    rows for that shard and the shard's sorted tombstone array (None =
+    no deletes). It runs in-process on the driver over a pruned pyarrow
+    read when _runs_local says so (src.total_postings is the count the
+    caller already has from its dictionary read), else as ONE Spark
+    groupBy("shard").applyInPandas over src.df(). Both paths run the same
+    function over the same bytes, so they agree exactly (tested).
+
+    Returns the driver-local path's [(shard, output), ...], or the Spark
+    DataFrame of `schema` whose per-shard parts are frame(shard, output)
+    (default: the output is already a pandas frame; None = no rows).
+    execution="local" on postings that aren't a local directory raises.
+
+    Users: _scatter_topk (every single-read top-k query), rescore_topk's
+    phrase pass, match_phrase_prefix_topk's union-df count, and the aggs.py
+    query contexts (search_aggs, search_sort, matched_urls, collapse_topk,
+    sampler_terms).
+
+    Deliberately not: bm25_topk_batch (many queries in one pass; its
+    shards x queries x k heap union is too big to collect, so it reduces
+    in Spark with a window), and bm25_multifield_topk, whose fetch is one
+    postings read per field view plus, for combined_fields, a docmap
+    cogroup — it shares _runs_local, _heap_frame and _finalize_topk
+    instead. explain_rows and matched_queries read a handful of known
+    docs, not a query's matched set, so they read postings directly."""
+    reader = src.reader
+    tomb = reader.tombstones()  # {} on an index with no deletes
+    if _runs_local(reader, execution, src.total_postings):
+        by_shard = src.local()
+        if by_shard is not None:
+            # NOTE: thread-pooling the per-shard kernels was measured 4-5x
+            # SLOWER here (interleaved A/B, head-term query: 113 ms
+            # sequential vs 522 ms with an 8-thread pool) — the kernel's
+            # Python-side control flow serializes on the GIL and thrashes.
+            # Kernel-bound queries belong on the Spark path
+            # (execution="spark" / above LOCAL_MAX_POSTINGS), which
+            # parallelizes across real worker processes.
+            return [
+                (shard, shard_fn(rows, tomb.get(shard), shard))
+                for shard, rows in by_shard.items()
+            ]
+        if execution == "local":
+            raise ValueError("execution='local' needs a local postings directory")
+
+    def per_shard(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(pdf_key[0])
+        out = shard_fn(list(pdf.itertuples()), tomb.get(shard), shard)
+        if frame is not None:
+            return frame(shard, out)
+        return pd.DataFrame() if out is None else out
+
+    return src.df().groupBy("shard").applyInPandas(per_shard, schema)
+
+
+def _heap_rows(out) -> list[tuple[int, int, float]]:
+    """_scatter output of per-shard [(local_id, score)] lists (frame=
+    _heap_frame) -> [(shard, local_id, score)]. The Spark heaps are tiny
+    (<= k x n_shards rows) by construction, so they are collected."""
+    if isinstance(out, list):
+        return [(shard, lid, sc) for shard, top in out for lid, sc in top]
+    return [(r["shard"], r["local_id"], r["score"]) for r in out.collect()]
+
+
 def _scatter_topk(
     reader: IndexReader,
     terms: list[str],
@@ -1458,80 +1563,28 @@ def _scatter_topk(
     execution: str,
     needs_pos: bool = False,
 ):
-    """The scatter-gather executor every single-read top-k query runs on.
-
-    run_kernel(rows, dels, shard) -> [(local_id, score)]: one shard's
-    top-k over its posting rows for `terms` (with the position stream
-    when needs_pos) and its sorted tombstone array (None = no deletes).
-    The kernel runs in-process on the driver over a pruned pyarrow read
-    when _runs_local says so (total_postings is the count the caller
-    already has from its term_stats read), else as ONE Spark
-    groupBy("shard").applyInPandas where only k-row heaps leave the
-    executors. Both paths run the same kernel over the same bytes, so
-    they are rank-identical (tested). The heaps then go through
-    _finalize_topk (global top-k + pruned docmap url lookup), whose
-    ("rows" | "df", payload) this returns; _to_frame turns it into the
-    result DataFrame, while bm25_topk_rows keeps the rows.
+    """Top-k over _scatter: run_kernel(rows, dels, shard) -> the shard's
+    top-k [(local_id, score)] over the rows of `terms` (with positions
+    when needs_pos). The heaps go through _finalize_topk (global top-k
+    + pruned docmap url lookup), whose ("rows" | "df", payload) this
+    returns; _to_frame turns it into the result DataFrame, while
+    bm25_topk_rows keeps the rows.
 
     Users: _bm25_topk_impl (bm25_topk, bm25_topk_rows, and through them
     match_bool_prefix_topk, multi_index_topk, rescore_topk's base query),
     bm25_dismax_topk, bm25_synonym_topk, bm25_bool_topk, terms_set_topk,
     bm25_boosting_topk, _positional_topk (match_phrase_topk,
     match_phrase_prefix_topk, the span queries) and the querystring
-    kernels (simple_query_string_topk, query_string_topk).
-
-    Deliberately not: bm25_topk_batch (many queries in one pass; its
-    shards x queries x k heap union is too big to collect, so it reduces
-    in Spark with a window); rescore_topk's phrase pass (it scores an
-    allowlisted window and returns a score per window doc, not a heap);
-    the aggs.py partial-aggregation scatters (they return distributed
-    partial frames, not k-row heaps); and bm25_multifield_topk, whose
-    fetch is one postings read per field view plus, for combined_fields,
-    a docmap cogroup — it shares _runs_local, _heap_frame and
-    _finalize_topk instead."""
-    local = _runs_local(reader, execution, lookup, total_postings)
-    tomb = reader.tombstones()  # {} on an index with no deletes
-    if local:
-        by_shard = (
-            reader.postings_pos_local(terms) if needs_pos
-            else reader.postings_local(terms)
-        )
-        if by_shard is not None:
-            # NOTE: thread-pooling the per-shard kernels was measured 4-5x
-            # SLOWER here (interleaved A/B, head-term query: 113 ms
-            # sequential vs 522 ms with an 8-thread pool) — the kernel's
-            # Python-side control flow serializes on the GIL and thrashes.
-            # Kernel-bound queries belong on the Spark scatter-gather path
-            # (execution="spark" / above LOCAL_MAX_POSTINGS), which
-            # parallelizes across real worker processes.
-            heap_rows = [
-                (shard, local_id, score)
-                for shard, rows in by_shard.items()
-                for local_id, score in run_kernel(rows, tomb.get(shard), shard)
-            ]
-            return _finalize_topk(reader, heap_rows, k, lookup)
-
-    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf_key[0])
-        return _heap_frame(
-            shard, run_kernel(list(pdf.itertuples()), tomb.get(shard), shard)
-        )
-
-    per_shard = (
-        reader.postings(terms)
-        .groupBy("shard")
-        .applyInPandas(shard_topk, _HEAP_SCHEMA)
+    kernels (simple_query_string_topk, query_string_topk)."""
+    _check_lookup(lookup)
+    out = _scatter(
+        FieldPostings(reader, terms, total_postings, needs_pos), run_kernel,
+        _HEAP_SCHEMA, execution, _heap_frame,
     )
-    # The per-shard heaps are tiny (<= k x n_shards rows) by
-    # construction: collect them and pick the global top-k driver-side
-    # (doc_id = shard offset + local_id, no docmap needed for ranking);
-    # urls then come from a PRUNED docmap read instead of
-    # broadcast-joining the heap against every docmap row (the
-    # 10^12-doc scan this replaces).
-    heap_rows = [
-        (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-    ]
-    return _finalize_topk(reader, heap_rows, k, lookup)
+    # urls come from a PRUNED docmap read instead of broadcast-joining
+    # the heaps against every docmap row (the 10^12-doc scan this
+    # replaces)
+    return _finalize_topk(reader, _heap_rows(out), k, lookup)
 
 
 def _finalize_topk(
@@ -1710,9 +1763,9 @@ _MfPosRow = namedtuple(
 
 class MultiFieldPostings:
     """Union postings source over several field views of ONE index
-    generation, feeding search_aggs / search_sort / search_count /
-    matched_urls (their `src=` hook) with field-tagged rows for a
-    multi-field matcher.
+    generation (FieldPostings' multi-field twin for _scatter), feeding
+    search_aggs / search_sort / search_count / matched_urls (their `src=`
+    hook) with field-tagged rows for a multi-field matcher.
 
     Scale shape: all fields share one docmap, so local doc ids are
     field-independent and a multi-field matched set is computable PER
@@ -2113,7 +2166,8 @@ def bm25_multifield_topk(
 
     heap_rows: list[tuple[int, int, float]] | None = None
     total_postings = sum(sum(stats[name].values()) for name, _ in fb)
-    if _runs_local(reader, execution, lookup, total_postings):
+    _check_lookup(lookup)
+    if _runs_local(reader, execution, total_postings):
         per_field_shards = {
             name: readers[name].postings_local(live) for name, _ in fb
         }
@@ -2139,6 +2193,8 @@ def bm25_multifield_topk(
                     shard,
                 )
             ]
+        elif execution == "local":
+            raise ValueError("execution='local' needs a local postings directory")
     if heap_rows is None:
         cols = ["shard", "term", "docs_bin", "tfs_bin", "dls_bin", "blocks"]
         parts = [
@@ -4149,40 +4205,25 @@ def match_phrase_prefix_topk(
         return _empty_topk(reader.spark)
     # exact union df of the prefix slot: shards partition the doc space,
     # so the per-shard distinct-doc counts of the expansions' merged
-    # postings sum to the global df. Local indexes read it with the same
-    # pruned pyarrow pass the kernel uses; remote dirs decode docs_bin in
-    # one tiny distributed pass over just those terms' postings.
-    by_shard = reader.postings_pos_local(expansions)
-    if by_shard is not None:
-        df_union = 0
-        for rows in by_shard.values():
-            docs = [
-                P.decode_term_postings(
-                    r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-                )[0]
-                for r in rows
-            ]
-            if docs:
-                df_union += int(np.unique(np.concatenate(docs)).size)
-    else:
+    # postings sum to the global df (tombstones are not masked: df counts
+    # deleted docs until compaction). Doc ids only, so no position read.
+    def n_union(rows: list, _dels, _shard: int) -> int:
+        docs = [
+            P.decode_term_postings(
+                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
+            )[0]
+            for r in rows
+        ]
+        return int(np.unique(np.concatenate(docs)).size) if docs else 0
 
-        def _count(_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = [
-                P.decode_term_postings(
-                    r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-                )[0]
-                for r in pdf.itertuples()
-            ]
-            n = int(np.unique(np.concatenate(parts)).size) if parts else 0
-            return pd.DataFrame({"n": [n]})
-
-        rows = (
-            reader.postings(expansions)
-            .groupBy("shard")
-            .applyInPandas(_count, "n long")
-            .collect()
-        )
-        df_union = int(sum(r["n"] for r in rows))
+    out = _scatter(
+        FieldPostings(reader, expansions, sum(stats.get(t, 0) for t in expansions)),
+        n_union, "n long", execution, lambda _s, n: pd.DataFrame({"n": [n]}),
+    )
+    df_union = (
+        sum(n for _, n in out) if isinstance(out, list)
+        else int(sum(r["n"] for r in out.collect()))
+    )
     if df_union == 0:
         return _empty_topk(reader.spark)
     idf_sum = float(
@@ -4273,50 +4314,28 @@ def rescore_topk(
         idf_sum = float(sum(P.bm25_idf(stats[t], reader.n_docs) for t in terms))
         slots = [[t] for t in terms]
         k1, b, avgdl = reader.k1, reader.b, reader.avgdl
-        tomb = reader.tombstones()
-        by_shard = reader.postings_pos_local(distinct)
-        if by_shard is not None:  # local index dir: in-process verification
-            for shard, rows in by_shard.items():
-                allow = allow_by_shard.get(int(shard))
-                if allow is None:
-                    continue
-                top = _phrase_slop_shard_topk(
+
+        def shard_scores(rows: list, dels, shard: int) -> list[tuple[int, float]]:
+            allow = allow_by_shard.get(shard)
+            if allow is None:
+                return []
+            if slop:
+                return _phrase_slop_shard_topk(
                     rows, slots, slop, idf_sum, allow.size, k1, b, avgdl,
-                    tomb.get(shard), allow,
-                ) if slop else _phrase_shard_topk(
-                    rows, slots, idf_sum, allow.size, k1, b, avgdl,
-                    tomb.get(shard), allow,
+                    dels, allow,
                 )
-                for local, sc in top:
-                    phrase_scores[(int(shard), int(local))] = sc
-        else:  # remote dir: ONE scatter-gather, window allowlist broadcast
-            allow_b = {s: a.tolist() for s, a in allow_by_shard.items()}
-
-            def shard_scores(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                shard = int(pdf_key[0])
-                allow = allow_b.get(shard)
-                if allow is None:
-                    return _heap_frame(shard, [])
-                arr = np.asarray(allow, dtype=np.int64)
-                rows = list(pdf.itertuples())
-                top = _phrase_slop_shard_topk(
-                    rows, slots, slop, idf_sum, arr.size, k1, b, avgdl,
-                    tomb.get(shard), arr,
-                ) if slop else _phrase_shard_topk(
-                    rows, slots, idf_sum, arr.size, k1, b, avgdl,
-                    tomb.get(shard), arr,
-                )
-                return _heap_frame(shard, top)
-
-            got = (
-                reader.postings(distinct)
-                .groupBy("shard")
-                .applyInPandas(shard_scores, _HEAP_SCHEMA)
-                .collect()
+            return _phrase_shard_topk(
+                rows, slots, idf_sum, allow.size, k1, b, avgdl, dels, allow,
             )
-            phrase_scores = {
-                (r["shard"], r["local_id"]): r["score"] for r in got
-            }
+
+        src = FieldPostings(
+            reader, distinct, sum(stats[t] for t in distinct), needs_pos=True
+        )
+        phrase_scores = {
+            (int(s), int(lid)): sc for s, lid, sc in _heap_rows(_scatter(
+                src, shard_scores, _HEAP_SCHEMA, "auto", _heap_frame,
+            ))
+        }
 
     out = []
     for (url, doc_id, base_sc), shard, local in zip(window, shards, locals_):

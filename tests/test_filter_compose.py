@@ -519,3 +519,100 @@ def test_executor_local_spark_identical(spark, fc_deleted, name):
     assert loc, f"{name}: empty result — weak test"
     assert not {u for u, _, _ in loc} & gone
     assert run("spark") == loc
+
+
+def test_forced_spark_phrase_prefix_and_rescore(spark, fc_deleted, monkeypatch):
+    """match_phrase_prefix_topk's union-df count and rescore_topk's phrase
+    pass take the Spark scatter once the postings exceed
+    LOCAL_MAX_POSTINGS: forced there with a 0 gate (no local postings
+    read happens), they return the same (url, doc_id, score) lists as the
+    driver-local path, on an index with tombstones."""
+    from engine.query import match_phrase_prefix_topk, rescore_topk
+
+    out, gone = fc_deleted
+    reader = IndexReader(spark, out)
+    calls = [
+        lambda: match_phrase_prefix_topk(reader, "hash ta", k=12),
+        lambda: match_phrase_prefix_topk(reader, "join ta", k=12, slop=2),
+        lambda: rescore_topk(reader, "hash join sort", "hash table", k=10,
+                             window_size=30),
+        lambda: rescore_topk(reader, "hash join sort", "hash table", k=10,
+                             window_size=30, slop=2),
+    ]
+
+    def run(call):
+        return [(r["url"], r["doc_id"], r["score"]) for r in call().collect()]
+
+    local = [run(c) for c in calls]
+
+    def no_local_read(self, terms):
+        raise AssertionError("local postings read on the forced Spark path")
+
+    monkeypatch.setattr(IndexReader, "LOCAL_MAX_POSTINGS", 0)
+    monkeypatch.setattr(IndexReader, "postings_local", no_local_read)
+    monkeypatch.setattr(IndexReader, "postings_pos_local", no_local_read)
+    for loc, call in zip(local, calls):
+        assert loc, "empty result — weak test"
+        assert not {u for u, _, _ in loc} & gone
+        assert run(call) == loc
+
+
+def test_should_context_and_clause_fails_closed(spark, fc_index):
+    """A bool should-only aggs/count context whose clause has
+    operator=and (or a clause minimum_should_match > 1) raises instead
+    of aggregating the OR union of the clause's terms (a superset)."""
+    out, _ = fc_index
+    reader = IndexReader(spark, out)
+    for spec in ({"query": "hash join", "operator": "and"},
+                 {"query": "hash join sort", "minimum_should_match": 2}):
+        with pytest.raises(ValueError, match="should clause"):
+            search(reader, {
+                "query": {"bool": {"should": [{"match": {"text": spec}}]}},
+                "size": 0, "aggs": {"g": {"terms": {"field": "grp"}}},
+            })
+
+
+def test_must_should_explicit_msm_context_fails_closed(spark, fc_index):
+    """must + should with an explicit minimum_should_match: 1 requires a
+    should match; as an aggs/count context that requirement is not a
+    term list, so it raises instead of silently dropping it."""
+    out, _ = fc_index
+    reader = IndexReader(spark, out)
+    with pytest.raises(ValueError, match="minimum_should_match"):
+        search(reader, {
+            "query": {"bool": {
+                "must": [{"match": {"text": "hash"}}],
+                "should": [{"match": {"text": "join"}}],
+                "minimum_should_match": 1,
+            }},
+            "size": 0, "track_total_hits": True,
+        })
+
+
+def test_match_clause_operator_and_msm_in_context(spark, fc_index):
+    """A single bool must clause keeps its own operator as a count
+    context (a default operator=or match is the union of its terms, not
+    their intersection); a match with minimum_should_match > 1, or
+    several must clauses with a multi-term operator=or one, fail closed."""
+    out, rows = fc_index
+    reader = IndexReader(spark, out)
+
+    def total(q):
+        return search(reader, {"query": q, "size": 0, "track_total_hits": True})[
+            "hits"]["total"]["value"]
+
+    def n_with(pred):
+        return sum(1 for _u, t, *_ in rows if pred(set(t.split())))
+
+    assert total({"bool": {"must": [{"match": {"text": "hash join"}}]}}) == n_with(
+        lambda ws: "hash" in ws or "join" in ws)
+    assert total({"bool": {"must": [{"match": {"text": {
+        "query": "hash join", "operator": "and"}}}]}}) == n_with(
+        lambda ws: "hash" in ws and "join" in ws)
+    for q in (
+        {"match": {"text": {"query": "hash join sort", "minimum_should_match": 2}}},
+        {"bool": {"must": [{"match": {"text": "hash join"}},
+                           {"match": {"text": "sort"}}]}},
+    ):
+        with pytest.raises(ValueError, match="not composable"):
+            total(q)

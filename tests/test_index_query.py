@@ -297,6 +297,10 @@ def test_bad_arguments_fail_closed(spark, index):
     """Unknown algo / execution / lookup values and multi-term dictionary
     rewrites raise ValueError instead of silently running another path
     (and not as asserts, which vanish under python -O)."""
+    from engine.aggs import (
+        TermsAgg, collapse_topk, matched_urls, sampler_terms, search_aggs,
+        search_sort,
+    )
     from engine.query import bm25_bool_topk, bm25_dismax_topk, bm25_topk_rows
 
     out, _ = index
@@ -309,12 +313,39 @@ def test_bad_arguments_fail_closed(spark, index):
         (lambda: bm25_topk(reader, terms, lookup="remote"), "lookup"),
         (lambda: bm25_dismax_topk(reader, terms, execution="cluster"), "execution"),
         (lambda: bm25_bool_topk(reader, should=terms, lookup="remote"), "lookup"),
+        # the aggs.py query contexts ("url" is the docmap id, always there)
+        (lambda: search_aggs(reader, terms, TermsAgg("url"), execution="cluster"),
+         "execution"),
+        (lambda: search_sort(reader, terms, "url", execution="cluster"), "execution"),
+        (lambda: collapse_topk(reader, terms, "url", execution="cluster"), "execution"),
+        (lambda: sampler_terms(reader, terms, "url", execution="cluster"), "execution"),
+        (lambda: matched_urls(reader, terms, execution="cluster"), "execution"),
+        (lambda: search_aggs(reader, terms, TermsAgg("url"), src=object()), "matcher"),
     ] + [
         (lambda m=m: bm25_topk(reader, ["the", "and"], mode=m), "one term")
         for m in ("prefix", "fuzzy", "wildcard", "regexp")
     ]
     for call, match in calls:
         with pytest.raises(ValueError, match=match):
+            call()
+
+
+def test_local_execution_needs_local_postings(spark, index, monkeypatch):
+    """execution="local" raises when the postings are not a local
+    directory (the source's local read returns None) instead of silently
+    running Spark, for top-k and aggs entry points alike."""
+    from engine.aggs import TermsAgg, search_aggs
+    from engine.query import FieldPostings
+
+    out, _ = index
+    reader = IndexReader(spark, out)
+    terms = synth.frozen_queries()[0]["terms"]
+    monkeypatch.setattr(FieldPostings, "local", lambda self: None)
+    for call in (
+        lambda: bm25_topk(reader, terms, execution="local"),
+        lambda: search_aggs(reader, terms, TermsAgg("url"), execution="local"),
+    ):
+        with pytest.raises(ValueError, match="local postings directory"):
             call()
 
 
