@@ -512,8 +512,8 @@ def main() -> None:
             lat.append(time.time() - t0)
         lat.sort()
         # batch-query throughput: the frozen OR-queries replicated to a
-        # 400-query batch, ONE distributed pass (compute-bound: every query
-        # scored against every shard's decoded postings)
+        # 6,000-query batch, ONE distributed pass (duplicates share their
+        # signature, so each distinct query is scored once per shard)
         from engine.query import bm25_topk_batch
 
         or_q = [fq["terms"] for fq in frozen if fq["kind"] in ("single", "or")]

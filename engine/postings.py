@@ -33,6 +33,10 @@ B = 0.75
 
 _SHIFTS = np.array([0, 2, 4, 6], dtype=np.uint8)
 
+# the fields of one block's metadata, in its tuple order (and the key names
+# of the postings `blocks` struct, which arrives as dicts from a read)
+BLOCK_KEYS = ("first_doc", "last_doc", "n", "doc_off", "tf_off", "dl_off", "max_impact")
+
 
 def svb_encode(values: np.ndarray) -> bytes:
     """StreamVByte-encode a uint32 array. Returns control||data bytes."""
@@ -481,6 +485,46 @@ def decode_term_postings(
     tfs = svb_decode_blocks(tfs_bin, t_off, ns)
     dls = svb_decode_blocks(dls_bin, l_off, ns)
     return doc_ids, tfs, dls
+
+
+def decode_rows(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY (shard, term) rows at once -> (counts, doc_ids, tfs,
+    dls): counts[i] is row i's posting count, and the other three are the
+    decode_term_postings outputs of every row concatenated in row order.
+
+    rows carry docs_bin/tfs_bin/dls_bin and blocks (positional tuples, or
+    dicts keyed like the postings `blocks` struct). Each stream is ONE
+    svb_decode_blocks call over the rows' concatenated buffers, with the
+    block offsets shifted by the preceding rows' byte lengths; one global
+    cumsum reconstructs the doc ids, rebased per row because each row's
+    first delta restarts from -1."""
+    ns: list[int] = []
+    offs: list[list[int]] = [[], [], []]
+    bufs: list[list[bytes]] = [[], [], []]
+    base = [0, 0, 0]
+    counts = np.zeros(len(rows), dtype=np.int64)
+    for i, r in enumerate(rows):
+        n = 0
+        for blk in r.blocks:
+            if isinstance(blk, dict):
+                blk = tuple(blk[k] for k in BLOCK_KEYS)
+            ns.append(blk[2])
+            for s in range(3):
+                offs[s].append(base[s] + blk[3 + s])
+            n += blk[2]
+        counts[i] = n
+        for s, buf in enumerate((r.docs_bin, r.tfs_bin, r.dls_bin)):
+            bufs[s].append(buf)
+            base[s] += len(buf)
+    deltas, tfs, dls = (
+        svb_decode_blocks(b"".join(bufs[s]), np.asarray(offs[s], dtype=np.int64), ns)
+        for s in range(3)
+    )
+    c = np.cumsum(deltas.astype(np.int64))
+    starts = np.cumsum(counts) - counts
+    row_base = np.concatenate(([0], c))[starts]
+    doc_ids = c - np.repeat(row_base + 1, counts)
+    return counts, doc_ids, tfs, dls
 
 
 def decode_term_positions(

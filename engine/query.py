@@ -517,12 +517,12 @@ class IndexReader:
                         lst.extend([None] * (l + 1 - len(lst)))
                     lst[l] = u
                 self._dm_cache = cache
-            return {
-                (int(s), int(l)): self._dm_cache[int(s)][int(l)]
-                for s in shards
-                for l in local_ids
-                if int(s) in self._dm_cache and int(l) < len(self._dm_cache[int(s)])
-            }
+            lids = [int(l) for l in local_ids]
+            out = {}
+            for s in map(int, shards):
+                urls = self._dm_cache.get(s, [])
+                out.update(((s, l), urls[l]) for l in lids if l < len(urls))
+            return out
         tbl = self._pa_dataset("docmap").to_table(
             filter=ds.field("shard").isin([int(s) for s in shards])
             & ds.field("local_id").isin([int(l) for l in local_ids]),
@@ -675,8 +675,6 @@ class IndexReader:
 # ---------------------------------------------------------------------------
 
 
-_BLOCK_KEYS = ("first_doc", "last_doc", "n", "doc_off", "tf_off", "dl_off", "max_impact")
-
 _PostRow = namedtuple("_PostRow", ["term", "docs_bin", "tfs_bin", "dls_bin", "blocks"])
 _POST_COLS = ("shard",) + _PostRow._fields  # a non-positional postings read
 _PosRow = namedtuple(
@@ -709,7 +707,7 @@ def _norm_blocks(blocks) -> list[tuple]:
     """Arrow list<struct> arrives as dicts in pandas; the codec indexes
     positionally — normalize once per list."""
     return [
-        tuple(blk[k] for k in _BLOCK_KEYS) if isinstance(blk, dict) else tuple(blk)
+        tuple(blk[k] for k in P.BLOCK_KEYS) if isinstance(blk, dict) else tuple(blk)
         for blk in blocks
     ]
 
@@ -856,6 +854,16 @@ def _taat_scores(
             t = np.ones_like(t)
         locals_parts.append(d)
         contrib_parts.append(idf * P.bm25_impact(t, l, avgdl, k1, b_eff))
+    return _accumulate(locals_parts, contrib_parts, mode)
+
+
+def _accumulate(
+    locals_parts: list[np.ndarray], contrib_parts: list[np.ndarray], mode: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """Sum per-term (local ids, contributions) parts per doc, in part
+    order -> (sorted unique local ids, scores); mode="and" keeps only the
+    docs every part hits. The TAAT accumulation of _taat_scores and the
+    bm25_topk_batch kernel."""
     if not locals_parts:
         return np.empty(0, dtype=np.int64), np.empty(0)
     uniq, inv = np.unique(np.concatenate(locals_parts), return_inverse=True)
@@ -1504,17 +1512,16 @@ def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
     execution="local" on postings that aren't a local directory raises.
 
     Users: _scatter_topk (every single-read top-k query), rescore_topk's
-    phrase pass, match_phrase_prefix_topk's union-df count, and the aggs.py
+    phrase pass, match_phrase_prefix_topk's union-df count, the aggs.py
     query contexts (search_aggs, search_sort, matched_urls, collapse_topk,
-    sampler_terms).
+    sampler_terms) and bm25_topk_batch (execution="spark": many queries
+    in one pass, heaps merged on the driver).
 
-    Deliberately not: bm25_topk_batch (many queries in one pass; its
-    shards x queries x k heap union is too big to collect, so it reduces
-    in Spark with a window), and bm25_multifield_topk, whose fetch is one
-    postings read per field view plus, for combined_fields, a docmap
-    cogroup — it shares _runs_local, _heap_frame and _finalize_topk
-    instead. explain_rows and matched_queries read a handful of known
-    docs, not a query's matched set, so they read postings directly."""
+    Deliberately not: bm25_multifield_topk, whose fetch is one postings
+    read per field view plus, for combined_fields, a docmap cogroup — it
+    shares _runs_local, _heap_frame and _finalize_topk instead.
+    explain_rows and matched_queries read a handful of known docs, not a
+    query's matched set, so they read postings directly."""
     reader = src.reader
     tomb = reader.tombstones()  # {} on an index with no deletes
     if _runs_local(reader, execution, src.total_postings):
@@ -2698,137 +2705,140 @@ def bm25_topk_batch(
 ) -> DataFrame:
     """Evaluate MANY queries in ONE distributed pass (the reference query
     set is a batch — this is the throughput path, vs bm25_topk's latency
-    path). One postings read covers the union of all query terms (bucket-
-    pruned); per shard, a vectorized TAAT kernel scores every query against
-    the decoded postings; per-shard top-k heaps are unioned and reduced to
-    global top-k per query with a window. Returns (query_id, url, doc_id,
-    score, rank). Compute scales with shards x queries; shuffle is only the
-    tiny per-shard heap output."""
+    path). Returns (query_id, url, doc_id, score, rank): each query's
+    top-k by (score desc, doc_id asc), rank from 1. mode is "or" or
+    "and"; anything else raises ValueError.
+
+    One postings read covers the union of all query terms (bucket-pruned,
+    position columns pruned) and runs on _scatter with execution="spark"
+    whatever its posting count: the kernel's cost grows with the number
+    of queries, while the LOCAL_MAX_POSTINGS gate sizes single queries.
+    Per shard, ONE decode_rows call decodes every term's postings, the
+    tombstone mask runs once over the concatenation, and each distinct
+    query signature gets the _accumulate TAAT sum and a top-k cut. Only
+    those heaps leave the shards: at most n_shards x n_signatures x k
+    rows, bounded by the batch size and not by the matched docs. They are
+    collected through Arrow and merged on the driver (one lexsort gives
+    every signature's global top-k; urls come from docmap_lookup_local).
+    The result is a local relation, so collecting it runs no Spark job."""
+    if mode not in ("or", "and"):
+        raise ValueError(f"unknown batch mode {mode!r}: expected 'or' or 'and'")
     spark = reader.spark
-    queries = {int(q): [t for t in dict.fromkeys(ts)] for q, ts in queries.items()}
+    queries = {int(q): list(dict.fromkeys(ts)) for q, ts in queries.items()}
     all_terms = sorted({t for ts in queries.values() for t in ts})
     stats = reader.term_stats(all_terms)
     live_terms = [t for t in all_terms if t in stats]
-    empty = _empty_topk(spark).select(
-        F.lit(None).cast("long").alias("query_id"),
-        "url", "doc_id", "score",
-        F.lit(None).cast("int").alias("rank"),
-    )
     if not live_terms:
-        return empty
+        return _batch_frame(spark, None)
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in live_terms}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
     # batch-internal memoization (the ES request-cache analog, scoped to
-    # this batch): real batches are duplicate-heavy, and two queries with
-    # the same live-term multiset and the same original arity have
-    # IDENTICAL results by construction — so each distinct signature
-    # scores once per shard and fans its top-k out to every owning qid.
-    # Distinct-query batches pay one dict insert per query and nothing
-    # else; results are bit-identical to the unmemoized loop (tested).
-    sig_items: dict[tuple, list[int]] = {}
-    for qid, ts in queries.items():
-        live = tuple(t for t in ts if t in idfs)
-        sig_items.setdefault((live, len(ts)), []).append(qid)
-    sitems = [
-        (list(sig[0]), sig[1], qids) for sig, qids in sig_items.items()
-    ]
-    tomb = reader.tombstones()
+    # this batch): two queries with the same live-term multiset and the
+    # same original arity have IDENTICAL results by construction, so each
+    # distinct signature scores once per shard and the driver fans its
+    # top-k out to every owning query id (bit-identical, tested).
+    sig_of: dict[tuple, int] = {}
+    q_sig = np.array(
+        [
+            sig_of.setdefault((tuple(t for t in ts if t in idfs), len(ts)), len(sig_of))
+            for ts in queries.values()
+        ],
+        dtype=np.int64,
+    )
+    sigs = list(sig_of)
 
-    def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = list(pdf.itertuples())
-        dels = tomb.get(int(pdf_key[0]))
-        decoded: dict[str, tuple] = {}
-        for r in rows:
-            d, t, l = P.decode_term_postings(
-                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-            )
-            keep = _live_mask(d, dels)
-            if keep is not None:
-                d, t, l = d[keep], t[keep], l[keep]
-            decoded[r.term] = (d, idfs[r.term] * P.bm25_impact(t, l, avgdl, k1, b))
-        out_q, out_l, out_s = [], [], []
-        for terms, n_q, qids in sitems:
-            hit = [decoded[t] for t in terms if t in decoded]
+    def shard_topk(rows, dels, shard: int) -> pd.DataFrame | None:
+        counts, d, tf, dl = P.decode_rows(rows)
+        imp = np.repeat([idfs[r.term] for r in rows], counts) * P.bm25_impact(
+            tf, dl, avgdl, k1, b
+        )
+        keep = _live_mask(d, dels)
+        if keep is not None:
+            row_of = np.repeat(np.arange(len(rows)), counts)
+            counts = np.bincount(row_of[keep], minlength=len(rows))
+            d, imp = d[keep], imp[keep]
+        ends = np.cumsum(counts).tolist()
+        span = {r.term: (e - c, e) for r, c, e in zip(rows, counts.tolist(), ends)}
+        out_sig, out_lid, out_score = [], [], []
+        for si, (terms, n_q) in enumerate(sigs):
+            hit = [span[t] for t in terms if t in span]
             if not hit or (mode == "and" and len(hit) != n_q):
                 continue
-            locs = np.concatenate([h[0] for h in hit])
-            contribs = np.concatenate([h[1] for h in hit])
-            uniq, inv = np.unique(locs, return_inverse=True)
-            scores = np.bincount(inv, weights=contribs, minlength=uniq.size)
-            if mode == "and":
-                keep = np.bincount(inv, minlength=uniq.size) == len(hit)
-                uniq, scores = uniq[keep], scores[keep]
+            uniq, scores = _accumulate(
+                [d[a:z] for a, z in hit], [imp[a:z] for a, z in hit], mode
+            )
             if uniq.size == 0:
                 continue
-            kk = min(k, uniq.size)
-            order = _topk_order(uniq, scores, kk)
-            top_l, top_s = uniq[order], scores[order]
-            for qid in qids:
-                out_q.append(np.full(kk, qid, dtype=np.int64))
-                out_l.append(top_l)
-                out_s.append(top_s)
-        if not out_q:
-            return pd.DataFrame({"shard": [], "query_id": [], "local_id": [], "score": []}).astype(
-                {"shard": "int32", "query_id": "int64", "local_id": "int64", "score": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "shard": np.full(sum(len(x) for x in out_q), pdf_key[0], dtype=np.int32),
-                "query_id": np.concatenate(out_q),
-                "local_id": np.concatenate(out_l),
-                "score": np.concatenate(out_s),
-            }
-        )
+            order = _topk_order(uniq, scores, min(k, uniq.size))
+            out_sig.append(np.full(order.size, si, dtype=np.int32))
+            out_lid.append(uniq[order])
+            out_score.append(scores[order])
+        if not out_sig:
+            return None
+        sig_col = np.concatenate(out_sig)
+        return pd.DataFrame({
+            "shard": np.full(sig_col.size, shard, dtype=np.int32),
+            "sig": sig_col,
+            "local_id": np.concatenate(out_lid),
+            "score": np.concatenate(out_score),
+        })
 
-    per_shard = (
-        reader.postings(live_terms)
-        .groupBy("shard")
-        .applyInPandas(shard_topk, "shard int, query_id long, local_id long, score double")
-    )
-    # The heap union is shards x queries x k rows — too many to collect to
-    # the driver (1.9M rows at 32 shards x 6k queries), so the per-query
-    # global top-k stays DISTRIBUTED: doc_id from the broadcast shard
-    # offsets, then a window over query_id. The winner set (queries x k)
-    # is persisted, its (shard, local_id) bounds cost one cheap aggregate
-    # on the cached rows, and the docmap lookup is pruned to the winner
-    # shards + local_id range — never a full per-batch docmap scan. A
-    # value-list isin over 60k local_ids would itself be slower than the
-    # scan (giant row-group filter expression), hence the range form.
-    from pyspark.sql import Window
-
-    offsets = reader.shard_offsets()
-    off_df = spark.createDataFrame(
-        pd.DataFrame({"shard": range(len(offsets)), "off": offsets}),
-        "shard int, off long",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    win = (
-        per_shard.join(F.broadcast(off_df), "shard")
-        .withColumn("doc_id", F.col("off") + F.col("local_id"))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("shard", "query_id", "local_id", "doc_id", "score", "rank")
-        .collect()
-    )
-    if not win:
-        return empty
-    win_pdf = pd.DataFrame(
-        [(r["shard"], r["query_id"], r["local_id"], r["doc_id"], r["score"], r["rank"]) for r in win],
-        columns=["shard", "query_id", "local_id", "doc_id", "score", "rank"],
-    )
+    heaps = _scatter(
+        FieldPostings(reader, live_terms, sum(stats[t] for t in live_terms)),
+        shard_topk, "shard int, sig int, local_id long, score double", "spark",
+    ).toPandas()
+    shard = heaps["shard"].to_numpy(np.int64)
+    sig = heaps["sig"].to_numpy(np.int64)
+    lid = heaps["local_id"].to_numpy(np.int64)
+    score = heaps["score"].to_numpy(np.float64)
+    doc = np.asarray(reader.shard_offsets(), dtype=np.int64)[shard] + lid
+    # every signature's global top-k at once: (sig, score desc, doc_id asc)
+    # order, rank = position within the signature's run
+    order = np.lexsort((doc, -score, sig))
+    rank = np.arange(order.size) - np.searchsorted(sig[order], sig[order])
+    win, rank = order[rank < k], rank[rank < k]
+    if win.size == 0:
+        return _batch_frame(spark, None)
+    shard, lid, doc, score = shard[win], lid[win], doc[win], score[win]
+    # fan-out: query q gets its signature's run of winners
+    n_win = np.bincount(sig[win], minlength=len(sigs))
+    lens = n_win[q_sig]
+    first = (np.cumsum(n_win) - n_win)[q_sig]
+    idx = np.repeat(first - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
+    qid = np.repeat(np.fromiter(queries, dtype=np.int64, count=len(queries)), lens)
+    tail = {"doc_id": doc[idx], "score": score[idx], "rank": (rank[idx] + 1).astype(np.int32)}
+    shards = sorted(set(shard.tolist()))
+    locals_ = sorted(set(lid.tolist()))
+    urls = reader.docmap_lookup_local(shards, locals_)
+    if urls is not None:
+        url = np.array([urls[sl] for sl in zip(shard.tolist(), lid.tolist())], dtype=object)
+        return _batch_frame(spark, pd.DataFrame({"query_id": qid, "url": url[idx], **tail}))
+    # docmap not a local directory: the pruned Spark read, as in
+    # _finalize_topk
     win_df = spark.createDataFrame(
-        win_pdf, "shard int, query_id long, local_id long, doc_id long, score double, rank int"
-    )
-    dm = reader.docmap().filter(
-        F.col("shard").isin(sorted(win_pdf["shard"].unique().tolist()))
-        & F.col("local_id").between(
-            int(win_pdf["local_id"].min()), int(win_pdf["local_id"].max())
-        )
+        pd.DataFrame({"shard": shard[idx].astype(np.int32), "local_id": lid[idx],
+                      "query_id": qid, **tail}),
+        "shard int, local_id long, query_id long, doc_id long, score double, rank int",
     )
     return (
-        dm.select("shard", "local_id", "url")
+        reader.docmap_pruned(shards, locals_)
+        .select("shard", "local_id", "url")
         .join(F.broadcast(win_df), ["shard", "local_id"])
         .select("query_id", "url", "doc_id", "score", "rank")
+    )
+
+
+def _batch_frame(spark, res: pd.DataFrame | None) -> DataFrame:
+    """bm25_topk_batch's result rows as a local relation (None = no
+    rows)."""
+    if res is None:
+        res = pd.DataFrame({
+            "query_id": np.empty(0, np.int64), "url": np.empty(0, object),
+            "doc_id": np.empty(0, np.int64), "score": np.empty(0),
+            "rank": np.empty(0, np.int32),
+        })
+    return spark.createDataFrame(
+        res, "query_id long, url string, doc_id long, score double, rank int"
     )
 
 

@@ -145,6 +145,74 @@ def test_batch_dismax_bool_paths_mask(spark, index, deleted_index, victims):
     assert got == exp
 
 
+def _batch_queries() -> dict[int, list[str]]:
+    """Every frozen query, plus duplicate signatures of query 0, query 1
+    with an absent term appended (same live terms, longer arity) and a
+    query of only an absent term."""
+    fq = synth.frozen_queries()
+    qs = {i: list(q["terms"]) for i, q in enumerate(fq)}
+    n = len(qs)
+    qs[n] = list(fq[0]["terms"])
+    qs[n + 1] = list(fq[0]["terms"])
+    qs[n + 2] = fq[1]["terms"] + ["zzzzabsentterm"]
+    qs[n + 3] = ["zzzzabsentterm"]
+    return qs
+
+
+def _batch_by_query(df) -> dict[int, list[tuple]]:
+    """Batch result -> {query_id: [(url, doc_id, score), ...] in rank
+    order}; ranks must run 1..n per query."""
+    by_q: dict[int, list] = {}
+    for r in df.collect():
+        by_q.setdefault(r["query_id"], []).append(r)
+    out = {}
+    for qid, rows in by_q.items():
+        rows.sort(key=lambda r: r["rank"])
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1)), qid
+        out[qid] = [(r["url"], r["doc_id"], r["score"]) for r in rows]
+    return out
+
+
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_batch_equals_rows_on_tombstoned_index(spark, deleted_index, mode):
+    """bm25_topk_batch == bm25_topk_rows bit for bit on a tombstoned
+    index: duplicate signatures, an absent term beside live terms, an
+    absent-only query, and a k larger than any query's match count."""
+    post = IndexReader(spark, deleted_index)
+    qs = _batch_queries()
+    n = len(synth.frozen_queries())
+    for k in (5, 2 * N_DOCS):
+        got = _batch_by_query(bm25_topk_batch(post, qs, k=k, mode=mode))
+        for qid, terms in qs.items():
+            assert got.get(qid, []) == bm25_topk_rows(post, terms, k=k, mode=mode), (qid, k)
+        assert got[n] and got[n] == got[n + 1] == got[0]
+        assert n + 3 not in got
+        if mode == "and":
+            assert n + 2 not in got
+
+
+def test_batch_docmap_fallback_same_rows(spark, deleted_index, monkeypatch):
+    """When the docmap is not a local directory (docmap_lookup_local
+    returns None), the pruned Spark docmap join returns the same rows."""
+    post = IndexReader(spark, deleted_index)
+    qs = _batch_queries()
+    want = sorted(tuple(r) for r in bm25_topk_batch(post, qs, k=5).collect())
+    monkeypatch.setattr(IndexReader, "docmap_lookup_local", lambda self, shards, local_ids: None)
+    got = sorted(tuple(r) for r in bm25_topk_batch(post, qs, k=5).collect())
+    assert want and got == want
+
+
+def test_batch_collect_runs_no_spark_job(spark, deleted_index):
+    """The batch result is a driver-local relation: collecting it starts
+    no Spark job."""
+    post = IndexReader(spark, deleted_index)
+    df = bm25_topk_batch(post, _batch_queries(), k=5)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    rows = df.collect()
+    assert rows and set(tracker.getJobIdsForGroup()) == before
+
+
 def test_delete_is_idempotent_and_df_input_matches(spark, deleted_index, victims, tmp_path_factory, index):
     # re-deleting writes duplicate tombstone rows; the loaded view dedups
     before = {s: a.copy() for s, a in load_tombstones(deleted_index).items()}

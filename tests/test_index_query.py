@@ -294,14 +294,16 @@ def test_and_with_absent_term_is_empty(spark, index):
 
 
 def test_bad_arguments_fail_closed(spark, index):
-    """Unknown algo / execution / lookup values and multi-term dictionary
-    rewrites raise ValueError instead of silently running another path
+    """Unknown algo / execution / lookup / batch mode values and
+    multi-term dictionary rewrites raise ValueError instead of silently running another path
     (and not as asserts, which vanish under python -O)."""
     from engine.aggs import (
         TermsAgg, collapse_topk, matched_urls, sampler_terms, search_aggs,
         search_sort,
     )
-    from engine.query import bm25_bool_topk, bm25_dismax_topk, bm25_topk_rows
+    from engine.query import (
+        bm25_bool_topk, bm25_dismax_topk, bm25_topk_batch, bm25_topk_rows,
+    )
 
     out, _ = index
     reader = IndexReader(spark, out)
@@ -321,6 +323,8 @@ def test_bad_arguments_fail_closed(spark, index):
         (lambda: sampler_terms(reader, terms, "url", execution="cluster"), "execution"),
         (lambda: matched_urls(reader, terms, execution="cluster"), "execution"),
         (lambda: search_aggs(reader, terms, TermsAgg("url"), src=object()), "matcher"),
+        # the batch path took any mode other than "and" as OR
+        (lambda: bm25_topk_batch(reader, {0: terms}, mode="prefix"), "mode"),
     ] + [
         (lambda m=m: bm25_topk(reader, ["the", "and"], mode=m), "one term")
         for m in ("prefix", "fuzzy", "wildcard", "regexp")

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+from collections import namedtuple
+
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from engine import postings as P
@@ -107,3 +109,47 @@ def test_encode_groups_block_boundaries():
         ref = P.encode_term_postings(ids, tfs, dls, 100.0)
         assert got["docs_bin"] == ref["docs_bin"]
         assert [tuple(b) for b in got["blocks"]] == [tuple(b) for b in ref["blocks"]]
+
+
+_Row = namedtuple("_Row", ["docs_bin", "tfs_bin", "dls_bin", "blocks"])
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(min_value=1, max_value=3 * P.BLOCK + 5), st.booleans()),
+        max_size=10,
+    ),
+    st.integers(min_value=0, max_value=2**31),
+    st.booleans(),
+)
+@example([], 0, False)  # empty row list
+@example([(1, True), (1, False), (1, True)], 1, False)  # single-posting rows
+@example([(2 * P.BLOCK + 3, False), (P.BLOCK, True)], 2, True)  # multi-block rows
+@settings(max_examples=60, deadline=None)
+def test_decode_rows_equals_per_row_decode(spec, seed, as_dicts):
+    """decode_rows over many rows == decode_term_postings per row,
+    concatenated, with counts == the row lengths. spec is one (size,
+    starts_at_zero) per row: rows restart their doc ids (at 0 or above)
+    like the rows of one shard. as_dicts feeds the blocks the way a Spark
+    pandas batch does (dicts keyed like the blocks struct)."""
+    rng = np.random.default_rng(seed)
+    rows, want = [], []
+    for size, at_zero in spec:
+        ids = np.sort(rng.choice(5_000, size=size, replace=False)).astype(np.int64)
+        if at_zero:
+            ids[0] = 0
+        tfs = rng.integers(1, 300, size=size).astype(np.uint32)
+        dls = rng.integers(1, 70_000, size=size).astype(np.uint32)
+        enc = P.encode_term_postings(ids, tfs, dls, 250.0)
+        blocks = enc["blocks"]
+        if as_dicts:
+            blocks = [dict(zip(P.BLOCK_KEYS, blk)) for blk in blocks]
+        rows.append(_Row(enc["docs_bin"], enc["tfs_bin"], enc["dls_bin"], blocks))
+        want.append(P.decode_term_postings(
+            enc["docs_bin"], enc["tfs_bin"], enc["dls_bin"], enc["blocks"]
+        ))
+    counts, d, t, l = P.decode_rows(rows)
+    assert counts.tolist() == [size for size, _ in spec]
+    for got, j in ((d, 0), (t, 1), (l, 2)):
+        ref = np.concatenate([w[j] for w in want]) if want else np.empty(0, got.dtype)
+        assert got.dtype == ref.dtype and np.array_equal(got, ref)
