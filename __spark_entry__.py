@@ -1660,7 +1660,7 @@ def q_bm25_combined_fields(spark, sf_dir):
     boost-weighted sum of per-field avgdls, idf from the max-df blend
     (same blend as cross_fields); score = sum over terms of
     idf * impact(tf_c, dl_c, avgdl_c). Doc lengths come from the docmap
-    dl__<field> columns (the engine's norms), cogrouped per shard."""
+    dl__<field> columns (the engine's norms), gathered per candidate."""
     from engine.query import IndexReader, bm25_multifield_topk
 
     reader = IndexReader(spark, _mf_index_dir(spark, sf_dir))

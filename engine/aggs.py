@@ -77,7 +77,7 @@ from engine.docvalues import (  # noqa: F401  (filter clauses re-exported)
     gather_docvalues,
 )
 from engine.query import (
-    FieldPostings, IndexReader, _live_mask, _norm_blocks, _scatter, _taat_scores,
+    FieldPostings, IndexReader, _decode_live, _live_mask, _scatter, _taat_scores,
 )
 from engine.oracle import analyze_query_py
 
@@ -427,10 +427,7 @@ def _matched_local_ids(
     unique-of-concat and AND is successive sorted intersections."""
     per_term: dict[str, np.ndarray] = {}
     for r in rows:
-        d, _t, _l = P.decode_term_postings(
-            r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-        )
-        per_term[r.term] = d
+        per_term[r.term] = _decode_live(r, None)[0]
     if not per_term or (mode == "and" and len(per_term) < n_terms):
         return np.empty(0, dtype=np.int64)
     arrs = sorted(per_term.values(), key=lambda a: a.size)

@@ -548,45 +548,6 @@ class IndexReader:
             & F.col("local_id").isin([int(l) for l in local_ids])
         )
 
-    def shard_doclens(
-        self, fields: list[str], shards: list[int] | None = None
-    ) -> dict[int, tuple[np.ndarray, dict[str, np.ndarray]]]:
-        """Per-shard doc-length ("norms") arrays for the given indexed
-        fields: {shard: (sorted local_id array, {field: aligned dl
-        array})} — the docmap's dl__<field> columns (plain `dl` on a
-        single-field index). combined_fields needs every queried field's
-        length for every candidate doc, exactly like Lucene reading each
-        field's norms. The read is column-pruned to |fields|+2 int
-        columns and partition-pruned to the requested shards; it is the
-        driver-side twin of the Spark path's docmap cogroup."""
-        import pyarrow.dataset as ds
-
-        dl_col = {
-            f: (f"dl__{f}" if self.multi_field else "dl") for f in fields
-        }
-        flt = None
-        if shards is not None:
-            flt = ds.field("shard").isin([int(s) for s in shards])
-        tbl = self._pa_dataset("docmap").to_table(
-            filter=flt,
-            columns=["shard", "local_id"] + sorted(set(dl_col.values())),
-        )
-        sh = tbl.column("shard").to_numpy(zero_copy_only=False).astype(np.int64)
-        lid = tbl.column("local_id").to_numpy(zero_copy_only=False)
-        cols = {
-            c: tbl.column(c).to_numpy(zero_copy_only=False)
-            for c in set(dl_col.values())
-        }
-        out: dict[int, tuple[np.ndarray, dict[str, np.ndarray]]] = {}
-        for s in np.unique(sh):
-            m = sh == s
-            order = np.argsort(lid[m], kind="stable")
-            out[int(s)] = (
-                lid[m][order],
-                {f: cols[dl_col[f]][m][order] for f in fields},
-            )
-        return out
-
     def stored_source_df(self) -> DataFrame:
         """The stored `_source` columns as a (url, <col>, ...) DataFrame —
         the ES stored-fields analog (build_index(store_source=...) keeps
@@ -724,6 +685,19 @@ def _live_mask(d: np.ndarray, dels: np.ndarray | None) -> np.ndarray | None:
     return dels[idx] != d
 
 
+def _decode_live(r, dels: np.ndarray | None):
+    """One posting row -> its (docs, tfs, dls) arrays minus the shard's
+    tombstoned docs (dels None = keep every doc): the kernels' one
+    decode front, one P.decode_term_postings call per row."""
+    d, t, l = P.decode_term_postings(
+        r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
+    )
+    keep = _live_mask(d, dels)
+    if keep is None:
+        return d, t, l
+    return d[keep], t[keep], l[keep]
+
+
 def _bmw_shard_topk(
     rows, idfs: dict[str, float], k: int, k1: float, b: float, avgdl: float,
     dels: np.ndarray | None = None,
@@ -846,10 +820,7 @@ def _taat_scores(
         idf = idfs.get(r.term)
         if not idf:
             continue
-        d, t, l = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks))
-        keep = _live_mask(d, dels)
-        if keep is not None:
-            d, t, l = d[keep], t[keep], l[keep]
+        d, t, l = _decode_live(r, dels)
         if field_opts == "doconly":
             t = np.ones_like(t)
         locals_parts.append(d)
@@ -944,12 +915,7 @@ def _dismax_shard_topk(
         idf = idfs.get(r.term)
         if not idf:
             continue
-        d, t, l = P.decode_term_postings(
-            r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-        )
-        keep = _live_mask(d, dels)
-        if keep is not None:
-            d, t, l = d[keep], t[keep], l[keep]
+        d, t, l = _decode_live(r, dels)
         locs_parts.append(d)
         for f in fields:
             contrib_parts[f].append(_field_contrib(f, idf, t, l, avgdl, k1, b))
@@ -970,7 +936,7 @@ def _dismax_shard_topk(
 
 
 def _mf_shard_topk(
-    rows_by_field: dict[str, list],
+    rows: list,
     idfs_by_field: dict[str, dict[str, float]],
     blended_idfs: dict[str, float],
     avgdl_by_field: dict[str, float],
@@ -981,7 +947,7 @@ def _mf_shard_topk(
     k1: float,
     b: float,
     dels: np.ndarray | None = None,
-    dl_lookup: tuple[np.ndarray, dict[str, np.ndarray]] | None = None,
+    local_doclens=None,
     local_filter=None,
     n_required: int = 0,
 ) -> list[tuple[int, float]]:
@@ -1004,8 +970,9 @@ def _mf_shard_topk(
     = sum over terms of idf * impact(tf_c, dl_c, avgdl_c). The combined
     per-doc length needs every queried field's length for every candidate
     (Lucene reads each field's norms), so combined_fields takes
-    dl_lookup = (sorted local_id array, {field: aligned dl array}) for
-    the shard — the docmap's dl__<field> columns, this engine's norms.
+    local_doclens: (sorted candidate local ids) -> {field: aligned float
+    dl array}, the docmap's dl__<field> columns (this engine's norms)
+    gathered for the candidates only.
     Blending happens on full per-doc arrays before any truncation
     (a doc outside every field's top-k can still win the blend).
 
@@ -1014,19 +981,21 @@ def _mf_shard_topk(
     its own match query) keep a field's score only when the doc contains
     ALL query terms IN that field, and drop docs no field fully matched;
     term-centric types (cross_fields/combined_fields) require each term
-    in AT LEAST ONE field (Lucene's blended-term conjunction)."""
+    in AT LEAST ONE field (Lucene's blended-term conjunction).
+
+    rows carry their field view in .field (MultiFieldPostings); they are
+    grouped by field in `boosts` order and by term within a field, so
+    both execution paths sum in the same order."""
     combined = mtype == "combined_fields"
+    rows_by_field: dict[str, list] = {f: [] for f in boosts}
+    for r in sorted(rows, key=lambda r: r.term):
+        rows_by_field[r.field].append(r)
     decoded: list[tuple[str, str, np.ndarray, np.ndarray]] = []
     all_docs: list[np.ndarray] = []
-    for f, rows in rows_by_field.items():
+    for f, frows in rows_by_field.items():
         avgdl_f, boost_f = avgdl_by_field[f], boosts[f]
-        for r in rows:
-            d, t, l = P.decode_term_postings(
-                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-            )
-            keep = _live_mask(d, dels)
-            if keep is not None:
-                d, t, l = d[keep], t[keep], l[keep]
+        for r in frows:
+            d, t, l = _decode_live(r, dels)
             if d.size == 0:
                 continue
             payload = (
@@ -1041,12 +1010,11 @@ def _mf_shard_topk(
     uniq = np.unique(np.concatenate(all_docs))
     nu = uniq.size
     if combined:
-        lids, dls_of = dl_lookup
-        pos = np.searchsorted(lids, uniq)
+        dls_of = local_doclens(uniq)
         dl_c = np.zeros(nu)
         avgdl_c = 0.0
         for f, boost_f in boosts.items():
-            dl_c += boost_f * dls_of[f][pos].astype(np.float64)
+            dl_c += boost_f * dls_of[f]
             avgdl_c += boost_f * avgdl_by_field[f]
         per_term: dict[str, np.ndarray] = {}
         for f, term, d, tf in decoded:
@@ -1180,18 +1148,13 @@ def _bool_shard_topk(
     excl_parts: list[np.ndarray] = []
     must_seen: set[str] = set()
     for r in rows:
-        blocks = _norm_blocks(r.blocks)
         if r.term in must_not:
-            d, _, _ = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, blocks)
-            excl_parts.append(d)
+            excl_parts.append(_decode_live(r, None)[0])
             continue
         idf = idfs.get(r.term)
         if not idf:
             continue
-        d, t, l = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, blocks)
-        keep = _live_mask(d, dels)
-        if keep is not None:
-            d, t, l = d[keep], t[keep], l[keep]
+        d, t, l = _decode_live(r, dels)
         locs_parts.append(d)
         contrib_parts.append(_field_contrib(field_opts, idf, t, l, avgdl, k1, b))
         if r.term in must:
@@ -1430,8 +1393,8 @@ def _bm25_topk_impl(
         )
 
     return _scatter_topk(
-        reader, terms, run_kernel, sum(stats[t] for t in terms), k, lookup,
-        execution,
+        FieldPostings(reader, terms, sum(stats[t] for t in terms)),
+        run_kernel, k, lookup, execution,
     )
 
 
@@ -1471,7 +1434,7 @@ class FieldPostings:
     """Postings source over ONE field view: the rows of `terms` (with the
     position stream when needs_pos). total_postings is the caller's
     dictionary count for those terms, which drives _scatter's gate.
-    MultiFieldPostings is the multi-field twin with the same members."""
+    MultiFieldPostings unions one per field, with the same members."""
 
     def __init__(self, reader: IndexReader, terms: list[str],
                  total_postings: int, needs_pos: bool = False):
@@ -1511,17 +1474,13 @@ def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
     (default: the output is already a pandas frame; None = no rows).
     execution="local" on postings that aren't a local directory raises.
 
-    Users: _scatter_topk (every single-read top-k query), rescore_topk's
-    phrase pass, match_phrase_prefix_topk's union-df count, the aggs.py
-    query contexts (search_aggs, search_sort, matched_urls, collapse_topk,
-    sampler_terms) and bm25_topk_batch (execution="spark": many queries
-    in one pass, heaps merged on the driver).
-
-    Deliberately not: bm25_multifield_topk, whose fetch is one postings
-    read per field view plus, for combined_fields, a docmap cogroup — it
-    shares _runs_local, _heap_frame and _finalize_topk instead.
-    explain_rows and matched_queries read a handful of known docs, not a
-    query's matched set, so they read postings directly."""
+    Users: _scatter_topk (every top-k query, multi-field included),
+    rescore_topk's phrase pass, match_phrase_prefix_topk's union-df
+    count, the aggs.py query contexts (search_aggs, search_sort,
+    matched_urls, collapse_topk, sampler_terms) and bm25_topk_batch
+    (execution="spark": many queries in one pass, heaps merged on the
+    driver). explain_rows and matched_queries read a handful of known
+    docs, not a query's matched set, so they read postings directly."""
     reader = src.reader
     tomb = reader.tombstones()  # {} on an index with no deletes
     if _runs_local(reader, execution, src.total_postings):
@@ -1560,38 +1519,27 @@ def _heap_rows(out) -> list[tuple[int, int, float]]:
     return [(r["shard"], r["local_id"], r["score"]) for r in out.collect()]
 
 
-def _scatter_topk(
-    reader: IndexReader,
-    terms: list[str],
-    run_kernel,
-    total_postings: int,
-    k: int,
-    lookup: str,
-    execution: str,
-    needs_pos: bool = False,
-):
+def _scatter_topk(src, run_kernel, k: int, lookup: str, execution: str):
     """Top-k over _scatter: run_kernel(rows, dels, shard) -> the shard's
-    top-k [(local_id, score)] over the rows of `terms` (with positions
-    when needs_pos). The heaps go through _finalize_topk (global top-k
-    + pruned docmap url lookup), whose ("rows" | "df", payload) this
-    returns; _to_frame turns it into the result DataFrame, while
-    bm25_topk_rows keeps the rows.
+    top-k [(local_id, score)] over the postings source src's rows. The
+    heaps go through _finalize_topk (global top-k + pruned docmap url
+    lookup), whose ("rows" | "df", payload) this returns; _to_frame
+    turns it into the result DataFrame, while bm25_topk_rows keeps the
+    rows.
 
     Users: _bm25_topk_impl (bm25_topk, bm25_topk_rows, and through them
     match_bool_prefix_topk, multi_index_topk, rescore_topk's base query),
     bm25_dismax_topk, bm25_synonym_topk, bm25_bool_topk, terms_set_topk,
     bm25_boosting_topk, _positional_topk (match_phrase_topk,
-    match_phrase_prefix_topk, the span queries) and the querystring
-    kernels (simple_query_string_topk, query_string_topk)."""
+    match_phrase_prefix_topk, the span queries), the querystring kernels
+    (simple_query_string_topk, query_string_topk) and, over a
+    MultiFieldPostings source, bm25_multifield_topk."""
     _check_lookup(lookup)
-    out = _scatter(
-        FieldPostings(reader, terms, total_postings, needs_pos), run_kernel,
-        _HEAP_SCHEMA, execution, _heap_frame,
-    )
+    out = _scatter(src, run_kernel, _HEAP_SCHEMA, execution, _heap_frame)
     # urls come from a PRUNED docmap read instead of broadcast-joining
     # the heaps against every docmap row (the 10^12-doc scan this
     # replaces)
-    return _finalize_topk(reader, _heap_rows(out), k, lookup)
+    return _finalize_topk(src.reader, _heap_rows(out), k, lookup)
 
 
 def _finalize_topk(
@@ -1705,8 +1653,8 @@ def _positional_topk(
         return [t for t, m in zip(top, keep) if m][:k]
 
     return _to_frame(reader.spark, _scatter_topk(
-        reader, terms, run_kernel, total_postings, k, lookup, execution,
-        needs_pos=True,
+        FieldPostings(reader, terms, total_postings, needs_pos=True),
+        run_kernel, k, lookup, execution,
     ))
 
 
@@ -1744,8 +1692,8 @@ def bm25_dismax_topk(
         )
 
     return _to_frame(reader.spark, _scatter_topk(
-        reader, terms, run_kernel, sum(stats[t] for t in terms), k, lookup,
-        execution,
+        FieldPostings(reader, terms, sum(stats[t] for t in terms)),
+        run_kernel, k, lookup, execution,
     ))
 
 
@@ -1761,18 +1709,34 @@ def parse_field_boosts(fields: list) -> list[tuple[str, float]]:
     return out
 
 
-_MfRow = namedtuple("_MfRow", "field term docs_bin tfs_bin dls_bin blocks")
-_MfPosRow = namedtuple(
-    "_MfPosRow",
-    "field term docs_bin tfs_bin dls_bin blocks pos_bin pos_offs",
-)
+def _mf_fields(reader: IndexReader, fields: list) -> list[tuple[str, float]]:
+    """parse_field_boosts for a multi-field query over `reader`: every
+    name must be an indexed text field and listed once (a repeated field
+    would read its postings once per listing)."""
+    fb = parse_field_boosts(fields)
+    seen: set[str] = set()
+    for name, _ in fb:
+        if name not in reader.text_fields:
+            raise ValueError(
+                f"field {name!r} is not indexed (text_fields={reader.text_fields})"
+            )
+        if name in seen:
+            raise ValueError(f"field {name!r} is listed more than once")
+        seen.add(name)
+    return fb
+
+
+_MF_TYPES = ("best_fields", "most_fields", "cross_fields", "combined_fields")
+_MfRow = namedtuple("_MfRow", ("field",) + _PostRow._fields)
+_MfPosRow = namedtuple("_MfPosRow", ("field",) + _PosRow._fields)
 
 
 class MultiFieldPostings:
     """Union postings source over several field views of ONE index
-    generation (FieldPostings' multi-field twin for _scatter), feeding
+    generation for _scatter: one FieldPostings per field with a live
+    term, its rows tagged with .field. Feeds bm25_multifield_topk and
     search_aggs / search_sort / search_count / matched_urls (their `src=`
-    hook) with field-tagged rows for a multi-field matcher.
+    hook) with a multi-field matcher.
 
     Scale shape: all fields share one docmap, so local doc ids are
     field-independent and a multi-field matched set is computable PER
@@ -1792,57 +1756,47 @@ class MultiFieldPostings:
         """terms: one list shared by every field, or {field: [term, ...]}
         when the read list is field-specific (per-field prefix/fuzzy
         expansions — round-5 phrase_prefix/bool_prefix contexts); a
-        field absent from the dict reads nothing."""
+        field absent from the dict reads nothing. term_stats keeps each
+        read field's dictionary stats {field: {term: df}}."""
         self.reader = reader
         self.needs_pos = needs_pos
-        self.pairs: list[tuple] = []  # (field, field_reader, live_terms)
-        self.total_postings = 0
+        self.parts: dict[str, FieldPostings] = {}
+        self.term_stats: dict[str, dict[str, int]] = {}
         for f in fields:
             tl = terms.get(f, []) if isinstance(terms, dict) else terms
             if not tl:
                 continue
             r = reader.for_field(f)
-            st = r.term_stats(tl)
+            st = self.term_stats[f] = r.term_stats(tl)
             live = [t for t in tl if t in st]
             # require_all: a conjunctive (phrase) context — a field with
             # ANY dead slot term matches nothing and reads nothing
             if live and (not require_all or len(live) == len(tl)):
-                self.pairs.append((f, r, live))
-                self.total_postings += sum(st[t] for t in live)
+                self.parts[f] = FieldPostings(
+                    r, live, sum(st[t] for t in live), needs_pos
+                )
+        self.total_postings = sum(p.total_postings for p in self.parts.values())
 
     def local(self):
         """{shard: [row, ...]} with rows carrying .field, or None when the
         postings aren't a local directory (caller takes the Spark path)."""
+        row = _MfPosRow if self.needs_pos else _MfRow
         merged: dict[int, list] = {}
-        for f, r, live in self.pairs:
-            by = (
-                r.postings_pos_local(live) if self.needs_pos
-                else r.postings_local(live)
-            )
+        for f, p in self.parts.items():
+            by = p.local()
             if by is None:
                 return None
             for shard, rows in by.items():
-                merged.setdefault(shard, []).extend(
-                    _MfPosRow(
-                        f, x.term, x.docs_bin, x.tfs_bin, x.dls_bin,
-                        x.blocks, x.pos_bin, x.pos_offs,
-                    ) if self.needs_pos
-                    else _MfRow(
-                        f, x.term, x.docs_bin, x.tfs_bin, x.dls_bin, x.blocks
-                    )
-                    for x in rows
-                )
+                merged.setdefault(shard, []).extend(row(f, *x) for x in rows)
         return merged
 
     def df(self) -> DataFrame:
-        """Union postings DataFrame with a `field` literal column (the
-        rows reach the matcher as itertuples, so the tag rides along)."""
-        out = None
-        for f, r, live in self.pairs:
-            d = r.postings(live).withColumn("field", F.lit(f))
-            out = d if out is None else out.unionByName(d)
-        assert out is not None, "caller gates on total_postings == 0"
-        return out
+        """The fields' FieldPostings.df() reads, each with a `field`
+        literal column, unioned (the rows reach the kernel as itertuples,
+        so the tag rides along)."""
+        return functools.reduce(DataFrame.unionByName, [
+            p.df().withColumn("field", F.lit(f)) for f, p in self.parts.items()
+        ])
 
 
 def multifield_matcher(
@@ -1870,19 +1824,14 @@ def multifield_matcher(
     req counts the FULL analyzed term list, so a term dead in every
     field still raises the bar under operator=and (Lucene: msm above the
     satisfiable clause count is unsatisfiable, not clamped)."""
-    if mtype not in ("best_fields", "most_fields", "cross_fields", "combined_fields"):
+    if mtype not in _MF_TYPES:
         raise ValueError(f"unknown multi_match type {mtype!r}")
     if operator not in ("or", "and"):
         raise ValueError(f"multi_match operator must be or/and, got {operator!r}")
     if operator == "and" and minimum_should_match is not None:
         raise ValueError("operator=and already requires every term; "
                          "minimum_should_match composes with operator=or only")
-    names = [n for n, _ in parse_field_boosts(fields)]
-    for n in names:
-        if n not in reader.text_fields:
-            raise ValueError(
-                f"field {n!r} is not indexed (text_fields={reader.text_fields})"
-            )
+    names = [n for n, _ in _mf_fields(reader, fields)]
     terms = (
         analyze_query_py(query) if isinstance(query, str)
         else list(dict.fromkeys(query))
@@ -1909,10 +1858,7 @@ def multifield_matcher(
     def matcher(rows: list, dels) -> np.ndarray:
         per: dict[tuple, np.ndarray] = {}
         for r in rows:
-            d, _t, _l = P.decode_term_postings(
-                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-            )
-            per[(r.field, r.term)] = d
+            per[(r.field, r.term)] = _decode_live(r, None)[0]
         if field_centric:
             sets = [
                 m for f in names
@@ -1966,12 +1912,7 @@ def multifield_phrase_matcher(
     )
     from engine.textnorm import standard_tokenize_py
 
-    names = [n for n, _ in parse_field_boosts(fields)]
-    for n in names:
-        if n not in reader.text_fields:
-            raise ValueError(
-                f"field {n!r} is not indexed (text_fields={reader.text_fields})"
-            )
+    names = [n for n, _ in _mf_fields(reader, fields)]
     terms = (
         standard_tokenize_py(phrase.lower()) if isinstance(phrase, str)
         else list(phrase)
@@ -1984,9 +1925,9 @@ def multifield_phrase_matcher(
         src = MultiFieldPostings(
             reader, names, distinct, require_all=True, needs_pos=True
         )
-        if not src.pairs:
+        if not src.parts:
             return None
-        for f, _r, _l in src.pairs:
+        for f in src.parts:
             slots_of[f] = [[t] for t in terms]
     elif kind == "phrase_prefix":
         head, pre = terms[:-1], terms[-1]
@@ -2006,13 +1947,16 @@ def multifield_phrase_matcher(
         src = MultiFieldPostings(
             reader, names, terms_by_field, require_all=True, needs_pos=True
         )
-        if not src.pairs:
+        if not src.parts:
             return None
     else:
         raise ValueError(f"unknown multi-field phrase context kind {kind!r}")
     # per-field kernel params (avgdl is per-field; scores are discarded
     # so only dl-norm shape differs — kept per-field for exactness)
-    params = {f: (r.k1, r.b, r.avgdl) for f, r, _ in src.pairs}
+    params = {
+        f: (p.reader.k1, p.reader.b, p.reader.avgdl)
+        for f, p in src.parts.items()
+    }
 
     def matcher(rows: list, dels) -> np.ndarray:
         by_field: dict[str, list] = {}
@@ -2048,12 +1992,7 @@ def multifield_union_matcher(reader: "IndexReader", fields: list,
     match_bool_prefix OR unions, round-5 lift). terms_by_field maps each
     field to ITS OWN read list; a field absent (or empty) reads nothing.
     Returns None when no field has a live term. needs_pos=False."""
-    names = [n for n, _ in parse_field_boosts(fields)]
-    for n in names:
-        if n not in reader.text_fields:
-            raise ValueError(
-                f"field {n!r} is not indexed (text_fields={reader.text_fields})"
-            )
+    names = [n for n, _ in _mf_fields(reader, fields)]
     src = MultiFieldPostings(reader, names, terms_by_field)
     if src.total_postings == 0:
         return None
@@ -2061,9 +2000,7 @@ def multifield_union_matcher(reader: "IndexReader", fields: list,
     def matcher(rows: list, dels) -> np.ndarray:
         arrs = []
         for r in rows:
-            d, _t, _l = P.decode_term_postings(
-                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-            )
+            d = _decode_live(r, None)[0]
             if d.size:
                 arrs.append(d)
         if not arrs:
@@ -2092,32 +2029,27 @@ def bm25_multifield_topk(
     per-field postings + per-field df/avgdl, blended per `mtype`
     (best_fields / most_fields / cross_fields / combined_fields —
     semantics in _mf_shard_topk). fields: ["title^2", "text"] boost
-    syntax (combined_fields requires boosts >= 1, the ES contract).
+    syntax, each field listed once (combined_fields requires boosts
+    >= 1, the ES contract).
 
-    Scale shape matches bm25_topk: the per-field postings reads are each
+    Scale shape matches bm25_topk: _scatter_topk over a
+    MultiFieldPostings source, whose per-field postings reads are each
     bucket-pruned + term-pushdown (a query touches |q| bucket dirs PER
     FIELD, not the index); kernels run per shard (local driver-side for
     small queries, Spark scatter-gather above LOCAL_MAX_POSTINGS); only
     k-row heaps leave the shards; urls come from a pruned docmap read.
-    combined_fields additionally reads the queried fields' doc lengths
-    (the docmap dl__<field> columns — this engine's norms): driver-side
-    a shard-pruned columnar read, Spark-side a per-shard cogroup of the
-    postings with the docmap's length columns, so norms never broadcast
-    and never leave their shard. Rank identity local-vs-Spark is by
-    construction (same kernel) and tested, as is equivalence of a
-    two-field index's per-field views with two separately built
-    single-field indexes."""
-    spark = reader.spark
-    if mtype not in ("best_fields", "most_fields", "cross_fields", "combined_fields"):
+    combined_fields additionally needs the queried fields' doc lengths
+    (the docmap dl__<field> columns — this engine's norms): each shard
+    kernel gathers them for its candidate docs only, the docvalue read
+    filters and scripts use, so norms never leave their shard. Rank
+    identity local-vs-Spark is by construction (same kernel) and
+    tested, as is equivalence of a two-field index's per-field views
+    with two separately built single-field indexes."""
+    if mtype not in _MF_TYPES:
         raise ValueError(f"unknown multi_match type {mtype!r}")
-    fb = parse_field_boosts(fields)
+    fb = _mf_fields(reader, fields)
     if mtype == "combined_fields" and any(w < 1.0 for _, w in fb):
         raise ValueError("combined_fields requires per-field boosts >= 1")
-    for name, _ in fb:
-        if name not in reader.text_fields:
-            raise ValueError(
-                f"field {name!r} is not indexed (text_fields={reader.text_fields})"
-            )
     if operator not in ("or", "and"):
         raise ValueError(f"multi_match operator must be or/and, got {operator!r}")
     if operator == "and" and minimum_should_match is not None:
@@ -2132,142 +2064,53 @@ def bm25_multifield_topk(
     n_required = (
         len(terms) if operator == "and" else int(minimum_should_match or 0)
     )
-    if n_required > len(terms):
+    if not terms or n_required > len(terms):
         # Lucene: msm above the clause count is unsatisfiable, not clamped
         return _empty_topk(reader.spark)
-    readers = {name: reader.for_field(name) for name, _ in fb}
-    stats = {name: readers[name].term_stats(terms) for name, _ in fb}
-    live = [t for t in terms if any(t in stats[name] for name, _ in fb)]
+    boosts = dict(fb)
+    src = MultiFieldPostings(reader, list(boosts), terms)
+    stats = src.term_stats
+    live = [t for t in terms if any(t in st for st in stats.values())]
     if not live or (n_required and len(live) < n_required):
-        return _empty_topk(spark)
+        return _empty_topk(reader.spark)
     n_docs = reader.n_docs
     idfs_by_field = {
-        name: {t: float(P.bm25_idf(df, n_docs)) for t, df in stats[name].items()}
-        for name, _ in fb
+        f: {t: float(P.bm25_idf(df, n_docs)) for t, df in st.items()}
+        for f, st in stats.items()
     }
     blended_idfs = {
-        t: float(
-            P.bm25_idf(max(stats[name].get(t, 0) for name, _ in fb), n_docs)
-        )
+        t: float(P.bm25_idf(max(st.get(t, 0) for st in stats.values()), n_docs))
         for t in live
     }
-    avgdl_by_field = {name: readers[name].avgdl for name, _ in fb}
-    boosts = dict(fb)
+    avgdl_by_field = {f: reader.for_field(f).avgdl for f in boosts}
     k1, b = reader.k1, reader.b
-    tomb = reader.tombstones()
-    combined = mtype == "combined_fields"
-    field_names = [name for name, _ in fb]
     # filter context composes exactly like bm25_topk's: a candidates-only
     # docvalue mask per shard, applied after blend accumulation (scores
     # of survivors are unchanged, per ES)
     shard_filter = _shard_filter(reader, filters)
+    field_doclens = None
+    if mtype == "combined_fields":
+        from engine.docvalues import gather_docvalues
 
-    def run_kernel(
-        rows_by_field, dels, dl_lookup, shard
-    ) -> list[tuple[int, float]]:
+        index_dir = reader.dir
+        dl_col = {f: (f"dl__{f}" if reader.multi_field else "dl") for f in boosts}
+        cols = sorted(set(dl_col.values()))
+
+        def field_doclens(shard: int, uniq: np.ndarray) -> dict[str, np.ndarray]:
+            tbl = gather_docvalues(index_dir, int(shard), cols, uniq)
+            return {
+                f: tbl.column(c).to_numpy(zero_copy_only=False).astype(np.float64)
+                for f, c in dl_col.items()
+            }
+
+    def run_kernel(rows, dels, shard) -> list[tuple[int, float]]:
         return _mf_shard_topk(
-            rows_by_field, idfs_by_field, blended_idfs, avgdl_by_field,
-            boosts, mtype, tie_breaker, k, k1, b, dels, dl_lookup,
+            rows, idfs_by_field, blended_idfs, avgdl_by_field, boosts, mtype,
+            tie_breaker, k, k1, b, dels, _at_shard(field_doclens, shard),
             _at_shard(shard_filter, shard), n_required,
         )
 
-    heap_rows: list[tuple[int, int, float]] | None = None
-    total_postings = sum(sum(stats[name].values()) for name, _ in fb)
-    _check_lookup(lookup)
-    if _runs_local(reader, execution, total_postings):
-        per_field_shards = {
-            name: readers[name].postings_local(live) for name, _ in fb
-        }
-        if all(v is not None for v in per_field_shards.values()):
-            shards = sorted(
-                {s for v in per_field_shards.values() for s in v}
-            )
-            doclens = (
-                reader.shard_doclens(field_names, shards)
-                if combined and shards
-                else {}
-            )
-            heap_rows = [
-                (shard, local, score)
-                for shard in shards
-                for local, score in run_kernel(
-                    {
-                        name: per_field_shards[name].get(shard, [])
-                        for name, _ in fb
-                    },
-                    tomb.get(shard),
-                    doclens.get(shard),
-                    shard,
-                )
-            ]
-        elif execution == "local":
-            raise ValueError("execution='local' needs a local postings directory")
-    if heap_rows is None:
-        cols = ["shard", "term", "docs_bin", "tfs_bin", "dls_bin", "blocks"]
-        parts = [
-            readers[name].postings(live).select(*cols, F.lit(name).alias("field"))
-            for name, _ in fb
-        ]
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-
-        def _rows_by_field(pdf: pd.DataFrame) -> dict[str, list]:
-            rows_by_field: dict[str, list] = {}
-            for r in pdf.itertuples():
-                rows_by_field.setdefault(r.field, []).append(r)
-            return rows_by_field
-
-        if combined:
-            # norms stay shard-local: cogroup the postings with the
-            # docmap's (local_id, dl__<f>) columns per shard — no
-            # broadcast of per-doc lengths, no extra shuffle (both sides
-            # hash on shard)
-            dl_col = {
-                name: (f"dl__{name}" if reader.multi_field else "dl")
-                for name in field_names
-            }
-            dmap = reader.docmap().select(
-                "shard", "local_id", *sorted(set(dl_col.values()))
-            )
-
-            def shard_topk_cg(
-                key: tuple, pdf: pd.DataFrame, dm: pd.DataFrame
-            ) -> pd.DataFrame:
-                if pdf.empty or dm.empty:
-                    return _heap_frame(int(key[0]), [])
-                order = np.argsort(dm["local_id"].to_numpy(), kind="stable")
-                lids = dm["local_id"].to_numpy()[order]
-                dls_of = {
-                    f: dm[dl_col[f]].to_numpy()[order] for f in field_names
-                }
-                top = run_kernel(
-                    _rows_by_field(pdf), tomb.get(int(key[0])), (lids, dls_of),
-                    int(key[0]),
-                )
-                return _heap_frame(int(key[0]), top)
-
-            per_shard = (
-                union.groupBy("shard")
-                .cogroup(dmap.groupBy("shard"))
-                .applyInPandas(shard_topk_cg, _HEAP_SCHEMA)
-            )
-        else:
-
-            def shard_topk(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                top = run_kernel(
-                    _rows_by_field(pdf), tomb.get(int(pdf_key[0])),
-                    None, int(pdf_key[0]),
-                )
-                return _heap_frame(int(pdf_key[0]), top)
-
-            per_shard = union.groupBy("shard").applyInPandas(
-                shard_topk, _HEAP_SCHEMA
-            )
-        heap_rows = [
-            (r["shard"], r["local_id"], r["score"]) for r in per_shard.collect()
-        ]
-    return _to_frame(spark, _finalize_topk(reader, heap_rows, k, lookup))
+    return _to_frame(reader.spark, _scatter_topk(src, run_kernel, k, lookup, execution))
 
 
 def bm25_synonym_topk(
@@ -2322,12 +2165,7 @@ def bm25_synonym_topk(
     def run_kernel(rows, dels, shard) -> list[tuple[int, float]]:
         by_grp: dict[int, list[tuple]] = {}
         for r in rows:
-            d, t, l = P.decode_term_postings(
-                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-            )
-            keep = _live_mask(d, dels)
-            if keep is not None:
-                d, t, l = d[keep], t[keep], l[keep]
+            d, t, l = _decode_live(r, dels)
             if d.size:
                 by_grp.setdefault(term_grp[r.term], []).append((d, t, l))
         if not by_grp or (mode == "and" and len(by_grp) < n_groups):
@@ -2363,8 +2201,8 @@ def bm25_synonym_topk(
         return list(zip(uniq[order].tolist(), scores[order].tolist()))
 
     return _to_frame(reader.spark, _scatter_topk(
-        reader, terms, run_kernel, sum(stats[t] for t in terms), k, lookup,
-        execution,
+        FieldPostings(reader, terms, sum(stats[t] for t in terms)),
+        run_kernel, k, lookup, execution,
     ))
 
 
@@ -2436,8 +2274,8 @@ def bm25_bool_topk(
 
     all_terms = scoring + not_terms
     return _to_frame(reader.spark, _scatter_topk(
-        reader, all_terms, run_kernel, sum(stats[t] for t in all_terms), k,
-        lookup, execution,
+        FieldPostings(reader, all_terms, sum(stats[t] for t in all_terms)),
+        run_kernel, k, lookup, execution,
     ))
 
 
@@ -2473,11 +2311,7 @@ def _terms_set_shard_topk(
         idf = idfs.get(r.term)
         if not idf:
             continue
-        blocks = _norm_blocks(r.blocks)
-        d, t, l = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, blocks)
-        keep = _live_mask(d, dels)
-        if keep is not None:
-            d, t, l = d[keep], t[keep], l[keep]
+        d, t, l = _decode_live(r, dels)
         locs_parts.append(d)
         contrib_parts.append(idf * P.bm25_impact(t, l, avgdl, k1, b))
     if not locs_parts:
@@ -2556,8 +2390,8 @@ def terms_set_topk(
         )
 
     return _to_frame(reader.spark, _scatter_topk(
-        reader, present, run_kernel, sum(stats[t] for t in present), k,
-        lookup, execution,
+        FieldPostings(reader, present, sum(stats[t] for t in present)),
+        run_kernel, k, lookup, execution,
     ))
 
 
@@ -2613,18 +2447,13 @@ def _boosting_shard_topk(
     accumulation, one isin demote mask."""
     locs_parts, contrib_parts, neg_parts = [], [], []
     for r in rows:
-        blocks = _norm_blocks(r.blocks)
         if r.term in neg_set:
-            d, _, _ = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, blocks)
-            neg_parts.append(d)
+            neg_parts.append(_decode_live(r, None)[0])
             continue
         idf = idfs.get(r.term)
         if not idf:
             continue
-        d, t, l = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, blocks)
-        keep = _live_mask(d, dels)
-        if keep is not None:
-            d, t, l = d[keep], t[keep], l[keep]
+        d, t, l = _decode_live(r, dels)
         locs_parts.append(d)
         contrib_parts.append(idf * P.bm25_impact(t, l, avgdl, k1, b))
     if not locs_parts:
@@ -2692,8 +2521,8 @@ def bm25_boosting_topk(
 
     all_terms = pos_terms + neg_terms
     return _to_frame(reader.spark, _scatter_topk(
-        reader, all_terms, run_kernel, sum(stats[t] for t in all_terms), k,
-        lookup, execution,
+        FieldPostings(reader, all_terms, sum(stats[t] for t in all_terms)),
+        run_kernel, k, lookup, execution,
     ))
 
 
@@ -3217,9 +3046,7 @@ def explain_rows(
     )
     out = []
     for r in rows:
-        docs, tfs, _dls = P.decode_term_postings(
-            r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-        )
+        docs, tfs, _dls = _decode_live(r, None)
         i = int(np.searchsorted(docs, local_id))
         if i >= docs.size or int(docs[i]) != local_id:
             continue
@@ -3560,11 +3387,7 @@ def matched_queries(
         for shard, rows in by_shard.items():
             dels = tomb.get(shard)
             for r in rows:
-                d, _t, _l = P.decode_term_postings(
-                    r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-                )
-                keep = _live_mask(d, dels)
-                docs_of[(shard, r.term)] = d if keep is None else d[keep]
+                docs_of[(shard, r.term)] = _decode_live(r, dels)[0]
 
     def _has(shard: int, lid: int, term: str) -> bool:
         d = docs_of.get((shard, term))
@@ -4032,15 +3855,8 @@ def bm25_multifield_phrase_topk(
     BEFORE top-k, so any tie_breaker is exact. Filter clauses ride every
     per-field leg (identical docvalue mask -> identical restriction).
     Shared docmap => per-field doc_ids coincide by construction."""
-    fb = parse_field_boosts(fields)
-    unknown = [n for n, _ in fb if n not in reader.text_fields]
-    if unknown:
-        raise ValueError(
-            f"multi_match {kind} fields {unknown} are not indexed "
-            f"(text_fields={reader.text_fields})"
-        )
     frames = []
-    for name, boost in fb:
+    for name, boost in _mf_fields(reader, fields):
         r = reader if name == reader.field else reader.for_field(name)
         if kind == "phrase":
             leg = match_phrase_topk(r, phrase, k=1 << 31, slop=slop, filters=filters)
@@ -4218,12 +4034,7 @@ def match_phrase_prefix_topk(
     # postings sum to the global df (tombstones are not masked: df counts
     # deleted docs until compaction). Doc ids only, so no position read.
     def n_union(rows: list, _dels, _shard: int) -> int:
-        docs = [
-            P.decode_term_postings(
-                r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-            )[0]
-            for r in rows
-        ]
+        docs = [_decode_live(r, None)[0] for r in rows]
         return int(np.unique(np.concatenate(docs)).size) if docs else 0
 
     out = _scatter(

@@ -52,11 +52,11 @@ import pandas as pd
 
 from engine import postings as P
 from engine.query import (
+    FieldPostings,
     IndexReader,
     _at_shard,
+    _decode_live,
     _empty_topk,
-    _live_mask,
-    _norm_blocks,
     _phrase_freqs,
     _require_positions,
     _rows_frame,
@@ -129,16 +129,7 @@ def _freq_cache(by_row: dict, dels):
     def freq(t):
         if t not in cache:
             r = by_row.get(t)
-            if r is None:
-                cache[t] = None
-            else:
-                d, tf, dl = P.decode_term_postings(
-                    r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-                )
-                keep = _live_mask(d, dels)
-                if keep is not None:
-                    d, tf, dl = d[keep], tf[keep], dl[keep]
-                cache[t] = (d, tf, dl)
+            cache[t] = None if r is None else _decode_live(r, dels)
         return cache[t]
 
     return freq
@@ -334,10 +325,10 @@ def simple_query_string_topk(
             _at_shard(shard_filter, shard),
         )
 
-    return _to_frame(reader.spark, _scatter_topk(
-        reader, distinct, run_kernel, sum(stats.get(t, 0) for t in distinct),
-        k, lookup, execution, needs_pos,
-    ))
+    src = FieldPostings(
+        reader, distinct, sum(stats.get(t, 0) for t in distinct), needs_pos
+    )
+    return _to_frame(reader.spark, _scatter_topk(src, run_kernel, k, lookup, execution))
 
 
 # ---------------------------------------------------------------------------
@@ -791,10 +782,10 @@ def query_string_topk(
     def run_kernel(rows: list, dels, shard: int) -> list[tuple[int, float]]:
         return _qs_shard_topk(rows, spec, k, dels, _at_shard(shard_filter, shard))
 
-    return _to_frame(reader.spark, _scatter_topk(
-        reader, distinct, run_kernel, sum(stats.get(t, 0) for t in distinct),
-        k, lookup, execution, needs_pos,
-    ))
+    src = FieldPostings(
+        reader, distinct, sum(stats.get(t, 0) for t in distinct), needs_pos
+    )
+    return _to_frame(reader.spark, _scatter_topk(src, run_kernel, k, lookup, execution))
 
 
 def sqs_multifield_topk(

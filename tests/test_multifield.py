@@ -760,3 +760,95 @@ def test_three_field_index(spark, tmp_path_factory):
     resp = search(r, {"query": {"match": {"snippet": "cat"}}, "size": 10})
     cats = {u for u, t, ti, sn in rows if "cat" in sn.split()}
     assert {h["_id"] for h in resp["hits"]["hits"]} == cats
+
+
+def test_repeated_field_raises(spark, mf_index):
+    """A field listed twice would read (and score) its postings twice on
+    one path only; every multi-field entry point rejects it."""
+    from engine.dsl import search
+    from engine.query import multifield_matcher
+
+    out, _, _ = mf_index
+    reader = IndexReader(spark, out)
+    dup = ["title", "title^2", "text"]
+    with pytest.raises(ValueError, match="more than once"):
+        bm25_multifield_topk(reader, "web search", dup, k=5)
+    with pytest.raises(ValueError, match="more than once"):
+        multifield_matcher(reader, dup, "web search")
+    with pytest.raises(ValueError, match="more than once"):
+        search(reader, {"query": {"multi_match": {
+            "query": "web search", "fields": dup}}})
+
+
+@pytest.fixture(scope="module")
+def mf_tomb_index(spark, mf_index, tmp_path_factory):
+    """mf_index copy with every 5th doc tombstoned."""
+    import shutil
+
+    from engine.deletes import delete_docs
+
+    src, rows, _ = mf_index
+    out = str(tmp_path_factory.mktemp("mf_tomb") / "idx")
+    shutil.copytree(src, out)
+    victims = {u for u, _, _ in rows[::5]}
+    assert delete_docs(spark, out, sorted(victims)) == len(victims)
+    return out, victims
+
+
+@pytest.mark.parametrize("operator", ["or", "and"])
+@pytest.mark.parametrize(
+    "mtype", ["best_fields", "most_fields", "cross_fields", "combined_fields"]
+)
+def test_multifield_tombstoned_paths_identical(
+    spark, mf_tomb_index, monkeypatch, mtype, operator
+):
+    """Driver-local, Spark and forced-Spark (auto over the gate, no local
+    read possible) runs agree on every (url, doc_id, score); no deleted
+    doc comes back."""
+    out, victims = mf_tomb_index
+    reader = IndexReader(spark, out)
+
+    def run(execution):
+        return [
+            (r["url"], r["doc_id"], r["score"])
+            for r in bm25_multifield_topk(
+                reader, "web search title", ["title^2", "text"], k=500,
+                mtype=mtype, tie_breaker=0.3, execution=execution,
+                operator=operator,
+            ).collect()
+        ]
+
+    loc = run("local")
+    assert loc, f"{mtype}/{operator}: empty result — weak corpus"
+    assert not {u for u, _, _ in loc} & victims
+    assert run("spark") == loc
+
+    def no_local_read(self, terms):
+        raise AssertionError("postings_local on the forced-Spark path")
+
+    monkeypatch.setattr(reader, "LOCAL_MAX_POSTINGS", 0)
+    monkeypatch.setattr(IndexReader, "postings_local", no_local_read)
+    assert run("auto") == loc
+
+
+def test_multifield_postings_df_columns(spark, mf_index, tmp_path_factory):
+    """MultiFieldPostings' Spark read prunes to FieldPostings.df()'s
+    columns plus the field tag; a positional read keeps the positions."""
+    from engine.query import _POST_COLS, MultiFieldPostings
+
+    out, _, _ = mf_index
+    src = MultiFieldPostings(IndexReader(spark, out), ["title", "text"], ["web"])
+    assert tuple(src.df().columns) == _POST_COLS + ("field",)
+
+    rows = [("p1", "alpha beta", "red green"), ("p2", "beta gamma", "green")]
+    df = spark.createDataFrame(rows, "url string, text string, title string")
+    pos = str(tmp_path_factory.mktemp("mfpos_cols") / "idx")
+    build_index(spark, df, pos, n_shards=2, n_buckets=4,
+                text_fields=["text", "title"], index_options="positions")
+    src = MultiFieldPostings(
+        IndexReader(spark, pos), ["text", "title"], ["beta", "green"],
+        needs_pos=True,
+    )
+    cols = src.df().columns
+    assert {"pos_bin", "pos_offs", "field"} <= set(cols)
+    assert set(_POST_COLS) <= set(cols)
