@@ -1444,8 +1444,8 @@ def search_aggs(
     next to its postings (never collected), preserving the scale shape.
     src: optional postings-source override (engine.query
     MultiFieldPostings — multi_match / combined_fields query contexts):
-    the rows come from src.local()/src.df() (a union over field views
-    with a `field` tag) instead of `query`'s single-field read; a
+    the rows come from src.local()/src.shard_read() (a union over field
+    views with a `field` tag) instead of `query`'s single-field read; a
     matcher MUST accompany it, and `query` is ignored for reading and
     liveness gating (the source already pruned dead (field, term)
     pairs; its constructor gates the all-dead case).

@@ -2,11 +2,11 @@
 
 Execution (SURVEY.md 3.3): analyze the query with the SAME frozen analyzer
 used at index time -> look up per-term global df from term_stats (bucket-
-pruned parquet read, tiny) -> compute Lucene idf on the driver -> read only
-the query terms' posting rows (bucket directory pruning + term pushdown) ->
-groupBy(shard).applyInPandas: per doc-shard top-k with block-max WAND (or
-vectorized TAAT), bounded heap -> broadcast-join the tiny per-shard heaps
-back to docmap for urls -> global orderBy(score desc, doc_id asc).limit(k).
+pruned parquet read, tiny) -> compute Lucene idf on the driver -> per
+doc-shard, read only the query terms' posting rows (bucket directory
+pruning + term pushdown) and run top-k with block-max WAND (or vectorized
+TAAT) into a bounded heap -> merge the tiny per-shard heaps on the driver
+(score desc, doc_id asc) -> pruned docmap read for the k winners' urls.
 
 Two physical algorithms, both rank-identical to the oracle:
 - algo="wand": vectorized block-max pruning — doc space is cut at posting-
@@ -162,7 +162,7 @@ class IndexReader:
         per reader (point-in-time live-docs view, like a Lucene searcher's
         deleted-docs bitmap). Tombstone batches are tiny by contract
         (engine/deletes.py), so they ride into the Spark kernels inside the
-        applyInPandas closure."""
+        per-shard task closure."""
         if self._tomb is None:
             from engine.deletes import load_tombstones
 
@@ -437,52 +437,26 @@ class IndexReader:
     LOCAL_MAX_POSTINGS = 5_000_000
 
     def postings_local(self, terms: list[str]):
-        """Driver-side postings read for a small query: pyarrow dataset
-        scan of the terms' bucket directories (hive partition pruning +
-        term row-group pushdown). Returns {shard: [row, ...]} with the
-        same attribute shape the Spark kernels consume, or None when the
-        postings aren't a local directory."""
-        p = os.path.join(self.dir, self._post_sub)
-        if not os.path.isdir(p):
-            return None
-        import pyarrow.dataset as ds
-
-        tbl = self._pa_dataset(self._post_sub).to_table(
-            filter=ds.field("bucket").isin(self._bucket_of(terms))
-            & ds.field("term").isin(terms),
-            columns=list(_POST_COLS),
-        )
-        by_shard: dict[int, list] = {}
-        cols = [tbl.column(c).to_pylist() for c in _POST_COLS]
-        for shard, term, d_bin, t_bin, l_bin, blocks in zip(*cols):
-            by_shard.setdefault(int(shard), []).append(
-                _PostRow(term, d_bin, t_bin, l_bin, blocks)
-            )
-        return by_shard
+        """Driver-side postings read for a small query, {shard: [_PostRow,
+        ...]}, or None when the postings aren't a local directory."""
+        return self._local_read(terms, False)
 
     def postings_pos_local(self, terms: list[str]):
-        """postings_local twin for positional indexes: same pruned pyarrow
-        read plus the pos_bin/pos_offs position stream (match_phrase's
-        input). None when the postings aren't a local directory."""
-        p = os.path.join(self.dir, self._post_sub)
-        if not os.path.isdir(p):
+        """postings_local plus the position stream ([_PosRow, ...])."""
+        return self._local_read(terms, True)
+
+    def _local_read(self, terms: list[str], needs_pos: bool):
+        """_read_postings over the terms' bucket directories (hive
+        partition pruning + term row-group pushdown)."""
+        if not os.path.isdir(os.path.join(self.dir, self._post_sub)):
             return None
         import pyarrow.dataset as ds
 
-        names = ("shard", "term", "docs_bin", "tfs_bin", "dls_bin", "blocks",
-                 "pos_bin", "pos_offs")
-        tbl = self._pa_dataset(self._post_sub).to_table(
-            filter=ds.field("bucket").isin(self._bucket_of(terms))
-            & ds.field("term").isin(terms),
-            columns=list(names),
+        return _read_postings(
+            self._pa_dataset(self._post_sub),
+            ds.field("bucket").isin(self._bucket_of(terms)) & ds.field("term").isin(terms),
+            needs_pos,
         )
-        by_shard: dict[int, list] = {}
-        cols = [tbl.column(c).to_pylist() for c in names]
-        for shard, term, d_bin, t_bin, l_bin, blocks, p_bin, p_offs in zip(*cols):
-            by_shard.setdefault(int(shard), []).append(
-                _PosRow(term, d_bin, t_bin, l_bin, blocks, p_bin, p_offs)
-            )
-        return by_shard
 
     def docmap_lookup_local(
         self, shards: list[int], local_ids: list[int]
@@ -632,15 +606,27 @@ class IndexReader:
 
 
 # ---------------------------------------------------------------------------
-# per-shard kernels (run inside applyInPandas)
+# per-shard kernels (run by _scatter, on the driver or in a Spark task)
 # ---------------------------------------------------------------------------
 
 
 _PostRow = namedtuple("_PostRow", ["term", "docs_bin", "tfs_bin", "dls_bin", "blocks"])
-_POST_COLS = ("shard",) + _PostRow._fields  # a non-positional postings read
 _PosRow = namedtuple(
     "_PosRow", ["term", "docs_bin", "tfs_bin", "dls_bin", "blocks", "pos_bin", "pos_offs"]
 )
+
+
+def _read_postings(dataset, filter, needs_pos: bool) -> dict[int, list]:
+    """The one postings read, on the driver and in Spark tasks alike:
+    `filter`'s rows of the pyarrow `dataset` as {shard: [_PostRow, ...]}
+    ([_PosRow, ...], with the position stream, when needs_pos)."""
+    row = _PosRow if needs_pos else _PostRow
+    cols = ("shard",) + row._fields
+    tbl = dataset.to_table(filter=filter, columns=list(cols))
+    by_shard: dict[int, list] = {}
+    for shard, *rest in zip(*(tbl.column(c).to_pylist() for c in cols)):
+        by_shard.setdefault(shard, []).append(row(*rest))
+    return by_shard
 
 
 def _lev_within(a: str, b: str, d: int) -> bool:
@@ -1248,8 +1234,8 @@ def bm25_topk(
     (driver-side pyarrow filtered read, zero extra Spark jobs; the latency
     path), "spark" (pruned distributed scan; the plan-auditable path the
     batch API also uses), "auto" = local when the docmap dir is local.
-    execution: where the per-shard kernels run — "spark" (scatter-gather
-    applyInPandas; the 10^12-doc path), "local" (driver-side pyarrow
+    execution: where the per-shard kernels run — "spark" (one Spark task
+    per shard; the 10^12-doc path), "local" (driver-side pyarrow
     postings read + in-process kernels; the Lucene-searcher-style serving
     path, ~ms instead of a job launch), "auto" = local when the index dir
     is local AND the query's total posting count (known exactly from the
@@ -1420,7 +1406,7 @@ def _runs_local(reader: IndexReader, execution: str, total_postings: int) -> boo
 
 def _heap_frame(shard: int, top: list[tuple[int, float]]) -> pd.DataFrame:
     """One shard's kernel output [(local_id, score)] as a _HEAP_SCHEMA
-    pandas frame — what a per-shard applyInPandas function returns."""
+    pandas frame — what a Spark task of _scatter yields."""
     return pd.DataFrame(
         {
             "shard": np.full(len(top), shard, dtype=np.int32),
@@ -1451,11 +1437,21 @@ class FieldPostings:
             return r.postings_pos_local(self.terms)
         return r.postings_local(self.terms)
 
-    def df(self) -> DataFrame:
-        """The Spark read of the same rows (non-positional reads prune
-        the position columns, like the local read)."""
-        d = self.reader.postings(self.terms)
-        return d if self.needs_pos else d.select(*_POST_COLS)
+    def shard_read(self):
+        """shard -> [row, ...]: the same rows, one shard at a time, for a
+        Spark task. Bound to the parquet files of the terms' bucket dirs;
+        it holds no reader (a SparkSession does not pickle)."""
+        import pyarrow.dataset as ds
+
+        r, terms, needs_pos = self.reader, self.terms, self.needs_pos
+        sub = r._pa_dataset(r._post_sub)
+        files = ds.FileSystemDataset(
+            list(sub.get_fragments(filter=ds.field("bucket").isin(r._bucket_of(terms)))),
+            sub.schema, sub.format, sub.filesystem,
+        )
+        return lambda shard: _read_postings(
+            files, ds.field("term").isin(terms) & (ds.field("shard") == shard), needs_pos,
+        ).get(shard, [])
 
 
 def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
@@ -1463,11 +1459,11 @@ def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
 
     shard_fn(rows, dels, shard) runs once per shard over src's posting
     rows for that shard and the shard's sorted tombstone array (None =
-    no deletes). It runs in-process on the driver over a pruned pyarrow
-    read when _runs_local says so (src.total_postings is the count the
-    caller already has from its dictionary read), else as ONE Spark
-    groupBy("shard").applyInPandas over src.df(). Both paths run the same
-    function over the same bytes, so they agree exactly (tested).
+    no deletes). _runs_local picks only WHERE it runs (src.total_postings
+    is the count the caller already has from its dictionary read):
+    in-process on the driver over src.local(), or as one Spark task per
+    shard over src.shard_read(). Both reads are _read_postings, so both
+    paths run the same function over the same rows (tested identical).
 
     Returns the driver-local path's [(shard, output), ...], or the Spark
     DataFrame of `schema` whose per-shard parts are frame(shard, output)
@@ -1500,14 +1496,18 @@ def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
         if execution == "local":
             raise ValueError("execution='local' needs a local postings directory")
 
-    def per_shard(pdf_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf_key[0])
-        out = shard_fn(list(pdf.itertuples()), tomb.get(shard), shard)
-        if frame is not None:
-            return frame(shard, out)
-        return pd.DataFrame() if out is None else out
+    read, frame = src.shard_read(), frame or (lambda _shard, out: out)
 
-    return src.df().groupBy("shard").applyInPandas(per_shard, schema)
+    def per_shard(batches):
+        for ids in batches:
+            for shard in ids["id"].tolist():
+                rows = read(shard)
+                part = frame(shard, shard_fn(rows, tomb.get(shard), shard)) if rows else None
+                if part is not None:
+                    yield part
+
+    n = reader.manifest["n_shards"]
+    return reader.spark.range(0, n, 1, n).mapInPandas(per_shard, schema)
 
 
 def _heap_rows(out) -> list[tuple[int, int, float]]:
@@ -1790,13 +1790,11 @@ class MultiFieldPostings:
                 merged.setdefault(shard, []).extend(row(f, *x) for x in rows)
         return merged
 
-    def df(self) -> DataFrame:
-        """The fields' FieldPostings.df() reads, each with a `field`
-        literal column, unioned (the rows reach the kernel as itertuples,
-        so the tag rides along)."""
-        return functools.reduce(DataFrame.unionByName, [
-            p.df().withColumn("field", F.lit(f)) for f, p in self.parts.items()
-        ])
+    def shard_read(self):
+        """The fields' shard_reads, rows tagged with .field as in local()."""
+        row = _MfPosRow if self.needs_pos else _MfRow
+        reads = [(f, p.shard_read()) for f, p in self.parts.items()]
+        return lambda shard: [row(f, *x) for f, read in reads for x in read(shard)]
 
 
 def multifield_matcher(
@@ -3801,8 +3799,8 @@ def match_phrase_topk(
 
     Execution mirrors bm25_topk: driver-local pyarrow read + in-process
     kernel when the index is local and the distinct terms' postings fit
-    LOCAL_MAX_POSTINGS, else ONE Spark scatter-gather (per-shard kernels
-    via applyInPandas, <= k rows back per shard); winner urls via the
+    LOCAL_MAX_POSTINGS, else ONE Spark scatter-gather (one task per shard,
+    <= k rows back per shard); winner urls via the
     pruned docmap lookup. Requires index_options="positions" (build_index;
     a freqs index raises ValueError — ES parity: a field indexed without
     positions rejects phrase queries)."""

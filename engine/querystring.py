@@ -116,7 +116,7 @@ def parse_simple_query_string(query: str) -> list[Clause]:
     return out
 
 
-# kernel-facing clause specs (plain tuples: picklable into applyInPandas)
+# kernel-facing clause specs (plain tuples: picklable into Spark tasks)
 #   ("sum", ((term, idf), ...))        term / prefix-expansion clause
 #   ("phrase", slots, slop, idf_sum)   phrase clause; slots = ((t,), ...)
 

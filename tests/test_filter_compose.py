@@ -616,3 +616,84 @@ def test_match_clause_operator_and_msm_in_context(spark, fc_index):
     ):
         with pytest.raises(ValueError, match="not composable"):
             total(q)
+
+
+def _agg_cases():
+    """(name, fn(reader, execution, filters)) for the aggs.py query
+    contexts; each returns plain rows, url first where it has urls."""
+    from engine.aggs import collapse_topk, matched_urls, sampler_terms, search_sort
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    return [
+        ("search_sort", lambda r, ex, f: rows(search_sort(
+            r, "hash join sort", "nc", k=200, execution=ex, filters=f))),
+        ("collapse_topk", lambda r, ex, f: rows(collapse_topk(
+            r, "hash join sort", "grp", k=10, execution=ex, filters=f))),
+        ("sampler_terms", lambda r, ex, f: sorted(rows(sampler_terms(
+            r, "hash join sort", "grp", sample_size=1000, execution=ex,
+            filters=f)))),
+        ("matched_urls", lambda r, ex, f: sorted(rows(matched_urls(
+            r, "hash join sort", execution=ex, filters=f)))),
+    ]
+
+
+@pytest.mark.parametrize("name", [n for n, _ in _agg_cases()])
+def test_tombstoned_agg_contexts_local_spark_identical(spark, fc_index, fc_deleted, name):
+    """The aggs.py query contexts return the same rows from the driver
+    path and the Spark per-shard tasks on an index with tombstones and
+    under a docvalue filter; no tombstoned doc reaches any of them."""
+    _, corpus = fc_index
+    out, gone = fc_deleted
+    reader = IndexReader(spark, out)
+    fn = dict(_agg_cases())[name]
+    filters = [RangeFilter("nc", 60, 240)]
+    live = sorted(
+        u for u, t, _g, nc, _r in corpus
+        if u not in gone and 60 <= nc < 240 and {"hash", "join", "sort"} & set(t.split())
+    )
+
+    loc = fn(reader, "local", filters)
+    assert loc, f"{name}: empty result — weak test"
+    if name == "sampler_terms":  # (key, doc_count) buckets of every live match
+        assert sum(n for _, n in loc) == len(live)
+    else:
+        assert {row[0] for row in loc} <= set(live)
+        if name != "collapse_topk":
+            assert len(loc) == len(live)
+    assert fn(reader, "spark", filters) == loc
+
+
+def test_forced_spark_query_and_batch_run_one_job(spark, fc_deleted, monkeypatch):
+    """Forced-Spark bm25_topk (with its collect) and bm25_topk_batch (with
+    its collect) each run ONE Spark job: per-shard tasks read their
+    postings with pyarrow, so no Spark-SQL postings read (and no schema
+    inference job or shuffle) happens."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from engine.query import bm25_topk, bm25_topk_batch
+
+    out, _ = fc_deleted
+    reader = IndexReader(spark, out)
+    local = [tuple(r) for r in bm25_topk(reader, "hash join sort", k=12, execution="local").collect()]
+    assert local
+    tracker = spark.sparkContext.statusTracker()
+
+    def no_sql_read(*_a, **_k):
+        raise AssertionError("Spark-SQL parquet read on the scatter path")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_sql_read)
+    calls = [
+        lambda: [tuple(r) for r in bm25_topk(
+            reader, "hash join sort", k=12, execution="spark").collect()],
+        lambda: bm25_topk_batch(
+            reader, {1: ["hash", "join"], 2: ["sort"], 3: ["table", "scan"]}, k=5,
+        ).collect(),
+    ]
+    for i, call in enumerate(calls):
+        before = set(tracker.getJobIdsForGroup())
+        got = call()
+        assert got and len(set(tracker.getJobIdsForGroup()) - before) == 1
+        if i == 0:
+            assert got == local

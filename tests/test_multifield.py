@@ -831,24 +831,36 @@ def test_multifield_tombstoned_paths_identical(
     assert run("auto") == loc
 
 
-def test_multifield_postings_df_columns(spark, mf_index, tmp_path_factory):
-    """MultiFieldPostings' Spark read prunes to FieldPostings.df()'s
-    columns plus the field tag; a positional read keeps the positions."""
-    from engine.query import _POST_COLS, MultiFieldPostings
+def test_postings_sources_one_read(spark, mf_index, tmp_path_factory):
+    """FieldPostings and MultiFieldPostings hand the driver path (local())
+    and a Spark task (shard_read(), shipped cloudpickled) the same rows
+    for every shard: _PostRow fields (plus the field tag) on a
+    non-positional read, with pos_bin/pos_offs on a positional one."""
+    from pyspark import cloudpickle
+
+    from engine.query import FieldPostings, MultiFieldPostings, _PosRow, _PostRow
 
     out, _, _ = mf_index
-    src = MultiFieldPostings(IndexReader(spark, out), ["title", "text"], ["web"])
-    assert tuple(src.df().columns) == _POST_COLS + ("field",)
-
-    rows = [("p1", "alpha beta", "red green"), ("p2", "beta gamma", "green")]
+    rows = [("p1", "alpha beta", "red green"), ("p2", "beta gamma", "green"),
+            ("p3", "green beta", "alpha")]
     df = spark.createDataFrame(rows, "url string, text string, title string")
     pos = str(tmp_path_factory.mktemp("mfpos_cols") / "idx")
     build_index(spark, df, pos, n_shards=2, n_buckets=4,
                 text_fields=["text", "title"], index_options="positions")
-    src = MultiFieldPostings(
-        IndexReader(spark, pos), ["text", "title"], ["beta", "green"],
-        needs_pos=True,
-    )
-    cols = src.df().columns
-    assert {"pos_bin", "pos_offs", "field"} <= set(cols)
-    assert set(_POST_COLS) <= set(cols)
+    plain, posr = IndexReader(spark, out), IndexReader(spark, pos)
+    cases = [
+        (FieldPostings(plain, ["web", "search"], 1), _PostRow._fields),
+        (MultiFieldPostings(plain, ["title", "text"], ["web"]),
+         ("field",) + _PostRow._fields),
+        (FieldPostings(posr, ["beta", "green"], 1, needs_pos=True), _PosRow._fields),
+        (MultiFieldPostings(posr, ["text", "title"], ["beta", "green"],
+                            needs_pos=True), ("field",) + _PosRow._fields),
+    ]
+    for src, fields in cases:
+        by_shard = src.local()
+        read = cloudpickle.loads(cloudpickle.dumps(src.shard_read()))
+        assert by_shard, "empty read — weak test"
+        for shard in range(src.reader.manifest["n_shards"]):
+            got = read(shard)
+            assert got == by_shard.get(shard, [])
+            assert all(r._fields == fields for r in got)
