@@ -1680,7 +1680,7 @@ def _mf_dismax_sql(
     semantics: title leg boosted `title_boost` (2.0 = the frozen
     multi_match fixtures; 1.0 = unboosted general dis_max legs),
     score = max + tb * rest (engine twins: engine/query.py
-    bm25_multifield_phrase_topk and blend_dismax_frames)."""
+    bm25_multifield_phrase_topk and blend_dismax)."""
     blend = f"greatest(sx, st) + {tb} * (sx + st - greatest(sx, st))"
     return f"""
 WITH fx AS (SELECT doc_id, s FROM ({leg_text})),
@@ -1732,7 +1732,7 @@ def q_dismax_cross(spark, sf_dir):
     (BM25 ranked union), leg 2 = match_phrase on the derived `title`
     field (positional kernel on the title postings); each leg compiles
     UNBOUNDED so the tie_breaker blend (max + tb * rest,
-    engine/query.py blend_dismax_frames) is exact."""
+    engine/query.py blend_dismax) is exact."""
     from engine.dsl import search
     from engine.query import IndexReader
 
@@ -1759,7 +1759,7 @@ def q_mm_fuzzy_blend(spark, sf_dir):
     (round-5 lift, engine/dsl.py): each field runs its own
     match-with-fuzziness (per-field dictionary expansion under that
     field's df order and stats), legs blended dis_max with tie_breaker
-    over FULL match sets (engine/query.py blend_dismax_frames)."""
+    over FULL match sets (engine/query.py blend_dismax)."""
     from engine.dsl import search
     from engine.query import IndexReader
 

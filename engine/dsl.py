@@ -98,14 +98,17 @@ def _spec_boost(spec) -> float:
     return 1.0
 
 
-def _boost_scaled(df, b: float):
-    """ES leaf boost on a top-level query: multiply the scores
-    (rank-identical for b > 0, scores ES-parity)."""
+def _boost_scaled(result, b: float):
+    """ES leaf boost on a top-level query's top-k result: multiply the
+    scores (rank-identical for b > 0, scores ES-parity)."""
     if b == 1.0:
-        return df
+        return result
     if b <= 0:
         raise ValueError("boost must be > 0")
-    return df.withColumn("score", F.col("score") * F.lit(b))
+    kind, payload = result
+    if kind == "rows":
+        return "rows", [(u, d, s * b) for u, d, s in payload]
+    return "df", payload.withColumn("score", F.col("score") * F.lit(b))
 
 
 def _clause_boost(clause: dict) -> float:
@@ -446,15 +449,29 @@ def _unwrap(query: dict) -> dict:
 
 
 def _hits_df(reader, query: dict, k: int, filters: tuple):
-    """Compile + run the scoring query -> (url, doc_id, score) DataFrame
-    (None for match_all: the caller decides between sort/agg/id paging)."""
+    """_hits as the (url, doc_id, score) DataFrame (None for match_all)
+    — the DataFrame edge for callers that compose it further."""
+    from engine.query import _to_frame
+
+    result = _hits(reader, query, k, filters)
+    return None if result is None else _to_frame(reader.spark, result)
+
+
+def _hits(reader, query: dict, k: int, filters: tuple):
+    """Compile + run the scoring query -> its top-k result: the kernels'
+    ("rows", [(url, doc_id, score)]) or ("df", DataFrame) — the aggs.py
+    docmap kernels return ("df", (url, score) DataFrame). None for
+    match_all: the caller decides between sort/agg/id paging."""
     from engine.query import (
-        bm25_bool_topk,
-        bm25_dismax_topk,
-        bm25_topk,
-        match_phrase_prefix_topk,
-        match_phrase_topk,
-        mlt_topk,
+        _bm25_bool_topk,
+        _bm25_dismax_topk,
+        _bm25_topk,
+        _match_bool_prefix_topk,
+        _match_phrase_prefix_topk,
+        _match_phrase_topk,
+        _mlt_topk,
+        _result_rows,
+        blend_dismax,
     )
 
     query = _unwrap(query)
@@ -464,7 +481,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         # ES match_none: the empty matched set, served through a
         # dead-term kernel run so the result schema matches every other
         # scoring query
-        return bm25_topk(reader, ["\x00match_none\x00"], k=k)
+        return _bm25_topk(reader, ["\x00match_none\x00"], k=k)
     if "synonym_match" in query:
         # frozen surface for ES search-time synonym_graph analysis: the
         # caller supplies the expanded synonym groups explicitly (the
@@ -473,9 +490,9 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         # blended stats (engine/query.py bm25_synonym_topk)
         ((fld, spec),) = query["synonym_match"].items()
         r = _text_reader(reader, fld, "synonym_match")
-        from engine.query import bm25_synonym_topk
+        from engine.query import _bm25_synonym_topk
 
-        return bm25_synonym_topk(
+        return _bm25_synonym_topk(
             r, spec["groups"], k=k,
             mode=spec.get("operator", "or").lower(),
             filters=filters,
@@ -512,23 +529,20 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
                     "operator": m.get("operator", "or"),
                 }}}
             if len(flds) == 1:
-                return _hits_df(reader, _fuzzy_leg(flds[0]), k, filters)
-            from engine.query import blend_dismax_frames, parse_field_boosts
+                return _hits(reader, _fuzzy_leg(flds[0]), k, filters)
+            from engine.query import parse_field_boosts
 
             tb = (
                 1.0 if mtype_ == "most_fields"
                 else float(m.get("tie_breaker", 0.0))
             )
-            frames = []
-            for name, boost in parse_field_boosts(specs):
-                pdf = _hits_df(
-                    reader, _fuzzy_leg(name), 1 << 31, filters
-                ).toPandas()
-                if len(pdf):
-                    pdf = pdf.copy()
-                    pdf["score"] = pdf["score"] * boost
-                frames.append(pdf)
-            return blend_dismax_frames(reader.spark, frames, tb, k)
+            legs = [
+                [(u, d, s * boost) for u, d, s in _result_rows(
+                    _hits(reader, _fuzzy_leg(name), 1 << 31, filters)
+                )]
+                for name, boost in parse_field_boosts(specs)
+            ]
+            return blend_dismax(legs, tb, k)
         if m.get("type") in ("phrase", "phrase_prefix", "bool_prefix"):
             kind_ = m["type"]
             slop_ = int(m.get("slop", 0))
@@ -536,25 +550,23 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             if len(flds) == 1:
                 r = reader if flds[0] == reader.field else reader.for_field(flds[0])
                 if kind_ == "phrase":
-                    return match_phrase_topk(
+                    return _match_phrase_topk(
                         r, m["query"], k=k, slop=slop_, filters=filters
                     )
                 if kind_ == "phrase_prefix":
-                    return match_phrase_prefix_topk(
+                    return _match_phrase_prefix_topk(
                         r, m["query"], k=k, slop=slop_,
                         max_expansions=maxexp_, filters=filters,
                     )
-                from engine.query import match_bool_prefix_topk
-
-                return match_bool_prefix_topk(
+                return _match_bool_prefix_topk(
                     r, m["query"], k=k, max_expansions=maxexp_,
                     filters=filters,
                 )
-            from engine.query import bm25_multifield_phrase_topk
+            from engine.query import _bm25_multifield_phrase_topk
 
             # several fields: dis_max of per-field leg scores (Lucene
             # wraps each field's query in a DisjunctionMaxQuery)
-            return bm25_multifield_phrase_topk(
+            return _bm25_multifield_phrase_topk(
                 reader, m["query"], specs, k=k, slop=slop_,
                 tie_breaker=float(m.get("tie_breaker", 0.0)),
                 filters=filters, kind=kind_, max_expansions=maxexp_,
@@ -564,7 +576,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         if len(flds) == 1:
             # one field: every type degenerates to that field's match score
             r = reader if flds[0] == reader.field else reader.for_field(flds[0])
-            return bm25_topk(
+            return _bm25_topk(
                 r, analyze_query_py(m["query"]), k=k,
                 mode=m.get("operator", "or"), filters=filters,
             )
@@ -572,10 +584,10 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         # filter context composes as the post-blend docvalue mask
         # (engine/query._mf_shard_topk local_filter); operator=and per
         # _mf_shard_topk's n_required semantics
-        from engine.query import bm25_multifield_topk
+        from engine.query import _bm25_multifield_topk
 
         msm_ = m.get("minimum_should_match")
-        return bm25_multifield_topk(
+        return _bm25_multifield_topk(
             reader, m["query"], specs, k=k,
             mtype=m.get("type", "best_fields"),
             tie_breaker=float(m.get("tie_breaker", 0.0)),
@@ -596,9 +608,9 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
                 f"combined_fields fields {unknown} are not indexed "
                 f"(text_fields={reader.text_fields})"
             )
-        from engine.query import bm25_multifield_topk
+        from engine.query import _bm25_multifield_topk
 
-        return bm25_multifield_topk(
+        return _bm25_multifield_topk(
             reader, m["query"], specs, k=k, mtype="combined_fields",
             filters=filters,
             operator=m.get("operator", "or").lower(),
@@ -607,30 +619,28 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         from engine.aggs import constant_score_topk
 
         cs = query["constant_score"]
-        return constant_score_topk(
+        return "df", constant_score_topk(
             reader, _clause_filters([cs["filter"]]) + filters,
             boost=float(cs.get("boost", 1.0)), k=k,
         )
     if "ids" in query:
         from engine.aggs import ids_topk
 
-        return ids_topk(reader, query["ids"]["values"], k=k, filters=filters)
+        return "df", ids_topk(reader, query["ids"]["values"], k=k, filters=filters)
     if "terms_set" in query:
-        from engine.query import terms_set_topk
+        from engine.query import _terms_set_topk
 
         ((fld, spec),) = query["terms_set"].items()
         r = _text_reader(reader, fld, "terms_set")
-        return terms_set_topk(
+        return _terms_set_topk(
             r, list(spec["terms"]), spec["minimum_should_match_field"],
             k=k, filters=filters,
         )
     if "match_bool_prefix" in query:
-        from engine.query import match_bool_prefix_topk
-
         ((fld, spec),) = query["match_bool_prefix"].items()
         r = _text_reader(reader, fld, "match_bool_prefix")
         text = spec["query"] if isinstance(spec, dict) else spec
-        return match_bool_prefix_topk(r, text, k=k, filters=filters)
+        return _match_bool_prefix_topk(r, text, k=k, filters=filters)
     if "rank_feature" in query:
         from engine.aggs import rank_feature_topk
 
@@ -640,7 +650,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             raise ValueError(
                 "rank_feature requires saturation.pivot (the frozen function)"
             )
-        return rank_feature_topk(
+        return "df", rank_feature_topk(
             reader, rf["field"], pivot=float(pivot),
             boost=float(rf.get("boost", 1.0)), k=k, filters=filters,
         )
@@ -648,7 +658,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         df_ = query["distance_feature"]
         from engine.aggs import distance_feature_topk
 
-        return distance_feature_topk(
+        return "df", distance_feature_topk(
             reader, df_["field"], origin=df_["origin"], pivot=df_["pivot"],
             boost=float(df_.get("boost", 1.0)), k=k, filters=filters,
         )
@@ -656,7 +666,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         # bare filter-ish queries in query context: constant score 1.0
         from engine.aggs import constant_score_topk
 
-        return constant_score_topk(
+        return "df", constant_score_topk(
             reader, _clause_filters([query]) + filters, boost=1.0, k=k
         )
     if "term" in query and next(iter(query["term"])) not in reader.text_fields:
@@ -665,7 +675,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         # through to the BM25 scoring path (_match_terms) below
         from engine.aggs import constant_score_topk
 
-        return constant_score_topk(
+        return "df", constant_score_topk(
             reader, _clause_filters([query]) + filters,
             boost=_spec_boost(next(iter(query["term"].values()))), k=k
         )
@@ -675,7 +685,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         # indexed text field falls through to the scoring path below
         from engine.aggs import constant_score_topk
 
-        return constant_score_topk(
+        return "df", constant_score_topk(
             reader, _clause_filters([query]) + filters,
             boost=float(query["terms"].get("boost", 1.0)), k=k,
         )
@@ -690,7 +700,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         text = spec["query"] if isinstance(spec, dict) else spec
         slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
         return _boost_scaled(
-            match_phrase_topk(r, text, k=k, slop=slop, filters=filters),
+            _match_phrase_topk(r, text, k=k, slop=slop, filters=filters),
             _spec_boost(spec),
         )
     if "match_phrase_prefix" in query:
@@ -702,7 +712,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             )
         r = reader if fld == reader.field else reader.for_field(fld)
         text = spec["query"] if isinstance(spec, dict) else spec
-        return _boost_scaled(match_phrase_prefix_topk(
+        return _boost_scaled(_match_phrase_prefix_topk(
             r, text, k=k,
             slop=int(spec.get("slop", 0)) if isinstance(spec, dict) else 0,
             max_expansions=(
@@ -747,7 +757,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             # combined_fields compose via their post-blend docvalue mask;
             # kinds that can't compose raise their own documented
             # divergence instead of _match_terms' misleading field error
-            return _hits_df(reader, must_c[0], k, filt)
+            return _hits(reader, must_c[0], k, filt)
         af = tuple(reader.text_fields)
         pm = [_match_terms(c, allowed=af, reject_boost=True) for c in must_c]
         ps = [_match_terms(c, allowed=af, reject_boost=True) for c in should_c]
@@ -771,8 +781,8 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             # matched sets, not tokens). Deterministic, kernel-oracled
             # (bm25_bool_filtered_topk twin), and frozen since round 1;
             # write the bare match (or operator=and) for ES-default OR.
-            return bm25_topk(br, must, k=k, mode="and", filters=filt)
-        return bm25_bool_topk(
+            return _bm25_topk(br, must, k=k, mode="and", filters=filt)
+        return _bm25_bool_topk(
             br, must=must, should=should, must_not=must_not, k=k,
             minimum_should_match=b.get("minimum_should_match"),
             filters=filt,
@@ -786,15 +796,15 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         ((fld, spec),) = query["span_term"].items()
         r = _text_reader(reader, fld, "span_term")
         value = spec["value"] if isinstance(spec, dict) else spec
-        return bm25_topk(r, [value], k=k, filters=filters)
+        return _bm25_topk(r, [value], k=k, filters=filters)
     if "span_near" in query:
         s = query["span_near"]
-        from engine.spans import span_near_topk
+        from engine.spans import _span_near_topk
 
         flds: set = set()
         slots = _span_clauses(s["clauses"], flds)
         r = _text_reader(reader, flds.pop(), "span_near")
-        return span_near_topk(
+        return _span_near_topk(
             r, slots, k=k,
             slop=int(s.get("slop", 0)),
             in_order=bool(s.get("in_order", True)),
@@ -805,10 +815,10 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         s = query["span_or"]
         flds: set = set()
         (alts,) = _span_clauses([{"span_or": s}], flds)
-        from engine.spans import span_or_topk
+        from engine.spans import _span_or_topk
 
         r = _text_reader(reader, flds.pop(), "span_or")
-        return span_or_topk(r, alts, k=k, filters=filters)
+        return _span_or_topk(r, alts, k=k, filters=filters)
     if "span_not" in query:
         s = query["span_not"]
         inc = s["include"]
@@ -829,10 +839,10 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             raise ValueError(
                 "span_not exclude must be span_term or span_or of span_terms"
             )
-        from engine.spans import span_not_topk
+        from engine.spans import _span_not_topk
 
         r = _text_reader(reader, flds.pop(), "span_not")
-        return span_not_topk(
+        return _span_not_topk(
             r, include, exclude, k=k, slop=slop, in_order=in_order,
             pre=int(s.get("pre", s.get("dist", 0))),
             post=int(s.get("post", s.get("dist", 0))),
@@ -848,9 +858,9 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             )
         ((fld, spec),) = m["span_term"].items()
         r = _text_reader(reader, fld, "span_first")
-        from engine.spans import span_first_topk
+        from engine.spans import _span_first_topk
 
-        return span_first_topk(
+        return _span_first_topk(
             r,
             spec["value"] if isinstance(spec, dict) else spec,
             end=int(s["end"]), k=k, filters=filters,
@@ -922,20 +932,20 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             raise ValueError(f"unsupported intervals rule: {sorted(r_)}")
 
         iv_slots, max_gaps, ordered = _rule_slots(rule)
-        from engine.spans import span_near_topk, span_or_topk
+        from engine.spans import _span_near_topk, _span_or_topk
 
         if len(iv_slots) == 1:
             slot0 = iv_slots[0]
             if isinstance(slot0, list):
                 # a lone any_of: matches where any alternative occurs
-                return span_or_topk(r, slot0, k=k, filters=filters)
-            return bm25_topk(r, [slot0], k=k, filters=filters)
+                return _span_or_topk(r, slot0, k=k, filters=filters)
+            return _bm25_topk(r, [slot0], k=k, filters=filters)
         if max_gaps < 0:
             raise ValueError(
                 "intervals needs max_gaps >= 0 (unlimited gaps would make "
                 "the span count unbounded; use bool/match for conjunction)"
             )
-        return span_near_topk(
+        return _span_near_topk(
             r, iv_slots, k=k, slop=max_gaps, in_order=ordered,
             filters=filters,
         )
@@ -946,18 +956,18 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             r = _text_reader(
                 reader, flds[0].split("^")[0], "simple_query_string"
             )
-            from engine.querystring import simple_query_string_topk
+            from engine.querystring import _simple_query_string_topk
 
-            return simple_query_string_topk(
+            return _simple_query_string_topk(
                 r, s["query"], k=k,
                 default_operator=s.get("default_operator", "or").lower(),
                 filters=filters,
             )
         # several (or boosted) fields: Lucene SimpleQueryParser field
         # weights — per-clause SUM across per-field legs
-        from engine.querystring import sqs_multifield_topk
+        from engine.querystring import _sqs_multifield_topk
 
-        return sqs_multifield_topk(
+        return _sqs_multifield_topk(
             reader, s["query"], flds, k=k,
             default_operator=s.get("default_operator", "or").lower(),
             filters=filters,
@@ -973,9 +983,9 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
                     "query_string default_field conflicts with fields"
                 )
             r = _text_reader(reader, fld, "query_string")
-            from engine.querystring import query_string_topk
+            from engine.querystring import _query_string_topk
 
-            return query_string_topk(
+            return _query_string_topk(
                 r, s["query"], k=k,
                 default_operator=s.get("default_operator", "or").lower(),
                 max_expansions=int(s.get("fuzzy_max_expansions", 50)),
@@ -996,9 +1006,9 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             1.0 if qtype == "most_fields"
             else float(s.get("tie_breaker", 0.0))
         )
-        from engine.querystring import qs_multifield_topk
+        from engine.querystring import _qs_multifield_topk
 
-        return qs_multifield_topk(
+        return _qs_multifield_topk(
             reader, s["query"], flds, k=k,
             default_operator=s.get("default_operator", "or").lower(),
             tie_breaker=tb,
@@ -1015,9 +1025,9 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
                 "boosting positive and negative clauses must name ONE "
                 "field (cross-field demotion is a documented divergence)"
             )
-        from engine.query import bm25_boosting_topk
+        from engine.query import _bm25_boosting_topk
 
-        return bm25_boosting_topk(
+        return _bm25_boosting_topk(
             _text_reader(reader, pfld, "boosting"), pos, neg,
             negative_boost=float(bq.get("negative_boost", 0.5)),
             k=k, filters=filters,
@@ -1037,7 +1047,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         #    match set, so tie_breaker is exact), filters ride every
         #    leg (identical docvalue mask -> identical restriction),
         #    blend = max + tie_breaker * rest
-        #    (engine/query.py blend_dismax_frames, the same helper the
+        #    (engine/query.py blend_dismax, the same helper the
         #    multi-field phrase kinds use). Shapes that previously
         #    raised ("legs must name ONE field") or silently dropped
         #    the filter context now compose.
@@ -1058,37 +1068,34 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
                 parsed = None
             if parsed is not None and len({pf[3] for pf in parsed}) == 1:
                 terms = [t for pf in parsed for t in pf[0]]
-                return bm25_dismax_topk(
+                return _bm25_dismax_topk(
                     _text_reader(reader, parsed[0][3], "dis_max"), terms,
                     k=k, tie_breaker=tb,
                 )
-        from engine.query import blend_dismax_frames
-
-        frames = []
-        for leg in legs:
-            if "match_all" in leg:
-                raise ValueError(
-                    "dis_max does not compose a match_all leg (a "
-                    "constant-score leg over the whole corpus)"
-                )
-            ldf = _hits_df(reader, leg, 1 << 31, filters)
-            frames.append(ldf.toPandas())
-        return blend_dismax_frames(reader.spark, frames, tb, k)
+        if any("match_all" in leg for leg in legs):
+            raise ValueError(
+                "dis_max does not compose a match_all leg (a "
+                "constant-score leg over the whole corpus)"
+            )
+        return blend_dismax(
+            [_result_rows(_hits(reader, leg, 1 << 31, filters)) for leg in legs],
+            tb, k,
+        )
     if "more_like_this" in query:
         m = query["more_like_this"]
         mlf = m.get("fields", [reader.field])
         like = m["like"] if isinstance(m["like"], str) else m["like"][0]
         if len(mlf) == 1:
-            return mlt_topk(
+            return _mlt_topk(
                 _text_reader(reader, mlf[0], "more_like_this"), like,
                 max_query_terms=m.get("max_query_terms", 5), k=k,
                 filters=filters,
             )
         # several fields: global (field, term) selection + per-field
         # bool-should sum (engine/query.py mlt_multifield_topk)
-        from engine.query import mlt_multifield_topk
+        from engine.query import _mlt_multifield_topk
 
-        return mlt_multifield_topk(
+        return _mlt_multifield_topk(
             reader, like, mlf,
             max_query_terms=m.get("max_query_terms", 5), k=k,
             filters=filters,
@@ -1101,7 +1108,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         )
         from engine.aggs import pinned_topk
 
-        return pinned_topk(
+        return "df", pinned_topk(
             _text_reader(reader, ofld, "pinned"), p["ids"], terms, k=k,
             mode=op, filters=filters
         )
@@ -1114,7 +1121,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         )
         if not terms:
             raise ValueError("script_score needs a match/term query")
-        return bm25_topk(
+        return _bm25_topk(
             _text_reader(reader, sfld, "script_score"), terms, k=k,
             mode=op, filters=filters,
             script=f["script"]["source"],
@@ -1129,7 +1136,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
         )
         if not terms:
             raise ValueError("function_score needs a match/term query")
-        return bm25_topk(
+        return _bm25_topk(
             _text_reader(reader, ffld, "function_score"), terms, k=k,
             mode=op, filters=filters,
             boost=(fvf["field"], fvf.get("factor", 1.0)),
@@ -1140,7 +1147,7 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             r = _text_reader(reader, fld, kind)
             v = spec["value"] if isinstance(spec, dict) else spec
             return _boost_scaled(
-                bm25_topk(r, v, k=k, mode=kind, filters=filters),
+                _bm25_topk(r, v, k=k, mode=kind, filters=filters),
                 _spec_boost(spec),
             )
     terms, op, msm, fld = _match_terms(query, allowed=tuple(reader.text_fields))
@@ -1158,10 +1165,10 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
             return None
     qboost = _clause_boost(query)
 
-    def _scaled(df):
+    def _scaled(result):
         # ES clause boost on a TOP-LEVEL match/term/terms (composite
         # contexts fail closed in _match_terms instead)
-        return _boost_scaled(df, qboost)
+        return _boost_scaled(result, qboost)
 
     if "match" in query:
         spec_ = next(iter(query["match"].values()))
@@ -1185,14 +1192,12 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
                 e for t in terms
                 for e in r.expand_fuzzy(t, max_edits=me, max_expansions=mx)
             ))
-            return _scaled(bm25_topk(r, expanded, k=k, mode="or", filters=filters))
+            return _scaled(_bm25_topk(r, expanded, k=k, mode="or", filters=filters))
     if msm is not None:
-        from engine.query import bm25_bool_topk as _bool
-
-        return _scaled(_bool(
+        return _scaled(_bm25_bool_topk(
             r, should=terms, k=k, minimum_should_match=msm, filters=filters
         ))
-    return _scaled(bm25_topk(r, terms, k=k, mode=op, filters=filters))
+    return _scaled(_bm25_topk(r, terms, k=k, mode=op, filters=filters))
 
 
 def _rescore_df(reader, query: dict, spec, k: int, filters=()):
@@ -2184,9 +2189,11 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
                 # no extra filters: filter/post_filter context never
                 # changes a surviving doc's score, and the page already
                 # holds only survivors — the lookup map just needs values
+                from engine.query import _result_rows
+
                 smap = {
-                    row["url"]: row["score"]
-                    for row in _hits_df(reader, query, 1 << 31, ()).collect()
+                    row[0]: row[-1]  # (url, [doc_id,] score)
+                    for row in _result_rows(_hits(reader, query, 1 << 31, ()))
                 }
                 for h in hits:
                     h["_score"] = smap.get(h["_id"])
@@ -2247,18 +2254,23 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
         rows = df.collect()[frm:]
         hits = [{"_id": r["url"], "_score": r["score"]} for r in rows]
     else:
-        df = _hits_df(reader, query, frm + size, filters)
-        if df is None:  # match_all: first `size` live docs in url order
+        result = _hits(reader, query, frm + size, filters)
+        if result is None:  # match_all: first `size` live docs in url order
             from engine.aggs import live_docmap
 
             dm = live_docmap(reader, filters)
             rows = dm.select("url").orderBy("url").limit(frm + size).collect()[frm:]
             hits = [{"_id": r["url"], "_score": 1.0} for r in rows]
         else:
-            rows = df.collect()[frm:]
-            hits = [{"_id": r["url"], "_score": r["score"]} for r in rows]
+            from engine.query import _result_rows
+
+            # driver-local kernels hand back their rows as they are; a
+            # DataFrame result (Spark docmap join, aggs.py docmap kernels)
+            # is collected here — either way (url, [doc_id,] score)
+            rows = _result_rows(result)[frm:]
+            hits = [{"_id": r[0], "_score": r[-1]} for r in rows]
             if body.get("highlight"):
-                from engine.query import highlight_fragments
+                from engine.query import _to_frame, highlight_fragments
 
                 hl = body["highlight"]
                 # ES highlight.fields: each requested field highlights
@@ -2295,6 +2307,7 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
                                 return _raw_q(mc[0])
                         return ""
                     terms = analyze_query_py(_raw_q(query)) or terms
+                hits_df = _to_frame(reader.spark, result)
                 for hf in hfields:
                     csrc = corpus if (
                         corpus is not None and hf in corpus.columns
@@ -2308,7 +2321,7 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
                     frags = {
                         r["url"]: r["fragment"]
                         for r in highlight_fragments(
-                            df, csrc, terms, id_col="url", text_col=hf,
+                            hits_df, csrc, terms, id_col="url", text_col=hf,
                             pre_tag=hl.get("pre_tags", ["<em>"])[0],
                             post_tag=hl.get("post_tags", ["</em>"])[0],
                         ).collect()

@@ -1249,7 +1249,7 @@ def bm25_topk(
 
     bm25_topk_rows returns the same winners as plain tuples without the
     result-DataFrame round-trip — the serving-path API."""
-    return _to_frame(reader.spark, _bm25_topk_impl(
+    return _to_frame(reader.spark, _bm25_topk(
         reader, query, k, mode, algo, field_opts, lookup, execution, filters,
         stats_override, boost, script,
     ))
@@ -1269,33 +1269,31 @@ def bm25_topk_rows(
     DataFrame — for a query server, the ~40 ms of JVM round-trips that
     building and collecting a 10-row DataFrame costs is the latency floor,
     and this path removes it. Rank-identical to bm25_topk by construction
-    (tested): both run _bm25_topk_impl."""
-    kind, payload = _bm25_topk_impl(
-        reader, query, k, mode, algo, field_opts, lookup="auto",
-        execution="auto", filters=filters,
-    )
-    if kind == "rows":
-        return payload
-    return [(r["url"], r["doc_id"], r["score"]) for r in payload.collect()]
+    (tested): both are rows of the one _bm25_topk result (_result_rows),
+    the same form dsl.search serves its hits from."""
+    return _result_rows(_bm25_topk(
+        reader, query, k, mode, algo, field_opts, filters=filters,
+    ))
 
 
-def _bm25_topk_impl(
+def _bm25_topk(
     reader: IndexReader,
     query: str | list[str],
-    k: int,
-    mode: str,
-    algo: str,
-    field_opts: str,
-    lookup: str,
-    execution: str,
+    k: int = 10,
+    mode: str = "or",
+    algo: str = "wand",
+    field_opts: str = "default",
+    lookup: str = "auto",
+    execution: str = "auto",
     filters=(),
     stats_override=None,
     boost=None,
     script=None,
 ):
-    """Shared top-k engine: analysis, dictionary rewrites, algorithm
-    choice, then _scatter_topk. Returns its ("rows", [(url, doc_id,
-    score), ...]) or ("df", DataFrame) result."""
+    """bm25_topk's result form — the shared top-k engine: analysis,
+    dictionary rewrites, algorithm choice, then _scatter_topk. Returns
+    its ("rows", [(url, doc_id, score), ...]) or ("df", DataFrame)
+    result."""
     if algo not in ("wand", "taat"):
         raise ValueError(f"unknown algo {algo!r}: expected 'wand' or 'taat'")
     if mode in ("wildcard", "regexp") and isinstance(query, str):
@@ -1523,17 +1521,21 @@ def _scatter_topk(src, run_kernel, k: int, lookup: str, execution: str):
     """Top-k over _scatter: run_kernel(rows, dels, shard) -> the shard's
     top-k [(local_id, score)] over the postings source src's rows. The
     heaps go through _finalize_topk (global top-k + pruned docmap url
-    lookup), whose ("rows" | "df", payload) this returns; _to_frame
-    turns it into the result DataFrame, while bm25_topk_rows keeps the
-    rows.
+    lookup), whose ("rows" | "df", payload) result this returns.
 
-    Users: _bm25_topk_impl (bm25_topk, bm25_topk_rows, and through them
-    match_bool_prefix_topk, multi_index_topk, rescore_topk's base query),
-    bm25_dismax_topk, bm25_synonym_topk, bm25_bool_topk, terms_set_topk,
-    bm25_boosting_topk, _positional_topk (match_phrase_topk,
-    match_phrase_prefix_topk, the span queries), the querystring kernels
-    (simple_query_string_topk, query_string_topk) and, over a
-    MultiFieldPostings source, bm25_multifield_topk."""
+    That result is the internal currency up to the API edge: each public
+    *_topk wraps its private result form (bm25_topk over _bm25_topk,
+    ...) in _to_frame, while bm25_topk_rows and dsl.search read its rows
+    (_result_rows) — so a driver-local request never builds a result
+    DataFrame only to collect it back.
+
+    Users: _bm25_topk (bm25_topk, bm25_topk_rows, and through it
+    match_bool_prefix_topk, mlt_topk, multi_index_topk, rescore_topk's
+    base query), bm25_dismax_topk, bm25_synonym_topk, bm25_bool_topk,
+    terms_set_topk, bm25_boosting_topk, _positional_topk
+    (match_phrase_topk, match_phrase_prefix_topk, the span queries), the
+    querystring kernels (simple_query_string_topk, query_string_topk)
+    and, over a MultiFieldPostings source, bm25_multifield_topk."""
     _check_lookup(lookup)
     out = _scatter(src, run_kernel, _HEAP_SCHEMA, execution, _heap_frame)
     # urls come from a PRUNED docmap read instead of broadcast-joining
@@ -1548,7 +1550,9 @@ def _finalize_topk(
     """Shared winner-selection tail: per-shard heap rows -> global top-k
     (doc_id = shard offset + local_id) -> urls from a PRUNED docmap read
     (local pyarrow when the dir is local, broadcast-joined Spark plan
-    otherwise) — never a full docmap scan."""
+    otherwise) — never a full docmap scan. Returns the top-k result:
+    ("rows", [(url, doc_id, score)]) from the local read (("rows", [])
+    when nothing matched), else ("df", the joined DataFrame)."""
     spark = reader.spark
     if not heap_rows:
         return "rows", []
@@ -1597,9 +1601,17 @@ def _rows_frame(spark, rows) -> DataFrame:
 
 
 def _to_frame(spark, result) -> DataFrame:
-    """_finalize_topk's (kind, payload) -> the top-k result DataFrame."""
+    """_finalize_topk's (kind, payload) -> the top-k result DataFrame
+    (the public API edge)."""
     kind, payload = result
     return payload if kind == "df" else _rows_frame(spark, payload)
+
+
+def _result_rows(result) -> list:
+    """_finalize_topk's (kind, payload) -> its rows: the (url, doc_id,
+    score) tuples themselves, or the DataFrame's collected Rows."""
+    kind, payload = result
+    return payload if kind == "rows" else payload.collect()
 
 
 def _shard_filter(reader: IndexReader, filters):
@@ -1628,10 +1640,11 @@ def _positional_topk(
     execution: str,
     lookup: str,
     filters=(),
-) -> DataFrame:
+):
     """Executor front for the positional kernels (match_phrase and the
     span queries): kernel(rows, dels, kk) -> the shard's top-kk,
     ordered (score desc, doc asc), over positional posting rows.
+    Returns _scatter_topk's result.
 
     filters (ES filter context): a positional match set is conjunctive,
     hence small enough to materialize per shard — the kernel runs
@@ -1652,10 +1665,10 @@ def _positional_topk(
         keep[order] = shard_filter(shard, loc[order])
         return [t for t, m in zip(top, keep) if m][:k]
 
-    return _to_frame(reader.spark, _scatter_topk(
+    return _scatter_topk(
         FieldPostings(reader, terms, total_postings, needs_pos=True),
         run_kernel, k, lookup, execution,
-    ))
+    )
 
 
 def bm25_dismax_topk(
@@ -1678,11 +1691,20 @@ def bm25_dismax_topk(
     formula, so no extra IO or shuffle vs a single-field query. Same
     local/Spark adaptive execution and pruned docmap lookup as bm25_topk;
     ties doc_id asc."""
+    return _to_frame(reader.spark, _bm25_dismax_topk(
+        reader, query, k, tie_breaker, fields, execution, lookup,
+    ))
+
+
+def _bm25_dismax_topk(reader, query, k=10, tie_breaker=0.3,
+                      fields=("default", "nonorms", "doconly"),
+                      execution="auto", lookup="auto"):
+    """bm25_dismax_topk's result form."""
     terms = analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
     stats = reader.term_stats(terms)
     terms = [t for t in terms if t in stats]
     if not terms:
-        return _empty_topk(reader.spark)
+        return "rows", []
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in terms}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
 
@@ -1691,10 +1713,10 @@ def bm25_dismax_topk(
             rows, idfs, k, k1, b, avgdl, tuple(fields), tie_breaker, dels
         )
 
-    return _to_frame(reader.spark, _scatter_topk(
+    return _scatter_topk(
         FieldPostings(reader, terms, sum(stats[t] for t in terms)),
         run_kernel, k, lookup, execution,
-    ))
+    )
 
 
 def parse_field_boosts(fields: list) -> list[tuple[str, float]]:
@@ -2043,6 +2065,17 @@ def bm25_multifield_topk(
     identity local-vs-Spark is by construction (same kernel) and
     tested, as is equivalence of a two-field index's per-field views
     with two separately built single-field indexes."""
+    return _to_frame(reader.spark, _bm25_multifield_topk(
+        reader, query, fields, k, mtype, tie_breaker, execution, lookup,
+        filters, operator, minimum_should_match,
+    ))
+
+
+def _bm25_multifield_topk(reader, query, fields, k=10, mtype="best_fields",
+                          tie_breaker=0.0, execution="auto", lookup="auto",
+                          filters=(), operator="or",
+                          minimum_should_match=None):
+    """bm25_multifield_topk's result form."""
     if mtype not in _MF_TYPES:
         raise ValueError(f"unknown multi_match type {mtype!r}")
     fb = _mf_fields(reader, fields)
@@ -2064,13 +2097,13 @@ def bm25_multifield_topk(
     )
     if not terms or n_required > len(terms):
         # Lucene: msm above the clause count is unsatisfiable, not clamped
-        return _empty_topk(reader.spark)
+        return "rows", []
     boosts = dict(fb)
     src = MultiFieldPostings(reader, list(boosts), terms)
     stats = src.term_stats
     live = [t for t in terms if any(t in st for st in stats.values())]
     if not live or (n_required and len(live) < n_required):
-        return _empty_topk(reader.spark)
+        return "rows", []
     n_docs = reader.n_docs
     idfs_by_field = {
         f: {t: float(P.bm25_idf(df, n_docs)) for t, df in st.items()}
@@ -2108,7 +2141,7 @@ def bm25_multifield_topk(
             _at_shard(shard_filter, shard), n_required,
         )
 
-    return _to_frame(reader.spark, _scatter_topk(src, run_kernel, k, lookup, execution))
+    return _scatter_topk(src, run_kernel, k, lookup, execution)
 
 
 def bm25_synonym_topk(
@@ -2140,15 +2173,23 @@ def bm25_synonym_topk(
     applies idf(max df) * impact(tf_sum, dl) — no joins, no extra shuffle
     vs a plain match of the same number of terms. Same adaptive
     local/Spark execution + pruned docmap lookup as bm25_topk."""
+    return _to_frame(reader.spark, _bm25_synonym_topk(
+        reader, groups, k, mode, execution, lookup, filters,
+    ))
+
+
+def _bm25_synonym_topk(reader, groups, k=10, mode="or", execution="auto",
+                       lookup="auto", filters=()):
+    """bm25_synonym_topk's result form."""
     groups = [list(dict.fromkeys(g)) for g in groups if g]
     all_terms = sorted({t for g in groups for t in g})
     stats = reader.term_stats(all_terms)
     live_groups = [[t for t in g if t in stats] for g in groups]
     if mode == "and" and any(not g for g in live_groups):
-        return _empty_topk(reader.spark)
+        return "rows", []
     live_groups = [g for g in live_groups if g]
     if not live_groups:
-        return _empty_topk(reader.spark)
+        return "rows", []
     # blended group idf: df = max over live members (Lucene SynonymQuery)
     gidfs = [
         float(P.bm25_idf(max(stats[t] for t in g), reader.n_docs))
@@ -2198,10 +2239,10 @@ def bm25_synonym_topk(
         order = _topk_order(uniq, scores, kk)
         return list(zip(uniq[order].tolist(), scores[order].tolist()))
 
-    return _to_frame(reader.spark, _scatter_topk(
+    return _scatter_topk(
         FieldPostings(reader, terms, sum(stats[t] for t in terms)),
         run_kernel, k, lookup, execution,
-    ))
+    )
 
 
 def bm25_bool_topk(
@@ -2234,6 +2275,16 @@ def bm25_bool_topk(
     (np.unique/bincount + searchsorted masks, no per-doc Python) and runs
     on the same adaptive local/Spark scatter-gather as bm25_topk, with the
     same pruned docmap lookup. Ties doc_id asc."""
+    return _to_frame(reader.spark, _bm25_bool_topk(
+        reader, must, should, must_not, k, minimum_should_match, field_opts,
+        execution, lookup, filters,
+    ))
+
+
+def _bm25_bool_topk(reader, must=(), should=(), must_not=(), k=10,
+                    minimum_should_match=None, field_opts="default",
+                    execution="auto", lookup="auto", filters=()):
+    """bm25_bool_topk's result form."""
 
     def _analyze(q) -> list[str]:
         if isinstance(q, str):
@@ -2251,12 +2302,12 @@ def bm25_bool_topk(
         msm = 0 if must_terms else 1
     stats = reader.term_stats(must_terms + should_terms + not_terms)
     if any(t not in stats for t in must_terms):
-        return _empty_topk(reader.spark)
+        return "rows", []
     should_terms = [t for t in should_terms if t in stats]
     not_terms = [t for t in not_terms if t in stats]
     scoring = must_terms + should_terms
     if not scoring or msm > len(should_terms):
-        return _empty_topk(reader.spark)
+        return "rows", []
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in scoring}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
     must_set, not_set = frozenset(must_terms), frozenset(not_terms)
@@ -2271,10 +2322,10 @@ def bm25_bool_topk(
         )
 
     all_terms = scoring + not_terms
-    return _to_frame(reader.spark, _scatter_topk(
+    return _scatter_topk(
         FieldPostings(reader, all_terms, sum(stats[t] for t in all_terms)),
         run_kernel, k, lookup, execution,
-    ))
+    )
 
 
 def _terms_set_shard_topk(
@@ -2352,6 +2403,15 @@ def terms_set_topk(
     bool query (Lucene CoveringQuery). Frozen semantics in
     _terms_set_shard_topk's docstring. Adaptive local/Spark execution,
     pruned docmap lookup, tombstone-masked; ties doc_id asc."""
+    return _to_frame(reader.spark, _terms_set_topk(
+        reader, terms, minimum_should_match_field, k, execution, lookup,
+        filters,
+    ))
+
+
+def _terms_set_topk(reader, terms, minimum_should_match_field, k=10,
+                    execution="auto", lookup="auto", filters=()):
+    """terms_set_topk's result form."""
     from engine.docvalues import gather_docvalues
 
     dv_cols = reader.manifest.get("docvalue_cols") or []
@@ -2365,7 +2425,7 @@ def terms_set_topk(
     stats = reader.term_stats(qterms)
     present = [t for t in qterms if t in stats]
     if not present:
-        return _empty_topk(reader.spark)
+        return "rows", []
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in present}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
     index_dir, field = reader.dir, minimum_should_match_field
@@ -2387,10 +2447,10 @@ def terms_set_topk(
             _at_shard(shard_filter, shard),
         )
 
-    return _to_frame(reader.spark, _scatter_topk(
+    return _scatter_topk(
         FieldPostings(reader, present, sum(stats[t] for t in present)),
         run_kernel, k, lookup, execution,
-    ))
+    )
 
 
 def match_bool_prefix_topk(
@@ -2412,14 +2472,22 @@ def match_bool_prefix_topk(
     the shared adaptive kernels. An empty expansion leaves the leading
     terms ranking alone (ES: the prefix clause simply matches nothing
     under OR semantics)."""
+    return _to_frame(reader.spark, _match_bool_prefix_topk(
+        reader, text, k, max_expansions, execution, lookup, filters,
+    ))
+
+
+def _match_bool_prefix_topk(reader, text, k=10, max_expansions=128,
+                            execution="auto", lookup="auto", filters=()):
+    """match_bool_prefix_topk's result form."""
     toks = analyze_query_py(text)
     if not toks:
-        return _empty_topk(reader.spark)
+        return "rows", []
     lead, last = toks[:-1], toks[-1]
     terms = list(dict.fromkeys(lead + reader.expand_prefix(last, max_expansions)))
     if not terms:
-        return _empty_topk(reader.spark)
-    return bm25_topk(
+        return "rows", []
+    return _bm25_topk(
         reader, terms, k=k, mode="or", execution=execution, lookup=lookup,
         filters=filters,
     )
@@ -2491,6 +2559,15 @@ def bm25_boosting_topk(
     negative docs stay in the ranking — ES's 'relevance backoff' for
     disfavored-but-valid results. Adaptive local/Spark execution, pruned
     docmap lookup, tombstone-masked; ties doc_id asc."""
+    return _to_frame(reader.spark, _bm25_boosting_topk(
+        reader, positive, negative, negative_boost, k, execution, lookup,
+        filters,
+    ))
+
+
+def _bm25_boosting_topk(reader, positive, negative, negative_boost=0.5, k=10,
+                        execution="auto", lookup="auto", filters=()):
+    """bm25_boosting_topk's result form."""
     if not (0.0 <= negative_boost < 1.0):
         raise ValueError(f"negative_boost must be in [0, 1), got {negative_boost}")
 
@@ -2505,7 +2582,7 @@ def bm25_boosting_topk(
     pos_terms = [t for t in pos_terms if t in stats]
     neg_terms = [t for t in neg_terms if t in stats]
     if not pos_terms:
-        return _empty_topk(reader.spark)
+        return "rows", []
     idfs = {t: float(P.bm25_idf(stats[t], reader.n_docs)) for t in pos_terms}
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
     neg_set = frozenset(neg_terms)
@@ -2518,10 +2595,10 @@ def bm25_boosting_topk(
         )
 
     all_terms = pos_terms + neg_terms
-    return _to_frame(reader.spark, _scatter_topk(
+    return _scatter_topk(
         FieldPostings(reader, all_terms, sum(stats[t] for t in all_terms)),
         run_kernel, k, lookup, execution,
-    ))
+    )
 
 
 def bm25_topk_batch(
@@ -2794,6 +2871,20 @@ def mlt_topk(
     a pruned term_stats read, not a corpus pass. The selection uses raw
     double scores (no rounding): both engines compute the identical IEEE
     expression, so the SQL oracle reproduces the exact term set."""
+    terms = _mlt_terms(reader, like_text, max_query_terms)
+    if not terms:
+        return reader.spark.createDataFrame([], "url string, score double")
+    return bm25_topk(reader, terms, k=k, **bm25_kwargs)
+
+
+def _mlt_topk(reader, like_text, max_query_terms=5, k=10, **bm25_kwargs):
+    """mlt_topk's result form."""
+    terms = _mlt_terms(reader, like_text, max_query_terms)
+    return _bm25_topk(reader, terms, k=k, **bm25_kwargs) if terms else ("rows", [])
+
+
+def _mlt_terms(reader: "IndexReader", like_text: str, max_query_terms: int) -> list[str]:
+    """mlt_topk's driver-side term selection (see its docstring)."""
     import math
     from collections import Counter
 
@@ -2808,10 +2899,7 @@ def mlt_topk(
         if t in stats
     ]
     scored.sort(key=lambda x: (-x[1], x[0]))
-    terms = [t for t, _ in scored[:max_query_terms]]
-    if not terms:
-        return reader.spark.createDataFrame([], "url string, score double")
-    return bm25_topk(reader, terms, k=k, **bm25_kwargs)
+    return [t for t, _ in scored[:max_query_terms]]
 
 
 def mlt_multifield_topk(
@@ -2829,9 +2917,17 @@ def mlt_multifield_topk(
     field asc, term asc (Lucene's MoreLikeThis priority queue does not
     specify cross-field tie order) — and the result is the bool-should
     of the per-field term queries: per-field BM25 legs run UNBOUNDED
-    and SUM per doc (blend_dismax_frames tie_breaker=1). Selection is
+    and SUM per doc (blend_dismax tie_breaker=1). Selection is
     driver-side by the same contract as mlt_topk (the like text is ONE
     document; df lookups are pruned term_stats reads)."""
+    return _to_frame(reader.spark, _mlt_multifield_topk(
+        reader, like_text, fields, max_query_terms, k, filters,
+    ))
+
+
+def _mlt_multifield_topk(reader, like_text, fields, max_query_terms=5, k=10,
+                         filters=()):
+    """mlt_multifield_topk's result form."""
     import math
     from collections import Counter
 
@@ -2865,12 +2961,11 @@ def mlt_multifield_topk(
     by_field: dict[str, list[str]] = {}
     for _, name, t in cands[:max_query_terms]:
         by_field.setdefault(name, []).append(t)
-    frames = []
-    for name, terms in by_field.items():
-        frames.append(
-            bm25_topk(views[name], terms, k=1 << 31, filters=filters).toPandas()
-        )
-    return blend_dismax_frames(reader.spark, frames, 1.0, k)
+    legs = [
+        _result_rows(_bm25_topk(views[name], terms, k=1 << 31, filters=filters))
+        for name, terms in by_field.items()
+    ]
+    return blend_dismax(legs, 1.0, k)
 
 
 def percolate(
@@ -3746,10 +3841,10 @@ def _phrase_slots_topk(
     execution: str,
     lookup: str,
     filters=(),
-) -> DataFrame:
+):
     """Shared phrase front: the exact (slop=0) or sloppy kernel per shard
     over the slots' distinct terms, run by _positional_topk (which also
-    applies the filter context)."""
+    applies the filter context). Returns its result."""
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
 
     def kernel(rows: list, dels, kk: int) -> list[tuple[int, float]]:
@@ -3804,6 +3899,14 @@ def match_phrase_topk(
     pruned docmap lookup. Requires index_options="positions" (build_index;
     a freqs index raises ValueError — ES parity: a field indexed without
     positions rejects phrase queries)."""
+    return _to_frame(reader.spark, _match_phrase_topk(
+        reader, phrase, k, slop, execution, lookup, filters,
+    ))
+
+
+def _match_phrase_topk(reader, phrase, k=10, slop=0, execution="auto",
+                       lookup="auto", filters=()):
+    """match_phrase_topk's result form."""
     _require_positions(reader, "match_phrase")
     from engine.textnorm import standard_tokenize_py
 
@@ -3812,11 +3915,11 @@ def match_phrase_topk(
         else list(phrase)
     )
     if not terms:
-        return _empty_topk(reader.spark)
+        return "rows", []
     distinct = list(dict.fromkeys(terms))
     stats = reader.term_stats(distinct)
     if any(t not in stats for t in distinct):
-        return _empty_topk(reader.spark)
+        return "rows", []
     idf_sum = float(
         sum(P.bm25_idf(stats[t], reader.n_docs) for t in terms)  # dups counted
     )
@@ -3853,56 +3956,70 @@ def bm25_multifield_phrase_topk(
     BEFORE top-k, so any tie_breaker is exact. Filter clauses ride every
     per-field leg (identical docvalue mask -> identical restriction).
     Shared docmap => per-field doc_ids coincide by construction."""
-    frames = []
+    return _to_frame(reader.spark, _bm25_multifield_phrase_topk(
+        reader, phrase, fields, k, slop, tie_breaker, filters, kind,
+        max_expansions,
+    ))
+
+
+def _bm25_multifield_phrase_topk(reader, phrase, fields, k=10, slop=0,
+                                 tie_breaker=0.0, filters=(), kind="phrase",
+                                 max_expansions=50):
+    """bm25_multifield_phrase_topk's result form."""
+    legs = []
     for name, boost in _mf_fields(reader, fields):
         r = reader if name == reader.field else reader.for_field(name)
         if kind == "phrase":
-            leg = match_phrase_topk(r, phrase, k=1 << 31, slop=slop, filters=filters)
+            leg = _match_phrase_topk(r, phrase, k=1 << 31, slop=slop, filters=filters)
         elif kind == "phrase_prefix":
-            leg = match_phrase_prefix_topk(
+            leg = _match_phrase_prefix_topk(
                 r, phrase, k=1 << 31, slop=slop,
                 max_expansions=max_expansions, filters=filters,
             )
         elif kind == "bool_prefix":
-            leg = match_bool_prefix_topk(
+            leg = _match_bool_prefix_topk(
                 r, phrase, k=1 << 31, max_expansions=max_expansions,
                 filters=filters,
             )
         else:
             raise ValueError(f"unknown multi-field phrase kind {kind!r}")
-        pdf = leg.toPandas()
-        if len(pdf):
-            pdf = pdf.copy()
-            pdf["score"] = pdf["score"] * boost
-            frames.append(pdf[["url", "doc_id", "score"]])
-    return blend_dismax_frames(reader.spark, frames, tie_breaker, k)
+        legs.append([(u, d, sc * boost) for u, d, sc in _result_rows(leg)])
+    return blend_dismax(legs, tie_breaker, k)
 
 
-def blend_dismax_frames(
-    spark, frames: list, tie_breaker: float, k: int
-) -> DataFrame:
+def blend_dismax(legs: list, tie_breaker: float, k: int):
     """Lucene DisjunctionMaxQuery blend over FULL per-leg match sets:
     score = max(leg scores) + tie_breaker * (sum - max) per doc, then
-    (score desc, doc_id asc) top-k. Each frame is a pandas DataFrame
-    with (url, doc_id, score) holding ONE leg's complete (unbounded-k)
-    scored match set — any boost must already be applied by the caller.
-    Exact for every tie_breaker because no leg was truncated before the
-    blend. Shared by bm25_multifield_phrase_topk and the DSL's general
-    dis_max (engine/dsl.py) so the two blends cannot drift."""
-    frames = [f for f in frames if len(f)]
-    if not frames:
-        return _empty_topk(spark)
-    allp = pd.concat(frames, ignore_index=True)
-    g = allp.groupby(["url", "doc_id"], sort=False)["score"]
-    agg = g.agg(["max", "sum"]).reset_index()
-    agg["score"] = agg["max"] + tie_breaker * (agg["sum"] - agg["max"])
-    agg = agg.sort_values(
-        ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-    ).head(k)
-    return spark.createDataFrame(
-        agg[["url", "doc_id", "score"]],
-        "url string, doc_id long, score double",
-    )
+    (score desc, doc_id asc) top-k, returned as the ("rows", ...) top-k
+    result. Each leg is ONE leg's complete (unbounded-k) scored match
+    set as (url, doc_id, score) rows — any boost must already be applied
+    by the caller. Exact for every tie_breaker because no leg was
+    truncated before the blend. The per-doc sum runs in leg order with
+    Kahan compensation, the summation pandas' groupby sum uses, so the
+    blend is bit-stable against the frame-based form it replaced.
+    Shared by bm25_multifield_phrase_topk, mlt_multifield_topk and the
+    DSL's fuzzy multi_match and general dis_max (engine/dsl.py) so the
+    blends cannot drift."""
+    acc: dict = {}  # doc_id -> [url, max, sum, compensation]
+    for leg in legs:
+        for url, doc, sc in leg:
+            a = acc.get(doc)
+            if a is None:
+                acc[doc] = [url, sc, 0.0 + sc, 0.0]
+                continue
+            y = sc - a[3]
+            t = a[2] + y
+            c = t - a[2] - y
+            a[3] = 0.0 if c != c else c  # an infinite score leaves no NaN
+            a[2] = t
+            if sc > a[1]:
+                a[1] = sc
+    rows = [
+        (url, doc, mx + tie_breaker * (sm - mx))
+        for doc, (url, mx, sm, _c) in acc.items()
+    ]
+    rows.sort(key=lambda r: (-r[2], r[1]))
+    return "rows", rows[:k]
 
 
 def phrase_matcher(reader: "IndexReader", phrase: str | list[str], slop: int = 0):
@@ -4008,6 +4125,14 @@ def match_phrase_prefix_topk(
     oracle-expressible (`term LIKE 'pre%'` in SQL), and stable as the
     vocabulary grows. tf is the phrase frequency over the expanded last
     slot; everything else is the match_phrase model (slop supported)."""
+    return _to_frame(reader.spark, _match_phrase_prefix_topk(
+        reader, phrase, k, slop, max_expansions, execution, lookup, filters,
+    ))
+
+
+def _match_phrase_prefix_topk(reader, phrase, k=10, slop=0, max_expansions=50,
+                              execution="auto", lookup="auto", filters=()):
+    """match_phrase_prefix_topk's result form."""
     _require_positions(reader, "match_phrase_prefix")
     from engine.textnorm import standard_tokenize_py
 
@@ -4016,17 +4141,17 @@ def match_phrase_prefix_topk(
         else list(phrase)
     )
     if not terms:
-        return _empty_topk(reader.spark)
+        return "rows", []
     head, pre = terms[:-1], terms[-1]
     expansions = reader.expand_prefix(pre, max_expansions=max_expansions)
     if not expansions:
-        return _empty_topk(reader.spark)
+        return "rows", []
     # one dictionary read: head idfs, plus the expansions' dfs for the
     # executor's local/Spark gate
     fetch = list(dict.fromkeys(head + expansions))
     stats = reader.term_stats(fetch)
     if any(t not in stats for t in head):
-        return _empty_topk(reader.spark)
+        return "rows", []
     # exact union df of the prefix slot: shards partition the doc space,
     # so the per-shard distinct-doc counts of the expansions' merged
     # postings sum to the global df (tombstones are not masked: df counts
@@ -4044,7 +4169,7 @@ def match_phrase_prefix_topk(
         else int(sum(r["n"] for r in out.collect()))
     )
     if df_union == 0:
-        return _empty_topk(reader.spark)
+        return "rows", []
     idf_sum = float(
         sum(P.bm25_idf(stats[t], reader.n_docs) for t in head)
         + P.bm25_idf(df_union, reader.n_docs)

@@ -56,10 +56,9 @@ from engine.query import (
     IndexReader,
     _at_shard,
     _decode_live,
-    _empty_topk,
     _phrase_freqs,
     _require_positions,
-    _rows_frame,
+    _result_rows,
     _scatter_topk,
     _shard_filter,
     _to_frame,
@@ -253,6 +252,16 @@ def simple_query_string_topk(
     the module docstring for the frozen grammar and scoring spec.
     filters: ES filter-context clauses (engine/docvalues.py), applied as
     the candidates-only docvalue mask after clause accumulation."""
+    return _to_frame(reader.spark, _simple_query_string_topk(
+        reader, query, k, default_operator, max_expansions, execution,
+        lookup, filters,
+    ))
+
+
+def _simple_query_string_topk(reader, query, k=10, default_operator="or",
+                              max_expansions=50, execution="auto",
+                              lookup="auto", filters=()):
+    """simple_query_string_topk's result form."""
     if default_operator not in ("or", "and"):
         raise ValueError(f"default_operator must be or/and, got {default_operator!r}")
     and_mode = default_operator == "and"
@@ -287,7 +296,7 @@ def simple_query_string_topk(
                 if c.neg:
                     continue
                 if and_mode:
-                    return _empty_topk(reader.spark)
+                    return "rows", []
                 continue
             idf_sum = float(sum(P.bm25_idf(stats[t], n_docs) for t in terms))
             spec = (
@@ -301,12 +310,12 @@ def simple_query_string_topk(
                 if c.neg:
                     continue
                 if and_mode:
-                    return _empty_topk(reader.spark)
+                    return "rows", []
                 continue
             spec = ("sum", tuple(known))
         (neg_specs if c.neg else pos_specs).append(spec)
     if not pos_specs:
-        return _empty_topk(reader.spark)
+        return "rows", []
 
     needs_pos = any(s[0] == "phrase" for s in pos_specs + neg_specs)
     distinct = list(dict.fromkeys(
@@ -328,7 +337,7 @@ def simple_query_string_topk(
     src = FieldPostings(
         reader, distinct, sum(stats.get(t, 0) for t in distinct), needs_pos
     )
-    return _to_frame(reader.spark, _scatter_topk(src, run_kernel, k, lookup, execution))
+    return _scatter_topk(src, run_kernel, k, lookup, execution)
 
 
 # ---------------------------------------------------------------------------
@@ -742,9 +751,19 @@ def query_string_topk(
     Scale shape identical to simple_query_string_topk: dictionary
     rewrites + global idfs on the driver, one pruned postings read,
     per-shard numpy tree evaluation, only top-k rows collected."""
+    return _to_frame(reader.spark, _query_string_topk(
+        reader, query, k, default_operator, max_expansions, execution,
+        lookup, filters,
+    ))
+
+
+def _query_string_topk(reader, query, k=10, default_operator="or",
+                       max_expansions=50, execution="auto", lookup="auto",
+                       filters=()):
+    """query_string_topk's result form."""
     root = parse_query_string(query, default_operator)
     if root is None:
-        return _empty_topk(reader.spark)
+        return "rows", []
     if not _qs_has_positive(root):
         raise ValueError(
             "query_string needs at least one positive clause "
@@ -759,7 +778,7 @@ def query_string_topk(
                 "(pure negation is served by the filter path, "
                 "frozen divergence)"
             )
-        return _empty_topk(reader.spark)
+        return "rows", []
 
     def _needs_pos(r) -> bool:
         if r[0] == "phraseraw":
@@ -775,7 +794,7 @@ def query_string_topk(
     )
     distinct = sorted(t for t in acc if t in stats)
     if not distinct:
-        return _empty_topk(reader.spark)
+        return "rows", []
 
     shard_filter = _shard_filter(reader, filters)
 
@@ -785,7 +804,7 @@ def query_string_topk(
     src = FieldPostings(
         reader, distinct, sum(stats.get(t, 0) for t in distinct), needs_pos
     )
-    return _to_frame(reader.spark, _scatter_topk(src, run_kernel, k, lookup, execution))
+    return _scatter_topk(src, run_kernel, k, lookup, execution)
 
 
 def sqs_multifield_topk(
@@ -820,12 +839,15 @@ def sqs_multifield_topk(
     once per field; only the per-doc merge is driver-side, bounded by
     the union match set (the same bound the single-field OR kernel's
     accumulator carries per shard)."""
-    from engine.query import (
-        _empty_topk,
-        bm25_topk,
-        match_phrase_topk,
-        parse_field_boosts,
-    )
+    return _to_frame(reader.spark, _sqs_multifield_topk(
+        reader, query, fields, k, default_operator, max_expansions, filters,
+    ))
+
+
+def _sqs_multifield_topk(reader, query, fields, k=10, default_operator="or",
+                         max_expansions=50, filters=()):
+    """sqs_multifield_topk's result form."""
+    from engine.query import _bm25_topk, _match_phrase_topk, parse_field_boosts
 
     if default_operator not in ("or", "and"):
         raise ValueError(
@@ -853,15 +875,15 @@ def sqs_multifield_topk(
     def _leg(c: Clause, name: str):
         view = views[name]
         if c.kind == "phrase":
-            return match_phrase_topk(
+            return _match_phrase_topk(
                 view, list(c.terms), k=1 << 31, slop=c.slop, filters=filters
             )
         if c.kind == "prefix":
             terms = view.expand_prefix(c.terms[0], max_expansions)
             if not terms:
                 return None
-            return bm25_topk(view, terms, k=1 << 31, filters=filters)
-        return bm25_topk(view, list(c.terms), k=1 << 31, filters=filters)
+            return _bm25_topk(view, terms, k=1 << 31, filters=filters)
+        return _bm25_topk(view, list(c.terms), k=1 << 31, filters=filters)
 
     pos_maps, neg_maps = [], []
     for c in clauses:
@@ -870,22 +892,18 @@ def sqs_multifield_topk(
             leg = _leg(c, name)
             if leg is None:
                 continue
-            for row in leg.toPandas().itertuples(index=False):
-                prev = per.get(row.url)
-                per[row.url] = (
-                    row.doc_id,
-                    (prev[1] if prev else 0.0) + boost * row.score,
-                )
+            for url, doc_id, score in _result_rows(leg):
+                prev = per.get(url)
+                per[url] = (doc_id, (prev[1] if prev else 0.0) + boost * score)
         if c.neg:
             if per:
                 neg_maps.append(per)
         else:
             pos_maps.append(per)
-    spark = reader.spark
     total: dict[str, tuple[int, float, int]] = {}
     for per in pos_maps:
         if and_mode and not per:
-            return _empty_topk(spark)
+            return "rows", []
         for u, (d, s) in per.items():
             t = total.get(u)
             total[u] = (d, (t[1] if t else 0.0) + s, (t[2] if t else 0) + 1)
@@ -895,13 +913,11 @@ def sqs_multifield_topk(
     for per in neg_maps:
         for u in per:
             total.pop(u, None)
-    if not total:
-        return _empty_topk(spark)
     rows = sorted(
         ((u, d, s) for u, (d, s, _c) in total.items()),
         key=lambda x: (-x[2], x[1]),
     )[:k]
-    return _rows_frame(spark, rows)
+    return "rows", rows
 
 
 def qs_multifield_topk(
@@ -932,16 +948,20 @@ def qs_multifield_topk(
     ride every leg. Scale shape: legs are the same pruned reads the
     single-field query does, once per field; the driver-side merge is
     bounded by the union match set."""
-    from engine.query import (
-        _empty_topk,
-        bm25_topk,
-        match_phrase_topk,
-        parse_field_boosts,
-    )
+    return _to_frame(reader.spark, _qs_multifield_topk(
+        reader, query, fields, k, default_operator, tie_breaker,
+        max_expansions, filters,
+    ))
+
+
+def _qs_multifield_topk(reader, query, fields, k=10, default_operator="or",
+                        tie_breaker=0.0, max_expansions=50, filters=()):
+    """qs_multifield_topk's result form."""
+    from engine.query import _bm25_topk, _match_phrase_topk, parse_field_boosts
 
     root = parse_query_string(query, default_operator)
     if root is None:
-        return _empty_topk(reader.spark)
+        return "rows", []
     if not _qs_has_positive(root):
         raise ValueError(
             "query_string needs at least one positive clause "
@@ -960,13 +980,13 @@ def qs_multifield_topk(
     }
     tb = float(tie_breaker)
 
-    def _leg_df(view, kind, payload, slop):
+    def _leg(view, kind, payload, slop):
         if kind == "phrase":
-            return match_phrase_topk(
+            return _match_phrase_topk(
                 view, payload, k=1 << 31, slop=slop, filters=filters
             )
         if kind == "terms":
-            return bm25_topk(view, payload, k=1 << 31, filters=filters)
+            return _bm25_topk(view, payload, k=1 << 31, filters=filters)
         raise AssertionError(kind)
 
     def _leaf(node):
@@ -985,29 +1005,29 @@ def qs_multifield_topk(
                         t, None if fuzzy == "auto" else fuzzy, max_expansions
                     )
                 )
-                df = _leg_df(view, "terms", list(ts), 0) if ts else None
+                leg = _leg(view, "terms", list(ts), 0) if ts else None
             elif kind == "prefix":
                 ts = view.expand_prefix(node[1], max_expansions)
                 boost = node[2]
-                df = _leg_df(view, "terms", list(ts), 0) if ts else None
+                leg = _leg(view, "terms", list(ts), 0) if ts else None
             elif kind == "wild":
                 ts = view.expand_wildcard(node[1], max_expansions)
                 boost = node[2]
-                df = _leg_df(view, "terms", list(ts), 0) if ts else None
+                leg = _leg(view, "terms", list(ts), 0) if ts else None
             else:  # phrase
                 slots = standard_tokenize_py(node[1].lower())
                 boost = node[3]
                 if not slots:
                     analyzed_away = True
-                    df = None
+                    leg = None
                 elif len(slots) == 1:
-                    df = _leg_df(view, "terms", slots, 0)
+                    leg = _leg(view, "terms", slots, 0)
                 else:
-                    df = _leg_df(view, "phrase", list(slots), node[2])
+                    leg = _leg(view, "phrase", list(slots), node[2])
             per: dict = {}
-            if df is not None:
-                for row in df.toPandas().itertuples(index=False):
-                    per[row.url] = (row.doc_id, fboost * row.score)
+            if leg is not None:
+                for url, doc_id, score in _result_rows(leg):
+                    per[url] = (doc_id, fboost * score)
             legs.append(per)
         if analyzed_away:
             return None
@@ -1073,11 +1093,9 @@ def qs_multifield_topk(
             out = {u: (d, s * boost) for u, (d, s) in out.items()}
         return out
 
-    res = _eval(root)
-    if not res:
-        return _empty_topk(reader.spark)
+    res = _eval(root) or {}
     rows = sorted(
         ((u, d, s) for u, (d, s) in res.items()),
         key=lambda x: (-x[2], x[1]),
     )[:k]
-    return _rows_frame(reader.spark, rows)
+    return "rows", rows

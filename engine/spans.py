@@ -69,12 +69,12 @@ import numpy as np
 from engine import postings as P
 from engine.query import (
     IndexReader,
-    _empty_topk,
     _phrase_candidates,
     _phrase_score_rows,
     _positional_topk,
     _require_positions,
     _slot_occurrences,
+    _to_frame,
 )
 from engine.textnorm import standard_tokenize_py
 
@@ -258,10 +258,20 @@ def span_near_topk(
     (span_not_topk is the named front-end). Defaults mirror ES's
     SpanNearQueryBuilder: slop=0, in_order=true. See the module
     docstring for the frozen span semantics."""
+    return _to_frame(reader.spark, _span_near_topk(
+        reader, clauses, k, slop, in_order, execution, lookup, exclude, pre,
+        post, filters,
+    ))
+
+
+def _span_near_topk(reader, clauses, k=10, slop=0, in_order=True,
+                    execution="auto", lookup="auto", exclude=None, pre=0,
+                    post=0, filters=()):
+    """span_near_topk's result form."""
     _require_positions(reader, "span_near")
     slots = _parse_clauses(clauses)
     if not slots:
-        return _empty_topk(reader.spark)
+        return "rows", []
     exclude = [t.lower() for t in (exclude or [])]
     fetch = list(dict.fromkeys([t for sl in slots for t in sl] + exclude))
     stats = reader.term_stats(fetch)
@@ -270,7 +280,7 @@ def span_near_topk(
     # and never contribute to idf (Lucene exclusion is score-free).
     live_slots = [[t for t in sl if t in stats] for sl in slots]
     if any(not sl for sl in live_slots):
-        return _empty_topk(reader.spark)
+        return "rows", []
     slots = live_slots
     exclude = [t for t in exclude if t in stats]
     idf_sum = float(
@@ -320,7 +330,15 @@ def span_or_topk(
     is a unit span (width 0, weight 1), so tf = the per-doc occurrence
     count over the alternative set and idf = the sum of the live
     alternatives' idfs — a one-slot span_near by construction."""
-    return span_near_topk(
+    return _to_frame(reader.spark, _span_or_topk(
+        reader, alternatives, k, execution, lookup, filters,
+    ))
+
+
+def _span_or_topk(reader, alternatives, k=10, execution="auto", lookup="auto",
+                  filters=()):
+    """span_or_topk's result form."""
+    return _span_near_topk(
         reader, [list(alternatives)], k=k, slop=0, in_order=False,
         execution=execution, lookup=lookup, filters=filters,
     )
@@ -344,7 +362,16 @@ def span_not_topk(
     exclude-term occurrence falls inside [span_start - pre, span_end +
     post] (Lucene SpanNotQuery's dist window). Exclusion filters tf
     BEFORE scoring and never contributes to idf."""
-    return span_near_topk(
+    return _to_frame(reader.spark, _span_not_topk(
+        reader, include, exclude, k, slop, in_order, pre, post, execution,
+        lookup, filters,
+    ))
+
+
+def _span_not_topk(reader, include, exclude, k=10, slop=0, in_order=True,
+                   pre=0, post=0, execution="auto", lookup="auto", filters=()):
+    """span_not_topk's result form."""
+    return _span_near_topk(
         reader, include, k=k, slop=slop, in_order=in_order,
         exclude=list(exclude), pre=pre, post=post,
         execution=execution, lookup=lookup, filters=filters,
@@ -364,9 +391,17 @@ def span_first_topk(
     subset): occurrences of ``term`` whose span end (0-based position + 1)
     is <= ``end``; tf = the qualifying-occurrence count, idf = the term's
     idf — a head-of-document match amplifier."""
+    return _to_frame(reader.spark, _span_first_topk(
+        reader, term, end, k, execution, lookup, filters,
+    ))
+
+
+def _span_first_topk(reader, term, end, k=10, execution="auto", lookup="auto",
+                     filters=()):
+    """span_first_topk's result form."""
     _require_positions(reader, "span_first")
     if end < 1:
-        return _empty_topk(reader.spark)
+        return "rows", []
     toks = standard_tokenize_py(term.lower())
     if len(toks) != 1:
         raise ValueError(
@@ -375,7 +410,7 @@ def span_first_topk(
     t = toks[0]
     stats = reader.term_stats([t])
     if t not in stats:
-        return _empty_topk(reader.spark)
+        return "rows", []
     idf = float(P.bm25_idf(stats[t], reader.n_docs))
     k1, b, avgdl = reader.k1, reader.b, reader.avgdl
 

@@ -490,3 +490,98 @@ def test_highlight_under_mm_phrase(spark, ctx_index):
     assert any("<em>web</em>" in h["highlight"]["text"][0]
                or "<em>search</em>" in h["highlight"]["text"][0]
                for h in marked)
+
+
+def _serve_bodies(rows) -> dict:
+    """perfbench's 8 serve kinds on this index (lang / url filters, the
+    title^2 multi_match, a bigram phrase from a real doc), plus the
+    boosted phrase, 2-field phrase multi_match and cross-field dis_max
+    shapes whose legs are blended in Python."""
+    bigram = " ".join(rows[3][1].split()[:2])
+    must = {"match": {"text": "search index rank"}}
+    return {
+        "match_or": {"match": {"text": "spark query"}},
+        "match_and": {"match": {"text": {"query": "web page", "operator": "and"}}},
+        "bool_lang": {"bool": {"must": [must], "filter": [{"term": {"lang": "fr"}}]}},
+        "bool_range": {"bool": {"must": [must], "filter": [
+            {"range": {"url": {"gte": "u0050", "lt": "u0100"}}}]}},
+        "multi_match": {"multi_match": {"query": "rank score", "type": "best_fields",
+                                        "fields": ["title^2", "text"]}},
+        "match_phrase": {"match_phrase": {"text": bigram}},
+        "prefix": {"prefix": {"text": "sea"}},
+        "query_string": {"query_string": {"query": "crawl text", "default_field": "text"}},
+        "boosted_phrase": {"match_phrase": {"text": {"query": bigram, "boost": 2.5}}},
+        "mm_phrase": {"multi_match": {"query": bigram, "type": "phrase",
+                                      "fields": ["title^2", "text"]}},
+        "dis_max": {"dis_max": {"tie_breaker": 0.3, "queries": [
+            {"match": {"text": "engine open"}}, {"match": {"title": "engine"}}]}},
+    }
+
+
+def _hit_pairs(resp) -> list:
+    return [(h["_id"], h["_score"]) for h in resp["hits"]["hits"]]
+
+
+@pytest.fixture(scope="module")
+def serve_hits(spark, ctx_index):
+    """Each serve body's public dsl.search hits, recorded unpatched."""
+    from engine.dsl import search
+
+    out, rows = ctx_index
+    reader = IndexReader(spark, out)
+    got = {
+        kind: _hit_pairs(search(reader, {"query": q, "size": 10}))
+        for kind, q in _serve_bodies(rows).items()
+    }
+    for kind, hits in got.items():
+        assert hits, f"{kind}: no hits — weak test"
+    return got
+
+
+@pytest.mark.parametrize("path", ["local", "spark"])
+def test_serve_hits_skip_the_dataframe_round_trip(spark, ctx_index, serve_hits,
+                                                  monkeypatch, path):
+    """Driver-local dsl.search serves its hits from the kernels' rows: with
+    SparkSession.createDataFrame, DataFrame.collect and DataFrame.toPandas
+    patched to raise, every serve body still returns the recorded hits.
+    A Spark job count cannot see this round trip — a pandas
+    createDataFrame is a local relation whose collect starts no job, on
+    the DataFrame path as well — so the test forbids the calls instead.
+    The "spark" leg forces the scatter onto Spark (a 0 postings gate, no
+    patching) and must return the same hits."""
+    from pyspark.sql import DataFrame, SparkSession
+
+    from engine.dsl import search
+
+    out, rows = ctx_index
+    reader = IndexReader(spark, out)
+    if path == "local":
+        def forbidden(*_a, **_k):
+            raise AssertionError("DataFrame round trip on the serve path")
+
+        for cls, name in ((SparkSession, "createDataFrame"),
+                          (DataFrame, "collect"), (DataFrame, "toPandas")):
+            monkeypatch.setattr(cls, name, forbidden)
+    else:
+        monkeypatch.setattr(IndexReader, "LOCAL_MAX_POSTINGS", 0)
+    for kind, q in _serve_bodies(rows).items():
+        assert _hit_pairs(search(reader, {"query": q, "size": 10})) == serve_hits[kind], kind
+
+
+def test_leaf_boost_scales_result_rows(spark, ctx_index, serve_hits):
+    """A leaf boost on match_phrase, prefix and match returns the unboosted
+    hits with every score multiplied by the boost; boost <= 0 raises."""
+    from engine.dsl import search
+
+    out, rows = ctx_index
+    reader = IndexReader(spark, out)
+    bigram = " ".join(rows[3][1].split()[:2])
+    for base, boosted in (
+        ("match_phrase", {"match_phrase": {"text": {"query": bigram, "boost": 2.5}}}),
+        ("prefix", {"prefix": {"text": {"value": "sea", "boost": 2.5}}}),
+        ("match_or", {"match": {"text": {"query": "spark query", "boost": 2.5}}}),
+    ):
+        got = _hit_pairs(search(reader, {"query": boosted, "size": 10}))
+        assert got == [(u, s * 2.5) for u, s in serve_hits[base]], base
+    with pytest.raises(ValueError, match="boost must be > 0"):
+        search(reader, {"query": {"prefix": {"text": {"value": "sea", "boost": 0}}}})
