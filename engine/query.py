@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import functools
 import heapq
+import inspect
 import json
 import os
 from collections import namedtuple
@@ -1206,7 +1207,22 @@ def _topk_order(uniq: np.ndarray, scores: np.ndarray, kk: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def bm25_topk(
+def _frame_api(fn):
+    """The public DataFrame API of a top-k result form fn (a function
+    returning _finalize_topk's (kind, payload)): the same signature,
+    defaults and docstring under fn's name without its leading
+    underscore, returning _to_frame(reader.spark, fn(...))."""
+
+    @functools.wraps(fn)
+    def api(reader, *args, **kwargs):
+        return _to_frame(reader.spark, fn(reader, *args, **kwargs))
+
+    api.__name__ = api.__qualname__ = fn.__name__.lstrip("_")
+    api.__signature__ = inspect.signature(fn).replace(return_annotation="DataFrame")
+    return api
+
+
+def _bm25_topk(
     reader: IndexReader,
     query: str | list[str],
     k: int = 10,
@@ -1219,7 +1235,7 @@ def bm25_topk(
     stats_override=None,
     boost=None,
     script=None,
-) -> DataFrame:
+):
     """Top-k (url, doc_id, score) DataFrame, ordered score desc, doc_id asc.
 
     mode: "or" (ranked union), "and" (conjunctive), "prefix" (dictionary
@@ -1249,51 +1265,6 @@ def bm25_topk(
 
     bm25_topk_rows returns the same winners as plain tuples without the
     result-DataFrame round-trip — the serving-path API."""
-    return _to_frame(reader.spark, _bm25_topk(
-        reader, query, k, mode, algo, field_opts, lookup, execution, filters,
-        stats_override, boost, script,
-    ))
-
-
-def bm25_topk_rows(
-    reader: IndexReader,
-    query: str | list[str],
-    k: int = 10,
-    mode: str = "or",
-    algo: str = "wand",
-    field_opts: str = "default",
-    filters=(),
-) -> list[tuple[str, int, float]]:
-    """Serving-path twin of bm25_topk: the same analysis, kernels, and
-    winner selection, returned as [(url, doc_id, score)] with NO result
-    DataFrame — for a query server, the ~40 ms of JVM round-trips that
-    building and collecting a 10-row DataFrame costs is the latency floor,
-    and this path removes it. Rank-identical to bm25_topk by construction
-    (tested): both are rows of the one _bm25_topk result (_result_rows),
-    the same form dsl.search serves its hits from."""
-    return _result_rows(_bm25_topk(
-        reader, query, k, mode, algo, field_opts, filters=filters,
-    ))
-
-
-def _bm25_topk(
-    reader: IndexReader,
-    query: str | list[str],
-    k: int = 10,
-    mode: str = "or",
-    algo: str = "wand",
-    field_opts: str = "default",
-    lookup: str = "auto",
-    execution: str = "auto",
-    filters=(),
-    stats_override=None,
-    boost=None,
-    script=None,
-):
-    """bm25_topk's result form — the shared top-k engine: analysis,
-    dictionary rewrites, algorithm choice, then _scatter_topk. Returns
-    its ("rows", [(url, doc_id, score), ...]) or ("df", DataFrame)
-    result."""
     if algo not in ("wand", "taat"):
         raise ValueError(f"unknown algo {algo!r}: expected 'wand' or 'taat'")
     if mode in ("wildcard", "regexp") and isinstance(query, str):
@@ -1380,6 +1351,30 @@ def _bm25_topk(
         FieldPostings(reader, terms, sum(stats[t] for t in terms)),
         run_kernel, k, lookup, execution,
     )
+
+
+bm25_topk = _frame_api(_bm25_topk)
+
+
+def bm25_topk_rows(
+    reader: IndexReader,
+    query: str | list[str],
+    k: int = 10,
+    mode: str = "or",
+    algo: str = "wand",
+    field_opts: str = "default",
+    filters=(),
+) -> list[tuple[str, int, float]]:
+    """Serving-path twin of bm25_topk: the same analysis, kernels, and
+    winner selection, returned as [(url, doc_id, score)] with NO result
+    DataFrame — for a query server, the ~40 ms of JVM round-trips that
+    building and collecting a 10-row DataFrame costs is the latency floor,
+    and this path removes it. Rank-identical to bm25_topk by construction
+    (tested): both are rows of the one _bm25_topk result (_result_rows),
+    the same form dsl.search serves its hits from."""
+    return _result_rows(_bm25_topk(
+        reader, query, k, mode, algo, field_opts, filters=filters,
+    ))
 
 
 _PATHS = ("auto", "local", "spark")  # the execution / lookup values
@@ -1524,10 +1519,10 @@ def _scatter_topk(src, run_kernel, k: int, lookup: str, execution: str):
     lookup), whose ("rows" | "df", payload) result this returns.
 
     That result is the internal currency up to the API edge: each public
-    *_topk wraps its private result form (bm25_topk over _bm25_topk,
-    ...) in _to_frame, while bm25_topk_rows and dsl.search read its rows
-    (_result_rows) — so a driver-local request never builds a result
-    DataFrame only to collect it back.
+    *_topk is its private result form through _frame_api (bm25_topk =
+    _frame_api(_bm25_topk), ...), while bm25_topk_rows and dsl.search
+    read its rows (_result_rows) — so a driver-local request never
+    builds a result DataFrame only to collect it back.
 
     Users: _bm25_topk (bm25_topk, bm25_topk_rows, and through it
     match_bool_prefix_topk, mlt_topk, multi_index_topk, rescore_topk's
@@ -1608,10 +1603,10 @@ def _to_frame(spark, result) -> DataFrame:
 
 
 def _result_rows(result) -> list:
-    """_finalize_topk's (kind, payload) -> its rows: the (url, doc_id,
-    score) tuples themselves, or the DataFrame's collected Rows."""
+    """_finalize_topk's (kind, payload) -> its (url, doc_id, score)
+    tuples: the payload itself, or the DataFrame's collected rows."""
     kind, payload = result
-    return payload if kind == "rows" else payload.collect()
+    return payload if kind == "rows" else [tuple(r) for r in payload.collect()]
 
 
 def _shard_filter(reader: IndexReader, filters):
@@ -1671,7 +1666,7 @@ def _positional_topk(
     )
 
 
-def bm25_dismax_topk(
+def _bm25_dismax_topk(
     reader: IndexReader,
     query: str | list[str],
     k: int = 10,
@@ -1679,7 +1674,7 @@ def bm25_dismax_topk(
     fields: tuple[str, ...] = ("default", "nonorms", "doconly"),
     execution: str = "auto",
     lookup: str = "auto",
-) -> DataFrame:
+):
     """Multi-field dis_max top-k (url, doc_id, score) over the real index.
 
     Scores the analyzed query against several per-field scoring variants of
@@ -1691,15 +1686,6 @@ def bm25_dismax_topk(
     formula, so no extra IO or shuffle vs a single-field query. Same
     local/Spark adaptive execution and pruned docmap lookup as bm25_topk;
     ties doc_id asc."""
-    return _to_frame(reader.spark, _bm25_dismax_topk(
-        reader, query, k, tie_breaker, fields, execution, lookup,
-    ))
-
-
-def _bm25_dismax_topk(reader, query, k=10, tie_breaker=0.3,
-                      fields=("default", "nonorms", "doconly"),
-                      execution="auto", lookup="auto"):
-    """bm25_dismax_topk's result form."""
     terms = analyze_query_py(query) if isinstance(query, str) else list(dict.fromkeys(query))
     stats = reader.term_stats(terms)
     terms = [t for t in terms if t in stats]
@@ -1717,6 +1703,9 @@ def _bm25_dismax_topk(reader, query, k=10, tie_breaker=0.3,
         FieldPostings(reader, terms, sum(stats[t] for t in terms)),
         run_kernel, k, lookup, execution,
     )
+
+
+bm25_dismax_topk = _frame_api(_bm25_dismax_topk)
 
 
 def parse_field_boosts(fields: list) -> list[tuple[str, float]]:
@@ -2032,7 +2021,7 @@ def multifield_union_matcher(reader: "IndexReader", fields: list,
     return src, matcher
 
 
-def bm25_multifield_topk(
+def _bm25_multifield_topk(
     reader: IndexReader,
     query: str | list[str],
     fields: list,
@@ -2044,7 +2033,7 @@ def bm25_multifield_topk(
     filters=(),
     operator: str = "or",
     minimum_should_match: int | None = None,
-) -> DataFrame:
+):
     """ES multi_match over a multi-field index (url, doc_id, score):
     per-field postings + per-field df/avgdl, blended per `mtype`
     (best_fields / most_fields / cross_fields / combined_fields —
@@ -2065,17 +2054,6 @@ def bm25_multifield_topk(
     identity local-vs-Spark is by construction (same kernel) and
     tested, as is equivalence of a two-field index's per-field views
     with two separately built single-field indexes."""
-    return _to_frame(reader.spark, _bm25_multifield_topk(
-        reader, query, fields, k, mtype, tie_breaker, execution, lookup,
-        filters, operator, minimum_should_match,
-    ))
-
-
-def _bm25_multifield_topk(reader, query, fields, k=10, mtype="best_fields",
-                          tie_breaker=0.0, execution="auto", lookup="auto",
-                          filters=(), operator="or",
-                          minimum_should_match=None):
-    """bm25_multifield_topk's result form."""
     if mtype not in _MF_TYPES:
         raise ValueError(f"unknown multi_match type {mtype!r}")
     fb = _mf_fields(reader, fields)
@@ -2144,7 +2122,10 @@ def _bm25_multifield_topk(reader, query, fields, k=10, mtype="best_fields",
     return _scatter_topk(src, run_kernel, k, lookup, execution)
 
 
-def bm25_synonym_topk(
+bm25_multifield_topk = _frame_api(_bm25_multifield_topk)
+
+
+def _bm25_synonym_topk(
     reader: IndexReader,
     groups: list[list[str]],
     k: int = 10,
@@ -2152,7 +2133,7 @@ def bm25_synonym_topk(
     execution: str = "auto",
     lookup: str = "auto",
     filters=(),
-) -> DataFrame:
+):
     """Search-time synonym expansion with Lucene SynonymQuery scoring —
     the engine-side equivalent of ES's search-time `synonym_graph` token
     filter (the reference delegates synonyms entirely to Elasticsearch
@@ -2173,14 +2154,6 @@ def bm25_synonym_topk(
     applies idf(max df) * impact(tf_sum, dl) — no joins, no extra shuffle
     vs a plain match of the same number of terms. Same adaptive
     local/Spark execution + pruned docmap lookup as bm25_topk."""
-    return _to_frame(reader.spark, _bm25_synonym_topk(
-        reader, groups, k, mode, execution, lookup, filters,
-    ))
-
-
-def _bm25_synonym_topk(reader, groups, k=10, mode="or", execution="auto",
-                       lookup="auto", filters=()):
-    """bm25_synonym_topk's result form."""
     groups = [list(dict.fromkeys(g)) for g in groups if g]
     all_terms = sorted({t for g in groups for t in g})
     stats = reader.term_stats(all_terms)
@@ -2245,7 +2218,10 @@ def _bm25_synonym_topk(reader, groups, k=10, mode="or", execution="auto",
     )
 
 
-def bm25_bool_topk(
+bm25_synonym_topk = _frame_api(_bm25_synonym_topk)
+
+
+def _bm25_bool_topk(
     reader: IndexReader,
     must: str | list[str] = (),
     should: str | list[str] = (),
@@ -2256,7 +2232,7 @@ def bm25_bool_topk(
     execution: str = "auto",
     lookup: str = "auto",
     filters=(),
-) -> DataFrame:
+):
     """ES-style bool query top-k (url, doc_id, score) over the real index.
 
     Semantics (ES bool): every `must` term is required and contributes to
@@ -2275,16 +2251,6 @@ def bm25_bool_topk(
     (np.unique/bincount + searchsorted masks, no per-doc Python) and runs
     on the same adaptive local/Spark scatter-gather as bm25_topk, with the
     same pruned docmap lookup. Ties doc_id asc."""
-    return _to_frame(reader.spark, _bm25_bool_topk(
-        reader, must, should, must_not, k, minimum_should_match, field_opts,
-        execution, lookup, filters,
-    ))
-
-
-def _bm25_bool_topk(reader, must=(), should=(), must_not=(), k=10,
-                    minimum_should_match=None, field_opts="default",
-                    execution="auto", lookup="auto", filters=()):
-    """bm25_bool_topk's result form."""
 
     def _analyze(q) -> list[str]:
         if isinstance(q, str):
@@ -2326,6 +2292,9 @@ def _bm25_bool_topk(reader, must=(), should=(), must_not=(), k=10,
         FieldPostings(reader, all_terms, sum(stats[t] for t in all_terms)),
         run_kernel, k, lookup, execution,
     )
+
+
+bm25_bool_topk = _frame_api(_bm25_bool_topk)
 
 
 def _terms_set_shard_topk(
@@ -2388,7 +2357,7 @@ def _terms_set_shard_topk(
     return [(int(uniq[i]), float(scores[i])) for i in order]
 
 
-def terms_set_topk(
+def _terms_set_topk(
     reader: IndexReader,
     terms: list[str],
     minimum_should_match_field: str,
@@ -2396,22 +2365,13 @@ def terms_set_topk(
     execution: str = "auto",
     lookup: str = "auto",
     filters=(),
-) -> DataFrame:
+):
     """ES terms_set query top-k (url, doc_id, score): docs containing at
     least `doc[minimum_should_match_field]` of `terms`, scored as the
     BM25 sum of their matching terms — the per-DOC msm variant of the
     bool query (Lucene CoveringQuery). Frozen semantics in
     _terms_set_shard_topk's docstring. Adaptive local/Spark execution,
     pruned docmap lookup, tombstone-masked; ties doc_id asc."""
-    return _to_frame(reader.spark, _terms_set_topk(
-        reader, terms, minimum_should_match_field, k, execution, lookup,
-        filters,
-    ))
-
-
-def _terms_set_topk(reader, terms, minimum_should_match_field, k=10,
-                    execution="auto", lookup="auto", filters=()):
-    """terms_set_topk's result form."""
     from engine.docvalues import gather_docvalues
 
     dv_cols = reader.manifest.get("docvalue_cols") or []
@@ -2453,7 +2413,10 @@ def _terms_set_topk(reader, terms, minimum_should_match_field, k=10,
     )
 
 
-def match_bool_prefix_topk(
+terms_set_topk = _frame_api(_terms_set_topk)
+
+
+def _match_bool_prefix_topk(
     reader: IndexReader,
     text: str,
     k: int = 10,
@@ -2461,7 +2424,7 @@ def match_bool_prefix_topk(
     execution: str = "auto",
     lookup: str = "auto",
     filters=(),
-) -> DataFrame:
+):
     """ES match_bool_prefix query top-k: analyze the text; every token
     but the last becomes a should term clause, the LAST token becomes a
     prefix clause (the search-box "user is mid-word" query). Frozen
@@ -2472,14 +2435,6 @@ def match_bool_prefix_topk(
     the shared adaptive kernels. An empty expansion leaves the leading
     terms ranking alone (ES: the prefix clause simply matches nothing
     under OR semantics)."""
-    return _to_frame(reader.spark, _match_bool_prefix_topk(
-        reader, text, k, max_expansions, execution, lookup, filters,
-    ))
-
-
-def _match_bool_prefix_topk(reader, text, k=10, max_expansions=128,
-                            execution="auto", lookup="auto", filters=()):
-    """match_bool_prefix_topk's result form."""
     toks = analyze_query_py(text)
     if not toks:
         return "rows", []
@@ -2491,6 +2446,9 @@ def _match_bool_prefix_topk(reader, text, k=10, max_expansions=128,
         reader, terms, k=k, mode="or", execution=execution, lookup=lookup,
         filters=filters,
     )
+
+
+match_bool_prefix_topk = _frame_api(_match_bool_prefix_topk)
 
 
 def _boosting_shard_topk(
@@ -2542,7 +2500,7 @@ def _boosting_shard_topk(
     return [(int(uniq[i]), float(scores[i])) for i in order]
 
 
-def bm25_boosting_topk(
+def _bm25_boosting_topk(
     reader: IndexReader,
     positive: str | list[str],
     negative: str | list[str],
@@ -2551,7 +2509,7 @@ def bm25_boosting_topk(
     execution: str = "auto",
     lookup: str = "auto",
     filters=(),
-) -> DataFrame:
+):
     """ES `boosting` query top-k: rank by the positive query's BM25 (OR
     over its analyzed terms, the frozen subset — ES allows any subquery),
     demoting docs that also match the negative query by multiplying
@@ -2559,15 +2517,6 @@ def bm25_boosting_topk(
     negative docs stay in the ranking — ES's 'relevance backoff' for
     disfavored-but-valid results. Adaptive local/Spark execution, pruned
     docmap lookup, tombstone-masked; ties doc_id asc."""
-    return _to_frame(reader.spark, _bm25_boosting_topk(
-        reader, positive, negative, negative_boost, k, execution, lookup,
-        filters,
-    ))
-
-
-def _bm25_boosting_topk(reader, positive, negative, negative_boost=0.5, k=10,
-                        execution="auto", lookup="auto", filters=()):
-    """bm25_boosting_topk's result form."""
     if not (0.0 <= negative_boost < 1.0):
         raise ValueError(f"negative_boost must be in [0, 1), got {negative_boost}")
 
@@ -2599,6 +2548,9 @@ def _bm25_boosting_topk(reader, positive, negative, negative_boost=0.5, k=10,
         FieldPostings(reader, all_terms, sum(stats[t] for t in all_terms)),
         run_kernel, k, lookup, execution,
     )
+
+
+bm25_boosting_topk = _frame_api(_bm25_boosting_topk)
 
 
 def bm25_topk_batch(
@@ -2902,14 +2854,14 @@ def _mlt_terms(reader: "IndexReader", like_text: str, max_query_terms: int) -> l
     return [t for t, _ in scored[:max_query_terms]]
 
 
-def mlt_multifield_topk(
+def _mlt_multifield_topk(
     reader: "IndexReader",
     like_text: str,
     fields: list,
     max_query_terms: int = 5,
     k: int = 10,
     filters=(),
-) -> DataFrame:
+):
     """ES `more_like_this` over SEVERAL fields (round-5 lift): candidate
     (field, term) pairs score ltf x that FIELD's BM25-idf (each field's
     own df/n_docs via its for_field view), the global top
@@ -2920,14 +2872,6 @@ def mlt_multifield_topk(
     and SUM per doc (blend_dismax tie_breaker=1). Selection is
     driver-side by the same contract as mlt_topk (the like text is ONE
     document; df lookups are pruned term_stats reads)."""
-    return _to_frame(reader.spark, _mlt_multifield_topk(
-        reader, like_text, fields, max_query_terms, k, filters,
-    ))
-
-
-def _mlt_multifield_topk(reader, like_text, fields, max_query_terms=5, k=10,
-                         filters=()):
-    """mlt_multifield_topk's result form."""
     import math
     from collections import Counter
 
@@ -2966,6 +2910,9 @@ def _mlt_multifield_topk(reader, like_text, fields, max_query_terms=5, k=10,
         for name, terms in by_field.items()
     ]
     return blend_dismax(legs, 1.0, k)
+
+
+mlt_multifield_topk = _frame_api(_mlt_multifield_topk)
 
 
 def percolate(
@@ -3869,7 +3816,7 @@ def _require_positions(reader: "IndexReader", what: str) -> None:
         )
 
 
-def match_phrase_topk(
+def _match_phrase_topk(
     reader: "IndexReader",
     phrase: str | list[str],
     k: int = 10,
@@ -3877,7 +3824,7 @@ def match_phrase_topk(
     execution: str = "auto",
     lookup: str = "auto",
     filters=(),
-) -> DataFrame:
+):
     """ES `match_phrase` top-k over a POSITIONAL index: (url, doc_id,
     score), score desc / doc_id asc.
 
@@ -3899,14 +3846,6 @@ def match_phrase_topk(
     pruned docmap lookup. Requires index_options="positions" (build_index;
     a freqs index raises ValueError — ES parity: a field indexed without
     positions rejects phrase queries)."""
-    return _to_frame(reader.spark, _match_phrase_topk(
-        reader, phrase, k, slop, execution, lookup, filters,
-    ))
-
-
-def _match_phrase_topk(reader, phrase, k=10, slop=0, execution="auto",
-                       lookup="auto", filters=()):
-    """match_phrase_topk's result form."""
     _require_positions(reader, "match_phrase")
     from engine.textnorm import standard_tokenize_py
 
@@ -3929,7 +3868,10 @@ def _match_phrase_topk(reader, phrase, k=10, slop=0, execution="auto",
     )
 
 
-def bm25_multifield_phrase_topk(
+match_phrase_topk = _frame_api(_match_phrase_topk)
+
+
+def _bm25_multifield_phrase_topk(
     reader: "IndexReader",
     phrase: str | list[str],
     fields: list,
@@ -3939,7 +3881,7 @@ def bm25_multifield_phrase_topk(
     filters=(),
     kind: str = "phrase",
     max_expansions: int = 50,
-) -> DataFrame:
+):
     """ES multi_match type=phrase / phrase_prefix / bool_prefix over
     SEVERAL indexed fields: per-field leg scores (each field's own
     postings, df, avgdl) blended dis_max — max + tie_breaker * rest
@@ -3956,16 +3898,6 @@ def bm25_multifield_phrase_topk(
     BEFORE top-k, so any tie_breaker is exact. Filter clauses ride every
     per-field leg (identical docvalue mask -> identical restriction).
     Shared docmap => per-field doc_ids coincide by construction."""
-    return _to_frame(reader.spark, _bm25_multifield_phrase_topk(
-        reader, phrase, fields, k, slop, tie_breaker, filters, kind,
-        max_expansions,
-    ))
-
-
-def _bm25_multifield_phrase_topk(reader, phrase, fields, k=10, slop=0,
-                                 tie_breaker=0.0, filters=(), kind="phrase",
-                                 max_expansions=50):
-    """bm25_multifield_phrase_topk's result form."""
     legs = []
     for name, boost in _mf_fields(reader, fields):
         r = reader if name == reader.field else reader.for_field(name)
@@ -3985,6 +3917,9 @@ def _bm25_multifield_phrase_topk(reader, phrase, fields, k=10, slop=0,
             raise ValueError(f"unknown multi-field phrase kind {kind!r}")
         legs.append([(u, d, sc * boost) for u, d, sc in _result_rows(leg)])
     return blend_dismax(legs, tie_breaker, k)
+
+
+bm25_multifield_phrase_topk = _frame_api(_bm25_multifield_phrase_topk)
 
 
 def blend_dismax(legs: list, tie_breaker: float, k: int):
@@ -4103,7 +4038,7 @@ def phrase_scored_matcher(reader: "IndexReader", phrase: str | list[str],
     return distinct, scored
 
 
-def match_phrase_prefix_topk(
+def _match_phrase_prefix_topk(
     reader: "IndexReader",
     phrase: str | list[str],
     k: int = 10,
@@ -4112,7 +4047,7 @@ def match_phrase_prefix_topk(
     execution: str = "auto",
     lookup: str = "auto",
     filters=(),
-) -> DataFrame:
+):
     """ES `match_phrase_prefix` top-k: the LAST slot matches every
     dictionary term with that prefix (df-ordered, capped at
     max_expansions — ES default 50), the earlier slots are exact.
@@ -4125,14 +4060,6 @@ def match_phrase_prefix_topk(
     oracle-expressible (`term LIKE 'pre%'` in SQL), and stable as the
     vocabulary grows. tf is the phrase frequency over the expanded last
     slot; everything else is the match_phrase model (slop supported)."""
-    return _to_frame(reader.spark, _match_phrase_prefix_topk(
-        reader, phrase, k, slop, max_expansions, execution, lookup, filters,
-    ))
-
-
-def _match_phrase_prefix_topk(reader, phrase, k=10, slop=0, max_expansions=50,
-                              execution="auto", lookup="auto", filters=()):
-    """match_phrase_prefix_topk's result form."""
     _require_positions(reader, "match_phrase_prefix")
     from engine.textnorm import standard_tokenize_py
 
@@ -4179,6 +4106,9 @@ def _match_phrase_prefix_topk(reader, phrase, k=10, slop=0, max_expansions=50,
         reader, slots, idf_sum, k, slop, sum(stats.get(t, 0) for t in fetch),
         execution, lookup, filters,
     )
+
+
+match_phrase_prefix_topk = _frame_api(_match_phrase_prefix_topk)
 
 
 def rescore_topk(

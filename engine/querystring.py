@@ -56,12 +56,12 @@ from engine.query import (
     IndexReader,
     _at_shard,
     _decode_live,
+    _frame_api,
     _phrase_freqs,
     _require_positions,
     _result_rows,
     _scatter_topk,
     _shard_filter,
-    _to_frame,
     _topk_order,
 )
 from engine.textnorm import standard_tokenize_py
@@ -238,7 +238,7 @@ def _sqs_shard_topk(
     return [(int(uniq[i]), float(scores[i])) for i in order]
 
 
-def simple_query_string_topk(
+def _simple_query_string_topk(
     reader: IndexReader,
     query: str,
     k: int = 10,
@@ -252,16 +252,6 @@ def simple_query_string_topk(
     the module docstring for the frozen grammar and scoring spec.
     filters: ES filter-context clauses (engine/docvalues.py), applied as
     the candidates-only docvalue mask after clause accumulation."""
-    return _to_frame(reader.spark, _simple_query_string_topk(
-        reader, query, k, default_operator, max_expansions, execution,
-        lookup, filters,
-    ))
-
-
-def _simple_query_string_topk(reader, query, k=10, default_operator="or",
-                              max_expansions=50, execution="auto",
-                              lookup="auto", filters=()):
-    """simple_query_string_topk's result form."""
     if default_operator not in ("or", "and"):
         raise ValueError(f"default_operator must be or/and, got {default_operator!r}")
     and_mode = default_operator == "and"
@@ -338,6 +328,9 @@ def _simple_query_string_topk(reader, query, k=10, default_operator="or",
         reader, distinct, sum(stats.get(t, 0) for t in distinct), needs_pos
     )
     return _scatter_topk(src, run_kernel, k, lookup, execution)
+
+
+simple_query_string_topk = _frame_api(_simple_query_string_topk)
 
 
 # ---------------------------------------------------------------------------
@@ -736,7 +729,7 @@ def _qs_shard_topk(
     return [(int(d[i]), float(s[i])) for i in order]
 
 
-def query_string_topk(
+def _query_string_topk(
     reader: IndexReader,
     query: str,
     k: int = 10,
@@ -751,16 +744,6 @@ def query_string_topk(
     Scale shape identical to simple_query_string_topk: dictionary
     rewrites + global idfs on the driver, one pruned postings read,
     per-shard numpy tree evaluation, only top-k rows collected."""
-    return _to_frame(reader.spark, _query_string_topk(
-        reader, query, k, default_operator, max_expansions, execution,
-        lookup, filters,
-    ))
-
-
-def _query_string_topk(reader, query, k=10, default_operator="or",
-                       max_expansions=50, execution="auto", lookup="auto",
-                       filters=()):
-    """query_string_topk's result form."""
     root = parse_query_string(query, default_operator)
     if root is None:
         return "rows", []
@@ -807,7 +790,10 @@ def _query_string_topk(reader, query, k=10, default_operator="or",
     return _scatter_topk(src, run_kernel, k, lookup, execution)
 
 
-def sqs_multifield_topk(
+query_string_topk = _frame_api(_query_string_topk)
+
+
+def _sqs_multifield_topk(
     reader: IndexReader,
     query: str,
     fields: list,
@@ -839,14 +825,6 @@ def sqs_multifield_topk(
     once per field; only the per-doc merge is driver-side, bounded by
     the union match set (the same bound the single-field OR kernel's
     accumulator carries per shard)."""
-    return _to_frame(reader.spark, _sqs_multifield_topk(
-        reader, query, fields, k, default_operator, max_expansions, filters,
-    ))
-
-
-def _sqs_multifield_topk(reader, query, fields, k=10, default_operator="or",
-                         max_expansions=50, filters=()):
-    """sqs_multifield_topk's result form."""
     from engine.query import _bm25_topk, _match_phrase_topk, parse_field_boosts
 
     if default_operator not in ("or", "and"):
@@ -920,7 +898,10 @@ def _sqs_multifield_topk(reader, query, fields, k=10, default_operator="or",
     return "rows", rows
 
 
-def qs_multifield_topk(
+sqs_multifield_topk = _frame_api(_sqs_multifield_topk)
+
+
+def _qs_multifield_topk(
     reader: IndexReader,
     query: str,
     fields: list,
@@ -948,15 +929,6 @@ def qs_multifield_topk(
     ride every leg. Scale shape: legs are the same pruned reads the
     single-field query does, once per field; the driver-side merge is
     bounded by the union match set."""
-    return _to_frame(reader.spark, _qs_multifield_topk(
-        reader, query, fields, k, default_operator, tie_breaker,
-        max_expansions, filters,
-    ))
-
-
-def _qs_multifield_topk(reader, query, fields, k=10, default_operator="or",
-                        tie_breaker=0.0, max_expansions=50, filters=()):
-    """qs_multifield_topk's result form."""
     from engine.query import _bm25_topk, _match_phrase_topk, parse_field_boosts
 
     root = parse_query_string(query, default_operator)
@@ -1099,3 +1071,6 @@ def _qs_multifield_topk(reader, query, fields, k=10, default_operator="or",
         key=lambda x: (-x[2], x[1]),
     )[:k]
     return "rows", rows
+
+
+qs_multifield_topk = _frame_api(_qs_multifield_topk)

@@ -69,12 +69,12 @@ import numpy as np
 from engine import postings as P
 from engine.query import (
     IndexReader,
+    _frame_api,
     _phrase_candidates,
     _phrase_score_rows,
     _positional_topk,
     _require_positions,
     _slot_occurrences,
-    _to_frame,
 )
 from engine.textnorm import standard_tokenize_py
 
@@ -238,7 +238,7 @@ def _span_first_shard_topk(
     )
 
 
-def span_near_topk(
+def _span_near_topk(
     reader: IndexReader,
     clauses,
     k: int = 10,
@@ -258,16 +258,6 @@ def span_near_topk(
     (span_not_topk is the named front-end). Defaults mirror ES's
     SpanNearQueryBuilder: slop=0, in_order=true. See the module
     docstring for the frozen span semantics."""
-    return _to_frame(reader.spark, _span_near_topk(
-        reader, clauses, k, slop, in_order, execution, lookup, exclude, pre,
-        post, filters,
-    ))
-
-
-def _span_near_topk(reader, clauses, k=10, slop=0, in_order=True,
-                    execution="auto", lookup="auto", exclude=None, pre=0,
-                    post=0, filters=()):
-    """span_near_topk's result form."""
     _require_positions(reader, "span_near")
     slots = _parse_clauses(clauses)
     if not slots:
@@ -301,6 +291,9 @@ def _span_near_topk(reader, clauses, k=10, slop=0, in_order=True,
     )
 
 
+span_near_topk = _frame_api(_span_near_topk)
+
+
 def _parse_clauses(clauses) -> list[list[str]]:
     """Clause spec -> slots: a str analyzes to one slot per token; a list
     mixes terms (str) and nested span_or alternative lists."""
@@ -318,7 +311,7 @@ def _parse_clauses(clauses) -> list[list[str]]:
     return slots
 
 
-def span_or_topk(
+def _span_or_topk(
     reader: IndexReader,
     alternatives: "list[str]",
     k: int = 10,
@@ -330,21 +323,16 @@ def span_or_topk(
     is a unit span (width 0, weight 1), so tf = the per-doc occurrence
     count over the alternative set and idf = the sum of the live
     alternatives' idfs — a one-slot span_near by construction."""
-    return _to_frame(reader.spark, _span_or_topk(
-        reader, alternatives, k, execution, lookup, filters,
-    ))
-
-
-def _span_or_topk(reader, alternatives, k=10, execution="auto", lookup="auto",
-                  filters=()):
-    """span_or_topk's result form."""
     return _span_near_topk(
         reader, [list(alternatives)], k=k, slop=0, in_order=False,
         execution=execution, lookup=lookup, filters=filters,
     )
 
 
-def span_not_topk(
+span_or_topk = _frame_api(_span_or_topk)
+
+
+def _span_not_topk(
     reader: IndexReader,
     include,
     exclude: "list[str]",
@@ -362,15 +350,6 @@ def span_not_topk(
     exclude-term occurrence falls inside [span_start - pre, span_end +
     post] (Lucene SpanNotQuery's dist window). Exclusion filters tf
     BEFORE scoring and never contributes to idf."""
-    return _to_frame(reader.spark, _span_not_topk(
-        reader, include, exclude, k, slop, in_order, pre, post, execution,
-        lookup, filters,
-    ))
-
-
-def _span_not_topk(reader, include, exclude, k=10, slop=0, in_order=True,
-                   pre=0, post=0, execution="auto", lookup="auto", filters=()):
-    """span_not_topk's result form."""
     return _span_near_topk(
         reader, include, k=k, slop=slop, in_order=in_order,
         exclude=list(exclude), pre=pre, post=post,
@@ -378,7 +357,10 @@ def _span_not_topk(reader, include, exclude, k=10, slop=0, in_order=True,
     )
 
 
-def span_first_topk(
+span_not_topk = _frame_api(_span_not_topk)
+
+
+def _span_first_topk(
     reader: IndexReader,
     term: str,
     end: int,
@@ -391,14 +373,6 @@ def span_first_topk(
     subset): occurrences of ``term`` whose span end (0-based position + 1)
     is <= ``end``; tf = the qualifying-occurrence count, idf = the term's
     idf — a head-of-document match amplifier."""
-    return _to_frame(reader.spark, _span_first_topk(
-        reader, term, end, k, execution, lookup, filters,
-    ))
-
-
-def _span_first_topk(reader, term, end, k=10, execution="auto", lookup="auto",
-                     filters=()):
-    """span_first_topk's result form."""
     _require_positions(reader, "span_first")
     if end < 1:
         return "rows", []
@@ -420,3 +394,6 @@ def _span_first_topk(reader, term, end, k=10, execution="auto", lookup="auto",
     return _positional_topk(
         reader, [t], kernel, stats[t], k, execution, lookup, filters
     )
+
+
+span_first_topk = _frame_api(_span_first_topk)

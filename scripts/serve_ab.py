@@ -31,6 +31,8 @@ import sys
 import tempfile
 import time
 
+BODIES_PER_ROUND = 48  # serve-mix bodies each side answers per round
+WARMUP_ROUNDS = 2  # leading rounds left out of the latencies
 
 def _engine_names() -> list[str]:
     return [m for m in sys.modules if m == "engine" or m.startswith("engine.")]
@@ -65,8 +67,6 @@ def main(argv=None) -> int:
     ap.add_argument("head")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--rounds", type=int, default=10)
-    ap.add_argument("--bodies", type=int, default=48, help="bodies per side per round")
-    ap.add_argument("--warmup", type=int, default=2, help="unrecorded rounds")
     args = ap.parse_args(argv)
     roots = {"base": os.path.abspath(args.base), "head": os.path.abspath(args.head)}
 
@@ -99,8 +99,8 @@ def main(argv=None) -> int:
 
         lat = {s: {} for s in sides}
         diffs = 0
-        for rnd in range(args.warmup + args.rounds):
-            bodies = [next(stream) for _ in range(args.bodies)]
+        for rnd in range(WARMUP_ROUNDS + args.rounds):
+            bodies = [next(stream) for _ in range(BODIES_PER_ROUND)]
             order = ["base", "head"] if rnd % 2 == 0 else ["head", "base"]
             got = {}
             for side in order:
@@ -112,11 +112,11 @@ def main(argv=None) -> int:
                     resp = search(readers[side], body)
                     dt = (time.perf_counter() - t0) * 1000.0
                     got[side].append([(h["_id"], h["_score"]) for h in resp["hits"]["hits"]])
-                    if rnd >= args.warmup:
+                    if rnd >= WARMUP_ROUNDS:
                         lat[side].setdefault(kind, []).append(dt)
             diffs += sum(a != b for a, b in zip(got["base"], got["head"]))
 
-        out = {"seed": args.seed, "rounds": args.rounds, "bodies": args.bodies, "differing": diffs}
+        out = {"seed": args.seed, "rounds": args.rounds, "bodies": BODIES_PER_ROUND, "differing": diffs}
         for side in sides:
             every = [x for xs in lat[side].values() for x in xs]
             out[side] = {
