@@ -285,7 +285,7 @@ def main() -> None:
         reader = IndexReader(spark, args.index, snapshot_id=args.snapshot)
         t0 = time.time()
         # serving-path API: no result-DataFrame round-trip (rank-identical
-        # to bm25_topk; falls back to the Spark plan for remote dirs)
+        # to bm25_topk)
         if args.mode == "dismax":
             from engine.query import bm25_dismax_topk
 

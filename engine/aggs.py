@@ -654,7 +654,7 @@ def pinned_topk(
 
     Cost shape: the pinned leg is an _mget point fetch; the organic leg
     over-fetches k + len(ids) so removals can never starve the page."""
-    from engine.query import bm25_topk, mget
+    from engine.query import bm25_topk_rows, mget
 
     ids = [str(v) for v in ids]
     found = {
@@ -675,11 +675,11 @@ def pinned_topk(
         (u, PINNED_BASE - i) for i, u in enumerate(ids) if u in found
     ][:k]
     organic_rows = [
-        (x["url"], float(x["score"]))
-        for x in bm25_topk(
+        (url, float(score))
+        for url, _doc_id, score in bm25_topk_rows(
             reader, organic, k=k + len(ids), mode=mode, filters=filters
-        ).collect()
-        if x["url"] not in found
+        )
+        if url not in found
     ]
     rows = pinned + organic_rows[: k - len(pinned)]
     return reader.spark.createDataFrame(rows, "url string, score double")
@@ -1732,28 +1732,16 @@ def collapse_topk(
     shards = sorted({int(s) for s in winners["shard"]})
     locals_ = sorted({int(l) for l in winners["local_id"]})
     urls = reader.docmap_lookup_local(shards, locals_)
-    if urls is not None:
-        out = pd.DataFrame(
-            {
-                "url": [urls[(int(s), int(l))] for s, l in
-                        zip(winners["shard"], winners["local_id"])],
-                "doc_id": winners["doc_id"].to_numpy(),
-                "score": winners["score"].to_numpy(),
-                "collapse_val": winners["v"].to_numpy(),
-            }
-        )
-        return spark.createDataFrame(out, out_schema)
-    win_df = spark.createDataFrame(
-        winners[["shard", "local_id", "doc_id", "score", "v"]],
-        f"shard int, local_id long, doc_id long, score double, v {vt}",
+    out = pd.DataFrame(
+        {
+            "url": [urls[(int(s), int(l))] for s, l in
+                    zip(winners["shard"], winners["local_id"])],
+            "doc_id": winners["doc_id"].to_numpy(),
+            "score": winners["score"].to_numpy(),
+            "collapse_val": winners["v"].to_numpy(),
+        }
     )
-    dm = reader.docmap_pruned(shards, locals_)
-    return (
-        dm.select("shard", "local_id", "url")
-        .join(F.broadcast(win_df), ["shard", "local_id"])
-        .select("url", "doc_id", "score", F.col("v").alias("collapse_val"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return spark.createDataFrame(out, out_schema)
 
 
 def sampler_terms(

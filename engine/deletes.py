@@ -163,14 +163,9 @@ def delete_docs(
     return len(rows)
 
 
-def load_tombstones(
-    index_dir: str,
-    spark: SparkSession | None = None,
-    as_of: int | None = None,
-) -> dict[int, np.ndarray]:
-    """{shard: sorted unique local_id int64 array}. Empty dict if the
-    index has no tombstones. Local dirs read via pyarrow (no Spark job);
-    a remote dir needs the spark fallback.
+def load_tombstones(index_dir: str, as_of: int | None = None) -> dict[int, np.ndarray]:
+    """{shard: sorted unique local_id int64 array}, read via pyarrow (no
+    Spark job). Empty dict if the index has no tombstones.
 
     as_of pins a snapshot (list_snapshots): only the tombstone files that
     snapshot recorded are read — time travel across delete batches with no
@@ -198,15 +193,8 @@ def load_tombstones(
         tbl = ds.dataset(p, format="parquet").to_table(columns=["shard", "local_id"])
         shards = np.asarray(tbl.column("shard"), dtype=np.int64)
         locals_ = np.asarray(tbl.column("local_id"), dtype=np.int64)
-    elif os.path.isdir(index_dir) or spark is None:
-        return {}  # local index with no tombstones (or nothing to probe with)
     else:
-        try:  # remote index dir: probe through Spark
-            rows = spark.read.parquet(p).select("shard", "local_id").collect()
-        except Exception:
-            return {}
-        shards = np.array([r["shard"] for r in rows], dtype=np.int64)
-        locals_ = np.array([r["local_id"] for r in rows], dtype=np.int64)
+        return {}  # no delete batch yet
     out: dict[int, np.ndarray] = {}
     for s in np.unique(shards):
         out[int(s)] = np.unique(locals_[shards == s])

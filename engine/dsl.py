@@ -457,6 +457,25 @@ def _hits_df(reader, query: dict, k: int, filters: tuple):
     return None if result is None else _to_frame(reader.spark, result)
 
 
+_DOCMAP_KINDS = (
+    "constant_score", "ids", "rank_feature", "distance_feature", "exists",
+    "range", "pinned",
+)
+
+
+def _docmap_kind(reader, query: dict) -> str | None:
+    """The kind of a query _hits serves from an aggs.py docmap kernel
+    (a ("df", (url, score)) result), else None."""
+    for kind in _DOCMAP_KINDS:
+        if kind in query:
+            return kind
+    if "term" in query and next(iter(query["term"])) not in reader.text_fields:
+        return "term"
+    if "terms" in query and _terms_field(query["terms"])[0] not in reader.text_fields:
+        return "terms"
+    return None
+
+
 def _hits(reader, query: dict, k: int, filters: tuple):
     """Compile + run the scoring query -> its top-k result: the kernels'
     ("rows", [(url, doc_id, score)]) or ("df", DataFrame) — the aggs.py
@@ -1077,6 +1096,13 @@ def _hits(reader, query: dict, k: int, filters: tuple):
                 "dis_max does not compose a match_all leg (a "
                 "constant-score leg over the whole corpus)"
             )
+        for leg in legs:
+            kind = _docmap_kind(reader, _unwrap(leg))
+            if kind is not None:
+                raise ValueError(
+                    f"dis_max does not compose a {kind} leg (a docmap "
+                    "kernel's rows carry no doc_id to blend on)"
+                )
         return blend_dismax(
             [_result_rows(_hits(reader, leg, 1 << 31, filters)) for leg in legs],
             tb, k,
@@ -2230,22 +2256,22 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
             # filter context the page used rides along so inner hits
             # honor bool filters / post_filter like the representatives)
             from engine.docvalues import TermFilter
-            from engine.query import bm25_topk
+            from engine.query import bm25_topk_rows
 
             ih_name = ih.get("name", "inner")
             ih_size = int(ih.get("size", 3))
             for h, row_ in zip(hits, rows):
-                sub = bm25_topk(
+                sub = bm25_topk_rows(
                     creader, terms, k=ih_size, mode=mode,
                     filters=filt + filters
                     + (TermFilter(fld, row_["collapse_val"]),),
-                ).collect()
+                )
                 h["inner_hits"] = {ih_name: {"hits": {
                     "total": {"value": len(sub), "relation": "gte"
                               if len(sub) == ih_size else "eq"},
                     "hits": [
-                        {"_id": x["url"], "_score": x["score"]}
-                        for x in sub
+                        {"_id": url, "_score": score}
+                        for url, _doc_id, score in sub
                     ],
                 }}}
     elif body.get("rescore"):

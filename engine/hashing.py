@@ -85,3 +85,10 @@ def xxh64_signed(data: bytes, seed: int = SPARK_SEED) -> int:
 def term_bucket(term: str, n_buckets: int, seed: int = SPARK_SEED) -> int:
     """pmod(xxhash64(term), n_buckets) exactly as the build computes it."""
     return xxh64_signed(term.encode("utf-8"), seed) % n_buckets
+
+
+def doc_shard(url: str, n_shards: int) -> int:
+    """pmod(xxhash64(url), n_shards): the doc shard the build assigned
+    (index_build.assign_doc_ids). The signed hash matters whenever
+    n_shards is not a power of two."""
+    return xxh64_signed(url.encode("utf-8")) % n_shards

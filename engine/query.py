@@ -167,7 +167,7 @@ class IndexReader:
         if self._tomb is None:
             from engine.deletes import load_tombstones
 
-            self._tomb = load_tombstones(self.dir, self.spark, as_of=self.snapshot_id)
+            self._tomb = load_tombstones(self.dir, as_of=self.snapshot_id)
         return self._tomb
 
     def _term_stats_df(self) -> DataFrame:
@@ -187,58 +187,43 @@ class IndexReader:
         return sorted({term_bucket(t, self.n_buckets) for t in terms})
 
     def term_stats(self, terms: list[str]) -> dict[str, int]:
-        """Global df per term — bucket-pruned + term-pushdown read.
-
-        On a local index dir this is a driver-side pyarrow dataset read
-        (|q| bucket directories, term predicate into row groups) — no
-        Spark job for a handful of dictionary rows; the Spark scan remains
-        the fallback for remote dirs."""
+        """Global df per term — a driver-side pyarrow dataset read (|q|
+        bucket directories, term predicate into row groups): no Spark job
+        for a handful of dictionary rows."""
         if not terms:
             return {}
         if self._ts_cache is not None:
             self._check_generation()
             return {t: self._ts_cache[t] for t in terms if t in self._ts_cache}
-        buckets = self._bucket_of(terms)
-        p = os.path.join(self.dir, self._ts_sub)
-        if os.path.isdir(p):
-            import pyarrow.dataset as ds
+        import pyarrow.dataset as ds
 
-            if self.n_docs <= self.CACHE_MAX_DOCS:
-                # small index: load the whole dictionary once (vocab grows
-                # ~ docs^0.5-0.7, Heaps' law — a few MB here); per-query
-                # lookups become dict hits. Above the gate the bucket-pruned
-                # + term-pushdown read IS the scale path.
-                tbl = self._pa_dataset(self._ts_sub).to_table(columns=["term", "df"])
-                self._ts_cache = dict(
-                    zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist())
-                )
-                return {t: self._ts_cache[t] for t in terms if t in self._ts_cache}
-            tbl = self._pa_dataset(self._ts_sub).to_table(
-                filter=ds.field("bucket").isin(buckets) & ds.field("term").isin(terms),
-                columns=["term", "df"],
-            )
-            return dict(
+        if self.n_docs <= self.CACHE_MAX_DOCS:
+            # small index: load the whole dictionary once (vocab grows
+            # ~ docs^0.5-0.7, Heaps' law — a few MB here); per-query
+            # lookups become dict hits. Above the gate the bucket-pruned
+            # + term-pushdown read IS the scale path.
+            tbl = self._pa_dataset(self._ts_sub).to_table(columns=["term", "df"])
+            self._ts_cache = dict(
                 zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist())
             )
-        ts = self._term_stats_df()
-        rows = (
-            ts.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-            .select("term", "df")
-            .collect()
+            return {t: self._ts_cache[t] for t in terms if t in self._ts_cache}
+        tbl = self._pa_dataset(self._ts_sub).to_table(
+            filter=ds.field("bucket").isin(self._bucket_of(terms))
+            & ds.field("term").isin(terms),
+            columns=["term", "df"],
         )
-        return {r["term"]: r["df"] for r in rows}
+        return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
 
     def expand_prefix(self, prefix: str, max_expansions: int = 128) -> list[str]:
         """Prefix rewrite against the term dictionary (scoring_boolean).
 
         Bounded like Lucene's top_terms_N rewrite: at most max_expansions
         terms, highest-df first (a 1-char prefix over a web-scale vocabulary
-        must not collect the whole dictionary to the driver). Local index
-        dirs are served by a driver-side pyarrow range read (term_stats is
+        must not collect the whole dictionary to the driver). A prefix is
+        served by a driver-side pyarrow range read (term_stats is
         term-sorted within buckets, so [prefix, prefix+1) prunes row
-        groups); the Spark scan remains the remote-dir fallback."""
-        p = os.path.join(self.dir, self._ts_sub)
-        if prefix and os.path.isdir(p):
+        groups); the empty prefix takes the Spark dictionary scan."""
+        if prefix:
             import pyarrow.dataset as ds
 
             hi = prefix[:-1] + chr(ord(prefix[-1]) + 1)
@@ -340,8 +325,7 @@ class IndexReader:
             pairs = [(t, d) for t, d in self._ts_cache.items() if match_py(t)]
             pairs.sort(key=lambda x: (-x[1], x[0]))
             return [t for t, _ in pairs[:max_expansions]]
-        p = os.path.join(self.dir, self._ts_sub)
-        if prefix_lit and os.path.isdir(p):
+        if prefix_lit:
             import pyarrow.dataset as ds
 
             hi = prefix_lit[:-1] + chr(ord(prefix_lit[-1]) + 1)
@@ -416,11 +400,6 @@ class IndexReader:
             max_expansions,
         )
 
-    def postings(self, terms: list[str]) -> DataFrame:
-        buckets = self._bucket_of(terms)
-        post = self.spark.read.parquet(os.path.join(self.dir, self._post_sub))
-        return post.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-
     def docmap(self) -> DataFrame:
         self._check_generation()
         if self._dm_df is None:
@@ -439,7 +418,7 @@ class IndexReader:
 
     def postings_local(self, terms: list[str]):
         """Driver-side postings read for a small query, {shard: [_PostRow,
-        ...]}, or None when the postings aren't a local directory."""
+        ...]}."""
         return self._local_read(terms, False)
 
     def postings_pos_local(self, terms: list[str]):
@@ -449,8 +428,6 @@ class IndexReader:
     def _local_read(self, terms: list[str], needs_pos: bool):
         """_read_postings over the terms' bucket directories (hive
         partition pruning + term row-group pushdown)."""
-        if not os.path.isdir(os.path.join(self.dir, self._post_sub)):
-            return None
         import pyarrow.dataset as ds
 
         return _read_postings(
@@ -461,15 +438,12 @@ class IndexReader:
 
     def docmap_lookup_local(
         self, shards: list[int], local_ids: list[int]
-    ) -> "dict[tuple[int, int], str] | None":
-        """Driver-side url lookup for a handful of winner rows: a pyarrow
-        dataset read with shard (hive partition) + local_id filters — the
-        same directory/row-group pruning as docmap_pruned, WITHOUT paying a
-        Spark job launch for k rows. Returns None when the docmap isn't a
-        local directory (caller falls back to the Spark path)."""
-        p = os.path.join(self.dir, "docmap")
-        if not os.path.isdir(p):
-            return None
+    ) -> dict[tuple[int, int], str]:
+        """Driver-side url lookup for a handful of winner rows, {(shard,
+        local_id): url}: a pyarrow dataset read with shard (hive
+        partition) + local_id filters — directory pruning on shard,
+        row-group pruning on local_id (the docmap is local_id-sorted within
+        each shard) — with no Spark job for k rows."""
         import pyarrow.dataset as ds
 
         self._check_generation()
@@ -512,17 +486,6 @@ class IndexReader:
             )
         }
 
-    def docmap_pruned(self, shards: list[int], local_ids: list[int]) -> DataFrame:
-        """Docmap read restricted to the winner rows: shard isin -> parquet
-        PartitionFilters (shard is the partition key, directory pruning);
-        local_id isin -> row-group pruning (docmap is local_id-sorted within
-        each shard, so min/max stats skip non-matching groups). At 10^12
-        docs this touches <= |shards| directories instead of the table."""
-        return self.docmap().filter(
-            F.col("shard").isin([int(s) for s in shards])
-            & F.col("local_id").isin([int(l) for l in local_ids])
-        )
-
     def stored_source_df(self) -> DataFrame:
         """The stored `_source` columns as a (url, <col>, ...) DataFrame —
         the ES stored-fields analog (build_index(store_source=...) keeps
@@ -545,48 +508,33 @@ class IndexReader:
         """Driver-side stored-source point fetch for a handful of hit
         urls: XXH64 shard routing + ONE pruned pyarrow read per touched
         shard (url isin pushdown), the same cost shape as mget — never a
-        docmap scan. Returns {url: {col: value}} for found urls. Falls
-        back to a pushed-predicate Spark filter on remote dirs."""
+        docmap scan. Returns {url: {col: value}} for found urls."""
         if not self.stored_cols:
             raise ValueError("index stores no source columns")
         if not urls:
             return {}
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        from engine.hashing import doc_shard
+
+        self._check_generation()
         phys = [f"src__{c}" for c in self.stored_cols]
-        dm_dir = os.path.join(self.dir, "docmap")
+        n_shards = self.manifest["n_shards"]
+        by_shard: dict[int, list[str]] = {}
+        for u in urls:
+            by_shard.setdefault(doc_shard(u, n_shards), []).append(u)
         out: dict[str, dict] = {}
-        if os.path.isdir(dm_dir):
-            import pyarrow.compute as pc
-            import pyarrow.dataset as ds
-
-            from engine.hashing import xxh64
-
-            self._check_generation()
-            n_shards = self.manifest["n_shards"]
-            by_shard: dict[int, list[str]] = {}
-            for u in urls:
-                by_shard.setdefault(xxh64(u.encode()) % n_shards, []).append(u)
-            for shard, us in by_shard.items():
-                part = os.path.join(dm_dir, f"shard={shard}")
-                if not os.path.isdir(part):
-                    continue
-                tbl = ds.dataset(part).to_table(
-                    columns=["url"] + phys, filter=pc.field("url").isin(us)
-                )
-                for row in tbl.to_pylist():
-                    out[row["url"]] = {
-                        c: row[p] for c, p in zip(self.stored_cols, phys)
-                    }
-            return out
-        rows = (
-            self.docmap()
-            .filter(F.col("url").isin(list(urls)))
-            .select("url", *phys)
-            .collect()
-        )
-        return {
-            r["url"]: {c: r[p] for c, p in zip(self.stored_cols, phys)}
-            for r in rows
-        }
+        for shard, us in by_shard.items():
+            part = os.path.join(self.dir, "docmap", f"shard={shard}")
+            if not os.path.isdir(part):  # an empty shard has no partition
+                continue
+            tbl = ds.dataset(part).to_table(
+                columns=["url"] + phys, filter=pc.field("url").isin(us)
+            )
+            for row in tbl.to_pylist():
+                out[row["url"]] = {c: row[p] for c, p in zip(self.stored_cols, phys)}
+        return out
 
     def shard_offsets(self) -> list[int]:
         """Global doc_id offset per shard (doc_id = offset + local_id).
@@ -1229,7 +1177,6 @@ def _bm25_topk(
     mode: str = "or",
     algo: str = "wand",
     field_opts: str = "default",
-    lookup: str = "auto",
     execution: str = "auto",
     filters=(),
     stats_override=None,
@@ -1246,17 +1193,13 @@ def _bm25_topk(
     dictionary, not analyzed) — all rewrites are df-ordered and bounded.
     field_opts: "default" | "nonorms" (M1) | "doconly" (M2) scoring
     variants per the reference's per-field index options.
-    lookup: how the k winner urls are fetched from the docmap — "local"
-    (driver-side pyarrow filtered read, zero extra Spark jobs; the latency
-    path), "spark" (pruned distributed scan; the plan-auditable path the
-    batch API also uses), "auto" = local when the docmap dir is local.
     execution: where the per-shard kernels run — "spark" (one Spark task
     per shard; the 10^12-doc path), "local" (driver-side pyarrow
     postings read + in-process kernels; the Lucene-searcher-style serving
-    path, ~ms instead of a job launch), "auto" = local when the index dir
-    is local AND the query's total posting count (known exactly from the
-    dictionary dfs) fits LOCAL_MAX_POSTINGS. All paths are rank-identical
-    (same kernels, same bytes).
+    path, ~ms instead of a job launch), "auto" = local when the query's
+    total postings (known exactly from the dictionary dfs) fit
+    LOCAL_MAX_POSTINGS. All paths are rank-identical (same kernels, same
+    bytes).
 
     filters: ES filter-context clauses (engine/docvalues.py TermFilter /
     RangeFilter / ExistsFilter over docvalues, conjunctive) restricting
@@ -1349,7 +1292,7 @@ def _bm25_topk(
 
     return _scatter_topk(
         FieldPostings(reader, terms, sum(stats[t] for t in terms)),
-        run_kernel, k, lookup, execution,
+        run_kernel, k, execution,
     )
 
 
@@ -1377,13 +1320,8 @@ def bm25_topk_rows(
     ))
 
 
-_PATHS = ("auto", "local", "spark")  # the execution / lookup values
+_PATHS = ("auto", "local", "spark")  # the execution values
 _HEAP_SCHEMA = "shard int, local_id long, score double"
-
-
-def _check_lookup(lookup: str) -> None:
-    if lookup not in _PATHS:
-        raise ValueError(f"unknown lookup {lookup!r}: expected one of {_PATHS}")
 
 
 def _runs_local(reader: IndexReader, execution: str, total_postings: int) -> bool:
@@ -1423,8 +1361,7 @@ class FieldPostings:
         self.needs_pos = needs_pos
 
     def local(self):
-        """{shard: [row, ...]}, or None when the postings aren't a local
-        directory."""
+        """{shard: [row, ...]}: the driver-side read."""
         r = self.reader
         if self.needs_pos:
             return r.postings_pos_local(self.terms)
@@ -1461,7 +1398,6 @@ def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
     Returns the driver-local path's [(shard, output), ...], or the Spark
     DataFrame of `schema` whose per-shard parts are frame(shard, output)
     (default: the output is already a pandas frame; None = no rows).
-    execution="local" on postings that aren't a local directory raises.
 
     Users: _scatter_topk (every top-k query, multi-field included),
     rescore_topk's phrase pass, match_phrase_prefix_topk's union-df
@@ -1473,21 +1409,17 @@ def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
     reader = src.reader
     tomb = reader.tombstones()  # {} on an index with no deletes
     if _runs_local(reader, execution, src.total_postings):
-        by_shard = src.local()
-        if by_shard is not None:
-            # NOTE: thread-pooling the per-shard kernels was measured 4-5x
-            # SLOWER here (interleaved A/B, head-term query: 113 ms
-            # sequential vs 522 ms with an 8-thread pool) — the kernel's
-            # Python-side control flow serializes on the GIL and thrashes.
-            # Kernel-bound queries belong on the Spark path
-            # (execution="spark" / above LOCAL_MAX_POSTINGS), which
-            # parallelizes across real worker processes.
-            return [
-                (shard, shard_fn(rows, tomb.get(shard), shard))
-                for shard, rows in by_shard.items()
-            ]
-        if execution == "local":
-            raise ValueError("execution='local' needs a local postings directory")
+        # NOTE: thread-pooling the per-shard kernels was measured 4-5x
+        # SLOWER here (interleaved A/B, head-term query: 113 ms
+        # sequential vs 522 ms with an 8-thread pool) — the kernel's
+        # Python-side control flow serializes on the GIL and thrashes.
+        # Kernel-bound queries belong on the Spark path
+        # (execution="spark" / above LOCAL_MAX_POSTINGS), which
+        # parallelizes across real worker processes.
+        return [
+            (shard, shard_fn(rows, tomb.get(shard), shard))
+            for shard, rows in src.local().items()
+        ]
 
     read, frame = src.shard_read(), frame or (lambda _shard, out: out)
 
@@ -1512,11 +1444,11 @@ def _heap_rows(out) -> list[tuple[int, int, float]]:
     return [(r["shard"], r["local_id"], r["score"]) for r in out.collect()]
 
 
-def _scatter_topk(src, run_kernel, k: int, lookup: str, execution: str):
+def _scatter_topk(src, run_kernel, k: int, execution: str):
     """Top-k over _scatter: run_kernel(rows, dels, shard) -> the shard's
     top-k [(local_id, score)] over the postings source src's rows. The
-    heaps go through _finalize_topk (global top-k + pruned docmap url
-    lookup), whose ("rows" | "df", payload) result this returns.
+    heaps go through _finalize_topk (global top-k + url lookup), whose
+    ("rows", [(url, doc_id, score)]) result this returns.
 
     That result is the internal currency up to the API edge: each public
     *_topk is its private result form through _frame_api (bm25_topk =
@@ -1531,24 +1463,16 @@ def _scatter_topk(src, run_kernel, k: int, lookup: str, execution: str):
     (match_phrase_topk, match_phrase_prefix_topk, the span queries), the
     querystring kernels (simple_query_string_topk, query_string_topk)
     and, over a MultiFieldPostings source, bm25_multifield_topk."""
-    _check_lookup(lookup)
     out = _scatter(src, run_kernel, _HEAP_SCHEMA, execution, _heap_frame)
-    # urls come from a PRUNED docmap read instead of broadcast-joining
-    # the heaps against every docmap row (the 10^12-doc scan this
-    # replaces)
-    return _finalize_topk(src.reader, _heap_rows(out), k, lookup)
+    return _finalize_topk(src.reader, _heap_rows(out), k)
 
 
-def _finalize_topk(
-    reader: IndexReader, heap_rows: list[tuple[int, int, float]], k: int, lookup: str
-):
+def _finalize_topk(reader: IndexReader, heap_rows: list[tuple[int, int, float]], k: int):
     """Shared winner-selection tail: per-shard heap rows -> global top-k
-    (doc_id = shard offset + local_id) -> urls from a PRUNED docmap read
-    (local pyarrow when the dir is local, broadcast-joined Spark plan
-    otherwise) — never a full docmap scan. Returns the top-k result:
-    ("rows", [(url, doc_id, score)]) from the local read (("rows", [])
-    when nothing matched), else ("df", the joined DataFrame)."""
-    spark = reader.spark
+    (doc_id = shard offset + local_id) -> urls from docmap_lookup_local
+    (the winners' pruned docmap read, never a full docmap scan). Returns
+    the top-k result ("rows", [(url, doc_id, score)]) (("rows", []) when
+    nothing matched)."""
     if not heap_rows:
         return "rows", []
     offsets = reader.shard_offsets()
@@ -1556,24 +1480,10 @@ def _finalize_topk(
         ((s, l, offsets[s] + l, sc) for s, l, sc in heap_rows),
         key=lambda t: (-t[3], t[2]),
     )[:k]
-    shards = sorted({t[0] for t in winners})
-    locals_ = sorted({t[1] for t in winners})
-    urls = (
-        reader.docmap_lookup_local(shards, locals_) if lookup in ("auto", "local") else None
+    urls = reader.docmap_lookup_local(
+        sorted({t[0] for t in winners}), sorted({t[1] for t in winners})
     )
-    if urls is not None:
-        return "rows", [(urls[(s, l)], d, sc) for s, l, d, sc in winners]
-    win_df = spark.createDataFrame(
-        pd.DataFrame(winners, columns=["shard", "local_id", "doc_id", "score"]),
-        "shard int, local_id long, doc_id long, score double",
-    )
-    dm = reader.docmap_pruned(shards, locals_)
-    return "df", (
-        dm.select("shard", "local_id", "url")
-        .join(F.broadcast(win_df), ["shard", "local_id"])
-        .select("url", "doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return "rows", [(urls[(s, l)], d, sc) for s, l, d, sc in winners]
 
 
 def _empty_topk(spark) -> DataFrame:
@@ -1633,7 +1543,6 @@ def _positional_topk(
     total_postings: int,
     k: int,
     execution: str,
-    lookup: str,
     filters=(),
 ):
     """Executor front for the positional kernels (match_phrase and the
@@ -1662,7 +1571,7 @@ def _positional_topk(
 
     return _scatter_topk(
         FieldPostings(reader, terms, total_postings, needs_pos=True),
-        run_kernel, k, lookup, execution,
+        run_kernel, k, execution,
     )
 
 
@@ -1673,7 +1582,6 @@ def _bm25_dismax_topk(
     tie_breaker: float = 0.3,
     fields: tuple[str, ...] = ("default", "nonorms", "doconly"),
     execution: str = "auto",
-    lookup: str = "auto",
 ):
     """Multi-field dis_max top-k (url, doc_id, score) over the real index.
 
@@ -1701,7 +1609,7 @@ def _bm25_dismax_topk(
 
     return _scatter_topk(
         FieldPostings(reader, terms, sum(stats[t] for t in terms)),
-        run_kernel, k, lookup, execution,
+        run_kernel, k, execution,
     )
 
 
@@ -1789,15 +1697,11 @@ class MultiFieldPostings:
         self.total_postings = sum(p.total_postings for p in self.parts.values())
 
     def local(self):
-        """{shard: [row, ...]} with rows carrying .field, or None when the
-        postings aren't a local directory (caller takes the Spark path)."""
+        """{shard: [row, ...]} with rows carrying .field."""
         row = _MfPosRow if self.needs_pos else _MfRow
         merged: dict[int, list] = {}
         for f, p in self.parts.items():
-            by = p.local()
-            if by is None:
-                return None
-            for shard, rows in by.items():
+            for shard, rows in p.local().items():
                 merged.setdefault(shard, []).extend(row(f, *x) for x in rows)
         return merged
 
@@ -2029,7 +1933,6 @@ def _bm25_multifield_topk(
     mtype: str = "best_fields",
     tie_breaker: float = 0.0,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
     operator: str = "or",
     minimum_should_match: int | None = None,
@@ -2119,7 +2022,7 @@ def _bm25_multifield_topk(
             _at_shard(shard_filter, shard), n_required,
         )
 
-    return _scatter_topk(src, run_kernel, k, lookup, execution)
+    return _scatter_topk(src, run_kernel, k, execution)
 
 
 bm25_multifield_topk = _frame_api(_bm25_multifield_topk)
@@ -2131,7 +2034,6 @@ def _bm25_synonym_topk(
     k: int = 10,
     mode: str = "or",
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """Search-time synonym expansion with Lucene SynonymQuery scoring —
@@ -2214,7 +2116,7 @@ def _bm25_synonym_topk(
 
     return _scatter_topk(
         FieldPostings(reader, terms, sum(stats[t] for t in terms)),
-        run_kernel, k, lookup, execution,
+        run_kernel, k, execution,
     )
 
 
@@ -2230,7 +2132,6 @@ def _bm25_bool_topk(
     minimum_should_match: int | None = None,
     field_opts: str = "default",
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES-style bool query top-k (url, doc_id, score) over the real index.
@@ -2290,7 +2191,7 @@ def _bm25_bool_topk(
     all_terms = scoring + not_terms
     return _scatter_topk(
         FieldPostings(reader, all_terms, sum(stats[t] for t in all_terms)),
-        run_kernel, k, lookup, execution,
+        run_kernel, k, execution,
     )
 
 
@@ -2363,7 +2264,6 @@ def _terms_set_topk(
     minimum_should_match_field: str,
     k: int = 10,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES terms_set query top-k (url, doc_id, score): docs containing at
@@ -2409,7 +2309,7 @@ def _terms_set_topk(
 
     return _scatter_topk(
         FieldPostings(reader, present, sum(stats[t] for t in present)),
-        run_kernel, k, lookup, execution,
+        run_kernel, k, execution,
     )
 
 
@@ -2422,7 +2322,6 @@ def _match_bool_prefix_topk(
     k: int = 10,
     max_expansions: int = 128,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES match_bool_prefix query top-k: analyze the text; every token
@@ -2443,7 +2342,7 @@ def _match_bool_prefix_topk(
     if not terms:
         return "rows", []
     return _bm25_topk(
-        reader, terms, k=k, mode="or", execution=execution, lookup=lookup,
+        reader, terms, k=k, mode="or", execution=execution,
         filters=filters,
     )
 
@@ -2507,7 +2406,6 @@ def _bm25_boosting_topk(
     negative_boost: float = 0.5,
     k: int = 10,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES `boosting` query top-k: rank by the positive query's BM25 (OR
@@ -2546,7 +2444,7 @@ def _bm25_boosting_topk(
     all_terms = pos_terms + neg_terms
     return _scatter_topk(
         FieldPostings(reader, all_terms, sum(stats[t] for t in all_terms)),
-        run_kernel, k, lookup, execution,
+        run_kernel, k, execution,
     )
 
 
@@ -2666,22 +2564,8 @@ def bm25_topk_batch(
     shards = sorted(set(shard.tolist()))
     locals_ = sorted(set(lid.tolist()))
     urls = reader.docmap_lookup_local(shards, locals_)
-    if urls is not None:
-        url = np.array([urls[sl] for sl in zip(shard.tolist(), lid.tolist())], dtype=object)
-        return _batch_frame(spark, pd.DataFrame({"query_id": qid, "url": url[idx], **tail}))
-    # docmap not a local directory: the pruned Spark read, as in
-    # _finalize_topk
-    win_df = spark.createDataFrame(
-        pd.DataFrame({"shard": shard[idx].astype(np.int32), "local_id": lid[idx],
-                      "query_id": qid, **tail}),
-        "shard int, local_id long, query_id long, doc_id long, score double, rank int",
-    )
-    return (
-        reader.docmap_pruned(shards, locals_)
-        .select("shard", "local_id", "url")
-        .join(F.broadcast(win_df), ["shard", "local_id"])
-        .select("query_id", "url", "doc_id", "score", "rank")
-    )
+    url = np.array([urls[sl] for sl in zip(shard.tolist(), lid.tolist())], dtype=object)
+    return _batch_frame(spark, pd.DataFrame({"query_id": qid, "url": url[idx], **tail}))
 
 
 def _batch_frame(spark, res: pd.DataFrame | None) -> DataFrame:
@@ -3039,14 +2923,14 @@ def explain_rows(
 ) -> "list[tuple]":
     """explain_score's engine core: the same per-term breakdown as plain
     tuples, no result-DataFrame round-trip — the serving-path form that
-    `search(..., explain=true)` calls once per hit (local-dir postings
-    make each call a pyarrow point read)."""
+    `search(..., explain=true)` calls once per hit (each call is a
+    pyarrow point read)."""
     import math
 
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    from engine.hashing import xxh64
+    from engine.hashing import doc_shard
     from engine.oracle import analyze_query_py
 
     terms = (
@@ -3055,7 +2939,7 @@ def explain_rows(
     )
     stats = reader.term_stats(terms)
     live = [t for t in terms if t in stats]
-    shard = xxh64(url.encode()) % reader.manifest["n_shards"]
+    shard = doc_shard(url, reader.manifest["n_shards"])
     dm = ds.dataset(
         os.path.join(reader.dir, "docmap", f"shard={shard}")
     ).to_table(columns=["local_id", "dl"], filter=pc.field("url") == url)
@@ -3071,13 +2955,7 @@ def explain_rows(
     if not live:
         return []
 
-    by_shard = reader.postings_local(live)
-    if by_shard is not None:
-        rows = by_shard.get(shard, [])
-    else:  # non-local postings: one tiny pruned Spark read — the shard
-        # predicate is pushed into the parquet scan (PushedFilters), so a
-        # head term never pulls other shards' posting rows to the driver.
-        rows = reader.postings(live).filter(F.col("shard") == shard).collect()
+    rows = reader.postings_local(live).get(shard, [])
     n, avgdl, k1, b = (
         float(reader.n_docs),
         float(reader.avgdl),
@@ -3182,39 +3060,27 @@ def suggest_complete(
     (the engine has no per-suggestion weights field; document frequency
     is the popularity signal, same ordering ES uses when weights tie).
 
-    Serving: local index dirs read term_stats with a [prefix, prefix+1)
-    pyarrow range filter (term-sorted row groups prune — the same pruned
-    read expand_prefix uses, FST-like in cost: never the whole
-    dictionary); remote dirs fall back to a range-pruned Spark scan."""
+    Serving: term_stats read with a [prefix, prefix+1) pyarrow range
+    filter (term-sorted row groups prune — the same pruned read
+    expand_prefix uses, FST-like in cost: never the whole dictionary)."""
+    import pyarrow.dataset as ds
+
     p = prefix.lower()
     schema = "suggestion string, weight long"
     if not p:
         return reader.spark.createDataFrame([], schema)
     hi = p[:-1] + chr(ord(p[-1]) + 1)
-    ts_dir = os.path.join(reader.dir, reader._ts_sub)
-    if os.path.isdir(ts_dir):
-        import pyarrow.dataset as ds
-
-        tbl = reader._pa_dataset(reader._ts_sub).to_table(
-            filter=(ds.field("term") >= p) & (ds.field("term") < hi),
-            columns=["term", "df"],
-        )
-        pairs = [
-            (t, int(d))
-            for t, d in zip(
-                tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
-            )
-            if t.startswith(p)
-        ]
-        pairs.sort(key=lambda x: (-x[1], x[0]))
-        return reader.spark.createDataFrame(pairs[:size], schema)
-    return (
-        reader._term_stats_df()
-        .filter((F.col("term") >= p) & (F.col("term") < hi))
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(size)
-        .select(F.col("term").alias("suggestion"), F.col("df").alias("weight"))
+    tbl = reader._pa_dataset(reader._ts_sub).to_table(
+        filter=(ds.field("term") >= p) & (ds.field("term") < hi),
+        columns=["term", "df"],
     )
+    pairs = [
+        (t, int(d))
+        for t, d in zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist())
+        if t.startswith(p)
+    ]
+    pairs.sort(key=lambda x: (-x[1], x[0]))
+    return reader.spark.createDataFrame(pairs[:size], schema)
 
 
 def suggest_phrase(
@@ -3296,15 +3162,14 @@ def mget(
     found). doc_id is the engine-internal global ordinal (shard offset +
     local id), null when not found.
 
-    Cost shape: driver-side XXH64 shard routing groups the ids by shard;
-    local index dirs serve each touched shard with ONE pruned pyarrow
-    read carrying an `isin` url predicate (row-group pruning, no Spark
-    job); remote dirs fall back to a docmap scan with the same pushed
-    predicate — never a full corpus materialization."""
+    Cost shape: driver-side XXH64 shard routing groups the ids by shard,
+    and each touched shard is served by ONE pruned pyarrow read carrying
+    an `isin` url predicate (row-group pruning, no Spark job) — never a
+    full corpus materialization."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    from engine.hashing import xxh64
+    from engine.hashing import doc_shard
 
     fields = list(fields or [])
     dv_cols = reader.manifest.get("docvalue_cols") or []
@@ -3328,42 +3193,22 @@ def mget(
     tomb = reader.tombstones()
     by_shard: dict[int, list[str]] = {}
     for u in urls:
-        by_shard.setdefault(xxh64(u.encode()) % n_shards, []).append(u)
+        by_shard.setdefault(doc_shard(u, n_shards), []).append(u)
     cols = ["url", "local_id"] + [phys[f] for f in fields]
     hits: dict[str, tuple] = {}
-    dm_dir = os.path.join(reader.dir, "docmap")
-    if os.path.isdir(dm_dir):
-        reader._check_generation()
-        for shard, us in by_shard.items():
-            part = os.path.join(dm_dir, f"shard={shard}")
-            if not os.path.isdir(part):
-                continue
-            tbl = ds.dataset(part).to_table(
-                columns=cols, filter=pc.field("url").isin(us)
-            )
-            dels = tomb.get(shard)
-            for row in tbl.to_pylist():
-                lid = int(row["local_id"])
-                if dels is not None and lid in dels:
-                    continue
-                hits[row["url"]] = (
-                    offsets[shard] + lid,
-                    tuple(row[phys[f]] for f in fields),
-                )
-    else:
-        rows = (
-            reader.docmap()
-            .filter(F.col("url").isin(list(urls)))
-            .select("shard", *cols)
-            .collect()
-        )
-        for row in rows:
-            dels = tomb.get(int(row["shard"]))
+    reader._check_generation()
+    for shard, us in by_shard.items():
+        part = os.path.join(reader.dir, "docmap", f"shard={shard}")
+        if not os.path.isdir(part):  # an empty shard has no partition
+            continue
+        tbl = ds.dataset(part).to_table(columns=cols, filter=pc.field("url").isin(us))
+        dels = tomb.get(shard)
+        for row in tbl.to_pylist():
             lid = int(row["local_id"])
             if dels is not None and lid in dels:
                 continue
             hits[row["url"]] = (
-                offsets[int(row["shard"])] + lid,
+                offsets[shard] + lid,
                 tuple(row[phys[f]] for f in fields),
             )
     out = [
@@ -3392,12 +3237,12 @@ def matched_queries(
     urls match nothing.
 
     Cost shape: one mget routes the urls (pruned per-shard docmap reads);
-    ONE postings read covers the union of every clause's terms
-    (bucket-pruned, driver-local when the dir is); membership is a
+    ONE driver-side postings read covers the union of every clause's
+    terms (bucket-pruned); membership is a
     searchsorted probe of each decoded doc list against the page's local
     ids — the decode cost is the same postings IO a query for those terms
     would pay, amortized over all clauses and all k urls."""
-    from engine.hashing import xxh64
+    from engine.hashing import doc_shard
 
     all_terms = sorted({t for ts, _ in named.values() for t in ts})
     stats = reader.term_stats(all_terms)
@@ -3408,23 +3253,13 @@ def matched_queries(
     offsets = reader.shard_offsets()
     for r in mget(reader, list(urls)).collect():
         if r["found"]:
-            shard = xxh64(r["url"].encode()) % n_shards
+            shard = doc_shard(r["url"], n_shards)
             doc_of[r["url"]] = (shard, int(r["doc_id"]) - offsets[shard])
     live = [t for t in all_terms if t in stats]
     # (shard, term) -> sorted decoded local-id array
     docs_of: dict[tuple[int, str], np.ndarray] = {}
     if live and doc_of:
-        by_shard = reader.postings_local(live)
-        if by_shard is None:
-            shards = sorted({s for s, _ in doc_of.values()})
-            by_shard = {}
-            for r in (
-                reader.postings(live)
-                .filter(F.col("shard").isin(shards))
-                .collect()
-            ):
-                by_shard.setdefault(int(r["shard"]), []).append(r)
-        for shard, rows in by_shard.items():
+        for shard, rows in reader.postings_local(live).items():
             dels = tomb.get(shard)
             for r in rows:
                 docs_of[(shard, r.term)] = _decode_live(r, dels)[0]
@@ -3786,7 +3621,6 @@ def _phrase_slots_topk(
     slop: int,
     total_postings: int,
     execution: str,
-    lookup: str,
     filters=(),
 ):
     """Shared phrase front: the exact (slop=0) or sloppy kernel per shard
@@ -3803,7 +3637,7 @@ def _phrase_slots_topk(
 
     return _positional_topk(
         reader, list(dict.fromkeys(t for s in slots for t in s)), kernel,
-        total_postings, k, execution, lookup, filters,
+        total_postings, k, execution, filters,
     )
 
 
@@ -3822,7 +3656,6 @@ def _match_phrase_topk(
     k: int = 10,
     slop: int = 0,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES `match_phrase` top-k over a POSITIONAL index: (url, doc_id,
@@ -3864,7 +3697,7 @@ def _match_phrase_topk(
     )
     return _phrase_slots_topk(
         reader, [[t] for t in terms], idf_sum, k, slop,
-        sum(stats[t] for t in distinct), execution, lookup, filters,
+        sum(stats[t] for t in distinct), execution, filters,
     )
 
 
@@ -4045,7 +3878,6 @@ def _match_phrase_prefix_topk(
     slop: int = 0,
     max_expansions: int = 50,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES `match_phrase_prefix` top-k: the LAST slot matches every
@@ -4104,7 +3936,7 @@ def _match_phrase_prefix_topk(
     slots = [[t] for t in head] + [list(expansions)]
     return _phrase_slots_topk(
         reader, slots, idf_sum, k, slop, sum(stats.get(t, 0) for t in fetch),
-        execution, lookup, filters,
+        execution, filters,
     )
 
 
@@ -4278,7 +4110,7 @@ def multi_index_topk(
     segment-merge identity WITHOUT rewriting a byte (tested: federated
     == merged, rank and score). Doc-id (url) uniqueness across member
     indexes is the caller's contract, exactly as with ES aliases.
-    k1/b must agree across members (asserted).
+    k1/b must agree across members (ValueError otherwise).
 
     boosts: ES `indices_boost` — a per-member multiplier applied to that
     index's hit scores BEFORE the cross-index merge (ES semantics: a
@@ -4287,9 +4119,15 @@ def multi_index_topk(
     score-identical federation above."""
     from engine.oracle import analyze_query_py as _aq
 
-    assert readers, "multi_index_topk needs at least one reader"
+    if not readers:
+        raise ValueError("multi_index_topk needs at least one reader")
     k1b = {(float(r.k1), float(r.b)) for r in readers}
-    assert len(k1b) == 1, f"members disagree on k1/b: {k1b}"
+    if len(k1b) != 1:
+        raise ValueError(f"members disagree on k1/b: {k1b}")
+    if boosts is not None and len(boosts) != len(readers):
+        raise ValueError(
+            f"one boost per member index: {len(boosts)} boosts, {len(readers)} readers"
+        )
     terms = _aq(query) if isinstance(query, str) else list(dict.fromkeys(query))
     df_g: dict[str, int] = {}
     for r in readers:
@@ -4302,8 +4140,6 @@ def multi_index_topk(
     sum_dl = sum(int(r.manifest["sum_dl"]) for r in readers)
     avgdl_g = sum_dl / n_g
     idfs_g = {t: float(P.bm25_idf(df_g[t], n_g)) for t in live}
-    if boosts is not None:
-        assert len(boosts) == len(readers), "one boost per member index"
     parts = [
         bm25_topk(
             r, live, k=k, mode=mode, algo="taat",

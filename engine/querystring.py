@@ -245,7 +245,6 @@ def _simple_query_string_topk(
     default_operator: str = "or",
     max_expansions: int = 50,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """Top-k (url, doc_id, score) for a simple_query_string body — see
@@ -327,7 +326,7 @@ def _simple_query_string_topk(
     src = FieldPostings(
         reader, distinct, sum(stats.get(t, 0) for t in distinct), needs_pos
     )
-    return _scatter_topk(src, run_kernel, k, lookup, execution)
+    return _scatter_topk(src, run_kernel, k, execution)
 
 
 simple_query_string_topk = _frame_api(_simple_query_string_topk)
@@ -736,7 +735,6 @@ def _query_string_topk(
     default_operator: str = "or",
     max_expansions: int = 50,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """Top-k (url, doc_id, score) for a full Lucene query_string — see
@@ -787,7 +785,7 @@ def _query_string_topk(
     src = FieldPostings(
         reader, distinct, sum(stats.get(t, 0) for t in distinct), needs_pos
     )
-    return _scatter_topk(src, run_kernel, k, lookup, execution)
+    return _scatter_topk(src, run_kernel, k, execution)
 
 
 query_string_topk = _frame_api(_query_string_topk)

@@ -245,7 +245,6 @@ def _span_near_topk(
     slop: int = 0,
     in_order: bool = True,
     execution: str = "auto",
-    lookup: str = "auto",
     exclude: "list[str] | None" = None,
     pre: int = 0,
     post: int = 0,
@@ -287,7 +286,7 @@ def _span_near_topk(
 
     return _positional_topk(
         reader, distinct, kernel, sum(stats[t] for t in distinct), k,
-        execution, lookup, filters,
+        execution, filters,
     )
 
 
@@ -316,7 +315,6 @@ def _span_or_topk(
     alternatives: "list[str]",
     k: int = 10,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES top-level ``span_or`` top-k: every occurrence of any alternative
@@ -325,7 +323,7 @@ def _span_or_topk(
     alternatives' idfs — a one-slot span_near by construction."""
     return _span_near_topk(
         reader, [list(alternatives)], k=k, slop=0, in_order=False,
-        execution=execution, lookup=lookup, filters=filters,
+        execution=execution, filters=filters,
     )
 
 
@@ -342,7 +340,6 @@ def _span_not_topk(
     pre: int = 0,
     post: int = 0,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES ``span_not`` top-k: matches of the include span (a span_term, a
@@ -353,7 +350,7 @@ def _span_not_topk(
     return _span_near_topk(
         reader, include, k=k, slop=slop, in_order=in_order,
         exclude=list(exclude), pre=pre, post=post,
-        execution=execution, lookup=lookup, filters=filters,
+        execution=execution, filters=filters,
     )
 
 
@@ -366,7 +363,6 @@ def _span_first_topk(
     end: int,
     k: int = 10,
     execution: str = "auto",
-    lookup: str = "auto",
     filters=(),
 ):
     """ES ``span_first`` top-k (match = a span_term clause, the supported
@@ -392,7 +388,7 @@ def _span_first_topk(
         return _span_first_shard_topk(rows, t, end, idf, kk, k1, b, avgdl, dels)
 
     return _positional_topk(
-        reader, [t], kernel, stats[t], k, execution, lookup, filters
+        reader, [t], kernel, stats[t], k, execution, filters
     )
 
 

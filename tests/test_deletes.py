@@ -191,17 +191,6 @@ def test_batch_equals_rows_on_tombstoned_index(spark, deleted_index, mode):
             assert n + 2 not in got
 
 
-def test_batch_docmap_fallback_same_rows(spark, deleted_index, monkeypatch):
-    """When the docmap is not a local directory (docmap_lookup_local
-    returns None), the pruned Spark docmap join returns the same rows."""
-    post = IndexReader(spark, deleted_index)
-    qs = _batch_queries()
-    want = sorted(tuple(r) for r in bm25_topk_batch(post, qs, k=5).collect())
-    monkeypatch.setattr(IndexReader, "docmap_lookup_local", lambda self, shards, local_ids: None)
-    got = sorted(tuple(r) for r in bm25_topk_batch(post, qs, k=5).collect())
-    assert want and got == want
-
-
 def test_batch_collect_runs_no_spark_job(spark, deleted_index):
     """The batch result is a driver-local relation: collecting it starts
     no Spark job."""

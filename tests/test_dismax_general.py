@@ -147,6 +147,27 @@ def test_match_all_leg_raises(spark, lift_index):  # noqa: F811
             {"match_all": {}}, {"match": {"text": "alpha"}}]}}, "size": 5})
 
 
+@pytest.mark.parametrize("leg", [
+    {"term": {"nc": 16}},
+    {"terms": {"nc": [16, 17]}},
+    {"range": {"nc": {"gte": 10}}},
+    {"exists": {"field": "nc"}},
+    {"ids": {"values": ["d1"]}},
+    {"constant_score": {"filter": {"range": {"nc": {"gte": 10}}}}},
+    {"rank_feature": {"field": "nc", "saturation": {"pivot": 10}}},
+    {"distance_feature": {"field": "nc", "origin": 10, "pivot": 5}},
+    {"pinned": {"ids": ["d1"], "organic": {"match": {"text": "alpha"}}}},
+], ids=lambda leg: next(iter(leg)))
+def test_docvalue_leg_raises(spark, lift_index, leg):  # noqa: F811
+    """A leg served by an aggs.py docmap kernel carries no doc_id to
+    blend on (and the unbounded leg k overflowed DataFrame.limit into a
+    Py4JError): the general dis_max rejects it by kind."""
+    r = IndexReader(spark, lift_index)
+    with pytest.raises(ValueError, match=f"{next(iter(leg))} leg"):
+        search(r, {"query": {"dis_max": {"queries": [
+            {"match": {"text": "alpha"}}, leg]}}, "size": 5})
+
+
 def test_frozen_same_field_term_path_unchanged(spark, lift_index):  # noqa: F811
     from engine.query import bm25_dismax_topk
 
@@ -467,6 +488,32 @@ def test_collapse_inner_hits(spark, lift_index):  # noqa: F811
         ]
         # the representative is the group's best
         assert inner[0]["_id"] == h["_id"]
+
+
+def test_collapse_inner_hits_collect_once(spark, lift_index, monkeypatch):  # noqa: F811
+    """Inner hits read the kernel's rows: a collapse + inner_hits page
+    collects the same number of DataFrames however many groups it
+    holds (one per group was a result-frame round trip each)."""
+    r = IndexReader(spark, lift_index)
+    frame_cls = type(spark.range(0))  # the concrete class defines collect
+    collect = frame_cls.collect
+    calls = []
+
+    def counted(self):
+        calls.append(1)
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", counted)
+    counts = []
+    for size in (1, 5):
+        calls.clear()
+        resp = search(r, {"query": {"match": {"text": "alpha"}},
+                          "collapse": {"field": "nc",
+                                       "inner_hits": {"name": "grp", "size": 2}},
+                          "size": size})
+        assert len(resp["hits"]["hits"]) == size
+        counts.append(len(calls))
+    assert counts[0] == counts[1], counts
 
 
 def test_source_includes_excludes_and_zero_terms(spark, tmp_path_factory):

@@ -697,3 +697,52 @@ def test_forced_spark_query_and_batch_run_one_job(spark, fc_deleted, monkeypatch
         assert got and len(set(tracker.getJobIdsForGroup()) - before) == 1
         if i == 0:
             assert got == local
+
+
+def test_point_reads_start_no_spark_scan(spark, fc_index, fc_deleted, monkeypatch):
+    """The index is a local directory: dictionary, docmap and postings
+    point reads and the top-k / collapse / batch url lookups read it with
+    pyarrow, never through a Spark-SQL parquet scan. The caches are off so
+    the pruned reads (the large-index path) run, on a tombstoned index."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from engine.aggs import collapse_topk
+    from engine.query import (
+        bm25_topk_batch, bm25_topk_rows, explain_rows, matched_queries, mget,
+        suggest_complete,
+    )
+
+    out, gone = fc_deleted
+    urls = ["u0001", "u0003", sorted(gone)[0], "nope"]
+    named = {"one": (["hash"], "or"), "both": (["hash", "join"], "and")}
+
+    def reads():
+        reader = IndexReader(spark, out)
+        reader.CACHE_MAX_DOCS = reader.DOCMAP_MEM_MAX_DOCS = 0
+        top = bm25_topk_rows(reader, "hash join sort", k=12)
+        return {
+            "term_stats": reader.term_stats(["hash", "join", "zzz"]),
+            "suggest_complete": suggest_complete(reader, "ha").collect(),
+            "mget": mget(reader, urls, fields=["grp"]).collect(),
+            "explain_rows": explain_rows(reader, "hash join sort", top[0][0]),
+            "matched_queries": matched_queries(reader, urls, named),
+            "bm25_topk_rows": top,
+            "collapse_topk": collapse_topk(reader, "hash join", "grp", k=5).collect(),
+            "bm25_topk_batch": bm25_topk_batch(
+                reader, {1: ["hash", "join"], 2: ["sort"]}, k=5
+            ).collect(),
+        }
+
+    want = reads()
+    assert all(want.values()), want
+    # url point reads route to the shard the build assigned: with 3
+    # shards the signed-hash pmod and the unsigned modulo disagree
+    every = [u for u, *_ in fc_index[1]]
+    found = mget(IndexReader(spark, out), every).collect()
+    assert [r["found"] for r in found] == [u not in gone for u in every]
+
+    def no_sql_read(*_a, **_k):
+        raise AssertionError("Spark-SQL parquet read on a point-read path")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_sql_read)
+    assert reads() == want

@@ -177,57 +177,6 @@ def test_resume_idempotent(spark, corpus, tmp_path_factory, index):
     shutil.rmtree(out2)
 
 
-def test_docmap_lookup_is_pruned(spark, index, corpus):
-    """The url lookup must NOT scan the docmap: shard predicates reach the
-    parquet PartitionFilters (directory pruning) and local_id predicates
-    the PushedFilters (row-group pruning via the local_id sort), on the
-    uncached path a 10^12-doc index would take."""
-    from tests.conftest import plan_of
-
-    out, _ = index
-    # other tests' readers persist the same docmap plan; the cache manager
-    # would substitute InMemoryRelation for our scan — clear it so the
-    # parquet-scan path (what a huge index uses) is actually exercised
-    spark.catalog.clearCache()
-    reader = IndexReader(spark, out)
-    reader.CACHE_MAX_DOCS = 0  # force the scan path (no persist)
-    q = synth.frozen_queries()[0]
-    res = bm25_topk(reader, q["terms"], k=10, mode="or", lookup="spark")
-    plan = plan_of(res)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and any("shard" in ln and "IN (" in ln.upper() for ln in pf), plan
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    assert pushed and any("local_id" in ln for ln in pushed), plan
-    # and the pruned path is rank-identical to the oracle
-    oracle = _oracle_from_docmap(spark, out, corpus)
-    got = [(r["doc_id"], r["score"]) for r in res.collect()]
-    exp = oracle.topk(q["terms"], k=10)
-    assert [d for d, _ in got] == [d for d, _ in exp]
-    # the driver-side pyarrow lookup (latency path) agrees with the
-    # Spark pruned-scan path row for row
-    local = bm25_topk(reader, q["terms"], k=10, mode="or", lookup="local").collect()
-    assert [(r["url"], r["doc_id"], r["score"]) for r in local] == [
-        (r["url"], r["doc_id"], r["score"]) for r in res.collect()
-    ]
-
-
-def test_postings_read_is_bucket_pruned(spark, index):
-    """A query's postings scan must touch only the query terms' bucket
-    directories (PartitionFilters) and push the term predicate into row
-    groups (PushedFilters) — the plan a 10^12-doc index needs."""
-    from tests.conftest import plan_of
-
-    out, _ = index
-    spark.catalog.clearCache()
-    reader = IndexReader(spark, out)
-    post = reader.postings(["the", "data"])
-    plan = plan_of(post)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and any("bucket" in ln and "IN (" in ln.upper() for ln in pf), plan
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    assert pushed and any("term" in ln for ln in pushed), plan
-
-
 def test_shard_offsets_match_docmap(spark, index):
     out, manifest = index
     reader = IndexReader(spark, out)
@@ -294,27 +243,28 @@ def test_and_with_absent_term_is_empty(spark, index):
 
 
 def test_bad_arguments_fail_closed(spark, index):
-    """Unknown algo / execution / lookup / batch mode values and
-    multi-term dictionary rewrites raise ValueError instead of silently running another path
-    (and not as asserts, which vanish under python -O)."""
+    """Unknown algo / execution / batch mode values, multi-term
+    dictionary rewrites and bad multi_index_topk members raise ValueError
+    instead of silently running another path (and not as asserts, which
+    vanish under python -O)."""
     from engine.aggs import (
         TermsAgg, collapse_topk, matched_urls, sampler_terms, search_aggs,
         search_sort,
     )
     from engine.query import (
-        bm25_bool_topk, bm25_dismax_topk, bm25_topk_batch, bm25_topk_rows,
+        bm25_dismax_topk, bm25_topk_batch, bm25_topk_rows, multi_index_topk,
     )
 
     out, _ = index
     reader = IndexReader(spark, out)
+    other_k1 = IndexReader(spark, out)
+    other_k1.k1 += 0.5
     terms = synth.frozen_queries()[0]["terms"]
     calls = [
         (lambda: bm25_topk(reader, terms, algo="wand_daat"), "algo"),
         (lambda: bm25_topk_rows(reader, terms, algo="bmw"), "algo"),
         (lambda: bm25_topk(reader, terms, execution="cluster"), "execution"),
-        (lambda: bm25_topk(reader, terms, lookup="remote"), "lookup"),
         (lambda: bm25_dismax_topk(reader, terms, execution="cluster"), "execution"),
-        (lambda: bm25_bool_topk(reader, should=terms, lookup="remote"), "lookup"),
         # the aggs.py query contexts ("url" is the docmap id, always there)
         (lambda: search_aggs(reader, terms, TermsAgg("url"), execution="cluster"),
          "execution"),
@@ -325,31 +275,17 @@ def test_bad_arguments_fail_closed(spark, index):
         (lambda: search_aggs(reader, terms, TermsAgg("url"), src=object()), "matcher"),
         # the batch path took any mode other than "and" as OR
         (lambda: bm25_topk_batch(reader, {0: terms}, mode="prefix"), "mode"),
+        # federation: no members, members that disagree on k1/b, and one
+        # boost per member
+        (lambda: multi_index_topk([], terms), "at least one reader"),
+        (lambda: multi_index_topk([reader, other_k1], terms), "k1/b"),
+        (lambda: multi_index_topk([reader], terms, boosts=[1.0, 2.0]), "one boost"),
     ] + [
         (lambda m=m: bm25_topk(reader, ["the", "and"], mode=m), "one term")
         for m in ("prefix", "fuzzy", "wildcard", "regexp")
     ]
     for call, match in calls:
         with pytest.raises(ValueError, match=match):
-            call()
-
-
-def test_local_execution_needs_local_postings(spark, index, monkeypatch):
-    """execution="local" raises when the postings are not a local
-    directory (the source's local read returns None) instead of silently
-    running Spark, for top-k and aggs entry points alike."""
-    from engine.aggs import TermsAgg, search_aggs
-    from engine.query import FieldPostings
-
-    out, _ = index
-    reader = IndexReader(spark, out)
-    terms = synth.frozen_queries()[0]["terms"]
-    monkeypatch.setattr(FieldPostings, "local", lambda self: None)
-    for call in (
-        lambda: bm25_topk(reader, terms, execution="local"),
-        lambda: search_aggs(reader, terms, TermsAgg("url"), execution="local"),
-    ):
-        with pytest.raises(ValueError, match="local postings directory"):
             call()
 
 
@@ -819,32 +755,6 @@ def test_explain_score_sums_to_kernel_score(spark, index, corpus):
         explain_score(r, q["terms"], "https://no.such/url")
     # unknown-vocabulary query -> zero rows
     assert explain_score(r, ["zzznothing"], url).count() == 0
-
-
-def test_explain_score_fallback_prunes_shard_and_matches_local(spark, index):
-    """The non-local explain fallback (postings_local unavailable) must
-    (a) return exactly the local path's rows and (b) push the target-shard
-    predicate into the postings parquet scan — a head-term explain must
-    never pull other shards' posting rows to the driver."""
-    from engine.query import IndexReader, bm25_topk, explain_score
-
-    out, _m = index
-    r = IndexReader(spark, out)
-    q = synth.frozen_queries()[0]
-    url = bm25_topk(r, q["terms"], k=1).collect()[0]["url"]
-    local_rows = sorted(map(tuple, explain_score(r, q["terms"], url).collect()))
-    r.postings_local = lambda terms: None  # force the Spark fallback
-    spark_rows = sorted(map(tuple, explain_score(r, q["terms"], url).collect()))
-    assert spark_rows == local_rows
-    # the exact read shape the fallback uses: shard filter must reach the scan
-    plan = (
-        r.postings(q["terms"])
-        .filter(F.col("shard") == 0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters" in plan and "shard" in plan.split("PushedFilters", 1)[1][:200], plan
 
 
 def test_suggest_terms_both_paths_match_brute(spark, index, oracle):

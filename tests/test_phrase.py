@@ -123,7 +123,7 @@ def test_match_phrase_matches_brute_and_both_paths(spark, pos_index):
         dist = [
             (x["url"], round(x["score"], 6))
             for x in match_phrase_topk(
-                r, phrase, k=10, execution="spark", lookup="spark"
+                r, phrase, k=10, execution="spark"
             ).collect()
         ]
         assert local == want, (phrase, local, want)

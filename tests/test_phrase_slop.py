@@ -138,7 +138,7 @@ def test_sloppy_phrase_matches_brute(spark, pos_index, phrase, slop):
     dist = [
         (x["url"], round(x["score"], 6))
         for x in match_phrase_topk(
-            r, phrase, k=10, slop=slop, execution="spark", lookup="spark"
+            r, phrase, k=10, slop=slop, execution="spark"
         ).collect()
     ]
     assert local == want, (phrase, slop, local, want)

@@ -136,7 +136,7 @@ def test_span_near_matches_brute(spark, pos_index, terms, slop, in_order):
         (x["url"], round(x["score"], 6))
         for x in span_near_topk(
             r, terms, k=10, slop=slop, in_order=in_order,
-            execution="spark", lookup="spark",
+            execution="spark",
         ).collect()
     ]
     assert local == want, (terms, slop, in_order, local, want)
