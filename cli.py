@@ -512,7 +512,7 @@ def main() -> None:
             lat.append(time.time() - t0)
         lat.sort()
         # batch-query throughput: the frozen OR-queries replicated to a
-        # 6,000-query batch, ONE distributed pass (duplicates share their
+        # 6,000-query batch, ONE pass (duplicates share their
         # signature, so each distinct query is scored once per shard)
         from engine.query import bm25_topk_batch
 

@@ -1816,24 +1816,6 @@ def _span_clauses(clauses: list, fields: set | None = None) -> list[list]:
     return slots
 
 
-def compile_query_context(query: dict, text_fields: tuple = ("text",)):
-    """(terms|None, mode, filters, field) of a DSL body's matched-doc set
-    — the shared front-end for the set-valued APIs (delete_by_query /
-    update_by_query / matched_urls callers): match_all, match/term/terms,
-    and bool with must (+ filter context). Raises for query kinds whose
-    matched set is not a plain term query, same contract as
-    _query_terms_or_none. `field` is the ONE indexed text field the term
-    clauses named (the caller routes its reader), or None for match_all."""
-    filters = ()
-    if "bool" in query:
-        filters = _clause_filters(query["bool"].get("filter", []))
-    fl: set = set()
-    terms, mode = _query_terms_or_none(
-        query, allowed=text_fields, fields_out=fl
-    )
-    return terms, mode, filters, (fl.pop() if fl else None)
-
-
 def matched_urls_for_query(reader, query: dict):
     """DataFrame of the _ids (urls) matching a DSL query context — the
     shared back-end for the set-valued APIs (delete_by_query /

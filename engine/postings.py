@@ -492,12 +492,12 @@ def decode_rows(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     dls): counts[i] is row i's posting count, and the other three are the
     decode_term_postings outputs of every row concatenated in row order.
 
-    rows carry docs_bin/tfs_bin/dls_bin and blocks (positional tuples, or
-    dicts keyed like the postings `blocks` struct). Each stream is ONE
-    svb_decode_blocks call over the rows' concatenated buffers, with the
-    block offsets shifted by the preceding rows' byte lengths; one global
-    cumsum reconstructs the doc ids, rebased per row because each row's
-    first delta restarts from -1."""
+    rows carry docs_bin/tfs_bin/dls_bin and blocks (positional tuples in
+    BLOCK_KEYS order, as query._read_postings builds them). Each stream is
+    ONE svb_decode_blocks call over the rows' concatenated buffers, with
+    the block offsets shifted by the preceding rows' byte lengths; one
+    global cumsum reconstructs the doc ids, rebased per row because each
+    row's first delta restarts from -1."""
     ns: list[int] = []
     offs: list[list[int]] = [[], [], []]
     bufs: list[list[bytes]] = [[], [], []]
@@ -506,8 +506,6 @@ def decode_rows(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     for i, r in enumerate(rows):
         n = 0
         for blk in r.blocks:
-            if isinstance(blk, dict):
-                blk = tuple(blk[k] for k in BLOCK_KEYS)
             ns.append(blk[2])
             for s in range(3):
                 offs[s].append(base[s] + blk[3 + s])

@@ -412,9 +412,10 @@ class IndexReader:
     # a query whose total posting count is below this is served entirely
     # on the driver (node-local read of |q| bucket dirs + in-process
     # kernels) — the Lucene-searcher-style serving path; bigger queries
-    # scatter-gather through Spark. ~5M postings decode to a few tens of
-    # MB of numpy — comfortable driver work either way.
-    LOCAL_MAX_POSTINGS = 5_000_000
+    # scatter-gather through Spark. Set at the measured driver/Spark
+    # crossover of bm25_topk_batch's cost (BENCH.md §26); 2.5M postings
+    # decode to ~30 MB of numpy.
+    LOCAL_MAX_POSTINGS = 2_500_000
 
     def postings_local(self, terms: list[str]):
         """Driver-side postings read for a small query, {shard: [_PostRow,
@@ -573,9 +574,27 @@ def _read_postings(dataset, filter, needs_pos: bool) -> dict[int, list]:
     cols = ("shard",) + row._fields
     tbl = dataset.to_table(filter=filter, columns=list(cols))
     by_shard: dict[int, list] = {}
-    for shard, *rest in zip(*(tbl.column(c).to_pylist() for c in cols)):
+    for shard, *rest in zip(*(
+        _block_lists(tbl.column(c)) if c == "blocks" else tbl.column(c).to_pylist()
+        for c in cols
+    )):
         by_shard.setdefault(shard, []).append(row(*rest))
     return by_shard
+
+
+def _block_lists(col) -> list[list[tuple]]:
+    """The postings `blocks` list<struct> column -> per row, its blocks as
+    positional tuples in P.BLOCK_KEYS order: zipped from the struct's child
+    arrays and cut at the list offsets, never one dict per block."""
+    out: list[list[tuple]] = []
+    for chunk in col.chunks:
+        offs = chunk.offsets.to_numpy()
+        lo = int(offs[0])
+        vals = chunk.values.slice(lo, int(offs[-1]) - lo)
+        blks = list(zip(*(vals.field(k).to_numpy().tolist() for k in P.BLOCK_KEYS)))
+        offs = (offs - lo).tolist()
+        out.extend(blks[a:z] for a, z in zip(offs, offs[1:]))
+    return out
 
 
 def _lev_within(a: str, b: str, d: int) -> bool:
@@ -599,15 +618,6 @@ def _lev_within(a: str, b: str, d: int) -> bool:
     return prev[-1] <= d
 
 
-def _norm_blocks(blocks) -> list[tuple]:
-    """Arrow list<struct> arrives as dicts in pandas; the codec indexes
-    positionally — normalize once per list."""
-    return [
-        tuple(blk[k] for k in P.BLOCK_KEYS) if isinstance(blk, dict) else tuple(blk)
-        for blk in blocks
-    ]
-
-
 def _live_mask(d: np.ndarray, dels: np.ndarray | None) -> np.ndarray | None:
     """Boolean keep-mask of d (sorted doc ids) against the shard's sorted
     tombstone array — None when nothing is deleted (the common case pays
@@ -624,9 +634,7 @@ def _decode_live(r, dels: np.ndarray | None):
     """One posting row -> its (docs, tfs, dls) arrays minus the shard's
     tombstoned docs (dels None = keep every doc): the kernels' one
     decode front, one P.decode_term_postings call per row."""
-    d, t, l = P.decode_term_postings(
-        r.docs_bin, r.tfs_bin, r.dls_bin, _norm_blocks(r.blocks)
-    )
+    d, t, l = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, r.blocks)
     keep = _live_mask(d, dels)
     if keep is None:
         return d, t, l
@@ -655,7 +663,7 @@ def _bmw_shard_topk(
         idf = idfs.get(r.term)
         if not idf:
             continue
-        blocks = _norm_blocks(r.blocks)
+        blocks = r.blocks
         terms.append(
             {
                 "row": r,
@@ -1321,6 +1329,10 @@ def bm25_topk_rows(
 
 
 _PATHS = ("auto", "local", "spark")  # the execution values
+# bm25_topk_batch's per-(signature, shard) kernel cost in postings: one
+# signature's accumulate + top-k cut on one shard costs about as much as
+# decoding this many postings (the batch-size sweep in BENCH.md)
+BATCH_SIG_COST = 200
 _HEAP_SCHEMA = "shard int, local_id long, score double"
 
 
@@ -1349,8 +1361,9 @@ def _heap_frame(shard: int, top: list[tuple[int, float]]) -> pd.DataFrame:
 
 class FieldPostings:
     """Postings source over ONE field view: the rows of `terms` (with the
-    position stream when needs_pos). total_postings is the caller's
-    dictionary count for those terms, which drives _scatter's gate.
+    position stream when needs_pos). total_postings is the cost _scatter's
+    gate weighs: the caller's dictionary count for those terms
+    (bm25_topk_batch adds its per-signature kernel cost).
     MultiFieldPostings unions one per field, with the same members."""
 
     def __init__(self, reader: IndexReader, terms: list[str],
@@ -1389,11 +1402,12 @@ def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
 
     shard_fn(rows, dels, shard) runs once per shard over src's posting
     rows for that shard and the shard's sorted tombstone array (None =
-    no deletes). _runs_local picks only WHERE it runs (src.total_postings
-    is the count the caller already has from its dictionary read):
-    in-process on the driver over src.local(), or as one Spark task per
-    shard over src.shard_read(). Both reads are _read_postings, so both
-    paths run the same function over the same rows (tested identical).
+    no deletes). _runs_local picks only WHERE it runs, from
+    src.total_postings (the count the caller already has from its
+    dictionary read, or bm25_topk_batch's batch cost): in-process on
+    the driver over src.local(), or as one Spark task per shard over
+    src.shard_read(). Both reads are _read_postings, so both paths run
+    the same function over the same rows (tested identical).
 
     Returns the driver-local path's [(shard, output), ...], or the Spark
     DataFrame of `schema` whose per-shard parts are frame(shard, output)
@@ -1403,7 +1417,7 @@ def _scatter(src, shard_fn, schema: str, execution: str, frame=None):
     rescore_topk's phrase pass, match_phrase_prefix_topk's union-df
     count, the aggs.py query contexts (search_aggs, search_sort,
     matched_urls, collapse_topk, sampler_terms) and bm25_topk_batch
-    (execution="spark": many queries in one pass, heaps merged on the
+    (many queries in one pass, gated on a batch cost, heaps merged on the
     driver). explain_rows and matched_queries read a handful of known
     docs, not a query's matched set, so they read postings directly."""
     reader = src.reader
@@ -2464,17 +2478,19 @@ def bm25_topk_batch(
     "and"; anything else raises ValueError.
 
     One postings read covers the union of all query terms (bucket-pruned,
-    position columns pruned) and runs on _scatter with execution="spark"
-    whatever its posting count: the kernel's cost grows with the number
-    of queries, while the LOCAL_MAX_POSTINGS gate sizes single queries.
-    Per shard, ONE decode_rows call decodes every term's postings, the
-    tombstone mask runs once over the concatenation, and each distinct
-    query signature gets the _accumulate TAAT sum and a top-k cut. Only
-    those heaps leave the shards: at most n_shards x n_signatures x k
-    rows, bounded by the batch size and not by the matched docs. They are
-    collected through Arrow and merged on the driver (one lexsort gives
-    every signature's global top-k; urls come from docmap_lookup_local).
-    The result is a local relation, so collecting it runs no Spark job."""
+    position columns pruned) and runs on _scatter, whose gate weighs the
+    batch's cost: the live terms' postings plus BATCH_SIG_COST per
+    (signature, shard), because the kernel's cost also grows with the
+    number of distinct queries. Below LOCAL_MAX_POSTINGS the shards run
+    on the driver, above it as one Spark task each. Per shard, ONE
+    decode_rows call decodes every term's postings, the tombstone mask
+    runs once over the concatenation, and each distinct query signature
+    gets the _accumulate TAAT sum and a top-k cut. Only those heaps leave
+    the shards: at most n_shards x n_signatures x k rows, bounded by the
+    batch size and not by the matched docs. Both paths merge them on the
+    driver (one lexsort gives every signature's global top-k; urls come
+    from docmap_lookup_local). The result is a local relation, so
+    collecting it runs no Spark job."""
     if mode not in ("or", "and"):
         raise ValueError(f"unknown batch mode {mode!r}: expected 'or' or 'and'")
     spark = reader.spark
@@ -2537,10 +2553,20 @@ def bm25_topk_batch(
             "score": np.concatenate(out_score),
         })
 
-    heaps = _scatter(
-        FieldPostings(reader, live_terms, sum(stats[t] for t in live_terms)),
-        shard_topk, "shard int, sig int, local_id long, score double", "spark",
-    ).toPandas()
+    cost = sum(stats[t] for t in live_terms) + (
+        BATCH_SIG_COST * len(sigs) * reader.manifest["n_shards"]
+    )
+    out = _scatter(
+        FieldPostings(reader, live_terms, cost),
+        shard_topk, "shard int, sig int, local_id long, score double", "auto",
+    )
+    if isinstance(out, list):  # driver-local: the shards' frames in shard order
+        parts = [f for _s, f in sorted(out, key=lambda p: p[0]) if f is not None]
+        if not parts:
+            return _batch_frame(spark, None)
+        heaps = pd.concat(parts, ignore_index=True)
+    else:
+        heaps = out.toPandas()
     shard = heaps["shard"].to_numpy(np.int64)
     sig = heaps["sig"].to_numpy(np.int64)
     lid = heaps["local_id"].to_numpy(np.int64)
@@ -3324,11 +3350,8 @@ def _phrase_candidates(rows: list, slots: list[list[str]], dels, allow=None):
     crosses a block)."""
     decoded: dict[str, tuple] = {}
     for r in rows:
-        blocks = _norm_blocks(r.blocks)
-        docs, tfs, dls = P.decode_term_postings(
-            r.docs_bin, r.tfs_bin, r.dls_bin, blocks
-        )
-        decoded[r.term] = (r, blocks, docs, tfs, dls)
+        docs, tfs, dls = P.decode_term_postings(r.docs_bin, r.tfs_bin, r.dls_bin, r.blocks)
+        decoded[r.term] = (r, r.blocks, docs, tfs, dls)
     slot_docs = []
     for alts in dict.fromkeys(tuple(s) for s in slots):  # distinct slots
         present = [decoded[t][2] for t in alts if t in decoded]

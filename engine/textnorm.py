@@ -145,15 +145,6 @@ def asciifold_py(s: str) -> str:
     )
 
 
-def asciifold_series(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: asciifold_py(x) if x is not None else None)
-
-
-@F.pandas_udf(T.StringType())
-def asciifold_udf(s: pd.Series) -> pd.Series:
-    return asciifold_series(s)
-
-
 # ---------------------------------------------------------------------------
 # Tokenizers (frozen specs)
 # ---------------------------------------------------------------------------

@@ -665,11 +665,22 @@ def test_tombstoned_agg_contexts_local_spark_identical(spark, fc_index, fc_delet
     assert fn(reader, "spark", filters) == loc
 
 
+_BATCH = {1: ["hash", "join"], 2: ["sort"], 3: ["table", "scan"]}
+
+
+def _new_jobs(spark, call):
+    """(call's result, the Spark job ids it added)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    got = call()
+    return got, set(tracker.getJobIdsForGroup()) - before
+
+
 def test_forced_spark_query_and_batch_run_one_job(spark, fc_deleted, monkeypatch):
-    """Forced-Spark bm25_topk (with its collect) and bm25_topk_batch (with
-    its collect) each run ONE Spark job: per-shard tasks read their
-    postings with pyarrow, so no Spark-SQL postings read (and no schema
-    inference job or shuffle) happens."""
+    """Forced-Spark bm25_topk (with its collect) and bm25_topk_batch under a
+    0 postings gate (with its collect) each run ONE Spark job: per-shard
+    tasks read their postings with pyarrow, so no Spark-SQL postings read
+    (and no schema inference job or shuffle) happens."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from engine.query import bm25_topk, bm25_topk_batch
@@ -678,25 +689,63 @@ def test_forced_spark_query_and_batch_run_one_job(spark, fc_deleted, monkeypatch
     reader = IndexReader(spark, out)
     local = [tuple(r) for r in bm25_topk(reader, "hash join sort", k=12, execution="local").collect()]
     assert local
-    tracker = spark.sparkContext.statusTracker()
 
     def no_sql_read(*_a, **_k):
         raise AssertionError("Spark-SQL parquet read on the scatter path")
 
     monkeypatch.setattr(DataFrameReader, "parquet", no_sql_read)
+    monkeypatch.setattr(reader, "LOCAL_MAX_POSTINGS", 0)
     calls = [
         lambda: [tuple(r) for r in bm25_topk(
             reader, "hash join sort", k=12, execution="spark").collect()],
-        lambda: bm25_topk_batch(
-            reader, {1: ["hash", "join"], 2: ["sort"], 3: ["table", "scan"]}, k=5,
-        ).collect(),
+        lambda: bm25_topk_batch(reader, _BATCH, k=5).collect(),
     ]
     for i, call in enumerate(calls):
-        before = set(tracker.getJobIdsForGroup())
-        got = call()
-        assert got and len(set(tracker.getJobIdsForGroup()) - before) == 1
+        got, jobs = _new_jobs(spark, call)
+        assert got and len(jobs) == 1
         if i == 0:
             assert got == local
+
+
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_small_batch_runs_on_the_driver(spark, fc_deleted, monkeypatch, mode):
+    """Under the default gate a small bm25_topk_batch runs its shards on
+    the driver: the call plus its collect add no Spark job, and its rows
+    equal the forced-Spark (0 gate) rows bit for bit."""
+    from engine.query import bm25_topk_batch
+
+    out, _ = fc_deleted
+    reader = IndexReader(spark, out)
+    got, jobs = _new_jobs(spark, lambda: [
+        tuple(r) for r in bm25_topk_batch(reader, _BATCH, k=5, mode=mode).collect()
+    ])
+    assert got and not jobs
+    monkeypatch.setattr(reader, "LOCAL_MAX_POSTINGS", 0)
+    spark_rows, jobs = _new_jobs(spark, lambda: [
+        tuple(r) for r in bm25_topk_batch(reader, _BATCH, k=5, mode=mode).collect()
+    ])
+    assert len(jobs) == 1 and spark_rows == got
+
+
+def test_batch_gate_counts_signatures(spark, fc_deleted, monkeypatch):
+    """The batch's gate cost is its postings plus BATCH_SIG_COST per
+    (signature, shard): with the gate strictly between the postings total
+    and that cost, the batch goes to Spark (one job), with the same rows."""
+    from engine.query import BATCH_SIG_COST, bm25_topk_batch
+
+    out, _ = fc_deleted
+    reader = IndexReader(spark, out)
+    want = [tuple(r) for r in bm25_topk_batch(reader, _BATCH, k=5).collect()]
+    stats = reader.term_stats(sorted({t for ts in _BATCH.values() for t in ts}))
+    assert len(stats) == 5  # every term live: one signature per query
+    postings = sum(stats.values())
+    cost = postings + BATCH_SIG_COST * len(_BATCH) * reader.manifest["n_shards"]
+    monkeypatch.setattr(reader, "LOCAL_MAX_POSTINGS", (postings + cost) // 2)
+    assert postings < reader.LOCAL_MAX_POSTINGS < cost
+    got, jobs = _new_jobs(spark, lambda: [
+        tuple(r) for r in bm25_topk_batch(reader, _BATCH, k=5).collect()
+    ])
+    assert len(jobs) == 1 and got == want
 
 
 def test_point_reads_start_no_spark_scan(spark, fc_index, fc_deleted, monkeypatch):

@@ -544,6 +544,8 @@ def test_serve_hits_skip_the_dataframe_round_trip(spark, ctx_index, serve_hits,
     """Driver-local dsl.search serves its hits from the kernels' rows: with
     SparkSession.createDataFrame, DataFrame.collect and DataFrame.toPandas
     patched to raise, every serve body still returns the recorded hits.
+    collect / toPandas are patched on the concrete frame class too
+    (pyspark 4's classic DataFrame defines its own), so they fire.
     A Spark job count cannot see this round trip — a pandas
     createDataFrame is a local relation whose collect starts no job, on
     the DataFrame path as well — so the test forbids the calls instead.
@@ -559,8 +561,10 @@ def test_serve_hits_skip_the_dataframe_round_trip(spark, ctx_index, serve_hits,
         def forbidden(*_a, **_k):
             raise AssertionError("DataFrame round trip on the serve path")
 
+        frame_cls = type(spark.range(0))
         for cls, name in ((SparkSession, "createDataFrame"),
-                          (DataFrame, "collect"), (DataFrame, "toPandas")):
+                          (DataFrame, "collect"), (DataFrame, "toPandas"),
+                          (frame_cls, "collect"), (frame_cls, "toPandas")):
             monkeypatch.setattr(cls, name, forbidden)
     else:
         monkeypatch.setattr(IndexReader, "LOCAL_MAX_POSTINGS", 0)

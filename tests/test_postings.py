@@ -120,18 +120,16 @@ _Row = namedtuple("_Row", ["docs_bin", "tfs_bin", "dls_bin", "blocks"])
         max_size=10,
     ),
     st.integers(min_value=0, max_value=2**31),
-    st.booleans(),
 )
-@example([], 0, False)  # empty row list
-@example([(1, True), (1, False), (1, True)], 1, False)  # single-posting rows
-@example([(2 * P.BLOCK + 3, False), (P.BLOCK, True)], 2, True)  # multi-block rows
+@example([], 0)  # empty row list
+@example([(1, True), (1, False), (1, True)], 1)  # single-posting rows
+@example([(2 * P.BLOCK + 3, False), (P.BLOCK, True)], 2)  # multi-block rows
 @settings(max_examples=60, deadline=None)
-def test_decode_rows_equals_per_row_decode(spec, seed, as_dicts):
+def test_decode_rows_equals_per_row_decode(spec, seed):
     """decode_rows over many rows == decode_term_postings per row,
     concatenated, with counts == the row lengths. spec is one (size,
     starts_at_zero) per row: rows restart their doc ids (at 0 or above)
-    like the rows of one shard. as_dicts feeds the blocks the way a Spark
-    pandas batch does (dicts keyed like the blocks struct)."""
+    like the rows of one shard."""
     rng = np.random.default_rng(seed)
     rows, want = [], []
     for size, at_zero in spec:
@@ -141,10 +139,7 @@ def test_decode_rows_equals_per_row_decode(spec, seed, as_dicts):
         tfs = rng.integers(1, 300, size=size).astype(np.uint32)
         dls = rng.integers(1, 70_000, size=size).astype(np.uint32)
         enc = P.encode_term_postings(ids, tfs, dls, 250.0)
-        blocks = enc["blocks"]
-        if as_dicts:
-            blocks = [dict(zip(P.BLOCK_KEYS, blk)) for blk in blocks]
-        rows.append(_Row(enc["docs_bin"], enc["tfs_bin"], enc["dls_bin"], blocks))
+        rows.append(_Row(enc["docs_bin"], enc["tfs_bin"], enc["dls_bin"], enc["blocks"]))
         want.append(P.decode_term_postings(
             enc["docs_bin"], enc["tfs_bin"], enc["dls_bin"], enc["blocks"]
         ))
