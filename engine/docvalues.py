@@ -25,7 +25,8 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
+
+from engine import resident
 
 
 @dataclass(frozen=True)
@@ -90,38 +91,39 @@ def gather_docvalues(
 ) -> pa.Table:
     """Docvalue rows for the sorted matched local ids of one shard.
 
-    Fast path: the docmap is written local_id-sorted and dense per shard,
-    so the column streams in batches and each batch contributes
-    `matched[searchsorted(off)..searchsorted(off+n)] - off` — memory is
-    one Arrow batch plus the gathered values, never the whole shard
-    column (the 10^12-doc requirement). A docmap that is NOT
-    dense-sorted (foreign layout) falls back to a full read + inverse
-    permutation, still O(n_shard) with no Python loop."""
-    dset = ds.dataset(os.path.join(index_dir, "docmap", f"shard={shard}"))
+    Each docmap row group's local_id + field columns come decompressed
+    from engine.resident (once per process, not per call). Fast path: the
+    docmap is written local_id-sorted and dense per shard, so row groups
+    are taken one at a time and each contributes
+    `matched[searchsorted(off)..searchsorted(off+n)] - off` — beyond the
+    resident budget, memory is one row group plus the gathered values. A
+    docmap that is NOT dense-sorted (foreign layout) falls back to an
+    inverse permutation over the whole shard, still O(n_shard) with no
+    Python loop."""
+    part = os.path.join(index_dir, "docmap", f"shard={shard}")
+    paths = sorted(
+        os.path.join(part, f) for f in os.listdir(part) if not f.startswith((".", "_"))
+    )
+    chunks = [(p, rg) for p in paths for rg in range(resident.footer(p).num_row_groups)]
     want = ["local_id"] + fields
     parts: list[pa.Table] = []
     off = 0
-    streamed = True
-    for batch in dset.to_batches(columns=want):
-        n = batch.num_rows
-        if n == 0:
-            continue
-        lid = batch.column(0).to_numpy(zero_copy_only=False)
-        if not np.array_equal(lid, np.arange(off, off + n)):
-            streamed = False
+    for path, rg in chunks:
+        tbl = resident.columns(path, rg, want)
+        n = tbl.num_rows
+        if not np.array_equal(tbl.column(0).to_numpy(), np.arange(off, off + n)):
             break
-        lo = np.searchsorted(matched, off)
-        hi = np.searchsorted(matched, off + n)
+        lo, hi = np.searchsorted(matched, [off, off + n])
         if hi > lo:
-            take = pa.array(matched[lo:hi] - off)
-            parts.append(pa.Table.from_batches([batch]).select(fields).take(take))
+            parts.append(tbl.select(fields).take(pa.array(matched[lo:hi] - off)))
         off += n
-    if streamed:
+    else:
         if not parts:
-            return dset.schema.empty_table().select(fields)
-        return pa.concat_tables(parts)
-    tbl = dset.to_table(columns=want)
-    lid = tbl.column("local_id").to_numpy(zero_copy_only=False)
+            schema = resident.footer(paths[0]).schema.to_arrow_schema()
+            return schema.empty_table().select(fields)
+        return pa.concat_tables(parts, promote_options="permissive")
+    tbl = pa.concat_tables(resident.tables(chunks, want), promote_options="permissive")
+    lid = tbl.column("local_id").to_numpy()
     pos = np.empty(lid.size, dtype=np.int64)
     pos[lid] = np.arange(lid.size)
     return tbl.select(fields).take(pa.array(pos[matched]))

@@ -1959,7 +1959,15 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
     source DataFrame carrying (url, text), required only for `highlight`
     (the index stores no text). embeddings: the (vec_id, embedding)
     table, required only for the top-level `knn` block (vectors live
-    beside the index, not in it — frozen layout)."""
+    beside the index, not in it — frozen layout).
+
+    Body keys are a strict subset of ES's: _source, aggregations / aggs,
+    collapse, docvalue_fields, explain, fields, from, highlight, knn,
+    min_score, post_filter, profile, query, rescore, retriever,
+    runtime_mappings, search_after, size, sort, stored_fields, suggest,
+    track_scores and track_total_hits. Any other key, legal ES ones such
+    as timeout, terminate_after, version or seq_no_primary_term included,
+    raises ValueError."""
     from engine.aggs import search_aggs, search_count, search_sort
 
     t0 = time.time()
@@ -2451,7 +2459,8 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
                          "details": []},
                     ],
                 }
-                assert sc is None or not _math.isnan(sc)
+                if sc is not None and _math.isnan(sc):
+                    raise ValueError(f"explain: NaN phrase score for {h['_id']!r}")
         else:
             terms, _op = _query_terms_or_none(query)
             from engine.query import explain_rows

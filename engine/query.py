@@ -118,6 +118,7 @@ class IndexReader:
         self._ts_df: DataFrame | None = None
         self._dm_df: DataFrame | None = None
         self._pa_ds: dict = {}  # cached pyarrow dataset handles per subdir
+        self._post_files: list[tuple[int, str]] | None = None  # (bucket, path)
         self._ts_cache: dict[str, int] | None = None  # term -> df (small idx)
         self._dm_cache: dict[int, list] | None = None  # shard -> url list
         self._tomb: dict[int, np.ndarray] | None = None  # shard -> sorted dels
@@ -427,15 +428,21 @@ class IndexReader:
         return self._local_read(terms, True)
 
     def _local_read(self, terms: list[str], needs_pos: bool):
-        """_read_postings over the terms' bucket directories (hive
-        partition pruning + term row-group pushdown)."""
-        import pyarrow.dataset as ds
+        """_read_postings over the parquet files of the terms' buckets."""
+        return _read_postings(self._postings_files(terms), terms, None, needs_pos)
 
-        return _read_postings(
-            self._pa_dataset(self._post_sub),
-            ds.field("bucket").isin(self._bucket_of(terms)) & ds.field("term").isin(terms),
-            needs_pos,
-        )
+    def _postings_files(self, terms: list[str]) -> list[str]:
+        """The parquet files of the terms' bucket directories, in the
+        dataset's file order. The (bucket, path) list is resolved once
+        per reader; the generation check runs on every call."""
+        sub = self._pa_dataset(self._post_sub)
+        if self._post_files is None:
+            self._post_files = [
+                (int(os.path.basename(os.path.dirname(p)).partition("=")[2]), p)
+                for p in sub.files
+            ]
+        want = set(self._bucket_of(terms))
+        return [p for b, p in self._post_files if b in want]
 
     def docmap_lookup_local(
         self, shards: list[int], local_ids: list[int]
@@ -566,20 +573,72 @@ _PosRow = namedtuple(
 )
 
 
-def _read_postings(dataset, filter, needs_pos: bool) -> dict[int, list]:
-    """The one postings read, on the driver and in Spark tasks alike:
-    `filter`'s rows of the pyarrow `dataset` as {shard: [_PostRow, ...]}
-    ([_PosRow, ...], with the position stream, when needs_pos)."""
+def _read_postings(
+    files: list[str], terms: list[str], shard: int | None, needs_pos: bool
+) -> dict[int, list]:
+    """The one postings read, on the driver and in Spark tasks alike: the
+    rows of `terms` (of `shard` only, when given) in the parquet `files`
+    as {shard: [_PostRow, ...]} ([_PosRow, ...], with the position stream,
+    when needs_pos), in file and row order. Row groups whose shard / term
+    statistics exclude the request are skipped; the others' columns come
+    decompressed from engine.resident and are filtered as one zero-copy
+    table."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from engine import resident
+
     row = _PosRow if needs_pos else _PostRow
-    cols = ("shard",) + row._fields
-    tbl = dataset.to_table(filter=filter, columns=list(cols))
+    cols = ["shard", *row._fields]
+    want = sorted(set(terms))
+    if not want:
+        return {}
+    bounds = {"term": (want[0], want[-1])}
+    if shard is not None:
+        bounds["shard"] = (shard, shard)
+    chunks = []
+    for path in files:
+        meta = resident.footer(path)
+        chunks += [(path, rg) for rg in range(meta.num_row_groups)
+                   if _rg_may_hold(meta.row_group(rg), bounds)]
+    if not chunks:
+        return {}
+    tbl = pa.concat_tables(resident.tables(chunks, cols), promote_options="permissive")
+    term = tbl.column("term")
+    if len(want) > _EQ_MAX_TERMS:
+        mask = pc.is_in(term, value_set=pa.array(want, pa.string()))
+    else:  # a string compare per term beats hashing every row for a few
+        mask = functools.reduce(pc.or_, (pc.equal(term, t) for t in want))
+    if shard is not None:
+        mask = pc.and_(mask, pc.equal(tbl.column("shard"), shard))
+    tbl = tbl.filter(mask)
     by_shard: dict[int, list] = {}
-    for shard, *rest in zip(*(
+    for s, *rest in zip(*(
         _block_lists(tbl.column(c)) if c == "blocks" else tbl.column(c).to_pylist()
         for c in cols
     )):
-        by_shard.setdefault(shard, []).append(row(*rest))
+        by_shard.setdefault(s, []).append(row(*rest))
     return by_shard
+
+
+_EQ_MAX_TERMS = 8  # above this many terms one is_in hash pass is cheaper
+
+
+def _rg_may_hold(rg, bounds: dict) -> bool:
+    """False when the row group is empty, or its min/max statistics on a
+    bounds column (name -> (lo, hi)) lie outside [lo, hi]."""
+    if not rg.num_rows:
+        return False
+    left = dict(bounds)
+    for i in range(rg.num_columns):
+        if not left:
+            break
+        col = rg.column(i)
+        lo_hi = left.pop(col.path_in_schema, None)
+        st = col.statistics if lo_hi else None
+        if st is not None and st.has_min_max and (st.max < lo_hi[0] or st.min > lo_hi[1]):
+            return False
+    return True
 
 
 def _block_lists(col) -> list[list[tuple]]:
@@ -1384,17 +1443,9 @@ class FieldPostings:
         """shard -> [row, ...]: the same rows, one shard at a time, for a
         Spark task. Bound to the parquet files of the terms' bucket dirs;
         it holds no reader (a SparkSession does not pickle)."""
-        import pyarrow.dataset as ds
-
-        r, terms, needs_pos = self.reader, self.terms, self.needs_pos
-        sub = r._pa_dataset(r._post_sub)
-        files = ds.FileSystemDataset(
-            list(sub.get_fragments(filter=ds.field("bucket").isin(r._bucket_of(terms)))),
-            sub.schema, sub.format, sub.filesystem,
-        )
-        return lambda shard: _read_postings(
-            files, ds.field("term").isin(terms) & (ds.field("shard") == shard), needs_pos,
-        ).get(shard, [])
+        files = self.reader._postings_files(self.terms)
+        terms, needs_pos = self.terms, self.needs_pos
+        return lambda shard: _read_postings(files, terms, shard, needs_pos).get(shard, [])
 
 
 def _scatter(src, shard_fn, schema: str, execution: str, frame=None):

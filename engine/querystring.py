@@ -951,13 +951,15 @@ def _qs_multifield_topk(
     tb = float(tie_breaker)
 
     def _leg(view, kind, payload, slop):
+        # kind is "phrase" or "terms" at every call site below; the raise
+        # only fails closed should a new call site pass anything else
         if kind == "phrase":
             return _match_phrase_topk(
                 view, payload, k=1 << 31, slop=slop, filters=filters
             )
         if kind == "terms":
             return _bm25_topk(view, payload, k=1 << 31, filters=filters)
-        raise AssertionError(kind)
+        raise ValueError(f"query_string: unknown leg kind {kind!r}")
 
     def _leaf(node):
         """leaf node -> dict url -> (doc_id, score) blended across

@@ -892,7 +892,7 @@ def test_columnar_block_read_matches_dicts(spark, tmp_path_factory):
         fr = reader.for_field(field)
         dataset = fr._pa_dataset(fr._post_sub)
         for needs_pos, row in ((False, _PostRow), (True, _PosRow)):
-            got = _read_postings(dataset, filt, needs_pos)
+            got = _read_postings(fr._postings_files(VOCAB), VOCAB, None, needs_pos)
             want: dict[int, list] = {}
             tbl = dataset.to_table(filter=filt, columns=["shard", *row._fields])
             for d in tbl.to_pylist():
