@@ -92,24 +92,23 @@ def gather_docvalues(
     """Docvalue rows for the sorted matched local ids of one shard.
 
     Each docmap row group's local_id + field columns come decompressed
-    from engine.resident (once per process, not per call). Fast path: the
-    docmap is written local_id-sorted and dense per shard, so row groups
-    are taken one at a time and each contributes
-    `matched[searchsorted(off)..searchsorted(off+n)] - off` — beyond the
-    resident budget, memory is one row group plus the gathered values. A
-    docmap that is NOT dense-sorted (foreign layout) falls back to an
-    inverse permutation over the whole shard, still O(n_shard) with no
-    Python loop."""
+    from engine.resident. Fast path: the docmap is written local_id-sorted
+    and dense per shard, so each row group contributes
+    `matched[searchsorted(off)..searchsorted(off+n)] - off` (beyond the
+    budget, memory is one row group plus the gathered values). A docmap
+    that is NOT dense-sorted (foreign layout) falls back to an inverse
+    permutation over the whole shard, O(n_shard) with no Python loop."""
     part = os.path.join(index_dir, "docmap", f"shard={shard}")
     paths = sorted(
         os.path.join(part, f) for f in os.listdir(part) if not f.startswith((".", "_"))
     )
-    chunks = [(p, rg) for p in paths for rg in range(resident.footer(p).num_row_groups)]
+    metas = resident.footers(paths)
+    chunks = [(p, rg) for p, meta in metas.items() for rg in range(meta.num_row_groups)]
     want = ["local_id"] + fields
     parts: list[pa.Table] = []
     off = 0
-    for path, rg in chunks:
-        tbl = resident.columns(path, rg, want)
+    for chunk in chunks:
+        tbl = resident.tables([chunk], want, metas)[0]
         n = tbl.num_rows
         if not np.array_equal(tbl.column(0).to_numpy(), np.arange(off, off + n)):
             break
@@ -119,10 +118,11 @@ def gather_docvalues(
         off += n
     else:
         if not parts:
-            schema = resident.footer(paths[0]).schema.to_arrow_schema()
+            schema = metas[paths[0]].schema.to_arrow_schema()
             return schema.empty_table().select(fields)
         return pa.concat_tables(parts, promote_options="permissive")
-    tbl = pa.concat_tables(resident.tables(chunks, want), promote_options="permissive")
+    tbl = pa.concat_tables(resident.tables(chunks, want, metas),
+                           promote_options="permissive")
     lid = tbl.column("local_id").to_numpy()
     pos = np.empty(lid.size, dtype=np.int64)
     pos[lid] = np.arange(lid.size)

@@ -1226,14 +1226,14 @@ def _hits(reader, query: dict, k: int, filters: tuple):
     return _scaled(_bm25_topk(r, terms, k=k, mode=op, filters=filters))
 
 
-def _rescore_df(reader, query: dict, spec, k: int, filters=()):
+def _rescore(reader, query: dict, spec, k: int, filters=()):
     """Compile the ES `rescore` block (query rescorer, phrase rescore
-    query) to engine.query.rescore_topk over the base match/term query.
+    query) to engine.query._rescore_topk over the base match/term query.
     `filters` (the body's post_filter, compiled): Lucene applies the
     post_filter at hit COLLECTION, before the rescore phase — so the
     rescore window is the top window_size of (base query ∩ filter),
     which is exactly rescore_topk's filtered base kernel."""
-    from engine.query import rescore_topk
+    from engine.query import _rescore_topk
 
     if isinstance(spec, list):  # ES accepts a list of rescorers; one supported
         if len(spec) != 1:
@@ -1257,7 +1257,7 @@ def _rescore_df(reader, query: dict, spec, k: int, filters=()):
             f"rescore base query field {bfld!r} must equal the rescorer "
             f"field {fld!r} (cross-field rescore is a documented divergence)"
         )
-    return rescore_topk(
+    return _rescore_topk(
         r, terms, text, k=k,
         window_size=int(spec.get("window_size", 10)),
         query_weight=float(q.get("query_weight", 1.0)),
@@ -2265,10 +2265,11 @@ def search(reader, body: dict, corpus=None, embeddings=None) -> dict:
                     ],
                 }}}
     elif body.get("rescore"):
-        df = _rescore_df(reader, query, body["rescore"], frm + size,
-                         filters=filters)
-        rows = df.collect()[frm:]
-        hits = [{"_id": r["url"], "_score": r["score"]} for r in rows]
+        from engine.query import _result_rows
+
+        rows = _result_rows(_rescore(reader, query, body["rescore"], frm + size,
+                                     filters=filters))[frm:]
+        hits = [{"_id": r[0], "_score": r[-1]} for r in rows]
     else:
         result = _hits(reader, query, frm + size, filters)
         if result is None:  # match_all: first `size` live docs in url order
@@ -3032,7 +3033,7 @@ def validate_query(reader, body: dict) -> dict:
     try:
         q = body.get("query", {"match_all": {}})
         if "match_all" not in q:
-            _hits_df(reader, q, 0, _clause_filters(
+            _hits(reader, q, 0, _clause_filters(
                 q.get("bool", {}).get("filter", [])) if "bool" in q else ())
         for spec in (body.get("aggs") or body.get("aggregations") or {}).values():
             if not any(

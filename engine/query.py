@@ -432,15 +432,12 @@ class IndexReader:
         return _read_postings(self._postings_files(terms), terms, None, needs_pos)
 
     def _postings_files(self, terms: list[str]) -> list[str]:
-        """The parquet files of the terms' bucket directories, in the
-        dataset's file order. The (bucket, path) list is resolved once
-        per reader; the generation check runs on every call."""
+        """The parquet files of the terms' bucket directories, in dataset
+        file order (listed once per reader; generation-checked per call)."""
         sub = self._pa_dataset(self._post_sub)
         if self._post_files is None:
-            self._post_files = [
-                (int(os.path.basename(os.path.dirname(p)).partition("=")[2]), p)
-                for p in sub.files
-            ]
+            self._post_files = [(int(p.split("bucket=")[-1].split("/")[0]), p)
+                                for p in sub.files]
         want = set(self._bucket_of(terms))
         return [p for b, p in self._post_files if b in want]
 
@@ -579,10 +576,8 @@ def _read_postings(
     """The one postings read, on the driver and in Spark tasks alike: the
     rows of `terms` (of `shard` only, when given) in the parquet `files`
     as {shard: [_PostRow, ...]} ([_PosRow, ...], with the position stream,
-    when needs_pos), in file and row order. Row groups whose shard / term
-    statistics exclude the request are skipped; the others' columns come
-    decompressed from engine.resident and are filtered as one zero-copy
-    table."""
+    when needs_pos), in file and row order. Row groups that statistics
+    exclude are skipped; the rest come decompressed from engine.resident."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -596,19 +591,14 @@ def _read_postings(
     bounds = {"term": (want[0], want[-1])}
     if shard is not None:
         bounds["shard"] = (shard, shard)
-    chunks = []
-    for path in files:
-        meta = resident.footer(path)
-        chunks += [(path, rg) for rg in range(meta.num_row_groups)
-                   if _rg_may_hold(meta.row_group(rg), bounds)]
+    metas = resident.footers(files)
+    chunks = [(path, rg) for path, meta in metas.items()
+              for rg in range(meta.num_row_groups)
+              if _rg_may_hold(meta.row_group(rg), bounds)]
     if not chunks:
         return {}
-    tbl = pa.concat_tables(resident.tables(chunks, cols), promote_options="permissive")
-    term = tbl.column("term")
-    if len(want) > _EQ_MAX_TERMS:
-        mask = pc.is_in(term, value_set=pa.array(want, pa.string()))
-    else:  # a string compare per term beats hashing every row for a few
-        mask = functools.reduce(pc.or_, (pc.equal(term, t) for t in want))
+    tbl = pa.concat_tables(resident.tables(chunks, cols, metas), promote_options="permissive")
+    mask = pc.is_in(tbl.column("term"), value_set=pa.array(want, pa.string()))
     if shard is not None:
         mask = pc.and_(mask, pc.equal(tbl.column("shard"), shard))
     tbl = tbl.filter(mask)
@@ -621,24 +611,19 @@ def _read_postings(
     return by_shard
 
 
-_EQ_MAX_TERMS = 8  # above this many terms one is_in hash pass is cheaper
-
-
 def _rg_may_hold(rg, bounds: dict) -> bool:
     """False when the row group is empty, or its min/max statistics on a
     bounds column (name -> (lo, hi)) lie outside [lo, hi]."""
-    if not rg.num_rows:
-        return False
     left = dict(bounds)
-    for i in range(rg.num_columns):
+    for i in range(rg.num_columns if rg.num_rows else 0):
         if not left:
-            break
+            return True
         col = rg.column(i)
-        lo_hi = left.pop(col.path_in_schema, None)
-        st = col.statistics if lo_hi else None
-        if st is not None and st.has_min_max and (st.max < lo_hi[0] or st.min > lo_hi[1]):
+        lo, hi = left.pop(col.path_in_schema, (None, None))
+        st = col.statistics if lo is not None else None
+        if st is not None and st.has_min_max and (st.max < lo or st.min > hi):
             return False
-    return True
+    return rg.num_rows > 0
 
 
 def _block_lists(col) -> list[list[tuple]]:
@@ -4017,7 +4002,7 @@ def _match_phrase_prefix_topk(
 match_phrase_prefix_topk = _frame_api(_match_phrase_prefix_topk)
 
 
-def rescore_topk(
+def _rescore_topk(
     reader: "IndexReader",
     query: str | list[str],
     rescore_phrase: str | list[str],
@@ -4028,7 +4013,7 @@ def rescore_topk(
     slop: int = 0,
     mode: str = "or",
     filters=(),
-) -> DataFrame:
+):
     """ES `rescore` (query rescorer, score_mode=total): re-rank the top
     `window_size` hits of the base BM25 query by blending in a
     match_phrase score — (url, doc_id, score), score desc / doc_id asc.
@@ -4062,7 +4047,7 @@ def rescore_topk(
         reader, query, k=window_size + 16, mode=mode, filters=filters
     )
     if not base:
-        return _empty_topk(reader.spark)
+        return "rows", []
     base.sort(key=lambda r: (-round(r[2], 6), r[1]))
     window = base[:window_size]
     # doc_id -> (shard, local) inverse map. shard_offsets() marks EMPTY
@@ -4122,7 +4107,10 @@ def rescore_topk(
         ph = phrase_scores.get((int(shard), int(local)), 0.0)
         out.append((url, int(doc_id), query_weight * base_sc + rescore_weight * ph))
     out.sort(key=lambda r: (-r[2], r[1]))
-    return _rows_frame(reader.spark, out[:k])
+    return "rows", out[:k]
+
+
+rescore_topk = _frame_api(_rescore_topk)
 
 
 def index_stats(reader: "IndexReader") -> dict:

@@ -951,8 +951,7 @@ def _qs_multifield_topk(
     tb = float(tie_breaker)
 
     def _leg(view, kind, payload, slop):
-        # kind is "phrase" or "terms" at every call site below; the raise
-        # only fails closed should a new call site pass anything else
+        # every call site below passes "phrase" or "terms": fail closed
         if kind == "phrase":
             return _match_phrase_topk(
                 view, payload, k=1 << 31, slop=slop, filters=filters

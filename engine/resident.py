@@ -1,34 +1,23 @@
 """Resident column chunks: the driver's process-level LRU of decompressed
-parquet column chunks, the Lucene analog of a searcher paying for a
-segment's bytes once and sharing them across queries and reopens.
-
-An entry is one column of one row group of one file, keyed by the file's
-identity (path, size, mtime_ns) — a committed parquet file is never
-rewritten in place (DURABILITY.md), and a rebuild writes new part-file
-names, so a key can never serve stale bytes. Every reader over unchanged
-files (a reopen after delete_docs, which only adds a tombstone file)
-starts warm. Entries are evicted least-recently-used under one byte
-budget; a chunk larger than the budget is returned and not kept.
-
-Inside a Spark task nothing is kept: executor memory is not the driver's
-to spend, and every Python worker would hold its own copy.
-"""
+parquet column chunks (and footers), the Lucene analog of a searcher
+paying for a segment's bytes once across queries and reopens. A key is
+the file's identity (path, size, mtime_ns) + row group + column: committed
+files are never rewritten in place (DURABILITY.md), so no key serves stale
+bytes, and a reader over unchanged files starts warm. LRU under one byte
+budget; a chunk over the budget is returned, not kept. Inside a Spark task
+nothing is kept: executor memory is not the driver's to spend."""
 
 from __future__ import annotations
 
 import os
 import threading
 from collections import OrderedDict
-from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import TaskContext
 
-# decompressed bytes kept; the perfbench index's postings + docmap columns
-# take ~17 MB, sf0.1's ~130 MB (BENCH.md §27)
-RESIDENT_MAX_BYTES = 256 << 20
-READ_THREADS = 4  # row groups read at once when several are missing
+RESIDENT_MAX_BYTES = 256 << 20  # resident sizes measured: BENCH.md §27
 
 _lock = threading.Lock()
 _chunks: OrderedDict = OrderedDict()  # key -> (value, nbytes)
@@ -44,68 +33,58 @@ def _get(key):
     """The kept value for key (now most recently used), or None."""
     with _lock:
         v = _chunks.get(key)
-        if v is None:
-            return None
-        _chunks.move_to_end(key)
-        return v[0]
+        if v is not None:
+            _chunks.move_to_end(key)
+        return v and v[0]
 
 
 def _put(key, value, nbytes: int) -> None:
     if nbytes > RESIDENT_MAX_BYTES or TaskContext.get() is not None:
         return
     with _lock:
-        if key in _chunks:
-            return
-        _chunks[key] = (value, nbytes)
-        _state["bytes"] += nbytes
+        if key not in _chunks:
+            _chunks[key] = (value, nbytes)
+            _state["bytes"] += nbytes
         while _state["bytes"] > RESIDENT_MAX_BYTES:
             _state["bytes"] -= _chunks.popitem(last=False)[1][1]
 
 
-def footer(path: str) -> pq.FileMetaData:
-    """The file's parquet footer (row-group count and statistics)."""
-    key = _ident(path) + (None, None)
-    meta = _get(key)
-    if meta is None:
-        meta = pq.read_metadata(path)
-        _put(key, meta, meta.serialized_size)
-    return meta
+def footers(paths: list[str]) -> dict[str, pq.FileMetaData]:
+    """path -> its parquet footer, each read at most once per call."""
+    out = {}
+    for path in paths:
+        key = _ident(path) + (None, None)
+        out[path] = _get(key)
+        if out[path] is None:
+            out[path] = pq.read_metadata(path)
+            _put(key, out[path], out[path].serialized_size)
+    return out
 
 
-def tables(chunks: list[tuple[str, int]], names: list[str]) -> list[pa.Table]:
-    """Per (path, row_group) in chunks, that row group's columns `names`
-    in that order. Resident columns are reused; a row group's missing
-    ones are read in one read_row_group call (several row groups on
-    READ_THREADS threads) and kept under the budget."""
-    keys = [_ident(path) + (rg,) for path, rg in chunks]
-    got = [{n: _get(k + (n,)) for n in names} for k in keys]
-    todo = [(i, [n for n, v in g.items() if v is None]) for i, g in enumerate(got)]
-    todo = [(i, miss) for i, miss in todo if miss]
-    n_miss = sum(len(miss) for _, miss in todo)
+def tables(chunks: list[tuple[str, int]], names: list[str], metas: dict) -> list[pa.Table]:
+    """Per (path, row_group) in chunks, that row group's columns `names`;
+    metas: footers() of the paths. A row group's missing columns are read
+    in one read_row_group call and kept under the budget."""
+    idents = {p: _ident(p) for p, _ in chunks}
+    files: dict[str, pq.ParquetFile] = {}
+    out, misses = [], 0
+    for path, rg in chunks:
+        key = idents[path] + (rg,)
+        got = {n: _get(key + (n,)) for n in names}
+        miss = [n for n, v in got.items() if v is None]
+        if miss:
+            if path not in files:
+                files[path] = pq.ParquetFile(path, metadata=metas[path])
+            tbl = files[path].read_row_group(rg, columns=miss)
+            for n in miss:
+                got[n] = tbl.column(n)
+                _put(key + (n,), got[n], got[n].nbytes)
+        misses += len(miss)
+        out.append(pa.table(got))
     with _lock:
-        _state["hits"] += len(chunks) * len(names) - n_miss
-        _state["misses"] += n_miss
-
-    def read(item):
-        i, miss = item
-        path, rg = chunks[i]
-        return pq.ParquetFile(path, metadata=footer(path)).read_row_group(rg, columns=miss)
-
-    if len(todo) > 1:
-        with ThreadPoolExecutor(min(len(todo), READ_THREADS)) as pool:
-            read_tbls = list(pool.map(read, todo))
-    else:
-        read_tbls = [read(t) for t in todo]
-    for (i, miss), tbl in zip(todo, read_tbls):
-        for n in miss:
-            col = got[i][n] = tbl.column(n)
-            _put(keys[i] + (n,), col, col.nbytes)
-    return [pa.table({n: g[n] for n in names}) for g in got]
-
-
-def columns(path: str, row_group: int, names: list[str]) -> pa.Table:
-    """tables() of one row group."""
-    return tables([(path, row_group)], names)[0]
+        _state["hits"] += len(chunks) * len(names) - misses
+        _state["misses"] += misses
+    return out
 
 
 def stats() -> dict[str, int]:

@@ -549,14 +549,25 @@ def test_serve_hits_skip_the_dataframe_round_trip(spark, ctx_index, serve_hits,
     A Spark job count cannot see this round trip — a pandas
     createDataFrame is a local relation whose collect starts no job, on
     the DataFrame path as well — so the test forbids the calls instead.
-    The "spark" leg forces the scatter onto Spark (a 0 postings gate, no
-    patching) and must return the same hits."""
+    A rescore body must return the public rescore_topk frame's rows,
+    collected before the patch. The "spark" leg forces the scatter onto
+    Spark (a 0 postings gate, no patching) and must return the same hits."""
     from pyspark.sql import DataFrame, SparkSession
 
     from engine.dsl import search
+    from engine.query import rescore_topk
 
     out, rows = ctx_index
     reader = IndexReader(spark, out)
+    bigram = " ".join(rows[3][1].split()[:2])
+    rescore = {"query": {"match": {"text": "search index rank"}}, "size": 10,
+               "rescore": {"window_size": 20,
+                           "query": {"rescore_query": {"match_phrase": {"text": bigram}},
+                                     "rescore_query_weight": 2.0}}}
+    rescored = [(r["url"], r["score"]) for r in rescore_topk(
+        reader.for_field("text"), "search index rank", bigram, k=10, window_size=20,
+        rescore_weight=2.0).collect()]
+    assert rescored
     if path == "local":
         def forbidden(*_a, **_k):
             raise AssertionError("DataFrame round trip on the serve path")
@@ -570,6 +581,7 @@ def test_serve_hits_skip_the_dataframe_round_trip(spark, ctx_index, serve_hits,
         monkeypatch.setattr(IndexReader, "LOCAL_MAX_POSTINGS", 0)
     for kind, q in _serve_bodies(rows).items():
         assert _hit_pairs(search(reader, {"query": q, "size": 10})) == serve_hits[kind], kind
+    assert _hit_pairs(search(reader, rescore)) == rescored
 
 
 def test_leaf_boost_scales_result_rows(spark, ctx_index, serve_hits):

@@ -109,7 +109,7 @@ def test_read_postings_matches_dataset_scan(spark, res_index, tmp_path, fresh_ca
     by field and in order, for needs_pos False and True, on the driver
     (all shards) and per shard (the Spark task form); also over a copy
     whose files hold many row groups (statistics pruning on term and
-    shard, several row groups read at once)."""
+    shard, several row groups per file)."""
     split = str(tmp_path / "split")
     shutil.copytree(res_index, split)
     _split_row_groups(os.path.join(split, "postings"), 2)
@@ -199,7 +199,8 @@ def test_budget_bounds_resident_bytes(spark, res_index, monkeypatch, fresh_cache
             assert st["bytes"] == sum(nb for _, nb in resident._chunks.values())
     assert all(nb <= budget for _, nb in resident._chunks.values())
     path = _first_file(res_index)
-    tbl = resident.columns(path, 0, ["shard", "term", "pos_bin", "pos_offs"])
+    cols = ["shard", "term", "pos_bin", "pos_offs"]
+    tbl = resident.tables([(path, 0)], cols, resident.footers([path]))[0]
     big = max(tbl.column_names, key=lambda c: tbl.column(c).nbytes)
     assert tbl.column(big).nbytes > budget
     assert not any(k[0] == path and k[-1] == big for k in resident._chunks)
@@ -241,10 +242,11 @@ def test_reopen_after_delete_reads_nothing(spark, res_index, tmp_path, monkeypat
     assert reads, "the rebuilt index's files were served without a read"
 
 
-def test_executors_keep_nothing(spark, res_index, monkeypatch, fresh_cache):
+def test_executors_keep_nothing(spark, res_index, tmp_path, monkeypatch, fresh_cache):
     """A forced-Spark query returns the driver-local rows bit for bit, and
-    a Spark task that runs the postings read and the docvalue gather
-    reports 0 resident bytes in its worker."""
+    a Spark task that runs the postings read and the docvalue gather over
+    a copy whose files hold many row groups reports 0 resident bytes in
+    its worker and reads each file's footer once per call."""
     import pandas as pd
 
     from engine.query import bm25_topk
@@ -255,20 +257,37 @@ def test_executors_keep_nothing(spark, res_index, monkeypatch, fresh_cache):
     monkeypatch.setattr(IndexReader, "LOCAL_MAX_POSTINGS", 0)
     assert [tuple(r) for r in bm25_topk(fr, "web search rank", k=50).collect()] == loc
 
-    files, terms = fr._postings_files(["web", "rank"]), ["web", "rank"]
-    out = res_index
+    out = str(tmp_path / "split")
+    shutil.copytree(res_index, out)
+    _split_row_groups(os.path.join(out, "postings"), 2)
+    _split_row_groups(os.path.join(out, "docmap"), 64)
+    terms = ["web", "rank"]
+    files = IndexReader(spark, out).for_field("text")._postings_files(terms)
+    assert max(pq.read_metadata(f).num_row_groups for f in files) > 2
+    n_dm = {s: len([f for f in os.listdir(os.path.join(out, "docmap", f"shard={s}"))
+                    if not f.startswith((".", "_"))]) for s in (0, 1)}
 
     def task(it):
-        for pdf in it:
-            for shard in pdf["id"]:
-                rows = _read_postings(files, terms, int(shard), True)
-                tbl = gather_docvalues(out, int(shard), ["lang"], np.arange(5))
-                yield pd.DataFrame({
-                    "rows": [sum(len(v) for v in rows.values())],
-                    "dv": [tbl.num_rows], "bytes": [resident.stats()["bytes"]],
-                })
+        orig, reads = pq.read_metadata, []
+        pq.read_metadata = lambda path, *a, **kw: reads.append(path) or orig(path, *a, **kw)
+        try:
+            for pdf in it:
+                for shard in pdf["id"]:
+                    rows = _read_postings(files, terms, int(shard), True)
+                    n_post = len(reads)
+                    tbl = gather_docvalues(out, int(shard), ["lang"], np.arange(5))
+                    yield pd.DataFrame({
+                        "shard": [int(shard)], "rows": [sum(len(v) for v in rows.values())],
+                        "dv": [tbl.num_rows], "bytes": [resident.stats()["bytes"]],
+                        "post_reads": [n_post], "dm_reads": [len(reads) - n_post],
+                    })
+        finally:
+            pq.read_metadata = orig
 
     got = spark.range(0, 2, 1, 2).mapInPandas(
-        task, "rows long, dv long, bytes long").collect()
+        task, "shard long, rows long, dv long, bytes long, post_reads long, dm_reads long"
+    ).collect()
     assert [r["bytes"] for r in got] == [0, 0]
     assert all(r["rows"] > 0 and r["dv"] == 5 for r in got)
+    assert [r["post_reads"] for r in got] == [len(files)] * 2
+    assert [r["dm_reads"] for r in got] == [n_dm[r["shard"]] for r in got]
